@@ -1,13 +1,14 @@
-"""End-to-end extraction pipeline with checkpointed resume + metrics.
+"""End-to-end extraction pipeline with checkpointed resume.
 
 Dataflow (SURVEY §3.2 Spark equivalent):
 
     documents ──filter(P5,P1, phase mode)──►
-      ──[resume: anti-join completed-bucket ledger]──►
+      ──[resume: drop buckets already in the ledger]──►
       ──mapInArrow(extract, broadcast profiles)──►
       ──window dedup on content_hash (A2)──►
+      spans_out sink (run totals observed on the write) ──► ledger commit
       ──[optional: change detection vs existing entries (A3-A6)]──►
-      spans_out sink (+ metrics table, + ledger commit)
+      entries_next sink (action counts observed on the write)
 
 Scale notes (north rule):
   * extraction itself is shuffle-free: scan splits are sized by
@@ -19,27 +20,31 @@ Scale notes (north rule):
   * resume: work is partitioned into `num_buckets` deterministic
     buckets; each bucket commits its output and a ledger row
     atomically-enough (parquet dir per bucket; Iceberg snapshot per
-    bucket when available). A re-run anti-joins the ledger and only
-    processes missing buckets — lineage preserved, no dup/loss.
-  * metrics: per-bucket docs parsed, spans emitted, status counts,
-    profile hit/miss (mirrors the reference's timing/err logging,
-    Analyzer.scala:228-253, ExtractionSupervisor.scala:399-404).
+    bucket when available). A re-run skips the ledgered buckets and
+    only processes missing ones — lineage preserved, no dup/loss.
+  * run totals: docs parsed, spans emitted, status counts and
+    duplicates (mirrors the reference's timing/err logging,
+    Analyzer.scala:228-253, ExtractionSupervisor.scala:399-404) ride
+    the spans_out write as an `Observation` — no second pass over the
+    output. Every job is labelled with its stage (job description).
 """
 
 from __future__ import annotations
 
 import os
 import time
+from contextlib import contextmanager
 from dataclasses import dataclass
-from typing import Dict, Optional
+from typing import Dict, List, Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .kernel.profiles import ProfileConfig
 from .operators.changes import plan_actions
 from .operators.dedup import mark_duplicates
-from .operators.extract import extract_entries
+from .operators.extract import EXTRACT_SCHEMA, derive_spans_col, extract_entries
 from .operators.scans import scannable_documents
 from .sources.io import apply_entry_actions
 
@@ -64,12 +69,54 @@ def with_bucket(df: DataFrame, num_buckets: int) -> DataFrame:
     )
 
 
-def completed_buckets(spark: SparkSession, ledger_path: str) -> Optional[DataFrame]:
+def _read_prior(spark: SparkSession, path: str) -> Optional[DataFrame]:
+    """The parquet dir at `path`; None only when there is no prior state
+    (path absent, or no parquet files in it). Corrupt files raise."""
     try:
-        ledger = spark.read.parquet(ledger_path)
-        return ledger.where(F.col("status") == "done").select("bucket").distinct()
-    except Exception:
-        return None  # no ledger yet
+        return spark.read.parquet(path)
+    except AnalysisException as e:
+        if e.getCondition() in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+            return None
+        raise
+
+
+def completed_buckets(spark: SparkSession, ledger_path: str) -> List[int]:
+    """Buckets committed in the ledger ([] when there is no ledger)."""
+    ledger = _read_prior(spark, ledger_path)
+    if ledger is None:
+        return []
+    done = ledger.where(F.col("status") == "done").select("bucket").distinct()
+    return sorted(r["bucket"] for r in done.collect())
+
+
+@contextmanager
+def _stage(spark: SparkSession, name: str):
+    """Label the jobs submitted inside with their pipeline stage, then
+    give the caller's job description back."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(f"run_extraction: {name}")
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)
+
+
+def _totals() -> list:
+    """Run totals over spans_out rows, as aggregates for observe/agg."""
+    def n(c):  # a sum over zero rows is NULL: report 0
+        return F.coalesce(F.sum(c.cast("long")), F.lit(0))
+
+    status = F.col("status")
+    return [
+        F.count(F.lit(1)).alias("docs_parsed"),
+        n(F.col("n_spans")).alias("spans_emitted"),
+        n(status == "ok").alias("ok"),
+        n(status == "profile_miss").alias("profile_miss"),
+        n(status == "no_title").alias("no_title"),
+        n(status == "error").alias("errors"),
+        n(F.col("disabled")).alias("disabled_dups"),
+    ]
 
 
 def run_extraction(
@@ -82,10 +129,13 @@ def run_extraction(
 ) -> dict:
     """Run the full pipeline; returns summary metrics (a plain dict).
 
+    The totals cover every ledgered bucket of the output: this run's,
+    observed on its write, plus on resume those committed before.
+
     Writes:
-      {output_path}/spans_out/   extracted spans (partitioned by bucket)
-      {output_path}/metrics/     per-bucket metrics rows
-      {output_path}/ledger/      completed-bucket ledger
+      {output_path}/spans_out/     extracted spans (partitioned by bucket)
+      {output_path}/ledger/        completed-bucket ledger
+      {output_path}/entries_next/  next entries table (existing_entries given)
     """
     cfg = cfg or PipelineConfig()
     t0 = time.monotonic()
@@ -95,11 +145,26 @@ def run_extraction(
     docs = with_bucket(docs, cfg.num_buckets)
 
     ledger_path = os.path.join(output_path, "ledger")
-    done = completed_buckets(spark, ledger_path)
-    resumed_buckets = 0
-    if done is not None:
-        resumed_buckets = done.count()
-        docs = docs.join(F.broadcast(done), "bucket", "left_anti")
+    spans_path = os.path.join(output_path, "spans_out")
+    with _stage(spark, "resume state"):
+        done = completed_buckets(spark, ledger_path)
+        prior = _read_prior(spark, spans_path) if done else None
+    dedup_baseline, prior_totals = existing_entries, {}
+    if done:
+        docs = docs.where(~F.col("bucket").isin(done))
+    if prior is not None:
+        # only ledgered buckets count: an unledgered one is re-done now
+        prior = prior.where(F.col("bucket").isin(done))
+        with _stage(spark, "resume totals"):
+            prior_totals = prior.agg(*_totals()).first().asDict()
+        # dedup also against rows committed by PRIOR runs of this
+        # output: hashes already on disk disable this run's copies
+        prior = prior.select("content_hash", "disabled")
+        dedup_baseline = (
+            prior
+            if existing_entries is None
+            else existing_entries.select("content_hash", "disabled").unionByName(prior)
+        )
 
     # Extraction is map-only over scan splits: no shuffle of raw HTML.
     # derive_spans=False: the spans array is a full duplicate of
@@ -116,135 +181,66 @@ def run_extraction(
     # re-derive the bucket on the compact output, shuffle THAT (not the
     # input) for the partitioned write; the dedup window adds its own
     # content_hash shuffle.
-    extracted = with_bucket(extracted, cfg.num_buckets)
-
-    spans_path = os.path.join(output_path, "spans_out")
-    # dedup also against rows committed by PRIOR runs of this output
-    # (resume case): hashes already on disk disable this run's copies
-    dedup_baseline = existing_entries
-    if done is not None:
-        try:
-            prior = spark.read.parquet(spans_path).select(
-                "content_hash", F.coalesce(F.col("disabled"), F.lit(False)).alias("disabled")
-            )
-            dedup_baseline = (
-                prior
-                if dedup_baseline is None
-                else dedup_baseline.select("content_hash", "disabled").unionByName(prior)
-            )
-        except Exception:
-            pass  # ledger existed but no spans written yet
-    deduped = mark_duplicates(extracted, dedup_baseline)
+    deduped = mark_duplicates(with_bucket(extracted, cfg.num_buckets), dedup_baseline)
     # span assembly AFTER the last exchange: the repartition below is
     # the final shuffle, so the heavy derived column never crosses the
-    # network. n_spans is materialized at write time so the metrics
-    # pass never re-reads the heavy spans array column (column pruning
-    # makes the read-back scan footers + small ints only).
-    from .operators.extract import EXTRACT_SCHEMA, derive_spans_col
-
-    deduped = (
+    # network. The run totals are observed on the rows as written.
+    totals = Observation("run_totals")
+    out = (
         deduped.repartition(cfg.num_buckets, "bucket")
         .withColumn("spans", derive_spans_col())
         .withColumn(
             "n_spans", F.size(F.coalesce(F.col("spans"), F.array())).cast("int")
         )
         # written column order identical to the pre-r7 layout
-        .select(
-            *[f.name for f in EXTRACT_SCHEMA.fields],
-            "bucket", "disabled", "n_spans",
+        .select(*[f.name for f in EXTRACT_SCHEMA.fields], "bucket", "disabled", "n_spans")
+        .observe(totals, *_totals(), F.collect_set("bucket").alias("buckets"))
+    )
+    with _stage(spark, "extract, dedup and write spans_out"):
+        (
+            out.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("bucket")
+            .parquet(spans_path)
         )
-    )
-    (
-        deduped.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket")
-        .parquet(spans_path)
-    )
+    run = totals.get
+    buckets = run.pop("buckets")
+    summary = {k: v + prior_totals.get(k, 0) for k, v in run.items()}
 
-    # metrics per bucket, for the buckets processed in THIS run only.
-    # mergeSchema: a resumed output may mix bucket files written by an
-    # older code version (without n_spans) with this run's files — the
-    # merged schema guarantees the column resolves (old buckets are
-    # excluded from the aggregate by the anti-join below anyway)
-    try:
-        out_df = spark.read.option("mergeSchema", "true").parquet(spans_path)
-    except Exception:
-        # zero-row input: nothing was written (no parquet footers to read)
-        return {
-            "docs_parsed": 0, "spans_emitted": 0, "ok": 0, "profile_miss": 0,
-            "no_title": 0, "errors": 0, "disabled_dups": 0,
-            "wall_sec": time.monotonic() - t0, "resumed_buckets": resumed_buckets,
-        }
-    new_out = (
-        out_df
-        if done is None
-        else out_df.join(F.broadcast(done), "bucket", "left_anti")
-    )
-    metrics = (
-        new_out.groupBy("bucket")
-        .agg(
-            F.count("*").alias("docs_parsed"),
-            F.sum("n_spans").alias("spans_emitted"),
-            F.sum((F.col("status") == "ok").cast("long")).alias("ok"),
-            F.sum((F.col("status") == "profile_miss").cast("long")).alias("profile_miss"),
-            F.sum((F.col("status") == "no_title").cast("long")).alias("no_title"),
-            F.sum((F.col("status") == "error").cast("long")).alias("errors"),
-            F.sum(F.coalesce(F.col("disabled").cast("long"), F.lit(0))).alias("disabled_dups"),
-        )
-        .withColumn("run_id", F.lit(cfg.run_id))
-        .cache()  # tiny (one row per bucket); reused for the ledger
-    )
-    metrics.write.mode("append").parquet(os.path.join(output_path, "metrics"))
+    # commit ledger rows for the buckets written in this run, built
+    # JVM-side from the observed set (no Python worker, no re-scan)
+    if buckets:
+        with _stage(spark, "ledger commit"):
+            (
+                spark.range(cfg.num_buckets, numPartitions=1)
+                .where(F.col("id").isin(buckets))
+                .select(F.col("id").cast("int").alias("bucket"),
+                        F.lit("done").alias("status"), F.lit(cfg.run_id).alias("run_id"))
+                .write.mode("append").parquet(ledger_path)
+            )
 
-    # commit ledger rows for the buckets processed in this run — derived
-    # from the cached metrics, NOT a second scan of the output
-    processed = metrics.select("bucket").distinct()
-    (
-        processed.withColumn("status", F.lit("done"))
-        .withColumn("run_id", F.lit(cfg.run_id))
-        .write.mode("append")
-        .parquet(ledger_path)
-    )
-    metrics.unpersist()
-
-    summary_rows = (
-        spark.read.parquet(os.path.join(output_path, "metrics"))
-        .groupBy()
-        .agg(
-            F.sum("docs_parsed").alias("docs_parsed"),
-            F.sum("spans_emitted").alias("spans_emitted"),
-            F.sum("ok").alias("ok"),
-            F.sum("profile_miss").alias("profile_miss"),
-            F.sum("no_title").alias("no_title"),
-            F.sum("errors").alias("errors"),
-            F.sum("disabled_dups").alias("disabled_dups"),
-        )
-        .collect()[0]
-        .asDict()
-    )
     # change detection + entries upsert (A3-A6 + S7): when an existing
     # entries table is supplied, plan create/update/skip per url and
-    # write the next entries-table state (set-based MERGE)
+    # write the next entries-table state (set-based MERGE); the action
+    # counts ride that write
     if existing_entries is not None:
-        planned = plan_actions(
-            spark.read.parquet(spans_path).where(F.col("status") == "ok"),
-            existing_entries,
-        )
-        action_counts = {
-            r["action"]: r["n"]
-            for r in planned.groupBy("action").agg(F.count("*").alias("n")).collect()
-        }
-        next_entries = apply_entry_actions(
-            existing_entries,
-            planned,
-            clock=cfg.now_iso,
-            reanalysis_interval_hours=cfg.reanalysis_interval_hours,
-        )
-        next_entries.write.mode("overwrite").parquet(
-            os.path.join(output_path, "entries_next")
-        )
-        summary_rows["actions"] = action_counts
+        with _stage(spark, "entries_next"):
+            spans = _read_prior(spark, spans_path)
+            if spans is not None:
+                actions = Observation("entry_actions")
+                planned = plan_actions(
+                    spans.where(F.col("status") == "ok"), existing_entries
+                ).observe(
+                    actions,
+                    *[F.sum((F.col("action") == a).cast("long")).alias(a)
+                      for a in ("create", "update", "skip", "error")],
+                )
+                apply_entry_actions(
+                    existing_entries, planned, clock=cfg.now_iso,
+                    reanalysis_interval_hours=cfg.reanalysis_interval_hours,
+                ).write.mode("overwrite").parquet(os.path.join(output_path, "entries_next"))
+                summary["actions"] = {a: n for a, n in actions.get.items() if n}
 
-    summary_rows["wall_sec"] = time.monotonic() - t0
-    summary_rows["resumed_buckets"] = resumed_buckets
-    return summary_rows
+    summary["wall_sec"] = time.monotonic() - t0
+    summary["resumed_buckets"] = len(done)
+    return summary

@@ -4,7 +4,7 @@ Usage (cluster):
     zip -r pipeline.zip content_extractor_spark/
     spark-submit --py-files pipeline.zip jobs/extract_job.py \
         --input  <iceberg table or parquet path of documents(doc_id, spans, ...)> \
-        --output <output root: spans_out/ metrics/ ledger/> \
+        --output <output root: spans_out/ ledger/ [entries_next/]> \
         --profiles <dir of *.json/*.conf page profiles> \
         --mode all|new|existing --now 2021-07-01T00:00:00Z \
         --buckets 1024 --run-id run-2021-07-01

@@ -8,18 +8,20 @@ from content_extractor_spark import synth
 from content_extractor_spark.pipeline import PipelineConfig, run_extraction
 
 
+ENTRIES_DDL = (
+    "entry_id string, url_id string, title string, summary string, "
+    "content string, date string, tags array<string>, etag string, "
+    "image_url string, content_hash long, disabled boolean"
+)
+
+
 def test_reanalysis_updates_entries(spark, tmp_path):
     docs = synth.documents_df(spark, 120, n_hosts=4, seed=21, partitions=2).cache()
     profiles = synth.all_profiles(4)
 
     # first run: no existing entries -> everything is a create
     out1 = str(tmp_path / "run1")
-    entries0 = spark.createDataFrame(
-        [],
-        "entry_id string, url_id string, title string, summary string, "
-        "content string, date string, tags array<string>, etag string, "
-        "image_url string, content_hash long, disabled boolean",
-    )
+    entries0 = spark.createDataFrame([], ENTRIES_DDL)
     s1 = run_extraction(
         spark, docs, profiles, out1, PipelineConfig(num_buckets=4, run_id="r1"),
         existing_entries=entries0,
@@ -93,3 +95,37 @@ def test_cross_run_dedup_on_resume(spark, tmp_path):
     first_run_kept = [d for d in b0 if not res[d]]
     assert len(first_run_kept) == 1  # one kept in run 1
     assert all(res[d] for d in b1)  # every resume-run twin disabled
+
+
+def test_observed_actions_match_planned_counts(spark, tmp_path):
+    """The action counts are observed on `planned`, which the entries
+    write reads in three branches; they must equal a plain group-by."""
+    from content_extractor_spark.operators.changes import plan_actions
+
+    docs = synth.documents_df(spark, 120, n_hosts=4, seed=21, partitions=2).cache()
+    profiles = synth.all_profiles(4)
+    out1 = str(tmp_path / "run1")
+    run_extraction(
+        spark, docs, profiles, out1, PipelineConfig(num_buckets=4, run_id="r1"),
+        existing_entries=spark.createDataFrame([], ENTRIES_DDL),
+    )
+    # stored titles tampered for a third of the urls, a fifth dropped:
+    # the next run plans create, update and skip
+    h = F.pmod(F.xxhash64("url_id"), F.lit(15))
+    mixed = (
+        spark.read.parquet(f"{out1}/entries_next")
+        .withColumn("title", F.when(h % 3 == 0, F.lit("OLD")).otherwise(F.col("title")))
+        .where(h % 5 != 0)
+        .cache()
+    )
+    out2 = str(tmp_path / "run2")
+    s = run_extraction(
+        spark, docs, profiles, out2, PipelineConfig(num_buckets=4, run_id="r2"),
+        existing_entries=mixed,
+    )
+    planned = plan_actions(
+        spark.read.parquet(f"{out2}/spans_out").where(F.col("status") == "ok"), mixed
+    )
+    expected = {r["action"]: r["count"] for r in planned.groupBy("action").count().collect()}
+    assert set(expected) == {"create", "update", "skip"}
+    assert s["actions"] == expected
