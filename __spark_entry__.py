@@ -161,19 +161,6 @@ def _phash(col):
     return F.conv(F.substring(F.md5(col), 1, 14), 16, 10).cast("bigint")
 
 
-def _spread(spark, df):
-    """Scale-adaptive round-robin for single-split sf tables (guide
-    §2.5/§6): the testdata parquet files are one row group each, so
-    per-row map work before the first exchange otherwise runs on ONE
-    core. Conditional: an input already at least as wide as
-    defaultParallelism (a real partitioned corpus) is returned
-    untouched — never narrowed, never needlessly shuffled."""
-    target = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= target:
-        return df
-    return df.repartition(target)
-
-
 _PH = "(('0x'||substr(md5({x}),1,14))::BIGINT)"
 
 
@@ -973,19 +960,20 @@ def q_language_id(spark, sf_dir):
     # r7: stacked-projection form — identical values to the old
     # detect_language Column, but shared subexpressions (tokenize,
     # trigram window) evaluate once per row instead of per branch
+    from content_extractor_spark.operators.skew import spread
     from content_extractor_spark.operators.textstats import (
         with_detected_language,
     )
 
     docs = _t(spark, sf_dir, "documents").select("text")
     probes = spark.createDataFrame([(t,) for t in _LANG_PROBES], "text string")
-    # _spread (guide §2.5/§6): the sf documents table is one
+    # spread (guide §2.5/§6): the sf documents table is one
     # single-row-group parquet file, so the whole per-row language
     # ladder ran on ONE core before the aggregate exchange; the widening
     # shuffle moves only (text) — trivial next to it. Spread the DOCS
     # side before the union: the probes df already carries empty
     # parallelism-many partitions that would fool a post-union check.
-    corpus = _spread(spark, docs).unionByName(probes)
+    corpus = spread(docs).unionByName(probes)
     return (
         with_detected_language(corpus)
         .select("lang_detected")
@@ -1046,16 +1034,17 @@ def q_top_terms(spark, sf_dir):
     idf over the same (doc,term) aggregate), unioned on an aligned
     (metric, lang, term, score, rank) shape.
     """
+    from content_extractor_spark.operators.skew import spread
     from content_extractor_spark.operators.textstats import (
         tfidf_top_terms,
         top_terms,
     )
 
     docs = _t(spark, sf_dir, "documents")
-    # _spread only the full-corpus arm: its tokenize+explode+partial-agg
+    # spread only the full-corpus arm: its tokenize+explode+partial-agg
     # otherwise runs on the single parquet split (the 300-doc tfidf arm
     # is too small to pay a shuffle for)
-    counts = top_terms(_spread(spark, docs), group_col="lang", k=5).select(
+    counts = top_terms(spread(docs), group_col="lang", k=5).select(
         F.lit("count").alias("metric"),
         "lang",
         F.col("token").alias("term"),
@@ -1691,12 +1680,13 @@ def q_decontaminate(spark, sf_dir):
     # eval-set decontamination: flag docs sharing any 8-gram with the
     # benchmark (here: every 7th document) — broadcast semi join
     from content_extractor_spark.operators.curation import decontaminate
+    from content_extractor_spark.operators.skew import spread
 
     docs = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 300)
-    # _spread: the benchmark-side shingle explode scans the whole
+    # spread: the benchmark-side shingle explode scans the whole
     # corpus from the single parquet split otherwise
-    bench = _spread(
-        spark, _t(spark, sf_dir, "documents").where(F.col("doc_id") % 7 == 0)
+    bench = spread(
+        _t(spark, sf_dir, "documents").where(F.col("doc_id") % 7 == 0)
     )
     return decontaminate(docs, bench, n=8)
 
@@ -1710,32 +1700,21 @@ def q_pack_sequences(spark, sf_dir):
     return pack_sequences(docs, seq_len=512, shard_col="source")
 
 
-def q_train_val_split(spark, sf_dir):
-    # deterministic md5 split -> per (split, lang) counts
-    from content_extractor_spark.operators.curation import train_val_split
-
-    docs = _t(spark, sf_dir, "documents")
-    return (
-        train_val_split(docs, val_pct=5)
-        .groupBy("split", "lang")
-        .agg(F.count("*").alias("n"))
-    )
-
-
 # ---------------------------------------------------------------------------
 # similarity search
 # ---------------------------------------------------------------------------
 
 def q_cosine_topk(spark, sf_dir):
     from content_extractor_spark.operators.similarity import cosine_topk
+    from content_extractor_spark.operators.skew import spread
 
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_embedding")
     )
-    # _spread: the per-pair dot products stream the corpus side of the
+    # spread: the per-pair dot products stream the corpus side of the
     # broadcast nested-loop join — single parquet split = one core
-    corpus = _spread(spark, emb.where(F.col("vec_id") >= 5))
+    corpus = spread(emb.where(F.col("vec_id") >= 5))
     # corpus_rows: the testdata embeddings table is known-bounded, so
     # skip the guard's limit().count() probe job (still bound-checked)
     return cosine_topk(queries, corpus, k=5, round_to=3,

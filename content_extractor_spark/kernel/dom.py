@@ -57,9 +57,6 @@ P_CLOSERS = frozenset(
 RAWTEXT_TAGS = frozenset(("script", "style"))  # children become data nodes
 HEAD_TAGS = frozenset("title meta link base style script noscript template".split())
 
-_WS = {" ", "\t", "\n", "\f", "\r"}
-_INVISIBLE = {"​", "­"}  # zero-width space, soft hyphen (jsoup drops)
-
 
 class Node:
     __slots__ = ("parent",)

@@ -236,10 +236,6 @@ def extract_text(pdf_bytes: bytes) -> str:
     return re.sub(r"\n{3,}", "\n\n", text).strip()
 
 
-def is_pdf(data: bytes) -> bool:
-    return data[:5] == b"%PDF-"
-
-
 # -- tiny PDF writer (tests/synthesis only) -----------------------------------
 
 

@@ -139,8 +139,6 @@ def load_profile_json(path: str) -> ProfileConfig:
 
 # -- minimal HOCON reader (enough for domains.template.conf-shaped files) ----
 
-_HOCON_KV = re.compile(r"^\s*([A-Za-z0-9_.\-]+)\s*[:=]?\s*(.*)$")
-
 
 def _is_escaped(text: str, i: int) -> bool:
     """True if text[i] is escape-protected: preceded by an ODD run of

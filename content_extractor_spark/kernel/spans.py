@@ -20,8 +20,6 @@ from typing import Dict, List, Optional
 
 from .analyzer import RawEntryInformation
 
-OUT_KINDS = ("title", "summary", "content", "date", "tag", "image")
-
 
 def spans_to_html(spans: Optional[List[dict]]) -> str:
     """Reassemble page HTML from text spans in offset order."""
@@ -34,12 +32,6 @@ def spans_to_html(spans: Optional[List[dict]]) -> str:
     ]
     texts.sort(key=lambda t: t[0])
     return "".join(t[1] for t in texts)
-
-
-def count_media(spans: Optional[List[dict]]) -> int:
-    if not spans:
-        return 0
-    return sum(1 for s in spans if s.get("kind") == "media")
 
 
 def html_to_spans(html: str, chunks: int = 1, media_refs: Optional[List[str]] = None):

@@ -263,61 +263,6 @@ def build_warc(
     return out.getvalue()
 
 
-def surt_key(url: str) -> str:
-    """Minimal SURT-style sort key for a url (host labels reversed,
-    comma-joined, then the path) — the CDX urlkey convention."""
-    m = re.match(r"^https?://([^/?#]+)([^?#]*)", url or "")
-    if not m:
-        return url or ""
-    host, path = m.group(1).lower(), m.group(2) or "/"
-    return ",".join(reversed(host.split("."))) + ")" + path
-
-
-def build_warc_indexed(
-    pages,
-    filename: str = "archive.warc.gz",
-    warc_date: str = "2021-07-01T00:00:00Z",
-):
-    """Synthesize a per-record-gzip ``.warc.gz`` TOGETHER with its
-    CDXJ index lines — ``(warc_bytes, cdx_lines)``. Each page becomes
-    one gzip member whose (offset, length) the index records — the
-    same offset/length pairing principle Common Crawl indexes use to
-    let a reader fetch single records by byte range. NOTE the fixture
-    dialect differences from real CC indexes (self-consistent here,
-    not interoperable there): digest is ``sha1:<hex>`` rather than
-    Base32 SHA-1, and ``surt_key`` keeps ``www`` and drops the query
-    string rather than stripping www / sorting query params.
-    """
-    import hashlib
-    import json as _json
-
-    out = bytearray()
-    lines = []
-    ts = re.sub(r"[^0-9]", "", warc_date)[:14]
-    for page in pages:
-        rid, url, body = page[:3]
-        ctype = page[3] if len(page) > 3 else "text/html; charset=utf-8"
-        member = build_warc([page], gzip_members=True, warc_date=warc_date)
-        offset = len(out)
-        out += member
-        lines.append(
-            f"{surt_key(url)} {ts} "
-            + _json.dumps(
-                {
-                    "url": url,
-                    "mime": ctype.split(";")[0].strip(),
-                    "status": "200",
-                    "digest": "sha1:" + hashlib.sha1(body).hexdigest(),
-                    "length": str(len(member)),
-                    "offset": str(offset),
-                    "filename": filename,
-                },
-                sort_keys=True,
-            )
-        )
-    return bytes(out), lines
-
-
 def build_wat(
     entries,
     gzip_members: bool = True,
@@ -325,34 +270,24 @@ def build_wat(
 ) -> bytes:
     """Synthesize a .warc.wat(.gz) of ``metadata`` records — the
     Common Crawl WAT sidecar layout (per-page JSON envelope carrying
-    the parsed head title/metas/scripts and outgoing links, so
-    link-graph consumers never re-parse HTML).
+    the parsed head title and outgoing links, so link-graph consumers
+    never re-parse HTML).
 
     ``entries``: iterable of (record_id, page_url, title,
-    links=[(url, text), ...]) or (..., links, metas=[(name, content)],
-    script_urls=[url]).
+    links=[(url, text), ...]).
     """
     import json as _json
 
     out = io.BytesIO()
     for entry in entries:
-        rid, url, title, links = entry[:4]
-        metas = entry[4] if len(entry) > 4 else []
-        scripts = entry[5] if len(entry) > 5 else []
-        head = {"Title": title}
-        if metas:
-            head["Metas"] = [
-                {"name": n, "content": c} for n, c in metas
-            ]
-        if scripts:
-            head["Scripts"] = [{"url": u} for u in scripts]
+        rid, url, title, links = entry
         envelope = {
             "Envelope": {
                 "WARC-Header-Metadata": {"WARC-Target-URI": url},
                 "Payload-Metadata": {
                     "HTTP-Response-Metadata": {
                         "HTML-Metadata": {
-                            "Head": head,
+                            "Head": {"Title": title},
                             "Links": [
                                 {"path": "A@/href", "url": u, "text": t}
                                 for u, t in links
@@ -370,36 +305,6 @@ def build_wat(
             + f"WARC-Target-URI: {url}\r\n".encode()
             + f"WARC-Date: {warc_date}\r\n".encode()
             + b"Content-Type: application/json\r\n"
-            + f"Content-Length: {len(body)}\r\n".encode()
-            + b"\r\n"
-        )
-        record = headers + body + b"\r\n\r\n"
-        if gzip_members:
-            co = zlib.compressobj(9, zlib.DEFLATED, 16 + zlib.MAX_WBITS)
-            out.write(co.compress(record) + co.flush())
-        else:
-            out.write(record)
-    return out.getvalue()
-
-
-def build_wet(
-    docs,
-    gzip_members: bool = True,
-    warc_date: str = "2021-07-01T00:00:00Z",
-) -> bytes:
-    """Synthesize a .warc.wet(.gz) of ``conversion`` records from
-    (record_id, url, text) triples — the Common Crawl WET layout
-    (pre-extracted plain text, one record per page)."""
-    out = io.BytesIO()
-    for rid, url, text in docs:
-        body = text.encode("utf-8")
-        headers = (
-            b"WARC/1.0\r\n"
-            b"WARC-Type: conversion\r\n"
-            + f"WARC-Record-ID: <urn:uuid:{rid}>\r\n".encode()
-            + f"WARC-Target-URI: {url}\r\n".encode()
-            + f"WARC-Date: {warc_date}\r\n".encode()
-            + b"Content-Type: text/plain\r\n"
             + f"Content-Length: {len(body)}\r\n".encode()
             + b"\r\n"
         )

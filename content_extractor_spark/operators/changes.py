@@ -14,8 +14,6 @@ Reference semantics:
     changed only when BOTH hold. Equal-size tag sets with different
     membership are therefore treated as UNCHANGED (no update issued).
     With no existing tags, changed ⇔ scraped tags non-empty.
-    Pass ``faithful_tags_quirk=False`` for the clean set compare
-    (order-insensitive membership equality) instead.
   * A5 update-vs-skip: changed = contentChanged ∨ tagsChanged
     (UrlHandler.scala:339-364).
 
@@ -35,7 +33,6 @@ _FIELDS = ("title", "summary", "content", "date")
 def plan_actions(
     extracted: DataFrame,
     existing_entries: DataFrame,
-    faithful_tags_quirk: bool = True,
 ) -> DataFrame:
     """Join extracted rows to existing entries and assign an `action`:
 
@@ -57,27 +54,20 @@ def plan_actions(
         & F.col("date").eqNullSafe(F.col("_e_date"))
     )
     s, e = F.col("tags"), F.col("_e_tags")
-    if faithful_tags_quirk:
-        # A4 literal (UrlHandler.scala:375-397): see module docstring.
-        # `sameAmount` (misnamed) = sizes differ; `nothingChanged`
-        # (misnamed) = exists a scraped tag not in existing (scraped
-        # None -> existing non-empty). Changed = both.
-        # explicit null handling: size(NULL) is -1 under legacy conf
-        # (and NULL under ANSI), so spell out "null counts as 0" rather
-        # than relying on spark.sql.legacy.sizeOfNull
-        sizes_differ = F.size(e) != F.when(s.isNull(), F.lit(0)).otherwise(F.size(s))
-        some_missing = F.when(s.isNull(), F.size(e) > 0).otherwise(
-            F.size(F.array_except(s, e)) > 0
-        )
-        tags_changed = F.when(
-            e.isNull(), s.isNotNull() & (F.size(s) > 0)
-        ).otherwise(sizes_differ & some_missing)
-    else:
-        # clean semantics: size + membership (array_sort-normalized
-        # null-safe compare)
-        tags_changed = ~F.array_sort(F.coalesce(s, F.array())).eqNullSafe(
-            F.array_sort(F.coalesce(e, F.array()))
-        )
+    # A4 literal (UrlHandler.scala:375-397): see module docstring.
+    # `sameAmount` (misnamed) = sizes differ; `nothingChanged`
+    # (misnamed) = exists a scraped tag not in existing (scraped
+    # None -> existing non-empty). Changed = both.
+    # explicit null handling: size(NULL) is -1 under legacy conf
+    # (and NULL under ANSI), so spell out "null counts as 0" rather
+    # than relying on spark.sql.legacy.sizeOfNull
+    sizes_differ = F.size(e) != F.when(s.isNull(), F.lit(0)).otherwise(F.size(s))
+    some_missing = F.when(s.isNull(), F.size(e) > 0).otherwise(
+        F.size(F.array_except(s, e)) > 0
+    )
+    tags_changed = F.when(
+        e.isNull(), s.isNotNull() & (F.size(s) > 0)
+    ).otherwise(sizes_differ & some_missing)
 
     action = (
         F.when(F.col("status") != "ok", F.lit("error"))

@@ -33,8 +33,6 @@ PHONE_RE = r"\+?[0-9][0-9 ()/-]{6,}[0-9]"
 IPV4_RE = r"\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b"
 # 13-19 digits, optionally space/dash separated (ISO/IEC 7812 PANs)
 CARD_RE = r"\b(?:\d[ -]?){12,18}\d\b"
-# compact-form IBAN (ISO 13616): country code + 2 check digits + BBAN
-IBAN_RE = r"\b[A-Z]{2}[0-9]{2}[A-Z0-9]{11,30}\b"
 # display-form IBAN: the same number written in groups of 4 separated
 # by spaces or dashes (the ISO 13616 paper format, how real pages
 # print them) — matches the compact form too (separators optional).
@@ -384,40 +382,6 @@ def snapshot_diff(
         .otherwise(F.lit("changed"))
     )
     return joined.select(F.col("id").alias(id_col), change.alias("change"))
-
-
-def compression_ratio(
-    df: DataFrame,
-    text_col: str = "text",
-    out_col: str = "zlib_ratio",
-    level: int = 6,
-) -> DataFrame:
-    """Gopher/RefinedWeb-style quality signal: zlib-compressed size /
-    raw size (low = repetitive boilerplate, ~1 = high-entropy noise).
-
-    Needs real compression, so this is an Arrow-batched pandas UDF (the
-    approved slow path) — still map-only, no shuffle. Deterministic for
-    a fixed zlib level; value-pinned by pytest rather than a SQL oracle
-    (DuckDB cannot zlib).
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def ratio(texts):
-        import zlib
-
-        import pandas as pd
-
-        out = []
-        for t in texts:
-            if t is None or len(t) == 0:
-                out.append(None)
-                continue
-            raw = t.encode("utf-8", "replace")
-            out.append(round(len(zlib.compress(raw, level)) / len(raw), 6))
-        return pd.Series(out, dtype="float64")
-
-    return df.withColumn(out_col, ratio(F.col(text_col)))
 
 
 def chunk_documents(

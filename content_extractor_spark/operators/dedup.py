@@ -23,12 +23,11 @@ from pyspark.sql import functions as F
 def mark_duplicates(
     extracted: DataFrame,
     existing_entries: Optional[DataFrame] = None,
-    order_col: str = "doc_id",
 ) -> DataFrame:
     """Add `disabled` (bool): true for all but the first row per hash,
     and for any row whose hash already exists enabled in `existing_entries`.
     Rows without a hash (failed extraction) are never marked."""
-    w = Window.partitionBy("content_hash").orderBy(F.col(order_col))
+    w = Window.partitionBy("content_hash").orderBy(F.col("doc_id"))
     out = extracted.withColumn(
         "_rn", F.when(F.col("content_hash").isNotNull(), F.row_number().over(w))
     )
@@ -43,13 +42,7 @@ def mark_duplicates(
             existing, out["content_hash"] == existing["_ex_hash"], "left"
         )
         disabled = disabled | F.col("_ex_hash").isNotNull()
-        out = out.withColumn(
-            "disabled",
-            F.when(F.col("content_hash").isNotNull(), F.coalesce(disabled, F.lit(False))),
-        ).drop("_ex_hash", "_rn")
-    else:
-        out = out.withColumn(
-            "disabled",
-            F.when(F.col("content_hash").isNotNull(), F.coalesce(disabled, F.lit(False))),
-        ).drop("_rn")
-    return out
+    return out.withColumn(
+        "disabled",
+        F.when(F.col("content_hash").isNotNull(), F.coalesce(disabled, F.lit(False))),
+    ).drop("_ex_hash", "_rn")

@@ -1,17 +1,15 @@
 """Deduplication families for training-data pipelines.
 
-Exact (hash-groupBy), MinHash+LSH (shingle → minhash → band → bucket
-join), SimHash (bitwise majority over token hashes), and n-gram
-Jaccard — all as Catalyst-only plans over a text column, no Python.
+MinHash+LSH (shingle → minhash → band → bucket join), SimHash (bitwise
+majority over token hashes), and n-gram Jaccard — all as Catalyst-only
+plans over a text column, no Python.
 
 Portability contract: every hash here is derived from md5 so the
 DuckDB oracle can compute the *same* values (Spark's xxhash64/hash are
-not available in DuckDB). `PORTABLE_HASH_SPARK/DUCK` give the shared
-56-bit integer hash in each dialect.
+not available in DuckDB). `portable_hash` gives the shared 56-bit
+integer hash; its comment has the DuckDB form.
 
 Scale notes:
-  * exact dedup: one shuffle on the digest (uniform) — first-writer-
-    wins window, same shape as the content-hash dedup (A2).
   * minhash: per-row O(shingles × num_perm) JVM expressions, then one
     explode(bands) + self-join on (band_idx, band_hash): the classic
     LSH bucket join. Bucket sizes are the skew risk at 10^12 docs —
@@ -31,46 +29,6 @@ from pyspark.sql import functions as F
 # ('0x' || substr(md5(x),1,14))::BIGINT
 def portable_hash(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 14), 16, 10).cast("bigint")
-
-
-def portable_hash_duck(expr: str) -> str:
-    return f"(('0x' || substr(md5({expr}), 1, 14))::BIGINT)"
-
-
-# -- exact dedup -----------------------------------------------------------------
-
-
-def exact_duplicates(df: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id") -> DataFrame:
-    """Groups of byte-identical texts: (digest, keep_id, dup_count)."""
-    return (
-        df.select(F.md5(F.col(text_col)).alias("digest"), F.col(id_col))
-        .groupBy("digest")
-        .agg(F.min(id_col).alias("keep_id"), F.count("*").alias("dup_count"))
-        .where(F.col("dup_count") > 1)
-    )
-
-
-def dedup_exact(df: DataFrame, text_col: str = "text",
-                id_col: str = "doc_id") -> DataFrame:
-    """Keep the first row (min id) per identical text.
-
-    r7 de-skew: formerly a row_number window over md5(text), which
-    ships EVERY raw row of a digest to one task (no map-side partial
-    aggregation; AQE cannot split a window partition — guide §2.5). A
-    boilerplate text occurring 10^8 times put 10^8 rows on one
-    straggler. Now a min_by aggregate: partial aggregation reduces a
-    hot digest to one candidate row per map partition before the
-    shuffle, so the reducer sees at most #map_tasks rows per digest.
-    Same one-row-per-digest result (ties on id were
-    window-nondeterministic before and min_by-nondeterministic now).
-    """
-    cols = df.columns
-    return (
-        df.groupBy(F.md5(F.col(text_col)).alias("_digest"))
-        .agg(F.min_by(F.struct(*cols), F.col(id_col)).alias("_row"))
-        .select("_row.*")
-    )
 
 
 def repeated_window_spans(
@@ -312,8 +270,10 @@ def minhash_lsh_pairs(
         ).alias("band_idx", "band_hash"),
     )
     w = Window.partitionBy("band_idx", "band_hash").orderBy("id")
-    banded = banded.withColumn("_rn", F.row_number().over(w)).where(
-        F.col("_rn") <= max_bucket
+    banded = (
+        banded.withColumn("_rn", F.row_number().over(w))
+        .where(F.col("_rn") <= max_bucket)
+        .drop("_rn")
     )
     if checkpoint_banded:
         banded = banded.localCheckpoint(eager=True)

@@ -31,7 +31,6 @@ from pyspark.sql.types import (
 from ..kernel.analyzer import AnalysisResult, RawEntryInformation, analyze
 from ..kernel.density import extract_main_content
 from ..kernel.profiles import ProfileConfig, normalize_host
-from ..kernel.spans import count_media, spans_to_html
 
 SPAN_STRUCT = StructType(
     [
@@ -95,64 +94,6 @@ _ARROW_SCHEMA = pa.schema(
 )
 
 
-_OG_META_RE_FWD = (
-    r'(?is)<meta\b(?=[^>]*\b(?:property|name)\s*=\s*["\']?{prop}["\'\s])'
-    r'[^>]*\bcontent\s*=\s*["\']([^"\']*)["\']'
-)
-_OG_META_RE_REV = (
-    r'(?is)<meta\b[^>]*\bcontent\s*=\s*["\']([^"\']*)["\']'
-    r'[^>]*\b(?:property|name)\s*=\s*["\']?{prop}["\'\s]'
-)
-
-
-def _og_meta(html: str, prop: str):
-    import re as _re
-
-    for pat in (_OG_META_RE_FWD, _OG_META_RE_REV):
-        m = _re.search(pat.format(prop=_re.escape(prop)), html)
-        if m and m.group(1):
-            return m.group(1)
-    return None
-
-
-def _og_fallback(html: str) -> "AnalysisResult":
-    """Profile-free salvage from Open Graph / standard meta tags —
-    the CHEAP tier below density extraction: title from og:title (or
-    the <title> element), summary from og:description/description,
-    image from og:image; no content (OG is preview metadata, not main
-    content). Emitted as status 'ok_og' + profile_name '__og__' so
-    selector-exact, heuristic, and salvage rows never conflate. The
-    regexes mirror operators/linkgraph.og_extract (the Catalyst twin).
-    """
-    import re as _re
-
-    try:
-        title = _og_meta(html, "og:title")
-        if not title:
-            m = _re.search(r"(?is)<title[^>]*>\s*(.*?)\s*</title>", html)
-            title = m.group(1) if m else None
-        if not title:
-            return AnalysisResult(
-                status="profile_miss",
-                error="no profile; no og:title/<title>",
-            )
-        entry = RawEntryInformation(
-            title=title,
-            summary=(_og_meta(html, "og:description")
-                     or _og_meta(html, "description")),
-            content=None,
-            date=None,
-            tags=None,
-            etag=None,
-            image_url=_og_meta(html, "og:image"),
-        )
-        return AnalysisResult(status="ok_og", entry=entry, page_type="__og__")
-    except Exception as exc:  # salvage must never fail a row
-        return AnalysisResult(
-            status="profile_miss", error=f"no profile; og salvage: {exc}"
-        )
-
-
 def _density_fallback(html: str) -> "AnalysisResult":
     """Profile-free extraction via DOM text-density heuristics.
 
@@ -183,8 +124,6 @@ def _decode_spans_columnar(arr: pa.Array):
     Python lists once, and per-row slices are assembled with zip. On
     HTML-sized payloads this halves the input-decode cost of the batch.
     """
-    if isinstance(arr, pa.ChunkedArray):  # defensive; batches give Array
-        arr = arr.combine_chunks()
     values = arr.values
     kinds = values.field("kind").to_pylist()
     texts = values.field("text").to_pylist()
@@ -214,18 +153,11 @@ def _analyze_batch(
     density_fallback: bool = False,
     target_pattern: str = "yyyy-MM-dd'T'HH:mm:ssXXX",
     target_zone: str = "UTC",
-    og_fallback: bool = False,
 ) -> pa.RecordBatch:
     names = batch.schema.names
     cols = {n: batch.column(i) for i, n in enumerate(names)}
     doc_ids = cols["doc_id"].to_pylist()
-    try:
-        decoded = _decode_spans_columnar(cols["spans"])
-    except Exception:  # fall back to the row-wise dict path
-        decoded = [
-            (spans_to_html(s), len(s or []), count_media(s))
-            for s in cols["spans"].to_pylist()
-        ]
+    decoded = _decode_spans_columnar(cols["spans"])
     hosts = cols.get("host")
     urls = cols.get("url")
     url_ids = cols.get("url_id")
@@ -258,13 +190,6 @@ def _analyze_batch(
         if profile is None:
             if density_fallback:
                 res = _density_fallback(html)
-                if res.status == "profile_miss" and og_fallback:
-                    res = _og_fallback(html)
-                res_status, entry, pt_name, err = (
-                    res.status, res.entry, res.page_type, res.error,
-                )
-            elif og_fallback:
-                res = _og_fallback(html)
                 res_status, entry, pt_name, err = (
                     res.status, res.entry, res.page_type, res.error,
                 )
@@ -382,7 +307,6 @@ def extract_entries(
     density_fallback: bool = False,
     target_pattern: str = "yyyy-MM-dd'T'HH:mm:ssXXX",
     target_zone: str = "UTC",
-    og_fallback: bool = False,
     derive_spans: bool = True,
 ) -> DataFrame:
     """documents -> extracted entries via a broadcast + mapInArrow stage.
@@ -398,13 +322,10 @@ def extract_entries(
     (spark.sql.files.maxPartitionBytes) leave it None — extraction is
     embarrassingly parallel and needs no shuffle at all.
 
-    Fallback ladder for profile misses, both OPT-IN (the reference
-    errors such rows — ExtractionSupervisor.scala:399-404 — so the
-    default stays faithful): ``density_fallback`` tries profile-free
-    DOM-density extraction ('ok_density'); ``og_fallback`` salvages
-    Open Graph preview metadata ('ok_og', title/summary/image only).
-    With both on, density runs first (it recovers real content) and
-    OG catches what density rejects.
+    ``density_fallback`` is OPT-IN (the reference errors profile-miss
+    rows — ExtractionSupervisor.scala:399-404 — so the default stays
+    faithful): such rows get profile-free DOM-density extraction
+    ('ok_density') instead.
     """
     norm_profiles = {normalize_host(k): v for k, v in profiles.items()}
     if repartition:
@@ -420,7 +341,7 @@ def extract_entries(
                 continue
             yield _analyze_batch(
                 batch, norm_profiles, density_fallback,
-                target_pattern, target_zone, og_fallback,
+                target_pattern, target_zone,
             )
 
     narrow = StructType(

@@ -203,112 +203,3 @@ def extract_anchor_texts(
     )
 
 
-def _meta_content(html: Column, prop: str) -> Column:
-    """content= of a <meta property=...> / <meta name=...> tag, both
-    attribute orders, quotes optional on BOTH attributes ('' when
-    absent) — an unquoted ``content=value`` (valid HTML) yields the
-    value via the fallback branches, not ''."""
-    fwd = F.regexp_extract(
-        html,
-        r'(?is)<meta\b(?=[^>]*\b(?:property|name)\s*=\s*["\']?'
-        + prop
-        + r'["\'\s])[^>]*\bcontent\s*=\s*["\']([^"\']*)["\']',
-        1,
-    )
-    rev = F.regexp_extract(
-        html,
-        r'(?is)<meta\b[^>]*\bcontent\s*=\s*["\']([^"\']*)["\']'
-        r'[^>]*\b(?:property|name)\s*=\s*["\']?' + prop + r'["\'\s]',
-        1,
-    )
-    fwd_uq = F.regexp_extract(
-        html,
-        r'(?is)<meta\b(?=[^>]*\b(?:property|name)\s*=\s*["\']?'
-        + prop
-        + r'["\'\s])[^>]*\bcontent\s*=\s*([^"\'\s>]+)',
-        1,
-    )
-    rev_uq = F.regexp_extract(
-        html,
-        r'(?is)<meta\b[^>]*\bcontent\s*=\s*([^"\'\s>]+)'
-        r'[^>]*\b(?:property|name)\s*=\s*["\']?' + prop + r'["\'\s]',
-        1,
-    )
-    return (
-        F.when(fwd != "", fwd)
-        .when(rev != "", rev)
-        .when(fwd_uq != "", fwd_uq)
-        .otherwise(rev_uq)
-    )
-
-
-def og_extract(
-    docs: DataFrame, html_col: str = "html"
-) -> DataFrame:
-    """Open Graph / meta fallback extraction: og:title, og:description
-    (falling back to <meta name=description>), og:image, og:site_name,
-    og:type, plus the <title> element — the salvage path for pages no
-    extraction profile covers (virtually every modern page ships OG
-    tags for link previews). Columns append to the input; '' means
-    absent. Map-only regex scans, no DOM build — this is the CHEAP
-    tier below profile extraction, not a replacement for it (profiles
-    give span-exact main content; OG gives preview metadata).
-    """
-    h = F.col(html_col)
-    title_el = F.regexp_extract(
-        h, r"(?is)<title[^>]*>\s*(.*?)\s*</title>", 1
-    )
-    og_title = _meta_content(h, "og:title")
-    desc = F.when(
-        _meta_content(h, "og:description") != "",
-        _meta_content(h, "og:description"),
-    ).otherwise(_meta_content(h, "description"))
-    return docs.select(
-        "*",
-        F.when(og_title != "", og_title).otherwise(title_el).alias(
-            "og_title"
-        ),
-        desc.alias("og_description"),
-        _meta_content(h, "og:image").alias("og_image"),
-        _meta_content(h, "og:site_name").alias("og_site_name"),
-        _meta_content(h, "og:type").alias("og_type"),
-    )
-
-
-def hreflang_alternates(
-    docs: DataFrame,
-    html_col: str = "html",
-    url_col: str = "url",
-) -> DataFrame:
-    """(url, hreflang, alt_url) rows from ``<link rel=alternate
-    hreflang=...>`` tags — the publisher's own multilingual clustering:
-    translations of one page reference each other, giving training
-    pipelines aligned-document candidates and letting corpus balancing
-    count a translated story once per language, not once per copy.
-    Pairs with ``detect_language`` (declared vs detected language is a
-    cheap quality check). Pure Catalyst: one extract-all over the link
-    tags, per-tag attribute extraction after the explode; x-default
-    rows carry hreflang='x-default'.
-    """
-    tags = F.regexp_extract_all(
-        F.col(html_col),
-        F.lit(r"(?is)(<link\b[^>]*\bhreflang\s*=[^>]*>)"),
-        F.lit(1),
-    )
-    exploded = docs.select(
-        F.col(url_col).alias("url"), F.explode(tags).alias("_tag")
-    )
-    lang = F.regexp_extract(
-        F.col("_tag"), r'(?i)\bhreflang\s*=\s*["\']?([A-Za-z0-9-]+)', 1
-    )
-    href = F.regexp_extract(
-        F.col("_tag"), r'(?i)\bhref\s*=\s*["\']?([^"\'\s>]+)', 1
-    )
-    return (
-        exploded.select(
-            "url",
-            F.lower(lang).alias("hreflang"),
-            href.alias("alt_url"),
-        )
-        .where((F.col("hreflang") != "") & (F.col("alt_url") != ""))
-    )

@@ -2,7 +2,7 @@
 
 Image/audio/video assets travel as opaque `binary` columns (or
 `media_ref` pointers) with typed metadata structs. Decode /
-feature-extract / resize / frame-sample run as Arrow-batched UDFs over
+feature-extract / frame-sample run as Arrow-batched UDFs over
 ``mapInPandas`` — the Spark-side plumbing (schema, batch shape,
 partitioning) is real and tested.
 
@@ -40,11 +40,6 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-MEDIA_META_DDL = (
-    "media_ref string, modality string, mime string, width int, height int, "
-    "duration_ms int, n_bytes bigint"
-)
 
 IMAGE_FEATURES_DDL = (
     "media_ref string, n_bytes bigint, sha256 string, "
@@ -1103,77 +1098,6 @@ def image_near_duplicates(
     return signature_hamming_pairs(
         sigs, bits=64, bands=bands, max_hamming=max_hamming
     )
-
-
-# -- resize + thumbnails ----------------------------------------------------------
-
-
-def resize_gray(w: int, h: int, gray, tw: int, th: int):
-    """Nearest-neighbor resize of a row-major gray raster — REAL,
-    dependency-free (the resize step of the mandate's multimodal
-    decode/feature/resize/frame-sample family). Deterministic center
-    sampling: source index = (t + 0.5) * src / dst floored."""
-    out = bytearray(tw * th)
-    for ty in range(th):
-        sy = min(h - 1, (2 * ty + 1) * h // (2 * th))
-        base_s = sy * w
-        base_t = ty * tw
-        for tx in range(tw):
-            sx = min(w - 1, (2 * tx + 1) * w // (2 * tw))
-            out[base_t + tx] = gray[base_s + sx]
-    return bytes(out)
-
-
-THUMBNAILS_DDL = (
-    "media_ref string, fmt string, width int, height int, "
-    "thumb_w int, thumb_h int, thumb binary, status string, error string"
-)
-
-
-def image_thumbnails(
-    df: DataFrame,
-    thumb_w: int = 32,
-    thumb_h: int = 32,
-    payload_col: str = "payload",
-    ref_col: str = "media_ref",
-) -> DataFrame:
-    """Decode -> grayscale -> nearest-neighbor resize -> re-encode as
-    binary Netpbm P5, one mapInPandas stage: a REAL end-to-end image
-    transform (the thumbnail/preview path of a multimodal training
-    pipeline). Raster formats only (see decode_gray_raster)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k.split(" ")[0]: [] for k in THUMBNAILS_DDL.split(", ")}
-
-            def row(ref, fmt=None, w=None, h=None, thumb=None,
-                    status="ok", error=None):
-                out["media_ref"].append(ref)
-                out["fmt"].append(fmt)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["thumb_w"].append(thumb_w if thumb else None)
-                out["thumb_h"].append(thumb_h if thumb else None)
-                out["thumb"].append(thumb)
-                out["status"].append(status)
-                out["error"].append(error)
-
-            for ref, payload in zip(pdf[ref_col], pdf[payload_col]):
-                if payload is None:
-                    row(ref, status="error", error="null payload")
-                    continue
-                dec = decode_gray_raster(bytes(payload))
-                if dec is None:
-                    row(ref, status="unsupported",
-                        error="not netpbm/png/bmp (transcode to P6 first)")
-                    continue
-                fmt, w, h, gray = dec
-                resized = resize_gray(w, h, gray, thumb_w, thumb_h)
-                p5 = f"P5\n{thumb_w} {thumb_h}\n255\n".encode() + resized
-                row(ref, fmt, w, h, p5)
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(run, schema=THUMBNAILS_DDL)
 
 
 # -- video containers (ISO BMFF / MP4) --------------------------------------------

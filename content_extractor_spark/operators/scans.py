@@ -241,19 +241,6 @@ def robots_directives(
     return delays.unionByName(sitemaps)
 
 
-def robots_disallow_rules(
-    robots: DataFrame,
-    host_col: str = "host",
-    txt_col: str = "robots_txt",
-) -> DataFrame:
-    """(host, prefix) — the Disallow subset of :func:`robots_rules`."""
-    return (
-        robots_rules(robots, host_col, txt_col)
-        .where(F.col("kind") == "disallow")
-        .select("host", "prefix")
-    )
-
-
 def robots_disallow_filter(
     urls: DataFrame,
     robots: DataFrame,
@@ -389,82 +376,6 @@ def sitemap_urls(
     )
 
 
-# <link rel=canonical href=...> — attribute order-free, quotes optional
-_CANONICAL_RE = (
-    r'(?is)<link\b(?=[^>]*\brel\s*=\s*["\']?canonical\b)'
-    r'[^>]*\bhref\s*=\s*["\']?([^"\'\s>]+)'
-)
-_CANONICAL_RE_REV = (
-    r'(?is)<link\b[^>]*\bhref\s*=\s*["\']?([^"\'\s>]+)'
-    r'["\']?[^>]*\brel\s*=\s*["\']?canonical\b'
-)
-
-
-def canonical_link(html: Column) -> Column:
-    """The page's declared canonical url ('' when absent) — the
-    publisher's own duplicate-collapse key: syndicated/paginated/AMP
-    copies point at one canonical, so grouping on it dedups what
-    content hashing alone cannot (same story, different boilerplate).
-    Handles both attribute orders in one pass each."""
-    fwd = F.regexp_extract(html, _CANONICAL_RE, 1)
-    rev = F.regexp_extract(html, _CANONICAL_RE_REV, 1)
-    return F.when(fwd != "", fwd).otherwise(rev)
-
-
-def canonical_dedup(
-    docs: DataFrame,
-    html_col: str = "html",
-    url_col: str = "url",
-) -> DataFrame:
-    """First-writer-wins dedup on the canonical url: rows gain
-    ``canonical`` (the declared canonical, falling back to the row's
-    own url) and ``is_canonical_dup`` (a later row pointing at an
-    already-kept canonical). One window over the canonical key —
-    the same single-shuffle shape as the content-hash dedup (A2),
-    keyed on the publisher's signal instead of ours."""
-    from pyspark.sql import Window
-
-    canon = canonical_link(F.col(html_col))
-    keyed = docs.withColumn(
-        "canonical",
-        F.when(canon != "", canon).otherwise(F.col(url_col)),
-    )
-    w = Window.partitionBy("canonical").orderBy(F.col(url_col).asc())
-    return keyed.withColumn(
-        "is_canonical_dup", F.row_number().over(w) > 1
-    )
-
-
-# <meta name=robots content="... noindex ..."> — attribute ORDER-FREE
-# (name before content or content before name), quotes optional,
-# directive list comma/space separated, case-insensitive
-_META_NOINDEX_RE = (
-    r'(?is)<meta\b(?=[^>]*\bname\s*=\s*["\']?robots\b)'
-    r'[^>]*\bcontent\s*=\s*["\']?[^"\'>]*\bnoindex\b[^>]*>'
-    r'|(?is)<meta\b(?=[^>]*\bcontent\s*=\s*["\']?[^"\'>]*\bnoindex\b)'
-    r'[^>]*\bname\s*=\s*["\']?robots\b[^>]*>'
-)
-
-
-def meta_noindex(html: Column) -> Column:
-    """True when the page carries a robots-meta noindex directive —
-    such pages may be fetched but must not become indexed entries
-    (the on-page counterpart of robots.txt Disallow). One regex scan,
-    attribute order and quoting variations handled."""
-    return html.rlike(_META_NOINDEX_RE)
-
-
-def noindex_filter(
-    docs: DataFrame, html_col: str = "html", keep_flag: bool = False
-) -> DataFrame:
-    """Drop (or, with ``keep_flag``, mark with a ``noindex`` column)
-    documents whose HTML declares robots-meta noindex. Map-only."""
-    flag = meta_noindex(F.col(html_col))
-    if keep_flag:
-        return docs.withColumn("noindex", flag)
-    return docs.where(~flag)
-
-
 def feed_urls(
     feeds: DataFrame,
     xml_col: str = "xml",
@@ -593,56 +504,3 @@ def domain_blocklist_filter(
         .distinct()
     )
     return urls.join(hits, url_col, "left_anti")
-
-
-def crawl_schedule(
-    urls: DataFrame,
-    directives: DataFrame = None,
-    url_col: str = "url",
-    host_col: str = "host",
-    default_delay_sec: float = 0.01,
-    max_delay_sec: float = 30.0,
-) -> DataFrame:
-    """Politeness-aware fetch scheduling: per host, assign every url a
-    slot and a time offset honoring the host's Crawl-delay.
-
-    The reference throttles 100 urls/s/host (workerPoolSize=100 /
-    repeatDelay=1s, Config.scala:77-78) — that is the 0.01 s default
-    spacing here; hosts with a robots Crawl-delay (from
-    :func:`robots_directives`) get their own spacing, capped at
-    `max_delay_sec` so a hostile 'Crawl-delay: 86400' cannot park a
-    partition forever.
-
-    Output: (host, url, slot, delay_sec, offset_sec) where
-    offset_sec = slot * delay_sec. Deterministic (urls ordered within
-    host); one window keyed on host — the same key the fetch stage
-    partitions by, so the schedule shuffles once and stays co-located
-    with the work at any corpus size.
-    """
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(F.col(host_col)).orderBy(F.col(url_col).asc())
-    out = urls.withColumn("slot", F.row_number().over(w) - F.lit(1))
-    if directives is not None:
-        delays = (
-            directives.where(F.col("kind") == "crawl_delay")
-            .select(
-                F.col("host").alias("_d_host"),
-                F.least(
-                    F.col("value").cast("double"), F.lit(max_delay_sec)
-                ).alias("_d_delay"),
-            )
-        )
-        # equi-join on host; delays scale with the host population —
-        # no forced broadcast (AQE decides)
-        out = out.join(
-            delays, out[host_col] == delays["_d_host"], "left"
-        )
-        delay = F.coalesce(F.col("_d_delay"), F.lit(default_delay_sec))
-    else:
-        delay = F.lit(default_delay_sec)
-    return out.select(
-        F.col(host_col).alias("host"), F.col(url_col).alias("url"), "slot",
-        delay.alias("delay_sec"),
-        (F.col("slot") * delay).alias("offset_sec"),
-    )

@@ -777,213 +777,3 @@ def pq_adc_distances(
         F.round(dist, round_to).alias("adc_dist"),
     )
 
-
-def pq_adc_topk(
-    df: DataFrame,
-    codebooks,
-    query,
-    topk: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_to: int = 6,
-) -> DataFrame:
-    """End-to-end PQ search: encode + ADC + top-k (ascending distance,
-    ties to the lowest id). orderBy+limit compiles to TakeOrdered —
-    per-partition top-k then a k-row driver merge, never a global
-    sort."""
-    codes = pq_encode(df, codebooks, id_col, vec_col, round_to)
-    scored = pq_adc_distances(codes, codebooks, query, id_col, round_to)
-    return scored.orderBy(
-        F.col("adc_dist").asc(), F.col(id_col).asc()
-    ).limit(topk)
-
-
-def ivf_pq_topk(
-    df: DataFrame,
-    coarse_centroids,
-    codebooks,
-    query,
-    topk: int = 10,
-    nprobe: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_to: int = 6,
-) -> DataFrame:
-    """FAISS-style IVF-PQ search: the coarse quantizer routes the query
-    to its `nprobe` nearest inverted lists, and only THOSE partitions'
-    PQ codes are ADC-scored — at 10^12 vectors with nlist partitions,
-    a query scans ~nprobe/nlist of the corpus instead of all of it,
-    and what it scans is m-byte codes, not full-precision vectors.
-
-    ``coarse_centroids``: the k-means centroids (e.g. from the same
-    training pass `kmeans_assign` runs); ``codebooks``: per-subspace PQ
-    codebooks (:func:`pq_train_codebooks`). Deterministic: probe order,
-    code assignment and tie-breaks all follow the established rounded
-    argmin-lowest-index contract; recall is governed by nprobe exactly
-    as in the published IVF-PQ design.
-
-    Plan shape: the partition filter is an `isin` over nprobe literal
-    cluster ids — pushable to a corpus bucketed/partitioned by
-    `cluster` — followed by the map-only encode + ADC scoring and a
-    TakeOrdered top-k. One scan, one k-row driver merge, no shuffle.
-    """
-    # driver-side probe selection: distance of the query to each coarse
-    # centroid (same rounding discipline as the executors)
-    qdists = [
-        (
-            _round_half_up(
-                sum((q - c) * (q - c) for q, c in zip(query, cent)),
-                round_to,
-            ),
-            j,
-        )
-        for j, cent in enumerate(coarse_centroids)
-    ]
-    probes = [j for _, j in sorted(qdists)[:max(1, nprobe)]]
-    base = df.select(
-        F.col(id_col), F.col(vec_col).cast("array<double>").alias("v")
-    )
-    routed = _kmeans_assign_stage(
-        base.withColumnRenamed(id_col, "id"), coarse_centroids, round_to
-    ).where(F.col("cluster").isin(probes))
-    routed = routed.withColumnRenamed("id", id_col).withColumnRenamed(
-        "v", vec_col
-    )
-    codes = pq_encode(routed, codebooks, id_col, vec_col, round_to)
-    scored = pq_adc_distances(
-        codes, codebooks, query, id_col, round_to, keep=()
-    )
-    return scored.orderBy(
-        F.col("adc_dist").asc(), F.col(id_col).asc()
-    ).limit(topk)
-
-
-# ---------------------------------------------------------------------------
-# int8 embedding storage quantization
-# ---------------------------------------------------------------------------
-
-def quantize_embeddings_int8(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Symmetric per-vector int8 quantization for embedding STORAGE:
-    scale = max|x|/127, q_i = round(x_i/scale) in [-127, 127] — 4x
-    smaller than float32 (16x vs float64) with the scale carried per
-    row, which is what makes a 10^12-row embedding column storable and
-    scannable. Map-only Catalyst (transform + array_max); zero vectors
-    get scale 0 and all-zero codes. Deterministic: engine HALF_UP
-    rounding.
-
-    Returns (id, codes array<tinyint>, scale double).
-    """
-    from .textstats import let_bound
-
-    v = F.col(vec_col).cast("array<double>")
-    amax = F.array_max(F.transform(v, lambda x: F.abs(x)))
-    scale = F.when(amax > 0, amax / F.lit(127.0)).otherwise(F.lit(0.0))
-    # r7 (HOF free-variable rule): `scale` embeds the O(dim) array_max
-    # scan — referenced free inside the codes lambda it re-evaluates
-    # once per ELEMENT (twice: condition + value), i.e. O(dim^2) per
-    # row; let-binding evaluates it once per row
-    codes = let_bound(
-        scale,
-        lambda sc: F.transform(
-            v,
-            lambda x: F.when(sc > 0, F.round(x / sc, 0))
-            .otherwise(F.lit(0.0))
-            .cast("tinyint"),
-        ),
-    )
-    return df.select(
-        F.col(id_col),
-        codes.alias("codes"),
-        scale.alias("scale"),
-    )
-
-
-def dequantize_embeddings_int8(
-    df: DataFrame, id_col: str = "vec_id"
-) -> DataFrame:
-    """(id, codes, scale) -> (id, embedding array<double>): x_i ~=
-    q_i * scale, with |error| <= scale/2 per component."""
-    return df.select(
-        F.col(id_col),
-        F.transform(
-            F.col("codes"), lambda q: q.cast("double") * F.col("scale")
-        ).alias("embedding"),
-    )
-
-
-def int8_cosine(a_codes: Column, a_scale: Column,
-                b_codes: Column, b_scale: Column) -> Column:
-    """Cosine similarity straight from int8 codes: the per-vector
-    scales cancel out of the ratio, so this is pure small-integer
-    arithmetic over the stored codes — the cheap scan-side similarity
-    for quantized corpora (the int sums stay well inside int64 for any
-    dim <= ~5.5e14/127^2)."""
-    ab = F.aggregate(
-        F.zip_with(a_codes, b_codes,
-                   lambda x, y: x.cast("long") * y.cast("long")),
-        F.lit(0).cast("long"), lambda acc, x: acc + x,
-    )
-    aa = F.aggregate(
-        F.transform(a_codes, lambda x: x.cast("long") * x.cast("long")),
-        F.lit(0).cast("long"), lambda acc, x: acc + x,
-    )
-    bb = F.aggregate(
-        F.transform(b_codes, lambda x: x.cast("long") * x.cast("long")),
-        F.lit(0).cast("long"), lambda acc, x: acc + x,
-    )
-    return ab.cast("double") / F.sqrt(
-        aa.cast("double") * bb.cast("double")
-    )
-
-
-def mean_pool_embeddings(
-    df: DataFrame,
-    group_col: str = "doc_id",
-    vec_col: str = "embedding",
-    weight_col: str | None = None,
-    round_to: int | None = None,
-) -> DataFrame:
-    """Pool per-chunk embeddings into one vector per document:
-    component-wise (optionally weighted) mean — the standard way to
-    get document vectors from chunk encoders, and the missing link
-    between ``chunk_documents`` and the similarity family.
-
-    Plan shape: posexplode -> partial-aggregated (group, pos) AVG ->
-    one collect_list per group re-ordered by position (array_sort on
-    (pos, value) structs, so the result never depends on shuffle
-    arrival order). Two keyed shuffles, both with map-side combine;
-    no Python. ``weight_col`` (e.g. a chunk's token count) switches to
-    sum(w*x)/sum(w).
-    """
-    cols = [F.col(group_col)]
-    if weight_col is not None:
-        cols.append(F.col(weight_col).cast("double").alias("_w"))
-    ex = df.select(
-        *cols,
-        F.posexplode(F.col(vec_col).cast("array<double>")).alias(
-            "_pos", "_x"
-        ),
-    )
-    if weight_col is None:
-        per = ex.groupBy(group_col, "_pos").agg(F.avg("_x").alias("_m"))
-    else:
-        per = ex.groupBy(group_col, "_pos").agg(
-            (F.sum(F.col("_w") * F.col("_x")) / F.sum("_w")).alias("_m")
-        )
-    return (
-        per.groupBy(group_col)
-        .agg(F.collect_list(F.struct("_pos", "_m")).alias("_ps"))
-        .select(
-            group_col,
-            F.transform(
-                F.array_sort("_ps"), lambda s: (
-                    F.round(s["_m"], round_to)
-                    if round_to is not None else s["_m"]
-                )
-            ).alias(vec_col),
-        )
-    )

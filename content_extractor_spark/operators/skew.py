@@ -18,6 +18,8 @@ operators:
   * `hot_keys` — cheap sampled histogram to decide the salt factor /
     isolate the top-k keys (process hot keys via broadcast, the long
     tail via ordinary shuffle).
+  * `spread` — widen a frame narrower than the session's parallelism
+    (a single-split scan) before per-row map work.
 
 AQE's skew-join splitting (enabled in session.py) covers sort-merge
 joins automatically; these operators cover aggregations and the cases
@@ -30,6 +32,21 @@ from typing import List, Optional, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+
+def spread(df: DataFrame) -> DataFrame:
+    """Round-robin ``df`` to ``defaultParallelism`` partitions when it
+    has fewer; otherwise return it untouched.
+
+    A single-row-group parquet file or a small re-read batch scans as
+    ONE split, so every per-row stage before the first exchange runs on
+    one core. A frame already at least that wide (a real partitioned
+    corpus) is never narrowed or needlessly shuffled.
+    """
+    target = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() >= target:
+        return df
+    return df.repartition(target)
 
 
 def with_salt(df: DataFrame, key_col: str, salt: int,

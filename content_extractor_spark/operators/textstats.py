@@ -37,9 +37,6 @@ LANG_MARKERS = {
 KANA_RE = "[぀-ヿ]"  # hiragana U+3040-309F + katakana U+30A0-30FF
 HANGUL_RE = "[가-힣]"  # hangul syllables
 HAN_RE = "[一-鿿]"  # CJK unified ideographs
-# union of the three — a single guard scan so Latin documents pay ONE
-# regex pass instead of three before falling to the marker ladder
-CJK_ANY_RE = "[぀-ヿ가-힣一-鿿]"
 
 # ---------------------------------------------------------------------------
 # Script-decisive tier: (lang, pattern), checked IN ORDER inside the
@@ -198,22 +195,6 @@ def _distinct_tokens(text: Column) -> Column:
 def _marker_hits_tokens(toks: Column, words) -> Column:
     """Presence count of marker words in a pre-tokenized document."""
     return F.size(F.array_intersect(toks, F.array(*[F.lit(w) for w in words])))
-
-
-def _marker_hits(text: Column, words) -> Column:
-    """How many of the marker words appear as whole tokens in text."""
-    return _marker_hits_tokens(_distinct_tokens(text), words)
-
-
-def _trigram_hits(win: Column, grams) -> Column:
-    """Presence count of DISTINCT profile trigrams in a pre-lowered
-    text window — plain ``contains`` calls (no regex, no higher-order
-    functions, so the projection stays inside whole-stage codegen)."""
-    h = None
-    for g in grams:
-        c = F.contains(win, F.lit(g)).cast("int")
-        h = c if h is None else h + c
-    return h
 
 
 def _window_trigrams(win: Column) -> Column:
@@ -972,130 +953,3 @@ def line_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def train_bpe_merges(
-    df: DataFrame,
-    n_merges: int = 50,
-    text_col: str = "text",
-    sample_permille: int = 1000,
-    id_col: str = "doc_id",
-    min_count: int = 1,
-    max_words: int = 1_000_000,
-) -> list:
-    """Train byte-pair-encoding merges over the corpus — the tokenizer-
-    training primitive of an LLM data pipeline.
-
-    Distributed shape: ONE pass builds the word-frequency table
-    ((word, count) — tiny vs the corpus: vocabulary, not tokens), which
-    is collected and merged driver-side exactly like the reference BPE
-    algorithm (Sennrich et al. 2016): per round, count adjacent symbol
-    pairs weighted by word frequency, merge the most frequent pair
-    (ties broken lexicographically — deterministic across runs and
-    cluster sizes), repeat. Per-merge distributed passes would be
-    n_merges full shuffles for no benefit: the word table for a 100 TB
-    corpus is vocabulary-sized and standard practice trains the
-    tokenizer on it (or on a deterministic sample — `sample_permille`
-    uses the md5 hash, never rand()). RAW WEB TEXT has unbounded
-    distinct "words" (urls, hashes, garbage), so the collect is
-    bounded twice: `min_count` prunes the long tail inside the
-    aggregation (a HAVING pushdown, no extra pass) and `max_words`
-    hard-caps the table to the most frequent words (deterministic
-    count-desc, word-asc order) — rare words contribute nothing to
-    merge counts anyway.
-
-    Returns the ordered merge list [(left, right), ...]; words are
-    split into characters with the '</w>' end-of-word marker.
-    """
-    toks = F.explode(
-        F.split(F.lower(F.trim(F.col(text_col))), TOKEN_SPLIT_RE)
-    ).alias("w")
-    base = df
-    if sample_permille < 1000:
-        h = F.conv(
-            F.substring(F.md5(F.col(id_col).cast("string")), 1, 14), 16, 10
-        ).cast("bigint")
-        base = df.where(h % 1000 < sample_permille)
-    counts = (
-        base.select(toks)
-        .where(F.col("w") != "")
-        .groupBy("w")
-        .agg(F.count("*").alias("c"))
-    )
-    if min_count > 1:
-        counts = counts.where(F.col("c") >= min_count)
-    word_counts = (
-        counts.orderBy(F.col("c").desc(), F.col("w").asc())
-        .limit(max_words)
-        .collect()
-    )
-    vocab = {
-        tuple(list(r["w"]) + ["</w>"]): r["c"] for r in word_counts
-    }
-    merges = []
-    for _ in range(n_merges):
-        pairs: dict = {}
-        for syms, c in vocab.items():
-            for i in range(len(syms) - 1):
-                p = (syms[i], syms[i + 1])
-                pairs[p] = pairs.get(p, 0) + c
-        if not pairs:
-            break
-        # deterministic: max count, ties to the lexicographically
-        # smallest pair
-        best = min(pairs.items(), key=lambda kv: (-kv[1], kv[0]))[0]
-        merges.append(best)
-        merged = best[0] + best[1]
-        new_vocab = {}
-        for syms, c in vocab.items():
-            out, i = [], 0
-            while i < len(syms):
-                if (i + 1 < len(syms)
-                        and syms[i] == best[0] and syms[i + 1] == best[1]):
-                    out.append(merged)
-                    i += 2
-                else:
-                    out.append(syms[i])
-                    i += 1
-            new_vocab[tuple(out)] = new_vocab.get(tuple(out), 0) + c
-        vocab = new_vocab
-    return merges
-
-
-def apply_bpe(
-    df: DataFrame,
-    merges: list,
-    text_col: str = "text",
-    out_col: str = "bpe_tokens",
-) -> DataFrame:
-    """Tokenize with a trained merge list — Arrow-batched pandas UDF
-    (the merge table broadcasts in the UDF closure; greedy
-    rank-ordered merging, the standard BPE apply)."""
-    from pyspark.sql.functions import pandas_udf
-
-    ranks = {pair: i for i, pair in enumerate(merges)}
-
-    @pandas_udf("array<string>")
-    def run(texts):
-        import pandas as pd
-
-        def encode(text):
-            if not text:
-                return []
-            out = []
-            for w in text.lower().split():
-                syms = list(w) + ["</w>"]
-                while len(syms) > 1:
-                    cand = [
-                        (ranks[(a, b)], i)
-                        for i, (a, b) in enumerate(zip(syms, syms[1:]))
-                        if (a, b) in ranks
-                    ]
-                    if not cand:
-                        break
-                    _, i = min(cand)
-                    syms[i:i + 2] = [syms[i] + syms[i + 1]]
-                out.extend(syms)
-            return out
-
-        return pd.Series([encode(t) for t in texts])
-
-    return df.withColumn(out_col, run(F.col(text_col)))

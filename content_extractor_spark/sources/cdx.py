@@ -3,9 +3,8 @@
 A 100 TB crawl is consumed selectively: the CDXJ index (one line per
 capture: ``<urlkey> <timestamp> <json>``) is how a pipeline decides
 WHICH WARC byte ranges to read before touching any archive bytes.
-This connector parses the index, applies the standard capture
-selection (status/mime filters, one capture per content digest), and
-groups the survivors into per-file ranged-fetch plans.
+This connector parses the index and applies the standard capture
+selection (status/mime filters, one capture per content digest).
 
 Scale notes:
   * ``spark.read.text`` splits ``.cdx.gz`` shards per file and large
@@ -14,14 +13,11 @@ Scale notes:
   * parsing is pure Catalyst (``split`` + ``from_json``) — no Python.
   * selection dedup shuffles once on the content digest (uniform,
     SHA-1-derived); everything else is map-only.
-  * the fetch plan groups by archive filename — one group per WARC
-    file (~100k captures max per Common Crawl file, a bounded
-    collect_list), the unit a range-fetching reader consumes.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # CDXJ JSON envelope: every field is a STRING in the spec (numbers
@@ -58,15 +54,6 @@ def parse_cdx_lines(lines: DataFrame, col: str = "value") -> DataFrame:
         F.when(ok, F.lit(None).cast("string")).otherwise(
             F.lit("malformed cdx line")
         ).alias("error"),
-    )
-
-
-def read_cdx(spark: SparkSession, path: str) -> DataFrame:
-    """CDXJ index files -> typed capture rows (see
-    :func:`parse_cdx_lines`); ``spark.read.text`` gives per-shard
-    parallelism over the index directory."""
-    return parse_cdx_lines(
-        spark.read.text(path).where(F.trim(F.col("value")) != "")
     )
 
 
@@ -109,23 +96,3 @@ def cdx_select(
             .select("_row.*")
         )
     return out
-
-
-def cdx_fetch_plan(selected: DataFrame) -> DataFrame:
-    """Group selected captures into per-archive-file ranged-fetch
-    plans: (filename, n_records, total_bytes, ranges) with ranges
-    sorted by offset — the input a range-fetching WARC reader walks
-    sequentially. Bounded: a Common Crawl WARC file holds ~100k
-    captures, so the per-group list is file-sized, never corpus-sized.
-    """
-    return (
-        selected.where(F.col("filename").isNotNull())
-        .groupBy("filename")
-        .agg(
-            F.count("*").cast("int").alias("n_records"),
-            F.sum("length").alias("total_bytes"),
-            F.sort_array(
-                F.collect_list(F.struct("offset", "length", "url"))
-            ).alias("ranges"),
-        )
-    )

@@ -26,8 +26,6 @@ Scale design (100 TB = ~100k WARC files):
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -75,75 +73,6 @@ def read_warc(
         "path", "content"
     )
     return files.mapInPandas(run, schema=WARC_RECORDS_DDL)
-
-
-def read_warc_ranges(spark: SparkSession, plan: DataFrame) -> DataFrame:
-    """Ranged WARC reading driven by a CDX fetch plan
-    (``sources.cdx.cdx_fetch_plan`` rows: filename + offset-sorted
-    (offset, length, url) ranges): read ONLY the selected gzip
-    members of each archive instead of whole files — the selective-
-    consumption path of a 100 TB crawl (the index decides the bytes;
-    this reader fetches just those).
-
-    Parallelism unit = the archive FILE (one plan row each, same as
-    :func:`read_warc`); within a row the ranges walk in offset order
-    (sequential-friendly on any store). Local/posix paths here; on an
-    object store the seek+read pair maps to a ranged GET with the
-    same plan shape. Output schema matches :func:`read_warc`.
-    """
-    from ..kernel.warc import iter_warc_records
-
-    def run(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            out = {k.split(" ")[0]: [] for k in WARC_RECORDS_DDL.split(", ")}
-            for fname, ranges in zip(pdf["filename"], pdf["ranges"]):
-                try:
-                    fh = open(fname, "rb")
-                except OSError as exc:
-                    out["warc_file"].append(fname)
-                    for k in ("record_id", "warc_type", "url",
-                              "warc_date", "content_type"):
-                        out[k].append(None)
-                    out["http_status"].append(None)
-                    out["payload"].append(None)
-                    out["error"].append(f"open failed: {exc}")
-                    continue
-                with fh:
-                    for rng in ranges:
-                        fh.seek(int(rng["offset"]))
-                        member = fh.read(int(rng["length"]))
-                        got = False
-                        for rec in iter_warc_records(member):
-                            got = True
-                            out["warc_file"].append(fname)
-                            out["record_id"].append(rec.record_id)
-                            out["warc_type"].append(rec.warc_type)
-                            out["url"].append(rec.target_uri)
-                            out["warc_date"].append(rec.warc_date)
-                            out["http_status"].append(rec.http_status)
-                            out["content_type"].append(
-                                rec.http_content_type or rec.content_type
-                            )
-                            out["payload"].append(rec.payload)
-                            out["error"].append(rec.error)
-                        if not got:
-                            out["warc_file"].append(fname)
-                            for k in ("record_id", "warc_type", "url",
-                                      "warc_date", "content_type"):
-                                out[k].append(None)
-                            out["http_status"].append(None)
-                            out["payload"].append(None)
-                            out["error"].append(
-                                "range decoded no record "
-                                f"(offset={rng['offset']})"
-                            )
-            yield pd.DataFrame(out)
-
-    return plan.select("filename", "ranges").mapInPandas(
-        run, schema=WARC_RECORDS_DDL
-    )
 
 
 def warc_documents(
@@ -204,93 +133,6 @@ def warc_documents(
     )
 
 
-def attachment_documents(records: DataFrame) -> DataFrame:
-    """Non-HTML response payloads -> extracted text documents, routed
-    by magic bytes: ``%PDF`` -> the pure-Python PDF parser, ``PK`` ->
-    the OOXML .docx extractor. One Arrow-batched mapInPandas stage
-    (the decoders are per-payload Python by nature — same justified
-    boundary as the image/WARC decode UDFs); per-row failures become
-    ``error`` rows, never task failures.
-
-    Output: (doc_id, url, host, format, title, text, error). HTML
-    stays on the :func:`warc_documents` profile-extraction path —
-    this is the sidecar lane for document attachments in the archive.
-    """
-    import pandas as pd
-
-    ok = records.where(
-        F.col("error").isNull()
-        & (F.col("warc_type") == "response")
-        & (F.col("http_status") == 200)
-        & ~F.coalesce(F.col("content_type"), F.lit("")).startswith(
-            "text/html"
-        )
-    ).select("record_id", "url", "payload")
-
-    def run(batches):
-        from ..kernel.docx import extract_docx_text
-        from ..kernel.pdftext import extract_text
-
-        for pdf in batches:
-            out = {
-                "doc_id": [], "url": [], "host": [], "format": [],
-                "title": [], "text": [], "error": [],
-            }
-            for rid, url, payload in zip(
-                pdf["record_id"], pdf["url"], pdf["payload"]
-            ):
-                b = b"" if payload is None else bytes(payload)
-                fmt, title, text, err = "unknown", "", "", None
-                try:
-                    if b.startswith(b"%PDF"):
-                        fmt = "pdf"
-                        text = extract_text(b)
-                    elif b.startswith(b"PK"):
-                        got = extract_docx_text(b)
-                        fmt = "docx" if got["error"] is None else "zip"
-                        title = got["title"]
-                        text = got["text"]
-                        err = got["error"]
-                    else:
-                        err = "unsupported format"
-                except Exception as exc:  # decoder bug: row, not task
-                    err = f"decode error: {exc}"
-                m = re.match(r"^https?://([^/]+)", url or "")
-                out["doc_id"].append((rid or "").strip("<>"))
-                out["url"].append(url)
-                out["host"].append(m.group(1) if m else "")
-                out["format"].append(fmt)
-                out["title"].append(title)
-                out["text"].append(text)
-                out["error"].append(err)
-            yield pd.DataFrame(out)
-
-    return ok.mapInPandas(
-        run,
-        schema=(
-            "doc_id string, url string, host string, format string, "
-            "title string, text string, error string"
-        ),
-    )
-
-
-def wet_documents(records: DataFrame) -> DataFrame:
-    """``conversion`` (WET) records -> flat text documents
-    (doc_id, text, host, url, last_crawl) — Common Crawl's
-    pre-extracted-text layout, the direct input shape of the curation
-    operators (dedup/quality/language families)."""
-    ok = records.where(
-        F.col("error").isNull() & (F.col("warc_type") == "conversion")
-    )
-    return ok.select(
-        F.regexp_replace(F.col("record_id"), r"[<>]", "").alias("doc_id"),
-        F.decode(F.col("payload"), "utf-8").alias("text"),
-        F.regexp_extract(F.col("url"), r"^https?://([^/]+)", 1).alias("host"),
-        F.col("url"),
-        F.col("warc_date").alias("last_crawl"),
-    )
-
-
 # Common Crawl WAT envelope subset: head title + outgoing anchors.
 # Dashed field names are quoted; everything else in the envelope is
 # ignored by from_json (permissive-by-schema, the Spark JSON contract).
@@ -299,9 +141,7 @@ WAT_ENVELOPE_DDL = (
     "`WARC-Header-Metadata`: STRUCT<`WARC-Target-URI`: STRING>, "
     "`Payload-Metadata`: STRUCT<`HTTP-Response-Metadata`: STRUCT<"
     "`HTML-Metadata`: STRUCT<"
-    "`Head`: STRUCT<`Title`: STRING, "
-    "`Metas`: ARRAY<STRUCT<`name`: STRING, `content`: STRING>>, "
-    "`Scripts`: ARRAY<STRUCT<`url`: STRING>>>, "
+    "`Head`: STRUCT<`Title`: STRING>, "
     "`Links`: ARRAY<STRUCT<`path`: STRING, `url`: STRING, "
     "`text`: STRING>>>>>>>"
 )
@@ -340,57 +180,6 @@ def wat_links(records: DataFrame) -> DataFrame:
             F.col("link.url").alias("link_url"),
             F.coalesce(F.col("link.text"), F.lit("")).alias("link_text"),
         )
-    )
-
-
-def wat_head_meta(records: DataFrame) -> DataFrame:
-    """WAT ``metadata`` records -> one row per <head> meta tag:
-    (src_url, meta_name, meta_content) — description/robots/og:* etc.
-    without HTML re-parse. Same pure-Catalyst from_json shape as
-    :func:`wat_links`."""
-    env = F.from_json(F.col("payload").cast("string"), WAT_ENVELOPE_DDL)
-    head = env["Envelope"]["Payload-Metadata"][
-        "HTTP-Response-Metadata"
-    ]["HTML-Metadata"]["Head"]
-    return (
-        records.where(
-            F.col("error").isNull() & (F.col("warc_type") == "metadata")
-        )
-        .select(
-            F.coalesce(
-                env["Envelope"]["WARC-Header-Metadata"]["WARC-Target-URI"],
-                F.col("url"),
-            ).alias("src_url"),
-            F.explode(head["Metas"]).alias("meta"),
-        )
-        .where(F.col("meta.name").isNotNull())
-        .select(
-            "src_url",
-            F.col("meta.name").alias("meta_name"),
-            F.coalesce(F.col("meta.content"), F.lit("")).alias(
-                "meta_content"
-            ),
-        )
-    )
-
-
-def wat_host_edges(records: DataFrame) -> DataFrame:
-    """WAT records -> distinct (src, dst) host edges, the direct input
-    of ``pagerank_hosts`` — same edge semantics as
-    ``linkgraph.extract_host_links`` (absolute http(s) links only,
-    self-loops dropped) but sourced from WAT sidecars instead of HTML.
-    """
-    from content_extractor_spark.operators.linkgraph import HOST_RE
-
-    links = wat_links(records)
-    return (
-        links.select(
-            F.regexp_extract("src_url", HOST_RE, 1).alias("src"),
-            F.regexp_extract("link_url", HOST_RE, 1).alias("dst"),
-        )
-        .where((F.col("src") != "") & (F.col("dst") != "")
-               & (F.col("dst") != F.col("src")))
-        .distinct()
     )
 
 

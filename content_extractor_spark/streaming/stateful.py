@@ -18,7 +18,6 @@ from typing import Iterable, Iterator
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 DEDUP_OUTPUT_DDL = (
@@ -103,93 +102,3 @@ def streaming_dedup(
         )
     )
 
-
-# ---------------------------------------------------------------------------
-# Per-host crawl frontier (stateful politeness scheduling)
-# ---------------------------------------------------------------------------
-
-FRONTIER_OUTPUT_DDL = (
-    "host string, url string, slot long, sched_offset_ms long"
-)
-_FRONTIER_STATE_DDL = "next_slot long, delay_ms long"
-
-
-def _frontier_fn(
-    key, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterable[pd.DataFrame]:
-    (host,) = key
-    out = {"host": [], "url": [], "slot": [], "sched_offset_ms": []}
-    if state.hasTimedOut:
-        state.remove()
-        yield pd.DataFrame(out)
-        return
-    if state.exists:
-        next_slot, delay = state.get
-    else:
-        next_slot, delay = 0, None
-    # Large groups arrive as MULTIPLE Arrow chunks — sorting each chunk
-    # independently would make slot order per-chunk, not url-ordered,
-    # exactly when a host's batch is big. Frontier rows are tiny
-    # (host, url, delay), so concatenating one host's batch is safe.
-    # Guard the empty iterator (timed-out/empty groups): concat([]) raises.
-    chunks = list(pdfs)
-    pdf = (
-        pd.concat(chunks, ignore_index=True)
-        if chunks
-        else pd.DataFrame({"host": [], "url": [], "delay_ms": []})
-    )
-    if len(pdf):
-        pdf = pdf.sort_values("url")  # deterministic intra-batch order
-    for _, row in pdf.iterrows():
-        if delay is None:
-            delay = int(row["delay_ms"])
-        out["host"].append(host)
-        out["url"].append(row["url"])
-        out["slot"].append(next_slot)
-        out["sched_offset_ms"].append(next_slot * delay)
-        next_slot += 1
-    state.update((next_slot, delay if delay is not None else 0))
-    yield pd.DataFrame(out)
-
-
-def streaming_frontier(
-    urls: DataFrame, default_delay_ms: int = 10
-) -> DataFrame:
-    """Per-host crawl frontier with politeness state across
-    micro-batches — the streaming counterpart of the batch
-    ``crawl_schedule`` (reference O3: per-host rate ceiling, robots
-    Crawl-delay).
-
-    Input: a *streaming* frame of (host, url[, delay_ms]) discoveries.
-    Output: each url assigned a per-host fetch ``slot`` that is
-    MONOTONE ACROSS MICRO-BATCHES (state store carries the next free
-    slot per host) and a ``sched_offset_ms`` = slot x the host's
-    crawl delay — so a host rediscovered in every batch still fetches
-    at its polite spacing, never in parallel bursts. Deterministic and
-    wall-clock-free: slots, not timestamps, are the contract (the
-    fetcher anchors slot 0 wherever its clock starts); within a batch
-    urls order by url.
-
-    The host's delay is locked in from the first row seen (robots
-    crawl-delays rarely change mid-crawl; restart the query to re-read
-    them). State is two longs per host — at 10^8 hosts that is model-,
-    not corpus-sized state, the standard scale shape for
-    applyInPandasWithState.
-    """
-    cols = urls.columns
-    prepared = urls if "delay_ms" in cols else urls.withColumn(
-        "delay_ms", F.lit(default_delay_ms)
-    )
-    prepared = prepared.select(
-        "host", "url",
-        F.coalesce(
-            F.col("delay_ms"), F.lit(default_delay_ms)
-        ).cast("long").alias("delay_ms"),
-    )
-    return prepared.groupBy("host").applyInPandasWithState(
-        _frontier_fn,
-        outputStructType=FRONTIER_OUTPUT_DDL,
-        stateStructType=_FRONTIER_STATE_DDL,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )

@@ -154,6 +154,7 @@ def flag_documents(docs, cfg, benchmark=None):
     from content_extractor_spark.operators.dedup_families import (
         minhash_lsh_pairs,
     )
+    from content_extractor_spark.operators.skew import spread
     from content_extractor_spark.operators.textstats import (
         line_features,
         linear_quality_score,
@@ -175,16 +176,10 @@ def flag_documents(docs, cfg, benchmark=None):
             m = json.load(fh)
         ml = (m["weights"], float(m.get("bias", 0.0)))
 
-    # r7 (guide §2.5/§6): a single-file (single-row-group) input — the
-    # sf parquet tables, a small re-read batch — gives the scan ONE
-    # split, serialising every map-side funnel stage (language ladder,
-    # quality features, ngram explode) onto one core. Widen ONLY when
-    # the input is narrower than the session's parallelism; a
-    # well-partitioned 100 TB corpus already exceeds it and must not
-    # be shuffled down.
-    target = docs.sparkSession.sparkContext.defaultParallelism
-    if docs.rdd.getNumPartitions() < target:
-        docs = docs.repartition(target)
+    # a single-split input (the sf parquet tables, a small re-read
+    # batch) would run every map-side funnel stage (language ladder,
+    # quality features, ngram explode) on one core
+    docs = spread(docs)
 
     # stacked-projection language ID: same values as detect_language,
     # one tokenize/window eval per row instead of 22/288 (r7 perf)

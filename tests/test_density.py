@@ -105,65 +105,6 @@ def test_density_fallback_in_spark_operator(spark):
     assert kinds[0] == "title" and "content" in kinds
 
 
-def test_og_salvage_ladder(spark):
-    """r6 opt-in OG salvage: a profile-miss page with only preview
-    metadata yields 'ok_og' (title/summary/image, no content) behind
-    og_fallback=True; the default stays reference-faithful
-    (profile_miss); with BOTH fallbacks on, density wins where it can
-    and OG catches what density rejects."""
-    from content_extractor_spark.kernel.spans import html_to_spans
-    from content_extractor_spark.operators.extract import extract_entries
-    from content_extractor_spark.synth import DOCUMENTS_DDL
-
-    og_html = (
-        "<html><head><title>El Title</title>"
-        "<meta property='og:title' content='OG Headline'>"
-        "<meta name='description' content='A preview line.'>"
-        "<meta property='og:image' content='https://i.example/x.jpg'>"
-        "</head><body><div><a href='/a'>nav</a></div></body></html>"
-    )
-    dense_html = (
-        "<html><head><meta property='og:title' content='OG For Dense'>"
-        "</head><body><h1>Dense headline</h1><div class='content-body'>"
-        + "<p>" + "real body text " * 30 + "</p></div></body></html>"
-    )
-    bare_html = "<html><body><p>x</p></body></html>"
-
-    def row(i, html):
-        return {
-            "doc_id": f"d{i}", "spans": html_to_spans(html, chunks=1),
-            "host": "unknown.example", "url": f"https://unknown.example/{i}",
-            "url_id": f"u{i}", "last_crawl": "1970-01-01T00:00:00Z",
-            "etag": None,
-        }
-
-    df = spark.createDataFrame(
-        [row(1, og_html), row(2, dense_html), row(3, bare_html)],
-        DOCUMENTS_DDL,
-    )
-    # default: faithful profile_miss for all three
-    assert {r["status"] for r in extract_entries(df, {}).collect()} == {
-        "profile_miss"
-    }
-    # og only
-    got = {r["doc_id"]: r
-           for r in extract_entries(df, {}, og_fallback=True).collect()}
-    og = got["d1"]
-    assert og["status"] == "ok_og" and og["profile_name"] == "__og__"
-    assert og["title"] == "OG Headline"
-    assert og["summary"] == "A preview line."
-    assert og["image_url"] == "https://i.example/x.jpg"
-    assert og["content"] is None
-    assert got["d3"]["status"] == "profile_miss"  # no title anywhere
-    # both: density first (real content), OG as the net beneath it
-    both = {r["doc_id"]: r for r in extract_entries(
-        df, {}, density_fallback=True, og_fallback=True).collect()}
-    assert both["d2"]["status"] == "ok_density"
-    assert both["d2"]["title"] == "Dense headline"
-    assert both["d1"]["status"] == "ok_og"
-    assert both["d3"]["status"] == "profile_miss"
-
-
 import os
 
 import pytest

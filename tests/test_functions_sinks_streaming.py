@@ -305,62 +305,6 @@ class TestStreaming:
         assert len(ids) == len({r["doc_id"] for r in ids})  # no reprocessing dups
 
 
-class TestStreamingFrontier:
-    def test_slots_monotone_across_microbatches(self, spark, tmp_path):
-        """Per-host frontier state survives micro-batches: a host
-        rediscovered in batch 2 continues at its next free slot (no
-        burst restart), offsets = slot x that host's crawl delay, and
-        hosts schedule independently."""
-        from content_extractor_spark.streaming.stateful import (
-            streaming_frontier,
-        )
-
-        in_dir = str(tmp_path / "in")
-        out_dir = str(tmp_path / "out")
-        ckpt = str(tmp_path / "ck")
-        schema = "host string, url string, delay_ms long"
-        spark.createDataFrame(
-            [("a.example", "u1", 100), ("a.example", "u2", 100),
-             ("b.example", "v1", 250)],
-            schema,
-        ).write.parquet(in_dir)
-
-        def drain():
-            stream = (
-                spark.readStream.schema(schema).format("parquet")
-                .load(in_dir)
-            )
-            q = (
-                streaming_frontier(stream)
-                .writeStream.format("parquet")
-                .option("path", out_dir)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .outputMode("append")
-                .start()
-            )
-            q.awaitTermination()
-
-        drain()
-        got = {
-            r["url"]: (r["slot"], r["sched_offset_ms"])
-            for r in spark.read.parquet(out_dir).collect()
-        }
-        assert got == {"u1": (0, 0), "u2": (1, 100), "v1": (0, 0)}
-
-        # batch 2: host a continues at slot 2; new host starts at 0
-        spark.createDataFrame(
-            [("a.example", "u3", 100), ("c.example", "w1", 50)], schema
-        ).write.mode("append").parquet(in_dir)
-        drain()
-        got = {
-            r["url"]: (r["slot"], r["sched_offset_ms"])
-            for r in spark.read.parquet(out_dir).collect()
-        }
-        assert got["u3"] == (2, 200)  # state carried: 2 x 100ms delay
-        assert got["w1"] == (0, 0)
-
-
 class TestStatefulDedup:
     def test_streaming_dedup_across_microbatches(self, spark, tmp_path):
         """applyInPandasWithState keeps 'seen' state across micro-batches:

@@ -7,8 +7,6 @@ from pyspark.sql import functions as F
 from content_extractor_spark.operators.changes import plan_actions
 from content_extractor_spark.operators.dedup import mark_duplicates
 from content_extractor_spark.operators.dedup_families import (
-    dedup_exact,
-    exact_duplicates,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
     simhash,
@@ -42,12 +40,6 @@ def texts(spark):
 
 
 class TestDedupFamilies:
-    def test_exact(self, spark, texts):
-        groups = exact_duplicates(texts).collect()
-        assert len(groups) == 1
-        assert groups[0]["keep_id"] == 1 and groups[0]["dup_count"] == 2
-        kept = dedup_exact(texts)
-        assert kept.count() == 4
 
     def test_minhash_identical_pair_found(self, spark, texts):
         pairs = {(r["a"], r["b"]) for r in minhash_lsh_pairs(texts, num_perm=16).collect()}
@@ -70,6 +62,15 @@ class TestDedupFamilies:
                 tuple, fn(texts, checkpoint_banded=True, **kw).collect()
             ))
             assert plain == ck, fn.__name__
+
+    def test_checkpoint_banded_stores_no_rank_column(self, spark, texts):
+        """The bucket-cap rank is a filter helper: the materialized
+        banded frame holds only (id, band_idx, band_hash)."""
+        pairs = minhash_lsh_pairs(texts, num_perm=16, checkpoint_banded=True)
+        plan = pairs._jdf.queryExecution().optimizedPlan().toString()
+        stored = [ln for ln in plan.splitlines() if "LogicalRDD" in ln]
+        assert stored, plan
+        assert all("_rn" not in ln for ln in stored), stored
 
     def test_simhash_identical_texts_equal(self, spark, texts):
         sigs = dict(
@@ -199,19 +200,6 @@ class TestChanges:
             "u6": "skip",    # scraped none, existing empty
         }
 
-    def test_tags_clean_set_compare(self, spark):
-        extracted, existing = self._tags_fixture(spark)
-        out = {
-            r["url_id"]: r["action"]
-            for r in plan_actions(
-                extracted, existing, faithful_tags_quirk=False
-            ).collect()
-        }
-        assert out == {
-            "u1": "update", "u2": "update", "u3": "update",
-            "u4": "update", "u5": "update", "u6": "skip",
-        }
-
 
 class TestProfileDispatch:
     def test_containment_fallback_not_poisoned_by_first_row(self, spark):
@@ -282,7 +270,7 @@ class TestSimilarity:
         placed AT one cluster must ADC-rank that cluster's vectors
         strictly closer than the other's."""
         from content_extractor_spark.operators.similarity import (
-            pq_adc_topk,
+            pq_adc_distances,
             pq_encode,
             pq_train_codebooks,
         )
@@ -299,121 +287,19 @@ class TestSimilarity:
         assert books == pq_train_codebooks(df, dim=8, m=2, k=2,
                                            iterations=1)
         assert len(books) == 2 and all(len(b) == 2 for b in books)
-        codes = {
-            r["vec_id"]: tuple(r["codes"])
-            for r in pq_encode(df, books).collect()
-        }
+        encoded = pq_encode(df, books)
+        codes = {r["vec_id"]: tuple(r["codes"]) for r in encoded.collect()}
         a_codes = {codes[i] for i in range(10)}
         b_codes = {codes[100 + i] for i in range(10)}
         assert len(a_codes) == 1 and len(b_codes) == 1
         assert a_codes != b_codes
-        top = pq_adc_topk(df, books, [1.0] * 8, topk=10).collect()
-        assert sorted(r["vec_id"] for r in top) == list(range(10))
-        # ascending distance, ties to the lowest id
-        dists = [r["adc_dist"] for r in top]
-        assert dists == sorted(dists)
-
-    def test_mean_pool_embeddings(self, spark):
-        """Chunk -> document pooling: unweighted mean, token-weighted
-        mean, and positional order independent of shuffle arrival."""
-        from content_extractor_spark.operators.similarity import (
-            mean_pool_embeddings,
-        )
-
-        df = spark.createDataFrame(
-            [("d1", [1.0, 10.0], 1), ("d1", [3.0, 30.0], 3),
-             ("d2", [5.0, 7.0], 2)],
-            "doc_id string, embedding array<float>, n_tokens int",
-        )
-        got = {
-            r["doc_id"]: r["embedding"]
-            for r in mean_pool_embeddings(df).collect()
+        dist = {
+            r["vec_id"]: r["adc_dist"]
+            for r in pq_adc_distances(encoded, books, [1.0] * 8).collect()
         }
-        assert got == {"d1": [2.0, 20.0], "d2": [5.0, 7.0]}
-        w = {
-            r["doc_id"]: r["embedding"]
-            for r in mean_pool_embeddings(
-                df, weight_col="n_tokens"
-            ).collect()
-        }
-        # d1 weighted: (1*1 + 3*3)/4 = 2.5 ; (1*10 + 3*30)/4 = 25
-        assert w["d1"] == [2.5, 25.0] and w["d2"] == [5.0, 7.0]
-
-    def test_int8_quantization_roundtrip_and_cosine(self, spark):
-        """Storage quantization: per-component reconstruction error is
-        bounded by scale/2; int8 cosine (pure code arithmetic, scales
-        cancel) tracks the float cosine within quantization noise;
-        zero vectors quantize safely."""
-        import math
-        import random
-
-        from content_extractor_spark.operators.similarity import (
-            dequantize_embeddings_int8,
-            int8_cosine,
-            quantize_embeddings_int8,
+        assert max(dist[i] for i in range(10)) < min(
+            dist[100 + i] for i in range(10)
         )
-
-        rng = random.Random(5)
-        rows = [
-            (i, [rng.uniform(-2, 2) for _ in range(16)]) for i in range(12)
-        ] + [(99, [0.0] * 16)]
-        df = spark.createDataFrame(
-            rows, "vec_id long, embedding array<float>"
-        )
-        q = quantize_embeddings_int8(df)
-        deq = {
-            r["vec_id"]: r["embedding"]
-            for r in dequantize_embeddings_int8(q).collect()
-        }
-        scales = {r["vec_id"]: r["scale"] for r in q.collect()}
-        orig = dict(rows)
-        for i, vec in orig.items():
-            for x, y in zip(vec, deq[i]):
-                assert abs(x - y) <= scales[i] / 2 + 1e-9
-        assert scales[99] == 0.0 and deq[99] == [0.0] * 16
-        # int8 cosine vs float cosine on a joined pair
-        a = q.selectExpr("vec_id as a_id", "codes as a_codes",
-                         "scale as a_scale").where("a_id = 0")
-        b = q.selectExpr("vec_id as b_id", "codes as b_codes",
-                         "scale as b_scale").where("b_id = 1")
-        got = a.crossJoin(b).select(
-            int8_cosine(F.col("a_codes"), F.col("a_scale"),
-                        F.col("b_codes"), F.col("b_scale")).alias("c")
-        ).first()["c"]
-        va, vb = orig[0], orig[1]
-        dot = sum(x * y for x, y in zip(va, vb))
-        want = dot / math.sqrt(sum(x * x for x in va)
-                               * sum(y * y for y in vb))
-        assert abs(got - want) < 0.02
-
-    def test_ivf_pq_topk_probes_route_the_search(self, spark):
-        """IVF-PQ composition: with nprobe=1 the query at +1 searches
-        ONLY its nearest inverted list (the -1 cluster is never
-        scanned); nprobe=2 widens to both; results order by ADC
-        distance with id tie-break."""
-        from content_extractor_spark.operators.similarity import (
-            ivf_pq_topk,
-            pq_train_codebooks,
-        )
-
-        rows = [(i, [1.0 + (i % 3) * 0.01] * 8) for i in range(6)]
-        rows += [(100 + i, [-1.0 - (i % 3) * 0.01] * 8) for i in range(6)]
-        df = spark.createDataFrame(
-            rows, "vec_id long, embedding array<float>"
-        )
-        coarse = [[1.0] * 8, [-1.0] * 8]
-        books = pq_train_codebooks(df, dim=8, m=2, k=2, iterations=1)
-        near = ivf_pq_topk(df, coarse, books, [1.0] * 8, topk=20,
-                           nprobe=1)
-        got = sorted(r["vec_id"] for r in near.collect())
-        assert got == list(range(6))  # far cluster never scanned
-        both = ivf_pq_topk(df, coarse, books, [1.0] * 8, topk=20,
-                           nprobe=2)
-        assert sorted(r["vec_id"] for r in both.collect()) == sorted(
-            i for i, _ in rows
-        )
-        dists = [r["adc_dist"] for r in both.collect()]
-        assert dists == sorted(dists)
 
     def test_cosine_topk_self_best(self, spark):
         import random
@@ -1071,6 +957,27 @@ class TestColumnarSpanDecode:
         # offset-ordered reassembly regardless of physical order
         assert _decode_spans_columnar(arr) == [("ab", 2, 0)]
 
+    def test_decode_error_raises_out_of_analyze_batch(self, monkeypatch):
+        """A columnar decode failure is a defect, not a reason to run
+        a slower row-wise path in silence: it must fail the batch."""
+        import pyarrow as pa
+
+        from content_extractor_spark.operators import extract
+
+        def broken(arr):
+            raise ValueError("decode defect")
+
+        monkeypatch.setattr(extract, "_decode_spans_columnar", broken)
+        batch = pa.RecordBatch.from_arrays(
+            [pa.array(["d1"]), self._arr([
+                [{"kind": "text", "text": "<p>x</p>", "media_ref": None,
+                  "offset": 0}],
+            ])],
+            names=["doc_id", "spans"],
+        )
+        with pytest.raises(ValueError, match="decode defect"):
+            extract._analyze_batch(batch, {})
+
 
 class TestScaleCaps:
     """The r2-flagged scale-killers: hot posting lists and dense LSH
@@ -1692,9 +1599,7 @@ class TestRobotsAndAnchors:
         assert "PythonUDF" not in plan and "EvalPython" not in plan
 
     def test_robots_group_aware(self, spark):
-        from content_extractor_spark.operators.scans import (
-            robots_disallow_rules,
-        )
+        from content_extractor_spark.operators.scans import robots_rules
 
         robots = spark.createDataFrame(
             [
@@ -1709,7 +1614,8 @@ class TestRobotsAndAnchors:
             "host string, robots_txt string",
         )
         rules = {(r["host"], r["prefix"])
-                 for r in robots_disallow_rules(robots).collect()}
+                 for r in robots_rules(robots)
+                 .where("kind = 'disallow'").collect()}
         assert rules == {("a.com", "/x"), ("c.com", "/y")}
 
     def test_robots_filter_paths(self, spark):
@@ -1734,9 +1640,7 @@ class TestRobotsAndAnchors:
         # RFC 9309: groups are delimited by the next User-agent line —
         # a blank or comment-only line between two UA lines must NOT
         # split the group (r3 advice)
-        from content_extractor_spark.operators.scans import (
-            robots_disallow_rules,
-        )
+        from content_extractor_spark.operators.scans import robots_rules
 
         robots = spark.createDataFrame(
             [("a.com", "User-agent: *\n\n# maintained by ops\n"
@@ -1744,7 +1648,8 @@ class TestRobotsAndAnchors:
             "host string, robots_txt string",
         )
         rules = {(r["host"], r["prefix"])
-                 for r in robots_disallow_rules(robots).collect()}
+                 for r in robots_rules(robots)
+                 .where("kind = 'disallow'").collect()}
         assert rules == {("a.com", "/x")}
 
     def test_robots_wildcards_rfc9309(self, spark):
@@ -1867,27 +1772,6 @@ class TestSnapshotAndCompression:
         got = {r["doc_id"]: r["change"] for r in snapshot_diff(old, new).collect()}
         assert got == {1: "removed", 2: "unchanged", 3: "changed", 4: "added"}
 
-    def test_compression_ratio_signal(self, spark):
-        from content_extractor_spark.operators.curation import compression_ratio
-
-        import hashlib
-
-        noisy = "".join(
-            hashlib.sha256(str(i).encode()).hexdigest() for i in range(64)
-        )
-        rows = [
-            (1, "spam " * 400),  # repetitive -> low ratio
-            (2, noisy),          # high-entropy hex -> high ratio
-            (3, ""),             # empty -> null
-        ]
-        df = spark.createDataFrame(rows, "doc_id int, text string")
-        out = {r["doc_id"]: r["zlib_ratio"] for r in compression_ratio(df).collect()}
-        assert out[1] < 0.05 < 0.4 < out[2]
-        assert out[3] is None
-        # deterministic across runs (fixed level)
-        again = {r["doc_id"]: r["zlib_ratio"] for r in compression_ratio(df).collect()}
-        assert out == again
-
 
 class TestReviewRegressions:
     """Pins for the round-3 review findings."""
@@ -1908,9 +1792,7 @@ class TestReviewRegressions:
         }
 
     def test_robots_trailing_comment(self, spark):
-        from content_extractor_spark.operators.scans import (
-            robots_disallow_rules,
-        )
+        from content_extractor_spark.operators.scans import robots_rules
 
         robots = spark.createDataFrame(
             [("a.com",
@@ -1919,7 +1801,8 @@ class TestReviewRegressions:
             "host string, robots_txt string",
         )
         rules = {(r["host"], r["prefix"])
-                 for r in robots_disallow_rules(robots).collect()}
+                 for r in robots_rules(robots)
+                 .where("kind = 'disallow'").collect()}
         assert rules == {("a.com", "/private")}
 
     def test_jpeg_multiscan_refused(self):
@@ -2072,117 +1955,6 @@ class TestChunking:
 
 
 class TestDiscoveryAndBanding:
-    def test_hreflang_alternates(self, spark):
-        """Translation clusters from rel=alternate hreflang tags:
-        region subtags keep their form (lowercased), x-default rows
-        surface, non-hreflang links never match."""
-        from content_extractor_spark.operators.linkgraph import (
-            hreflang_alternates,
-        )
-
-        html = (
-            '<link rel="alternate" hreflang="de" '
-            'href="https://ex.example/de/s">'
-            "<link hreflang='en-US' rel=alternate "
-            "href=https://ex.example/en/s>"
-            '<link rel="alternate" hreflang="x-default" '
-            'href="https://ex.example/s">'
-            '<link rel="stylesheet" href="/s.css">'
-        )
-        df = spark.createDataFrame(
-            [("https://ex.example/de/s", html), ("https://p.example", "")],
-            "url string, html string",
-        )
-        got = {
-            (r["hreflang"], r["alt_url"])
-            for r in hreflang_alternates(df).collect()
-        }
-        assert got == {
-            ("de", "https://ex.example/de/s"),
-            ("en-us", "https://ex.example/en/s"),
-            ("x-default", "https://ex.example/s"),
-        }
-
-    def test_og_extract_fallbacks(self, spark):
-        """OG salvage extraction: og:* wins, <title>/description fall
-        back when og tags are absent, both attribute orders parse,
-        missing everything yields empty strings."""
-        from content_extractor_spark.operators.linkgraph import og_extract
-
-        rows = [
-            (1, '<head><title>T1</title>'
-                '<meta property="og:title" content="OG One">'
-                '<meta content="D1" property="og:description">'
-                '<meta property=og:image content="https://i.example/1.jpg">'
-                '<meta property="og:site_name" content="Site">'
-                '<meta property="og:type" content="article"></head>'),
-            (2, "<head><title> Plain Two </title>"
-                '<meta name="description" content="meta desc"></head>'),
-            (3, "<p>nothing</p>"),
-        ]
-        df = spark.createDataFrame(rows, "doc_id int, html string")
-        got = {
-            r["doc_id"]: (r["og_title"], r["og_description"],
-                          r["og_image"], r["og_site_name"], r["og_type"])
-            for r in og_extract(df).collect()
-        }
-        assert got[1] == ("OG One", "D1", "https://i.example/1.jpg",
-                          "Site", "article")
-        assert got[2] == ("Plain Two", "meta desc", "", "", "")
-        assert got[3] == ("", "", "", "", "")
-
-    def test_canonical_dedup(self, spark):
-        """Canonical-link dedup: AMP/syndicated copies pointing at one
-        canonical collapse (first url wins); pages without a canonical
-        fall back to their own url; both attribute orders parse."""
-        from content_extractor_spark.operators.scans import (
-            canonical_dedup,
-        )
-
-        rows = [
-            (1, "https://a.example/story",
-             '<link rel="canonical" href="https://a.example/story">'),
-            (2, "https://a.example/story.amp",
-             "<link href='https://a.example/story' rel=canonical>"),
-            (3, "https://b.example/copy",
-             '<link rel=canonical href=https://a.example/story>'),
-            (4, "https://c.example/other", "<p>no canonical</p>"),
-        ]
-        df = spark.createDataFrame(rows, "doc_id int, url string, html string")
-        got = {
-            r["doc_id"]: (r["canonical"], r["is_canonical_dup"])
-            for r in canonical_dedup(df).collect()
-        }
-        assert got[1] == ("https://a.example/story", False)
-        assert got[2] == ("https://a.example/story", True)
-        assert got[3] == ("https://a.example/story", True)
-        assert got[4] == ("https://c.example/other", False)
-
-    def test_meta_noindex_filter(self, spark):
-        """robots-meta noindex: both attribute orders, optional
-        quotes, directive lists, case-insensitivity; 'noindex' inside
-        another word or a non-robots meta never matches."""
-        from content_extractor_spark.operators.scans import (
-            noindex_filter,
-        )
-
-        rows = [
-            (1, '<meta name="robots" content="noindex, nofollow">'),
-            (2, "<meta content='NOINDEX' name=robots>"),
-            (3, '<meta name=ROBOTS content="nofollow,noindex">'),
-            (4, '<meta name="robots" content="index, follow">'),
-            (5, '<meta name="description" content="noindex tips">'),
-            (6, '<meta name="robots" content="nonoindexing">'),
-            (7, "<p>no meta at all</p>"),
-        ]
-        df = spark.createDataFrame(rows, "doc_id int, html string")
-        kept = sorted(r["doc_id"] for r in noindex_filter(df).collect())
-        assert kept == [4, 5, 6, 7]
-        flags = {
-            r["doc_id"]: r["noindex"]
-            for r in noindex_filter(df, keep_flag=True).collect()
-        }
-        assert [i for i, v in sorted(flags.items()) if v] == [1, 2, 3]
 
     def test_feed_urls_rss_and_atom(self, spark):
         """RSS items and Atom entries parse to (loc, published, title)
@@ -2292,42 +2064,6 @@ class TestDiscoveryAndBanding:
             plain = sorted(map(tuple, fn(df).collect()))
             ck = sorted(map(tuple, fn(df, checkpoint_base=True).collect()))
             assert plain == ck, fn.__name__
-
-    def test_crawl_schedule_honors_crawl_delay(self, spark):
-        from content_extractor_spark.operators.scans import (
-            crawl_schedule,
-            robots_directives,
-        )
-
-        urls = spark.createDataFrame(
-            [("a.com", f"https://a.com/p{i}") for i in range(3)]
-            + [("b.com", "https://b.com/x")],
-            "host string, url string",
-        )
-        robots = spark.createDataFrame(
-            [("a.com", "User-agent: *\nCrawl-delay: 2"),
-             # hostile delay capped at max_delay_sec
-             ("b.com", "User-agent: *\nCrawl-delay: 86400")],
-            "host string, robots_txt string",
-        )
-        sched = {(r["host"], r["slot"]): (r["delay_sec"], r["offset_sec"])
-                 for r in crawl_schedule(
-                     urls, robots_directives(robots), max_delay_sec=30.0
-                 ).collect()}
-        assert sched[("a.com", 0)] == (2.0, 0.0)
-        assert sched[("a.com", 2)] == (2.0, 4.0)
-        assert sched[("b.com", 0)] == (30.0, 0.0)
-
-    def test_crawl_schedule_default_spacing(self, spark):
-        from content_extractor_spark.operators.scans import crawl_schedule
-
-        urls = spark.createDataFrame(
-            [("a.com", "https://a.com/1"), ("a.com", "https://a.com/2")],
-            "host string, url string",
-        )
-        rows = crawl_schedule(urls).collect()
-        # reference ceiling: 100 urls/s/host -> 0.01 s spacing
-        assert {r["delay_sec"] for r in rows} == {0.01}
 
     def test_line_features_gopher_signals(self, spark):
         from content_extractor_spark.operators.textstats import line_features
@@ -2586,41 +2322,6 @@ class TestThumbnailsAndVideo:
             box(b"trak", b"") for _ in range(tracks)))
         return box(b"ftyp", b"isom" + bytes(8)) + moov
 
-    def test_image_thumbnails_roundtrip(self, spark):
-        """decode -> gray -> nearest-neighbor resize -> P5 re-encode;
-        the thumbnail is itself decodable (real end-to-end resize)."""
-        from content_extractor_spark.operators.multimodal import (
-            decode_gray_raster,
-            image_thumbnails,
-        )
-        from content_extractor_spark.synth import encode_png_solid
-
-        w, h = 20, 10
-        grad = bytearray()
-        for _y in range(h):
-            for x in range(w):
-                v = x * 255 // (w - 1)
-                grad += bytes([v, v, v])
-        media = spark.createDataFrame(
-            [("grad", f"P6\n{w} {h}\n255\n".encode() + bytes(grad)),
-             ("solid", encode_png_solid(9, 7, (10, 10, 10))),
-             ("junk", b"nope")],
-            "media_ref string, payload binary",
-        )
-        rows = {r["media_ref"]: r
-                for r in image_thumbnails(media, 4, 4).collect()}
-        assert rows["junk"]["status"] == "unsupported"
-        t = rows["grad"]
-        assert (t["thumb_w"], t["thumb_h"]) == (4, 4)
-        fmt, tw, th, gray = decode_gray_raster(bytes(t["thumb"]))
-        assert (fmt, tw, th) == ("pgm", 4, 4)
-        # gradient survives the resize: strictly increasing across a row
-        assert gray[0] < gray[1] < gray[2] < gray[3]
-        # solid stays solid
-        s = rows["solid"]
-        _, _, _, sg = decode_gray_raster(bytes(s["thumb"]))
-        assert len(set(sg)) == 1
-
     def test_video_features_and_frame_schedule(self, spark):
         from content_extractor_spark.operators.multimodal import (
             extract_video_features,
@@ -2788,45 +2489,6 @@ class TestSimhash64:
 
 
 class TestBpe:
-    def test_train_and_apply_deterministic(self, spark):
-        """BPE merge training (Sennrich-style, word-frequency table
-        collected once, driver-side merge loop with lexicographic tie
-        break) + greedy rank-ordered apply as an Arrow UDF."""
-        from content_extractor_spark.operators.textstats import (
-            apply_bpe,
-            train_bpe_merges,
-        )
-
-        df = spark.createDataFrame(
-            [(i, "low lower lowest low low newer new") for i in range(4)],
-            "doc_id int, text string",
-        )
-        merges = train_bpe_merges(df, n_merges=8)
-        # the canonical example: 'low' fuses first
-        assert merges[:3] == [("l", "o"), ("lo", "w"), ("low", "</w>")]
-        # deterministic across runs
-        assert train_bpe_merges(df, n_merges=8) == merges
-        toks = apply_bpe(df.limit(1), merges).collect()[0]["bpe_tokens"]
-        assert toks[0] == "low</w>"          # frequent word = one token
-        assert "er</w>" in toks              # learned suffix unit
-        # unseen text degrades to characters, never fails
-        other = spark.createDataFrame([(9, "zzz")], "doc_id int, text string")
-        assert apply_bpe(other, merges).collect()[0]["bpe_tokens"] == [
-            "z", "z", "z", "</w>"
-        ]
-
-    def test_sampled_training_is_deterministic(self, spark):
-        from content_extractor_spark.operators.textstats import (
-            train_bpe_merges,
-        )
-
-        df = spark.createDataFrame(
-            [(i, f"alpha beta w{i % 7}") for i in range(100)],
-            "doc_id int, text string",
-        )
-        a = train_bpe_merges(df, n_merges=5, sample_permille=400)
-        b = train_bpe_merges(df, n_merges=5, sample_permille=400)
-        assert a == b  # md5 sampling, never rand()
 
     def test_language_id_seven_languages(self, spark):
         from content_extractor_spark.operators.textstats import (
@@ -3177,24 +2839,6 @@ class TestBpe:
         # ml_quality sits between quality and repetition when enabled
         assert got == {1: None, 2: "repetition"}
 
-    def test_bpe_collect_is_bounded(self, spark):
-        """min_count prunes the web-garbage tail inside the aggregation
-        and max_words hard-caps the driver table — merges stay
-        deterministic under both bounds."""
-        from content_extractor_spark.operators.textstats import (
-            train_bpe_merges,
-        )
-
-        rows = [(i, "low lower low low " + f"garbage{i}") for i in range(30)]
-        df = spark.createDataFrame(rows, "doc_id int, text string")
-        # every garbage token appears once -> pruned by min_count
-        m = train_bpe_merges(df, n_merges=3, min_count=2)
-        assert m[:2] == [("l", "o"), ("lo", "w")]
-        assert m == train_bpe_merges(df, n_merges=3, min_count=2)
-        # cap to the 2 most frequent words only: same top merges
-        m2 = train_bpe_merges(df, n_merges=3, max_words=2)
-        assert m2[:2] == [("l", "o"), ("lo", "w")]
-
 
 class TestBigramDifferential:
     def test_bigram_lm_matches_pure_python(self, spark):
@@ -3259,7 +2903,8 @@ class TestPqRecall:
         import random
 
         from content_extractor_spark.operators.similarity import (
-            pq_adc_topk,
+            pq_adc_distances,
+            pq_encode,
             pq_train_codebooks,
         )
 
@@ -3275,9 +2920,13 @@ class TestPqRecall:
             rows, "vec_id long, embedding array<float>"
         )
         books = pq_train_codebooks(df, dim=8, m=4, k=3, iterations=2)
+        encoded = pq_encode(df, books)
         for qi in (0, 1, 2):
             q = centers[qi]
-            top = pq_adc_topk(df, books, q, topk=10).collect()
+            top = (
+                pq_adc_distances(encoded, books, q)
+                .orderBy("adc_dist", "vec_id").limit(10).collect()
+            )
             got_ids = {r["vec_id"] for r in top}
             exact = {i for i, _ in rows if i % 3 == qi}
             assert got_ids == exact, (qi, sorted(got_ids))

@@ -1,4 +1,4 @@
-"""PDF text/layout extraction: pure-Python decoder + Spark operator."""
+"""PDF text/layout extraction (pure-Python decoder) and .docx text extraction."""
 
 import zlib
 
@@ -10,7 +10,6 @@ class TestPdfKernel:
         pdf = pdftext.build_simple_pdf(
             ["Hello PDF world.", "Second line with (parens) and \\ backslash.", "Dritte Zeile äöü."]
         )
-        assert pdftext.is_pdf(pdf)
         text = pdftext.extract_text(pdf)
         assert "Hello PDF world." in text
         assert "Second line with (parens) and \\ backslash." in text
@@ -94,7 +93,6 @@ class TestPdfKernel:
 
     def test_garbage_not_pdf(self):
         assert pdftext.extract_text(b"not a pdf at all") == ""
-        assert not pdftext.is_pdf(b"GIF89a")
 
     def test_unsupported_filter_skipped(self):
         pdf = (
@@ -102,32 +100,6 @@ class TestPdfKernel:
             b"stream\n\x00\x01\x02\x03\nendstream\nendobj\n%%EOF"
         )
         assert pdftext.extract_text(pdf) == ""  # skipped, no crash
-
-
-class TestPdfOperator:
-    def test_extract_text_operator(self, spark):
-        from content_extractor_spark.operators.pdf import (
-            extract_pdf_layout_spans,
-            extract_pdf_text,
-        )
-
-        good = pdftext.build_simple_pdf(["Spark reads PDFs now.", "Line 2."])
-        rows = [
-            ("p1", bytearray(good)),
-            ("p2", bytearray(b"definitely not a pdf")),
-            ("p3", None),
-        ]
-        df = spark.createDataFrame(rows, "doc_id string, payload binary")
-        out = {r["doc_id"]: r for r in extract_pdf_text(df).collect()}
-        assert out["p1"]["status"] == "ok"
-        assert "Spark reads PDFs now." in out["p1"]["text"]
-        assert out["p1"]["n_spans"] >= 2
-        assert out["p2"]["status"] == "not_pdf"
-        assert out["p3"]["status"] == "error"
-
-        spans = extract_pdf_layout_spans(df).collect()
-        assert {r["doc_id"] for r in spans} == {"p1"}
-        assert any(r["text"] == "Line 2." for r in spans)
 
 
 class TestDocx:

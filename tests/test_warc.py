@@ -91,7 +91,14 @@ class TestWarcSpark:
             warc_documents,
         )
 
-        good = build_warc(_pages(3))
+        # non-HTML payloads (an attachment, an opaque blob) on other
+        # hosts: warc_documents keeps only text/html responses
+        good = build_warc(_pages(3) + [
+            ("p1", "https://a.example/doc.pdf", b"%PDF-1.4\n%%EOF",
+             "application/pdf"),
+            ("x1", "https://b.example/blob.bin", b"\x00\x01garbage",
+             "application/octet-stream"),
+        ])
         (tmp_path / "c.warc.gz").write_bytes(good)
         # a plain file whose tail is cut mid-record
         plain = build_warc(_pages(3), gzip_members=False)
@@ -101,26 +108,6 @@ class TestWarcSpark:
         # every surviving document row is intact html
         assert docs.count() >= 4
         assert docs.where("host != 'www.docs.example'").count() == 0
-
-
-class TestWet:
-    def test_wet_documents_roundtrip(self, spark, tmp_path):
-        from content_extractor_spark.kernel.warc import build_wet
-        from content_extractor_spark.sources.warc import (
-            read_warc,
-            wet_documents,
-        )
-
-        docs = [(f"id-{i}", f"https://h{i % 2}.example/p{i}",
-                 f"extracted text of page {i}") for i in range(8)]
-        (tmp_path / "x.warc.wet.gz").write_bytes(build_wet(docs))
-        recs = read_warc(spark, str(tmp_path), warc_types=("conversion",))
-        out = {r["doc_id"]: (r["host"], r["text"])
-               for r in wet_documents(recs).collect()}
-        assert len(out) == 8
-        assert out["urn:uuid:id-3"] == (
-            "h1.example", "extracted text of page 3"
-        )
 
 
 class TestWatAndRequests:
@@ -155,7 +142,6 @@ class TestWatAndRequests:
         from content_extractor_spark.kernel.warc import build_wat
         from content_extractor_spark.sources.warc import (
             read_warc,
-            wat_host_edges,
             wat_links,
         )
 
@@ -183,78 +169,6 @@ class TestWatAndRequests:
             ("https://b.example/p2", "https://b.example/self", "self",
              "Title Two"),
         }
-        # host edges: absolute cross-host links only, no self-loops
-        edges = {(r["src"], r["dst"])
-                 for r in wat_host_edges(recs).collect()}
-        assert edges == {("a.example", "b.example"),
-                         ("b.example", "a.example")}
-
-    def test_wat_head_metas(self, spark, tmp_path):
-        from content_extractor_spark.kernel.warc import build_wat
-        from content_extractor_spark.sources.warc import (
-            read_warc,
-            wat_head_meta,
-        )
-
-        wat = build_wat([
-            ("w1", "https://a.example/p1", "T1",
-             [("https://b.example/x", "t")],
-             [("description", "a page"), ("robots", "noindex")],
-             ["https://cdn.example/app.js"]),
-            ("w2", "https://b.example/p2", "T2", [], [], []),
-        ])
-        (tmp_path / "m.warc.wat.gz").write_bytes(wat)
-        recs = read_warc(spark, str(tmp_path), warc_types=("metadata",))
-        metas = {
-            (r["src_url"], r["meta_name"], r["meta_content"])
-            for r in wat_head_meta(recs).collect()
-        }
-        assert metas == {
-            ("https://a.example/p1", "description", "a page"),
-            ("https://a.example/p1", "robots", "noindex"),
-        }
-
-    def test_attachment_documents_routing(self, spark, tmp_path):
-        """Mixed archive: html stays on the profile path; pdf/docx
-        payloads route by magic to the right parser; junk becomes an
-        error ROW (never a task failure)."""
-        from content_extractor_spark.kernel.docx import build_docx
-        from content_extractor_spark.kernel.pdftext import (
-            build_simple_pdf,
-        )
-        from content_extractor_spark.sources.warc import (
-            attachment_documents,
-            read_warc,
-            warc_documents,
-        )
-
-        pages = [
-            ("h1", "https://a.example/page", b"<html><body>x</body></html>"),
-            ("p1", "https://a.example/doc.pdf",
-             build_simple_pdf(["line one", "line two"]),
-             "application/pdf"),
-            ("d1", "https://b.example/doc.docx",
-             build_docx(["para one", "para two"], title="D1"),
-             "application/vnd.openxmlformats-officedocument"
-             ".wordprocessingml.document"),
-            ("x1", "https://b.example/blob.bin", b"\x00\x01garbage",
-             "application/octet-stream"),
-        ]
-        (tmp_path / "mix.warc.gz").write_bytes(build_warc(pages))
-        recs = read_warc(spark, str(tmp_path))
-        assert warc_documents(recs).count() == 1  # html only
-        got = {
-            r["doc_id"]: (r["format"], r["title"], r["text"], r["error"])
-            for r in attachment_documents(recs).collect()
-        }
-        assert set(got) == {"urn:uuid:p1", "urn:uuid:d1", "urn:uuid:x1"}
-        assert got["urn:uuid:p1"][0] == "pdf"
-        assert got["urn:uuid:p1"][2] == "line one\nline two"
-        assert got["urn:uuid:d1"][:3] == (
-            "docx", "D1", "para one\npara two"
-        )
-        assert got["urn:uuid:x1"][0] == "unknown"
-        assert got["urn:uuid:x1"][3] == "unsupported format"
 
     def test_wat_malformed_json_yields_no_rows(self, spark, tmp_path):
         """A WAT record with garbage JSON must contribute zero link
@@ -498,7 +412,7 @@ class TestIncrementalIngest:
 
 
 class TestCdxIndex:
-    """CDXJ crawl-index connector: parse -> select -> fetch plan."""
+    """CDXJ crawl-index connector: parse -> select."""
 
     @staticmethod
     def _lines():
@@ -540,15 +454,14 @@ class TestCdxIndex:
 
     def test_parse_select_and_plan(self, spark, tmp_path):
         from content_extractor_spark.sources.cdx import (
-            cdx_fetch_plan,
             cdx_select,
-            read_cdx,
+            parse_cdx_lines,
         )
 
         p = tmp_path / "idx"
         p.mkdir()
         (p / "part1.cdx").write_text("\n".join(self._lines()) + "\n")
-        caps = read_cdx(spark, str(p))
+        caps = parse_cdx_lines(spark.read.text(str(p)))
         rows = {r["urlkey"]: r for r in caps.collect()}
         assert len(rows) == 7
         assert rows["org,example)/a"]["offset"] == 0
@@ -563,89 +476,19 @@ class TestCdxIndex:
         assert keys == ["org,example)/a", "org,example)/b",
                         "org,example)/c"]
 
-        plan = {r["filename"]: r for r in cdx_fetch_plan(sel).collect()}
-        f1 = plan["f1.warc.gz"]
-        assert f1["n_records"] == 2 and f1["total_bytes"] == 300
-        # ranges sorted by offset for a sequential walk
-        assert [(x["offset"], x["length"]) for x in f1["ranges"]] == [
-            (0, 100), (100, 200)
-        ]
-        assert plan["f2.warc.gz"]["n_records"] == 1
-
     def test_select_without_digest_dedup_keeps_all(self, spark, tmp_path):
-        from content_extractor_spark.sources.cdx import cdx_select, read_cdx
+        from content_extractor_spark.sources.cdx import (
+            cdx_select,
+            parse_cdx_lines,
+        )
 
         p = tmp_path / "idx2"
         p.mkdir()
         (p / "x.cdx").write_text("\n".join(self._lines()) + "\n")
-        sel = cdx_select(read_cdx(spark, str(p)), dedup_digest=False)
+        sel = cdx_select(
+            parse_cdx_lines(spark.read.text(str(p))), dedup_digest=False
+        )
         assert sel.count() == 4  # both AAA captures survive
-
-    def test_index_to_ranged_read_end_to_end(self, spark, tmp_path):
-        """The full selective-consumption loop with no network:
-        build_warc_indexed writes a per-member archive + its CDXJ
-        lines; read_cdx -> cdx_select -> cdx_fetch_plan chooses byte
-        ranges; read_warc_ranges fetches ONLY those members and the
-        parsed records match the full-file reader's output for the
-        selected subset."""
-        from content_extractor_spark.kernel.warc import build_warc_indexed
-        from content_extractor_spark.sources.cdx import (
-            cdx_fetch_plan,
-            cdx_select,
-            read_cdx,
-        )
-        from content_extractor_spark.sources.warc import (
-            read_warc,
-            read_warc_ranges,
-        )
-
-        pages = [
-            (f"r{i}", f"https://h{i % 3}.example/p{i}",
-             f"<html><body><p>doc {i} body</p></body></html>".encode())
-            for i in range(8)
-        ]
-        # page 7 duplicates page 0's content -> digest dedup drops it
-        pages[7] = ("r7", "https://h0.example/copy", pages[0][2])
-        warc_path = str(tmp_path / "a.warc.gz")
-        data, lines = build_warc_indexed(pages, filename=warc_path)
-        with open(warc_path, "wb") as f:
-            f.write(data)
-        idx = tmp_path / "idx"
-        idx.mkdir()
-        (idx / "a.cdx").write_text("\n".join(lines) + "\n")
-
-        plan = cdx_fetch_plan(cdx_select(read_cdx(spark, str(idx))))
-        rows = plan.collect()
-        assert len(rows) == 1 and rows[0]["n_records"] == 7  # dup dropped
-
-        got = read_warc_ranges(spark, plan)
-        parsed = {r["record_id"]: r for r in got.collect()}
-        assert all(r["error"] is None for r in parsed.values())
-        # the digest tie between r0 and its copy r7 breaks on the
-        # urlkey ('.../copy' < '.../p0'), so r7 represents the content
-        assert sorted(parsed) == [f"<urn:uuid:r{i}>" for i in range(1, 8)]
-        # parity with the whole-file reader on the selected subset
-        full = {r["record_id"]: r
-                for r in read_warc(spark, warc_path).collect()}
-        for rid, r in parsed.items():
-            f = full[rid]
-            assert bytes(r["payload"]) == bytes(f["payload"])
-            assert r["url"] == f["url"]
-            assert r["http_status"] == f["http_status"] == 200
-
-    def test_ranged_read_error_rows(self, spark, tmp_path):
-        """A missing archive file or a range that decodes nothing
-        becomes an error ROW, never a task failure."""
-        from content_extractor_spark.sources.warc import read_warc_ranges
-
-        plan = spark.createDataFrame(
-            [(str(tmp_path / "missing.warc.gz"),
-              [{"offset": 0, "length": 10, "url": "u"}])],
-            "filename string, "
-            "ranges array<struct<offset: long, length: long, url: string>>",
-        )
-        rows = read_warc_ranges(spark, plan).collect()
-        assert len(rows) == 1 and "open failed" in rows[0]["error"]
 
 
 class TestBlocklistDifferential:
