@@ -581,12 +581,8 @@ def q_paragraph_dedup(spark, sf_dir):
         repeated_window_spans,
     )
 
-    # checkpoint_spans: counts branch + join-back otherwise evaluate
-    # the span explode twice (A/B min-of-5: 0.57-0.61 -> 0.50-0.54 s;
-    # values identical)
     flagged = repeated_window_spans(
-        _doubled_docs(spark, sf_dir, limit=80), window=12, stride=6,
-        checkpoint_spans=True,
+        _doubled_docs(spark, sf_dir, limit=80), window=12, stride=6
     )
     windows = (
         flagged.groupBy("digest")
@@ -798,12 +794,9 @@ def q_minhash_signatures(spark, sf_dir):
 def q_minhash_lsh_pairs(spark, sf_dir):
     from content_extractor_spark.operators.dedup_families import minhash_lsh_pairs
 
-    # checkpoint_banded: the pair self-join otherwise restates the
-    # whole signature pipeline once per side (A/B min-of-5: 0.80-0.92
-    # -> 0.68-0.76 s; values identical)
     return minhash_lsh_pairs(
         _doubled_docs(spark, sf_dir), num_perm=16, num_bands=4,
-        max_bucket=1000000, checkpoint_banded=True,
+        max_bucket=1000000,
     )
 
 
@@ -832,11 +825,9 @@ def q_simhash_hamming_pairs(spark, sf_dir):
         simhash_hamming_pairs,
     )
 
-    # checkpoint_banded: same self-join restatement as minhash (A/B
-    # min-of-5: 0.74-0.75 -> 0.65-0.73 s; values identical)
     return simhash_hamming_pairs(
         _doubled_docs(spark, sf_dir, limit=200),
-        bits=16, bands=4, max_hamming=2, checkpoint_banded=True,
+        bits=16, bands=4, max_hamming=2,
     )
 
 
@@ -849,7 +840,6 @@ def q_dedup_clusters(spark, sf_dir):
     pairs = minhash_lsh_pairs(
         _doubled_docs(spark, sf_dir, limit=150),
         num_perm=16, num_bands=4, max_bucket=1000000,
-        checkpoint_banded=True,
     )
     return dedup_groups(pairs)
 
@@ -1071,20 +1061,13 @@ def q_unigram_logprob(spark, sf_dir):
     )
 
     docs = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 300)
-    # checkpoint_base: the (doc, ngram) count aggregate has 3-4
-    # consumers per arm and Catalyst restates (re-scans, re-explodes,
-    # re-aggregates) the subtree for each; on this bounded 300-doc
-    # input one eager materialization is cheaper than the restatements
-    # (A/B min-of-5: 0.93-1.08 -> 0.80-0.90 s; values identical)
-    uni = perplexity_bands(
-        docs, bands=3, round_to=5, checkpoint_base=True
-    ).select(
+    uni = perplexity_bands(docs, bands=3, round_to=5).select(
         F.lit("uni").alias("kind"), "doc_id", "lang", "mean_logprob",
         F.col("n_tokens").alias("n_units"), "band", "band_name",
     )
     bi = perplexity_bands(
         docs, bands=3, round_to=5,
-        scores=bigram_logprob(docs, round_to=5, checkpoint_base=True),
+        scores=bigram_logprob(docs, round_to=5),
     ).select(
         F.lit("bi").alias("kind"), "doc_id", "lang", "mean_logprob",
         F.col("n_bigrams").alias("n_units"), "band", "band_name",

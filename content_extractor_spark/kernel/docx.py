@@ -140,7 +140,7 @@ _RELS = (
 def build_docx(paragraphs, title: str = "") -> bytes:
     """Synthesize a minimal valid .docx (deterministic: ZIP_STORED,
     fixed timestamps) — the test/oracle corpus writer, mirroring
-    build_warc/build_wat/build_simple_pdf."""
+    build_warc."""
     body = "".join(
         f"<w:p><w:r><w:t xml:space=\"preserve\">{_escape_xml(p)}</w:t>"
         "</w:r></w:p>"

@@ -263,60 +263,6 @@ def build_warc(
     return out.getvalue()
 
 
-def build_wat(
-    entries,
-    gzip_members: bool = True,
-    warc_date: str = "2021-07-01T00:00:00Z",
-) -> bytes:
-    """Synthesize a .warc.wat(.gz) of ``metadata`` records — the
-    Common Crawl WAT sidecar layout (per-page JSON envelope carrying
-    the parsed head title and outgoing links, so link-graph consumers
-    never re-parse HTML).
-
-    ``entries``: iterable of (record_id, page_url, title,
-    links=[(url, text), ...]).
-    """
-    import json as _json
-
-    out = io.BytesIO()
-    for entry in entries:
-        rid, url, title, links = entry
-        envelope = {
-            "Envelope": {
-                "WARC-Header-Metadata": {"WARC-Target-URI": url},
-                "Payload-Metadata": {
-                    "HTTP-Response-Metadata": {
-                        "HTML-Metadata": {
-                            "Head": {"Title": title},
-                            "Links": [
-                                {"path": "A@/href", "url": u, "text": t}
-                                for u, t in links
-                            ],
-                        }
-                    }
-                },
-            }
-        }
-        body = _json.dumps(envelope, separators=(",", ":")).encode("utf-8")
-        headers = (
-            b"WARC/1.0\r\n"
-            b"WARC-Type: metadata\r\n"
-            + f"WARC-Record-ID: <urn:uuid:{rid}>\r\n".encode()
-            + f"WARC-Target-URI: {url}\r\n".encode()
-            + f"WARC-Date: {warc_date}\r\n".encode()
-            + b"Content-Type: application/json\r\n"
-            + f"Content-Length: {len(body)}\r\n".encode()
-            + b"\r\n"
-        )
-        record = headers + body + b"\r\n\r\n"
-        if gzip_members:
-            co = zlib.compressobj(9, zlib.DEFLATED, 16 + zlib.MAX_WBITS)
-            out.write(co.compress(record) + co.flush())
-        else:
-            out.write(record)
-    return out.getvalue()
-
-
 _CHARSET_PARAM = re.compile(r"charset\s*=\s*[\"']?([A-Za-z0-9_.:-]+)", re.I)
 _META_CHARSET = re.compile(
     rb"""<meta[^>]+?(?:charset\s*=\s*["']?([A-Za-z0-9_.:-]+)|"""

@@ -12,14 +12,17 @@ Scale notes:
   * iteration count is bounded by the graph diameter of the largest
     component; near-dup graphs are shallow (clusters are cliques-ish),
     so 3-5 iterations typically converge;
-  * `localCheckpoint` truncates the lineage each round so plans don't
-    grow exponentially (mandatory for iterative DataFrame algorithms).
+  * `session.materialize` truncates the lineage each round so plans
+    don't grow exponentially (mandatory for iterative DataFrame
+    algorithms).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..session import materialize
 
 
 def connected_components(
@@ -38,7 +41,7 @@ def connected_components(
     # pipeline (LSH banding, signature aggregation) once per branch —
     # the explode derives (a->b, b->a) per input row map-side, so the
     # edge subtree is evaluated exactly once (r7; values identical)
-    adj = (
+    adj = materialize(
         edges.select(
             F.explode(
                 F.array(
@@ -53,7 +56,6 @@ def connected_components(
         )
         .select("e.src", "e.dst")
         .distinct()
-        .localCheckpoint(eager=True)
     )
     # initial labels stay LAZY: one shallow agg over the checkpointed
     # adjacency — the first round's checkpoint materializes it, saving
@@ -83,7 +85,7 @@ def connected_components(
         # plan costs more than the saved driver jobs on shallow
         # near-dup graphs.)
         obs = Observation()
-        new_labels = (
+        new_labels = materialize(
             labels.join(neigh, labels["node"] == neigh["src"], "left")
             .select(
                 "node",
@@ -95,7 +97,6 @@ def connected_components(
                 ).alias("_changed"),
             )
             .observe(obs, F.sum(F.col("_changed").cast("long")).alias("n"))
-            .localCheckpoint(eager=True)
         )
         labels = new_labels.drop("_changed")
         # sum over an empty frame surfaces as None — converged either way

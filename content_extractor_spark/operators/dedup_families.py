@@ -25,6 +25,8 @@ from typing import Optional
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import materialize
+
 # 56-bit portable hash (no sign issues), identical in DuckDB via
 # ('0x' || substr(md5(x),1,14))::BIGINT
 def portable_hash(col: Column) -> Column:
@@ -38,7 +40,6 @@ def repeated_window_spans(
     min_count: int = 2,
     text_col: str = "text",
     id_col: str = "doc_id",
-    checkpoint_spans: bool = False,
 ) -> DataFrame:
     """Exact SUBSTRING-dedup candidates, the Spark shape of the
     suffix-array approach in Lee et al. 2022 ("Deduplicating Training
@@ -85,17 +86,10 @@ def repeated_window_spans(
     # (cookie banner, license header) became a single straggler task.
     # groupBy+count partial-aggregates map-side (a hot digest reduces
     # to ~1 row per input partition) and the join-back is an equi-join
-    # AQE skew-join can split. The explode+digest projection is
-    # evaluated on both branches — map-side CPU, embarrassingly
-    # parallel, the right trade against a straggler at 100x.
-    # checkpoint_spans=True instead materializes the exploded spans
-    # once (both the counts branch and the join left side read it) —
-    # right for bounded inputs where the double evaluation costs more
-    # than the materialization; leave False at corpus scale, where the
-    # exploded frame is ~n_tokens/stride rows per doc and recomputing
-    # beats pinning it in the block manager.
-    if checkpoint_spans:
-        spans = spans.localCheckpoint(eager=True)
+    # AQE skew-join can split. The exploded spans are materialized
+    # once, so the counts branch and the join's left side both read
+    # them instead of evaluating the explode+digest projection twice.
+    spans = materialize(spans)
     counts = (
         spans.groupBy("digest")
         .agg(F.count("*").alias("occurrences"))
@@ -144,39 +138,6 @@ MINHASH_PRIME = 2305843009213693951  # 2^61 - 1
 MINHASH_ADD = 0x9E3779B9
 
 
-def minhash_signature(text_col: str = "text", num_perm: int = 16,
-                      k: int = 3) -> Column:
-    """num_perm minhashes via linear permutations of one base hash.
-
-    num_perm <= 64: the largest multiplier (2*63+1)=127 times the
-    56-bit base hash stays below 2^63; 65 permutations would silently
-    wrap negative in BOTH engines (exact bound, not a guess).
-    """
-    if num_perm > 64:
-        raise ValueError(
-            "num_perm <= 64: (2j+1)*hash must stay within int64"
-        )
-    from .textstats import let_bound
-
-    base = F.transform(word_shingles(text_col, k), lambda s: portable_hash(s))
-    # let_bound: a free-variable `base` inside the permutation lambda
-    # would recompute the md5 of every shingle once per permutation
-    # (num_perm x the digest work per row)
-    return let_bound(
-        base,
-        lambda b: F.transform(
-            F.sequence(F.lit(0), F.lit(num_perm - 1)),
-            lambda j: F.array_min(
-                F.transform(
-                    b,
-                    lambda h: ((F.lit(2) * j + 1) * h + j * F.lit(MINHASH_ADD))
-                    % F.lit(MINHASH_PRIME),
-                )
-            ),
-        ),
-    )
-
-
 def minhash_bands(sig_col: Column, num_bands: int = 4,
                   rows_per_band: int = 4) -> Column:
     """Band hashes: array of (hash of the band's minhash slice)."""
@@ -209,13 +170,15 @@ def minhash_signatures_df(
 ) -> DataFrame:
     """(id, sig array<bigint>) via explode + partial-aggregate min.
 
-    Same values as :func:`minhash_signature`, but the scalable shape:
-    one shingle-hash per exploded row, `num_perm` MIN aggregates with
-    map-side combine — no higher-order-function re-evaluation (Catalyst
-    inlines array lambdas into each of the 16 permutation expressions,
-    recomputing the shingle hashing 16x per row) and no giant arrays.
+    Linear permutations of one base hash per shingle: one shingle-hash
+    per exploded row, `num_perm` MIN aggregates with map-side combine —
+    no higher-order-function re-evaluation (Catalyst would inline array
+    lambdas into each of the permutation expressions, recomputing the
+    shingle hashing per permutation) and no giant arrays.
     Rows with fewer than k tokens produce no shingles and are dropped.
-    num_perm <= 64 (see :func:`minhash_signature` for the int64 bound).
+    num_perm <= 64: the largest multiplier (2*63+1)=127 times the
+    56-bit base hash stays below 2^63; 65 permutations would silently
+    wrap negative in BOTH engines (exact bound, not a guess).
     """
     if num_perm > 64:
         raise ValueError(
@@ -245,21 +208,17 @@ def minhash_lsh_pairs(
     num_perm: int = 16,
     num_bands: int = 4,
     max_bucket: int = 64,
-    checkpoint_banded: bool = False,
 ) -> DataFrame:
     """Candidate near-dup pairs (a < b) sharing at least one LSH band.
 
     `max_bucket` caps pathological buckets (boilerplate-heavy corpora
     produce mega-buckets; capping bounds the pair blow-up).
 
-    ``checkpoint_banded=True`` eagerly localCheckpoints the banded
-    frame before the self-join: a self-join restates its input subtree
-    once per side, so the whole signature pipeline (shingle explode,
-    16 MIN aggregates, band hashing, bucket-cap window) otherwise runs
-    twice. The banded frame is narrow (id + two band columns), so the
-    materialization is slim even at corpus scale; default stays False
-    to keep the fully lazy plan (pushdown through the signature
-    subtree) for library composition.
+    The banded frame is materialized before the self-join: a self-join
+    restates its input subtree once per side, so the whole signature
+    pipeline (shingle explode, MIN aggregates, band hashing, bucket-cap
+    window) would otherwise run twice. The frame is narrow (id + two
+    band columns), so the materialization is slim even at corpus scale.
     """
     rows = num_perm // num_bands
     sigs = minhash_signatures_df(df, text_col, id_col, num_perm)
@@ -275,8 +234,7 @@ def minhash_lsh_pairs(
         .where(F.col("_rn") <= max_bucket)
         .drop("_rn")
     )
-    if checkpoint_banded:
-        banded = banded.localCheckpoint(eager=True)
+    banded = materialize(banded)
     a = banded.select(
         F.col("band_idx").alias("bi"), F.col("band_hash").alias("bh"),
         F.col("id").alias("a"),
@@ -307,8 +265,7 @@ def simhash(text_col: str = "text", bits: int = 16) -> Column:
     lambdas over the token-hash array, i.e. `bits` passes per row (64
     at production bits=64). For corpus-scale signature runs use
     :func:`simhash_signatures_df` (one exploded pass, map-side-combined
-    SUM votes, value-identical output); :func:`simhash_duplicates`
-    already routes through it.
+    SUM votes, value-identical output).
     """
     if bits > 64:
         raise ValueError("simhash signatures are int64: bits <= 64")
@@ -395,23 +352,6 @@ def simhash_signatures_df(
     )
 
 
-def simhash_duplicates(df: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id", bits: int = 16) -> DataFrame:
-    """Docs sharing an identical simhash signature (near-dup groups).
-
-    Routes through :func:`simhash_signatures_df` — the single
-    corpus-scale code path (one exploded pass instead of `bits`
-    aggregate-lambda passes per row); values are identical to the
-    expression form including NULL-text rows (NULL sig group).
-    """
-    return (
-        simhash_signatures_df(df, text_col, id_col, bits)
-        .groupBy("sig")
-        .agg(F.min("id").alias("keep_id"), F.count("*").alias("dup_count"))
-        .where(F.col("dup_count") > 1)
-    )
-
-
 def simhash_hamming_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -419,7 +359,6 @@ def simhash_hamming_pairs(
     bits: int = 16,
     bands: int = 4,
     max_hamming: int = 2,
-    checkpoint_banded: bool = False,
 ) -> DataFrame:
     """Near-dup pairs with simhash Hamming distance <= max_hamming.
 
@@ -441,10 +380,7 @@ def simhash_hamming_pairs(
     sigs = simhash_signatures_df(df, text_col, id_col, bits).where(
         F.col("sig").isNotNull()
     )
-    return signature_hamming_pairs(
-        sigs, bits, bands, max_hamming,
-        checkpoint_banded=checkpoint_banded,
-    )
+    return signature_hamming_pairs(sigs, bits, bands, max_hamming)
 
 
 def signature_hamming_pairs(
@@ -454,15 +390,13 @@ def signature_hamming_pairs(
     max_hamming: int,
     id_col: str = "id",
     sig_col: str = "sig",
-    checkpoint_banded: bool = False,
 ) -> DataFrame:
     """(a, b, hamming) pairs within Hamming <= max_hamming over ANY
     (id, sig) bit-signature frame — the banding engine shared by text
     SimHash and perceptual image hashes (same pigeonhole guarantee and
     join-key cardinality math as :func:`simhash_hamming_pairs`).
-
-    ``checkpoint_banded`` as in :func:`minhash_lsh_pairs`: the
-    self-join otherwise restates the signature subtree once per side.
+    The banded frame is materialized before the self-join, as in
+    :func:`minhash_lsh_pairs`.
     """
     if max_hamming > bands - 1:
         raise ValueError(
@@ -484,8 +418,7 @@ def signature_hamming_pairs(
             ])
         ).alias("b"),
     ).select("id", "sig", "b.band_idx", "b.band_val")
-    if checkpoint_banded:
-        banded = banded.localCheckpoint(eager=True)
+    banded = materialize(banded)
     left = banded.select(
         F.col("band_idx"), F.col("band_val"),
         F.col("id").alias("a"), F.col("sig").alias("sig_a"),

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import materialize
+
 HREF_RE = r'href="([^"]*)"'
 HOST_RE = r"^https?://([^/]+)"
 
@@ -59,7 +61,6 @@ def pagerank_hosts(
     damping: float = 0.85,
     round_to: int = 6,
     graph_partitions: int | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """PageRank over host edges, fixed iteration count, deterministic.
 
@@ -74,44 +75,13 @@ def pagerank_hosts(
     the per-iteration joins don't pay corpus-sized task scheduling.
     Leave None to keep the upstream partitioning.
 
-    When `graph_partitions` is set (the caller asserts a small graph)
-    and `materialize` is on, adaptive execution is suspended for the
-    iteration jobs: AQE materializes every Exchange as its own
-    scheduling round to re-plan at runtime, which a bounded-size
-    iteration cannot benefit from — measured 40 → 16 driver jobs per
-    call on the gate graph, values identical. With graph_partitions
-    None the graph may be corpus-sized and AQE's skew-join handling
-    stays on. The flag is restored in a finally block (session-global
-    conf — don't build unrelated frames concurrently from other
-    threads while a small-graph pagerank runs).
+    The result is materialized, and the edge/node caches are released
+    before returning.
     """
     edges = edges.select("src", "dst").distinct()
     if graph_partitions is not None:
         edges = edges.coalesce(graph_partitions)
     edges = edges.cache()
-    spark = edges.sparkSession
-    suspend_aqe = graph_partitions is not None and materialize
-    old_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    if suspend_aqe:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        return _pagerank_iterations(
-            edges, iterations, damping, round_to, graph_partitions,
-            materialize,
-        )
-    finally:
-        if suspend_aqe:
-            spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
-
-
-def _pagerank_iterations(
-    edges: DataFrame,
-    iterations: int,
-    damping: float,
-    round_to: int,
-    graph_partitions,
-    materialize: bool,
-) -> DataFrame:
     nodes = (
         edges.select(F.col("src").alias("host"))
         .unionByName(edges.select(F.col("dst").alias("host")))
@@ -124,14 +94,14 @@ def _pagerank_iterations(
     out_deg = edges.groupBy("src").agg(F.count("*").alias("out"))
     ranks = nodes.withColumn("rank", F.lit(1.0 / n))
     for it in range(iterations):
-        if materialize and it > 0:
+        if it > 0:
             # r7: each iteration references the previous ranks TWICE
             # (dangling-mass branch + contribution branch), so the lazy
             # plan doubles per iteration — planning cost grows 2^t and
             # the broadcast subqueries re-derive the whole prefix.
             # Truncating per iteration keeps plans linear; the frame is
             # host-cardinality tiny by construction.
-            ranks = ranks.localCheckpoint(eager=True)
+            ranks = materialize(ranks)
         with_deg = ranks.join(
             out_deg, ranks["host"] == out_deg["src"], "left"
         ).select("host", "rank", "out")
@@ -158,19 +128,13 @@ def _pagerank_iterations(
                 ).alias("rank"),
             )
         )
-    out = ranks.select("host", F.round("rank", round_to).alias("rank"))
     # materialize the (tiny) final ranks and truncate the iteration
-    # lineage, THEN drop the edge/node caches — otherwise every call
-    # leaves cached blocks pinned for the session, and unpersisting
-    # without the checkpoint would re-derive edges once per iteration
-    # on the caller's action. `materialize=False` keeps the raw
-    # iterative plan visible (plan audits/tests) and leaves cache
-    # lifecycle to the caller — note tools/plan_audit.py therefore
-    # shows only the post-checkpoint scan for the default path; the
-    # pre-checkpoint plan shape is pinned by test_plan_shape.py.
-    if not materialize:
-        return out
-    out = out.localCheckpoint(eager=True)
+    # lineage, THEN drop the edge/node caches — unpersisting without
+    # the cut would re-derive the edges once per iteration on the
+    # caller's action.
+    out = materialize(
+        ranks.select("host", F.round("rank", round_to).alias("rank"))
+    )
     edges.unpersist(blocking=False)
     nodes.unpersist(blocking=False)
     return out

@@ -953,8 +953,7 @@ def image_hashes(
     stage over the binary payloads (real decode for
     Netpbm/PNG/BMP/GIF/baseline-JPEG — the formats that dominate a web
     crawl; anything else surfaces status='unsupported', never task
-    failures); near-dup pairing happens downstream in
-    :func:`image_near_duplicates` via the shared Hamming banding.
+    failures).
     """
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1075,309 +1074,7 @@ def pixel_stats_with_hashes(
     return df.mapInPandas(run, schema=PIXEL_STATS_HASHES_DDL)
 
 
-def image_near_duplicates(
-    df: DataFrame,
-    payload_col: str = "payload",
-    ref_col: str = "media_ref",
-    max_hamming: int = 6,
-    bands: int = 8,
-) -> DataFrame:
-    """(a, b, hamming) near-duplicate image pairs by dHash distance —
-    hashes from :func:`image_hashes`, candidate pairs via the SAME
-    banded pigeonhole join the text SimHash family uses
-    (signature_hamming_pairs): never all-pairs, sound for
-    max_hamming <= bands - 1.
-    """
-    from .dedup_families import signature_hamming_pairs
-
-    sigs = (
-        image_hashes(df, payload_col, ref_col)
-        .where(F.col("status") == "ok")
-        .select(F.col(ref_col).alias("id"), F.col("dhash").alias("sig"))
-    )
-    return signature_hamming_pairs(
-        sigs, bits=64, bands=bands, max_hamming=max_hamming
-    )
-
-
 # -- video containers (ISO BMFF / MP4) --------------------------------------------
 
 
-def decode_mp4_meta(data: bytes):
-    """(brand, duration_ms, timescale, n_tracks) from an ISO base
-    media file (MP4/MOV): REAL box-structure walk — ftyp major brand,
-    moov/mvhd duration (version 0 and 1 layouts), trak count. Returns
-    None for non-BMFF payloads or structural corruption."""
-    n = len(data)
-    if n < 12 or data[4:8] != b"ftyp":
-        return None
-    brand = data[8:12].decode("latin-1")
-    duration_ms = timescale = None
-    n_tracks = 0
-
-    def walk(start: int, end: int, depth: int) -> bool:
-        nonlocal duration_ms, timescale, n_tracks
-        pos = start
-        while pos + 8 <= end:
-            size = int.from_bytes(data[pos:pos + 4], "big")
-            btype = data[pos + 4:pos + 8]
-            hdr = 8
-            if size == 1:
-                if pos + 16 > end:
-                    return False
-                size = int.from_bytes(data[pos + 8:pos + 16], "big")
-                hdr = 16
-            elif size == 0:  # box extends to EOF
-                size = end - pos
-            if size < hdr or pos + size > end:
-                return False
-            body = pos + hdr
-            if btype == b"moov" and depth == 0:
-                if not walk(body, pos + size, 1):
-                    return False
-            elif btype == b"mvhd" and depth == 1:
-                if body >= pos + size:
-                    return False
-                version = data[body]
-                # v1: ver/flags(4) ctime(8) mtime(8) ts(4) dur(8) = 32
-                # v0: ver/flags(4) ctime(4) mtime(4) ts(4) dur(4) = 20
-                if version == 1 and body + 32 <= pos + size:
-                    ts = int.from_bytes(data[body + 20:body + 24], "big")
-                    dur = int.from_bytes(data[body + 24:body + 32], "big")
-                elif version == 0 and body + 20 <= pos + size:
-                    ts = int.from_bytes(data[body + 12:body + 16], "big")
-                    dur = int.from_bytes(data[body + 16:body + 20], "big")
-                else:
-                    return False
-                if ts:
-                    timescale = ts
-                    duration_ms = dur * 1000 // ts
-            elif btype == b"trak" and depth == 1:
-                n_tracks += 1
-            pos += size
-        return True
-
-    if not walk(0, n, 0) or timescale is None:
-        return None
-    return (brand, duration_ms, timescale, n_tracks)
-
-
-VIDEO_FEATURES_DDL = (
-    "media_ref string, fmt string, brand string, duration_ms bigint, "
-    "timescale bigint, n_tracks int, n_bytes bigint, "
-    "frame_times_ms array<bigint>, status string, error string"
-)
-
-
-def extract_video_features(
-    df: DataFrame,
-    frame_every_ms: int = 1000,
-    max_frames: int = 32,
-    payload_col: str = "payload",
-    ref_col: str = "media_ref",
-    decode_stub_mode: str = "plan",
-) -> DataFrame:
-    """Video container metadata + frame-sampling PLAN via mapInPandas.
-
-    The container walk (ftyp/moov/mvhd/trak) is REAL and dependency-
-    free; `frame_times_ms` is the deterministic sample schedule
-    (every `frame_every_ms`, capped at `max_frames` — evenly thinned,
-    never truncated to the head, so long videos still cover the
-    tail). Actual pixel decode of the sampled frames genuinely needs
-    a codec (no av library in this container): decode_stub_mode
-    'plan' emits the schedule only; 'raise' surfaces
-    NotImplementedError as status='unsupported' rows — the honest
-    boundary, same policy as the learned image-feature stub. The one
-    codec-free exception is motion JPEG: route .mjpeg payloads to
-    :func:`extract_mjpeg_frames` for REAL sampled-frame pixel decode.
-    """
-
-    def schedule(duration_ms: int):
-        times = list(range(0, max(duration_ms, 1), frame_every_ms))
-        if len(times) > max_frames:
-            step = len(times) / max_frames
-            times = [times[int(i * step)] for i in range(max_frames)]
-        return times
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k.split(" ")[0]: []
-                   for k in VIDEO_FEATURES_DDL.split(", ")}
-
-            def row(ref, nb, fmt=None, brand=None, dur=None, ts=None,
-                    trk=None, times=None, status="ok", error=None):
-                out["media_ref"].append(ref)
-                out["fmt"].append(fmt)
-                out["brand"].append(brand)
-                out["duration_ms"].append(dur)
-                out["timescale"].append(ts)
-                out["n_tracks"].append(trk)
-                out["n_bytes"].append(nb)
-                out["frame_times_ms"].append(times)
-                out["status"].append(status)
-                out["error"].append(error)
-
-            for ref, payload in zip(pdf[ref_col], pdf[payload_col]):
-                if payload is None:
-                    row(ref, 0, status="error", error="null payload")
-                    continue
-                data = bytes(payload)
-                meta = decode_mp4_meta(data)
-                if meta is None:
-                    row(ref, len(data), status="unsupported",
-                        error="not an ISO-BMFF container")
-                    continue
-                brand, dur, ts, trk = meta
-                if decode_stub_mode == "raise":
-                    row(ref, len(data), "mp4", brand, dur, ts, trk,
-                        status="unsupported",
-                        error="frame pixel decode needs a video codec "
-                              "— not in this container (the schedule "
-                              "and container walk are real)")
-                    continue
-                row(ref, len(data), "mp4", brand, dur, ts, trk,
-                    schedule(dur))
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(run, schema=VIDEO_FEATURES_DDL)
-
-
 # -- MJPEG: the codec-free real-decode lane ---------------------------------
-
-
-def _jpeg_frame_end(data: bytes, pos: int, n: int) -> int:
-    """Index just past the EOI of the JPEG starting at ``pos`` (SOI),
-    or -1. Walks marker segments by their length fields — a raw FFD9
-    inside a metadata segment payload (e.g. an EXIF APP1 thumbnail,
-    itself a nested JPEG with its own EOI) is legal and must NOT end
-    the frame; only inside entropy-coded data is 0xFF always stuffed
-    (0xFF00) or a marker."""
-    i = pos + 2
-    while i + 2 <= n:
-        if data[i] != 0xFF:
-            return -1  # corrupt marker stream
-        marker = data[i + 1]
-        if marker == 0xFF:  # fill byte
-            i += 1
-            continue
-        if marker == 0xD9:  # EOI
-            return i + 2
-        if 0xD0 <= marker <= 0xD7 or marker == 0x01 or marker == 0xD8:
-            i += 2  # standalone markers carry no length
-            continue
-        if i + 4 > n:
-            return -1
-        seglen = int.from_bytes(data[i + 2 : i + 4], "big")
-        if seglen < 2:
-            return -1
-        i += 2 + seglen
-        if marker == 0xDA:  # SOS: entropy data follows the header
-            while i + 1 < n:
-                if data[i] != 0xFF:
-                    i += 1
-                    continue
-                b2 = data[i + 1]
-                if b2 == 0x00 or 0xD0 <= b2 <= 0xD7:
-                    i += 2  # stuffed FF / restart marker
-                    continue
-                break  # real marker (EOI, DNL, next SOS, ...)
-    return -1
-
-
-def split_mjpeg_frames(data: bytes):
-    """Split a motion-JPEG stream (concatenated SOI..EOI baseline
-    JPEGs — the .mjpeg / multipart-camera convention) into its frame
-    payloads, or None if the payload is not an MJPEG stream. Frame
-    ends are found by walking marker segments up to SOS and scanning
-    only entropy-coded data for the EOI (a raw FFD9 may legally appear
-    inside metadata payloads such as EXIF thumbnails). Trailing bytes
-    after the last complete frame are ignored (truncated tail frame)."""
-    if not data.startswith(b"\xff\xd8"):
-        return None
-    frames, pos, n = [], 0, len(data)
-    while pos < n and data[pos : pos + 2] == b"\xff\xd8":
-        end = _jpeg_frame_end(data, pos, n)
-        if end < 0:
-            break
-        frames.append(data[pos:end])
-        pos = end
-    return frames or None
-
-
-MJPEG_FRAMES_DDL = (
-    "media_ref string, fmt string, n_frames int, frame_idx int, "
-    "t_ms bigint, width int, height int, mean_luma double, "
-    "status string, error string"
-)
-
-
-def extract_mjpeg_frames(
-    df: DataFrame,
-    frame_every_ms: int = 1000,
-    max_frames: int = 32,
-    fps: float = 25.0,
-    payload_col: str = "payload",
-    ref_col: str = "media_ref",
-) -> DataFrame:
-    """REAL video-frame pixel decode for the one codec this container
-    can do without a library: motion JPEG. One row per SAMPLED frame —
-    the same every-`frame_every_ms`, `max_frames`-capped,
-    evenly-thinned schedule as :func:`extract_video_features`, applied
-    to the stream's `fps`-derived timeline — with the frame decoded
-    through ``kernel.jpeg.decode_jpeg_gray`` (full huffman + IDCT
-    raster, the perceptual-hash luma path) and reduced to its mean
-    luma. Non-MJPEG payloads surface one status='unsupported' row
-    (MP4 et al. stay honestly stubbed in extract_video_features — a
-    real codec is still a codec)."""
-    from ..kernel.jpeg import decode_jpeg_gray
-
-    frame_ms = 1000.0 / fps
-
-    def schedule(duration_ms: int):
-        times = list(range(0, max(duration_ms, 1), frame_every_ms))
-        if len(times) > max_frames:
-            step = len(times) / max_frames
-            times = [times[int(i * step)] for i in range(max_frames)]
-        return times
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k.split(" ")[0]: [] for k in MJPEG_FRAMES_DDL.split(", ")}
-
-            def row(ref, fmt=None, nf=None, idx=None, t=None, w=None,
-                    h=None, luma=None, status="ok", error=None):
-                out["media_ref"].append(ref)
-                out["fmt"].append(fmt)
-                out["n_frames"].append(nf)
-                out["frame_idx"].append(idx)
-                out["t_ms"].append(t)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["mean_luma"].append(luma)
-                out["status"].append(status)
-                out["error"].append(error)
-
-            for ref, payload in zip(pdf[ref_col], pdf[payload_col]):
-                if payload is None:
-                    row(ref, status="error", error="null payload")
-                    continue
-                frames = split_mjpeg_frames(bytes(payload))
-                if frames is None:
-                    row(ref, status="unsupported",
-                        error="not an MJPEG stream")
-                    continue
-                duration_ms = int(len(frames) * frame_ms)
-                for t in schedule(duration_ms):
-                    idx = min(int(t / frame_ms), len(frames) - 1)
-                    dec = decode_jpeg_gray(frames[idx])
-                    if dec is None:
-                        row(ref, "mjpeg", len(frames), idx, t,
-                            status="error",
-                            error=f"frame {idx} not baseline JPEG")
-                        continue
-                    _, w, h, gray = dec
-                    row(ref, "mjpeg", len(frames), idx, t, w, h,
-                        sum(gray) / len(gray))
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(run, schema=MJPEG_FRAMES_DDL)

@@ -185,62 +185,6 @@ def robots_rules(
     )
 
 
-def robots_directives(
-    robots: DataFrame,
-    host_col: str = "host",
-    txt_col: str = "robots_txt",
-) -> DataFrame:
-    """(host, kind, value) non-rule robots directives — the politeness
-    inputs a crawl scheduler needs next to the Allow/Disallow filter:
-
-      * kind='crawl_delay': the Crawl-delay of User-agent:* groups
-        (de-facto extension honored by most crawlers; NOT part of
-        RFC 9309). When several star groups set delays, the MAX wins —
-        the only spacing that satisfies every group (conservative
-        politeness).
-      * kind='sitemap': every Sitemap: line, group-INDEPENDENT per the
-        sitemaps.org protocol (valid anywhere in the file).
-
-    Pure Catalyst over the shared grouped-lines parser; feeds the O3
-    per-host rate limiting (the reference throttles 100 urls/s/host —
-    Config.scala maxThrottleRequestsPerHost) and sitemap-seeded url
-    discovery.
-    """
-    lines = _robots_grouped_lines(robots, host_col, txt_col)
-    star_groups = _robots_star_groups(lines)
-    delays = (
-        lines.where(F.col("line").rlike(r"(?i)^crawl-delay\s*:"))
-        .withColumn(
-            "value",
-            F.trim(
-                F.regexp_extract(F.col("line"), r"(?i)^crawl-delay\s*:(.*)$", 1)
-            ),
-        )
-        .where(F.col("value").rlike(r"^\d+(\.\d+)?$"))
-        .join(star_groups, ["host", "grp"])
-        .groupBy("host")
-        .agg(F.max(F.col("value").cast("double")).alias("_d"))
-        .select(
-            "host",
-            F.lit("crawl_delay").alias("kind"),
-            F.col("_d").cast("string").alias("value"),
-        )
-    )
-    sitemaps = (
-        lines.where(F.col("line").rlike(r"(?i)^sitemap\s*:"))
-        .select(
-            "host",
-            F.lit("sitemap").alias("kind"),
-            F.trim(
-                F.regexp_extract(F.col("line"), r"(?i)^sitemap\s*:(.*)$", 1)
-            ).alias("value"),
-        )
-        .where(F.col("value") != "")
-        .distinct()
-    )
-    return delays.unionByName(sitemaps)
-
-
 def robots_disallow_filter(
     urls: DataFrame,
     robots: DataFrame,
@@ -331,8 +275,7 @@ def sitemap_urls(
     xml_col: str = "xml",
     host_col: str = "host",
 ) -> DataFrame:
-    """(host, kind, loc, lastmod) from sitemap XML — the discovery
-    counterpart of :func:`robots_directives`'s Sitemap lines.
+    """(host, kind, loc, lastmod) from sitemap XML.
 
     Handles both document shapes of the sitemaps.org protocol:
     ``<urlset>`` (kind='url' — crawlable pages) and ``<sitemapindex>``

@@ -40,10 +40,6 @@ def norm(a: Column) -> Column:
     )
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
-
-
 def cosine_topk(
     queries: DataFrame,
     corpus: DataFrame,

@@ -1,8 +1,8 @@
-"""Explicit skew handling (north rule): salting + hot-key isolation.
+"""Explicit skew handling (north rule): salting and spreading.
 
 A Zipfian host distribution makes naive groupBy(host)/join(host) plans
 straggle at 10^12 docs: the hottest host's partition is orders of
-magnitude larger than the median. Three standard remedies, as reusable
+magnitude larger than the median. Two standard remedies, as reusable
 operators:
 
   * `salted_agg` — two-phase aggregation: group by (key, salt) first
@@ -12,12 +12,6 @@ operators:
     already partially aggregated by Spark; salting matters for
     size-accumulating aggregates like collect_list/set and for
     high-cardinality-combining ones.)
-  * `salted_join` — replicate the small side `salt` times and salt the
-    big side's key: hot keys spread over `salt` reducers. Use when the
-    dim is too big to broadcast but the fact side is skewed.
-  * `hot_keys` — cheap sampled histogram to decide the salt factor /
-    isolate the top-k keys (process hot keys via broadcast, the long
-    tail via ordinary shuffle).
   * `spread` — widen a frame narrower than the session's parallelism
     (a single-split scan) before per-row map work.
 
@@ -47,16 +41,6 @@ def spread(df: DataFrame) -> DataFrame:
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)
-
-
-def with_salt(df: DataFrame, key_col: str, salt: int,
-              salt_col: str = "_salt") -> DataFrame:
-    """Deterministic per-row salt (no rand(): retries stay stable)."""
-    return df.withColumn(
-        salt_col,
-        F.pmod(F.xxhash64(F.col(key_col), F.monotonically_increasing_id()),
-               F.lit(salt)).cast("int"),
-    )
 
 
 def salted_agg(
@@ -101,31 +85,3 @@ def salted_agg(
         .agg(*phase1_aggs)
     )
     return partial.groupBy(*key_cols).agg(*phase2_aggs)
-
-
-def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    key: str,
-    salt: int = 8,
-    how: str = "inner",
-) -> DataFrame:
-    """Skew-safe equi-join: salt the big side, replicate the small side."""
-    big_s = with_salt(big, key, salt)
-    small_s = small.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))
-    )
-    out = big_s.join(small_s, [key, "_salt"], how)
-    return out.drop("_salt")
-
-
-def hot_keys(df: DataFrame, key_col: str, top_k: int = 10,
-             sample_fraction: float = 0.01) -> DataFrame:
-    """Sampled key histogram: the inputs to a salt-factor decision."""
-    sample = df.sample(fraction=sample_fraction, seed=42) if sample_fraction < 1.0 else df
-    return (
-        sample.groupBy(key_col)
-        .agg(F.count("*").alias("sampled_rows"))
-        .orderBy(F.col("sampled_rows").desc(), F.col(key_col))
-        .limit(top_k)
-    )

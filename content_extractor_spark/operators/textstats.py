@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import materialize
+
 # tiny per-language stopword marker sets (deterministic, oracle-friendly);
 # dict order IS the tie-break order (earlier language wins equal hit counts)
 LANG_MARKERS = {
@@ -699,7 +701,6 @@ def unigram_logprob(
     text_col: str = "text",
     id_col: str = "doc_id",
     round_to: int = 6,
-    checkpoint_base: bool = False,
 ) -> DataFrame:
     """Per-document mean unigram log-probability under the corpus's own
     unigram LM — the classic cheap perplexity proxy for quality
@@ -712,16 +713,10 @@ def unigram_logprob(
     term counts derive from it (token-keyed shuffle with partial
     aggregation), the corpus total is a broadcast scalar, and the final
     per-doc combine shuffles on id. No pass ships raw token streams.
-
-    ``checkpoint_base=True`` eagerly localCheckpoints the (doc, term)
-    aggregate so the three consumers (corpus counts, total, per-doc
-    combine) read one materialized block set instead of each restating
-    the tokenize+explode+aggregate subtree (Catalyst does not reuse
-    the exchange across the differently-projected branches). Right
-    for bounded inputs where the restated subtree costs more than the
-    materialization; leave False on corpus-scale inputs — the base is
-    corpus-sized there and recomputing beats pinning it in the block
-    manager.
+    The aggregate is materialized once, so its three consumers (corpus
+    counts, total, per-doc combine) read it instead of each restating
+    the tokenize+explode+aggregate subtree (Catalyst does not reuse the
+    exchange across the differently-projected branches).
     """
     toks = F.explode(
         F.split(F.lower(F.trim(F.col(text_col))), TOKEN_SPLIT_RE)
@@ -732,8 +727,7 @@ def unigram_logprob(
         .groupBy("id", "term")
         .agg(F.count("*").alias("tc"))
     )
-    if checkpoint_base:
-        base = base.localCheckpoint(eager=True)
+    base = materialize(base)
     corpus = base.groupBy("term").agg(F.sum("tc").alias("cc"))
     total = corpus.select(F.sum("cc").alias("tot"))
     return (
@@ -758,7 +752,6 @@ def bigram_logprob(
     id_col: str = "doc_id",
     alpha: float = 1.0,
     round_to: int = 6,
-    checkpoint_base: bool = False,
 ) -> DataFrame:
     """Per-document mean bigram log-probability under the corpus's own
     Laplace-smoothed bigram LM — one step closer to the published
@@ -779,11 +772,8 @@ def bigram_logprob(
     all derive from it via token-keyed shuffles with partial
     aggregation; V and nothing else is a broadcast scalar; the final
     per-doc combine shuffles on id. Raw token streams never ship.
-
-    ``checkpoint_base`` as in :func:`unigram_logprob` — the (doc,
-    bigram) aggregate has FOUR consumers here (corpus, history,
-    vocabulary, per-doc combine), so the restated subtree multiplies
-    even further on bounded inputs; same corpus-scale caveat.
+    The aggregate is materialized once for its four consumers (corpus,
+    history, vocabulary, per-doc combine), as in :func:`unigram_logprob`.
     """
     toks = F.split(F.lower(F.trim(F.col(text_col))), TOKEN_SPLIT_RE)
     bigrams = let_bound(
@@ -801,8 +791,7 @@ def bigram_logprob(
         .groupBy("id", "bg")
         .agg(F.count("*").alias("tc"))
     )
-    if checkpoint_base:
-        base = base.localCheckpoint(eager=True)
+    base = materialize(base)
     corpus = (
         base.groupBy("bg")
         .agg(F.sum("tc").alias("cc"))
@@ -855,7 +844,6 @@ def perplexity_bands(
     bands: int = 3,
     round_to: int = 6,
     scores: DataFrame | None = None,
-    checkpoint_base: bool = False,
 ) -> DataFrame:
     """CCNet-style perplexity banding: per group (language), split
     documents into `bands` equal-count bands by their mean unigram
@@ -873,16 +861,11 @@ def perplexity_bands(
     frame — e.g. :func:`bigram_logprob`'s output — to band by a
     different LM; defaults to :func:`unigram_logprob`. The scorer's
     count column keeps its own name (n_tokens / n_bigrams).
-    ``checkpoint_base`` forwards to the default unigram scorer (no
-    effect when ``scores`` is supplied).
     """
     from pyspark.sql import Window
 
     if scores is None:
-        scores = unigram_logprob(
-            df, text_col, id_col, round_to=round_to,
-            checkpoint_base=checkpoint_base,
-        )
+        scores = unigram_logprob(df, text_col, id_col, round_to=round_to)
     count_col = [
         c for c in scores.columns if c not in (id_col, "mean_logprob")
     ][0]

@@ -37,7 +37,6 @@ from contextlib import contextmanager
 from dataclasses import dataclass
 from typing import Dict, List, Optional
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -46,7 +45,7 @@ from .operators.changes import plan_actions
 from .operators.dedup import mark_duplicates
 from .operators.extract import EXTRACT_SCHEMA, derive_spans_col, extract_entries
 from .operators.scans import scannable_documents
-from .sources.io import apply_entry_actions
+from .sources.io import apply_entry_actions, read_prior
 
 
 @dataclass
@@ -69,20 +68,9 @@ def with_bucket(df: DataFrame, num_buckets: int) -> DataFrame:
     )
 
 
-def _read_prior(spark: SparkSession, path: str) -> Optional[DataFrame]:
-    """The parquet dir at `path`; None only when there is no prior state
-    (path absent, or no parquet files in it). Corrupt files raise."""
-    try:
-        return spark.read.parquet(path)
-    except AnalysisException as e:
-        if e.getCondition() in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
-            return None
-        raise
-
-
 def completed_buckets(spark: SparkSession, ledger_path: str) -> List[int]:
     """Buckets committed in the ledger ([] when there is no ledger)."""
-    ledger = _read_prior(spark, ledger_path)
+    ledger = read_prior(spark, ledger_path)
     if ledger is None:
         return []
     done = ledger.where(F.col("status") == "done").select("bucket").distinct()
@@ -148,7 +136,7 @@ def run_extraction(
     spans_path = os.path.join(output_path, "spans_out")
     with _stage(spark, "resume state"):
         done = completed_buckets(spark, ledger_path)
-        prior = _read_prior(spark, spans_path) if done else None
+        prior = read_prior(spark, spans_path) if done else None
     dedup_baseline, prior_totals = existing_entries, {}
     if done:
         docs = docs.where(~F.col("bucket").isin(done))
@@ -225,7 +213,7 @@ def run_extraction(
     # counts ride that write
     if existing_entries is not None:
         with _stage(spark, "entries_next"):
-            spans = _read_prior(spark, spans_path)
+            spans = read_prior(spark, spans_path)
             if spans is not None:
                 actions = Observation("entry_actions")
                 planned = plan_actions(

@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -52,6 +52,18 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def materialize(df: DataFrame) -> DataFrame:
+    """Compute `df` now and cut its lineage: the one lineage cut of the
+    package. With a checkpoint dir on the SparkContext (Spark's
+    ``spark.checkpoint.dir``, or ``sc.setCheckpointDir``) the rows go to
+    that reliable storage and survive a lost executor; without one they
+    stay in executor block storage (``localCheckpoint``), which is not
+    fault-tolerant but needs no shared filesystem."""
+    if df.sparkSession.sparkContext.getCheckpointDir():
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint(eager=True)
 
 
 def _default_shuffle_partitions(master: str) -> int:

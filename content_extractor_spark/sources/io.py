@@ -33,8 +33,11 @@ from __future__ import annotations
 from datetime import datetime, timedelta, timezone
 from typing import Optional
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..session import materialize
 
 DEFAULT_CLOCK = "1970-01-01T00:00:00Z"
 REANALYSIS_INTERVAL_HOURS = 48  # reference default, Config.scala:76
@@ -60,6 +63,26 @@ def read_table(spark: SparkSession, ref: str) -> DataFrame:
     if "/" in ref:
         return spark.read.parquet(ref)
     return spark.read.table(ref)
+
+
+def read_prior(spark: SparkSession, ref: str) -> Optional[DataFrame]:
+    """The prior state at `ref` (a parquet dir or a catalog table name);
+    None only when there is none: the table or path does not exist, or
+    the dir holds no parquet files. Existence is checked first (Hadoop
+    FileSystem for paths), so an absent path never reaches the reader.
+    Corrupt files raise."""
+    if "/" not in ref:
+        return read_table(spark, ref) if spark.catalog.tableExists(ref) else None
+    path = spark._jvm.org.apache.hadoop.fs.Path(ref)  # noqa: SLF001
+    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())  # noqa: SLF001
+    if not fs.exists(path):
+        return None
+    try:
+        return read_table(spark, ref)
+    except AnalysisException as e:
+        if e.getCondition() == "UNABLE_TO_INFER_SCHEMA":
+            return None
+        raise
 
 
 def write_table(df: DataFrame, ref: str, mode: str = "append") -> None:
@@ -281,16 +304,12 @@ def upsert_entries(
             spark, entries_ref, planned, clock, reanalysis_interval_hours
         )
         return
-    try:
-        existing: Optional[DataFrame] = read_table(spark, entries_ref)
-        existing.schema  # force analysis; empty dir raises here
-    except Exception:
-        existing = None
+    existing = read_prior(spark, entries_ref)
     nxt = apply_entry_actions(
         existing, planned, clock, reanalysis_interval_hours
     )
     if existing is not None:
-        nxt = nxt.localCheckpoint(eager=True)  # detach lineage from input files
+        nxt = materialize(nxt)  # detach lineage from input files
     if "/" in entries_ref:
         nxt.write.mode("overwrite").parquet(entries_ref)
     else:

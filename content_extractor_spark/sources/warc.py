@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .io import read_prior
+
 WARC_RECORDS_DDL = (
     "warc_file string, record_id string, warc_type string, "
     "url string, warc_date string, http_status int, "
@@ -207,10 +209,10 @@ def _list_warc_files(spark: SparkSession, in_dir: str) -> list:
 def read_file_ledger(spark: SparkSession, ledger_path: str):
     """(done_files, committed_batches) from a file ledger, tolerating
     pre-batch-column ledgers and a not-yet-existing path."""
-    try:
-        rows = spark.read.parquet(ledger_path).collect()
-    except Exception:
+    ledger = read_prior(spark, ledger_path)
+    if ledger is None:
         return set(), set()
+    rows = ledger.collect()
     done = {r["file"] for r in rows}
     batches = {
         b for b in (r.asDict().get("batch") for r in rows) if b
@@ -299,63 +301,3 @@ def drop_orphan_batches(spark, data_path: str, committed) -> list:
                 fs.delete(status.getPath(), True)
                 dropped.append(bid)
     return dropped
-
-
-def incremental_warc_ingest(
-    spark: SparkSession,
-    in_dir: str,
-    out_root: str,
-    warc_types: tuple = ("response",),
-    max_files: int = None,
-) -> dict:
-    """Incremental crawl-archive ingestion with file-granular resume:
-    each run parses ONLY archive files not yet committed to the file
-    ledger, appends their records as parquet, then commits the files —
-    the batch analog of a Structured Streaming file source for a
-    format it cannot stream (binaryFile). Exactly-once: each batch
-    writes to its own ``ingest_batch=<id>`` partition directory and
-    the ledger commit registers the batch id; a run that crashed
-    between the data write and the ledger commit leaves an orphan
-    batch directory, which the next run deletes before re-processing
-    — so a batch lands at most once. ``max_files`` bounds a run for
-    steady backlog drain.
-
-    Returns {"files_total", "files_new", "files_processed",
-    "records"} — at 100k-file corpora the listing and ledger stay
-    driver-tiny (one row per FILE, never per record).
-    """
-    ledger_path = f"{out_root}/warc_ledger"
-    records_path = f"{out_root}/records"
-    files = _list_warc_files(spark, in_dir)
-    done, committed = read_file_ledger(spark, ledger_path)
-    # a store written by the pre-batch-layout version has flat appends
-    # in the base dir; fold them into ingest_batch=legacy once (and
-    # never orphan-drop that synthetic batch)
-    migrate_flat_store(spark, records_path)
-    drop_orphan_batches(spark, records_path, committed | {"legacy"})
-    todo = [f for f in files if f not in done]
-    if max_files is not None:
-        todo = todo[:max_files]
-    summary = {
-        "files_total": len(files),
-        "files_new": len(todo),
-        "files_processed": 0,
-        "records": 0,
-    }
-    if not todo:
-        return summary
-    from pyspark.sql import Observation
-
-    recs = read_warc(spark, todo, warc_types=warc_types)
-    # record count rides the write as an observation metric — counting
-    # separately would parse every archive TWICE
-    obs = Observation("warc_ingest")
-    bid = batch_id(todo)
-    recs.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
-        "overwrite"
-    ).parquet(f"{records_path}/ingest_batch={bid}")
-    n = obs.get["n"]
-    commit_file_ledger(spark, ledger_path, todo, bid)
-    summary["files_processed"] = len(todo)
-    summary["records"] = n
-    return summary

@@ -1,9 +1,7 @@
 """Structured Streaming adapters for incremental extraction."""
 
 from .incremental import (  # noqa: F401
-    host_rates,
     run_available_now,
     run_upsert_stream,
     streaming_extract,
 )
-from .stateful import streaming_dedup  # noqa: F401

@@ -13,9 +13,6 @@ Checkpointing gives exactly-once file-source progress tracking — the
 streaming analog of the batch pipeline's bucket ledger. The extraction
 operator is reused verbatim: mapInArrow works identically on streaming
 DataFrames (stateless map).
-
-Stateful aggregation (e.g. windowed per-host counts with late data)
-is provided by `host_rates` using event-time watermarks.
 """
 
 from __future__ import annotations
@@ -83,18 +80,14 @@ def run_upsert_stream(
     """
     from ..operators.changes import plan_actions
     from ..operators.dedup import mark_duplicates
-    from ..sources.io import read_table, upsert_entries
+    from ..sources.io import read_prior, upsert_entries
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         ok = batch_df.where(F.col("status") == "ok")  # same gate as pipeline.py
         if ok.isEmpty():
             return
-        try:
-            existing = read_table(spark, entries_ref)
-            existing.schema
-        except Exception:
-            existing = None
+        existing = read_prior(spark, entries_ref)
         if existing is not None:
             planned = plan_actions(mark_duplicates(ok, existing), existing)
         else:
@@ -118,16 +111,3 @@ def run_upsert_stream(
         .start()
     )
     q.awaitTermination()
-
-
-def host_rates(docs: DataFrame, window: str = "1 minute",
-               watermark: str = "2 minutes") -> DataFrame:
-    """Windowed per-host document counts with late-data watermarking —
-    the observability analog of the reference's per-host rate limiting
-    (UrlHandlingSupport.scala:582-642), as a monitoring aggregate."""
-    return (
-        docs.withColumn("event_time", F.to_timestamp(F.col("last_crawl")))
-        .withWatermark("event_time", watermark)
-        .groupBy(F.window("event_time", window), F.col("host"))
-        .agg(F.count("*").alias("docs"))
-    )

@@ -234,16 +234,9 @@ def flag_documents(docs, cfg, benchmark=None):
     cached = df.persist()
     df = cached
     surv = df.where(F.col("drop_reason").isNull()).select("doc_id", "text")
-    # checkpoint_banded: the pair self-join otherwise runs the whole
-    # signature pipeline (shingle explode over full text, 16 MIN
-    # aggregates, band hashing) twice over the survivor set; the
-    # banded frame is (id, band_idx, band_hash) — materializing those
-    # narrow rows beats recomputing the text-heavy subtree at any
-    # corpus size (A/B at sf0.1: funnel 8.8-10.1 -> 7.6-7.8 s,
-    # metrics identical)
     pairs = minhash_lsh_pairs(
         surv, num_perm=cfg.minhash_perms, num_bands=cfg.minhash_bands,
-        max_bucket=cfg.max_bucket, checkpoint_banded=True,
+        max_bucket=cfg.max_bucket,
     )
     losers = (
         connected_components(pairs)
@@ -341,7 +334,7 @@ def run_curation_stream(
     first-surviving-row rule).
 
     Exactly-once via the orphan-batch pattern (same contract as
-    ``incremental_warc_ingest``): every per-batch artifact — curated
+    ``jobs/warc_extract_job.py``): every per-batch artifact — curated
     rows, metrics row, seen digests — lands in its own
     ``ingest_batch=<id>`` subdirectory, and the batch id registers in
     ``{out_root}/batch_ledger`` LAST. A crash before the ledger append
@@ -354,6 +347,8 @@ def run_curation_stream(
     """
     from pyspark.sql import functions as F
 
+    from content_extractor_spark.session import materialize
+    from content_extractor_spark.sources.io import read_prior
     from content_extractor_spark.sources.warc import (
         drop_orphan_batches,
         migrate_flat_store,
@@ -366,10 +361,8 @@ def run_curation_stream(
     schema = spark.read.parquet(input_dir).schema
 
     def committed_batches(s):
-        try:
-            return {r["batch"] for r in s.read.parquet(ledger_path).collect()}
-        except Exception:  # first run: no ledger yet
-            return set()
+        ledger = read_prior(s, ledger_path)  # None on the first run
+        return set() if ledger is None else {r["batch"] for r in ledger.collect()}
 
     done = committed_batches(spark)
     for p in (curated_path, seen_path, metrics_path):
@@ -385,12 +378,10 @@ def run_curation_stream(
         if total_in == 0:
             return
         keyed = batch_df.withColumn("_digest", F.md5(F.col("text")))
-        try:
-            seen = s.read.parquet(seen_path).select("_digest")
-            fresh = keyed.join(seen, "_digest", "left_anti")
-        except Exception:  # first batch: no digests yet
-            fresh = keyed
-        fresh = fresh.localCheckpoint(eager=True)  # pin the anti-join result
+        seen = read_prior(s, seen_path)  # None on the first batch
+        if seen is not None:
+            keyed = keyed.join(seen.select("_digest"), "_digest", "left_anti")
+        fresh = materialize(keyed)  # pin the anti-join result
         m = run_curation(
             s, fresh.drop("_digest"), cfg, benchmark=benchmark,
             out_root=out_root, write_mode="overwrite",

@@ -81,8 +81,7 @@ def resolve_config(argv=None, env=None):
 def run_warc_extract(spark, in_dir, out_root, profiles, max_files=None):
     """One incremental batch: uncommitted archives -> spans batch dir +
     ledger commit (exactly-once — orphan batch dirs from a crashed run
-    are dropped before re-processing, same contract as
-    incremental_warc_ingest). Returns the run summary dict."""
+    are dropped before re-processing). Returns the run summary dict."""
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
 

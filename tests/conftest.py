@@ -1,4 +1,5 @@
 import os
+from pathlib import Path
 
 import pytest
 
@@ -19,3 +20,18 @@ def spark():
     )
     yield s
     s.stop()
+
+
+@pytest.fixture
+def corrupt_parquet():
+    """Replace every parquet part file under a dir with garbage bytes
+    (and drop the checksums, so the reader gets as far as the footer)."""
+
+    def corrupt(dir_path):
+        for f in Path(dir_path).rglob("*"):
+            if f.name.endswith(".crc"):
+                f.unlink()
+            elif f.name.startswith("part-"):
+                f.write_bytes(b"not a parquet file" * 8)
+
+    return corrupt

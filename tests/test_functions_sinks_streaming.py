@@ -303,46 +303,3 @@ class TestStreaming:
         assert n2 > n1  # new files processed
         ids = spark.read.parquet(out_dir).select("doc_id").collect()
         assert len(ids) == len({r["doc_id"] for r in ids})  # no reprocessing dups
-
-
-class TestStatefulDedup:
-    def test_streaming_dedup_across_microbatches(self, spark, tmp_path):
-        """applyInPandasWithState keeps 'seen' state across micro-batches:
-        a hash seen in batch 1 is suppressed when it reappears in batch 2."""
-        from content_extractor_spark.streaming.stateful import streaming_dedup
-
-        in_dir = str(tmp_path / "in")
-        out_dir = str(tmp_path / "out")
-        ckpt = str(tmp_path / "ck")
-        schema = "content_hash long, doc_id string, title string"
-        batch1 = spark.createDataFrame(
-            [(100, "d1", "t1"), (100, "d2", "t1"), (200, "d3", "t2")], schema
-        )
-        batch1.write.parquet(in_dir)
-
-        def drain():
-            stream = (
-                spark.readStream.schema(schema).format("parquet").load(in_dir)
-            )
-            q = (
-                streaming_dedup(stream)
-                .writeStream.format("parquet")
-                .option("path", out_dir)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .outputMode("append")
-                .start()
-            )
-            q.awaitTermination()
-
-        drain()
-        first = {r["doc_id"] for r in spark.read.parquet(out_dir).collect()}
-        assert first == {"d1", "d3"}  # first writer per hash
-
-        # second micro-batch: hash 100 again (suppressed), 300 new (kept)
-        spark.createDataFrame(
-            [(100, "d4", "t1"), (300, "d5", "t3")], schema
-        ).write.mode("append").parquet(in_dir)
-        drain()
-        after = {r["doc_id"] for r in spark.read.parquet(out_dir).collect()}
-        assert after == {"d1", "d3", "d5"}  # d4 deduped via persisted state

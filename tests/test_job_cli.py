@@ -2,6 +2,7 @@
 
 import json
 
+import pytest
 from pyspark.sql import functions as F
 
 from content_extractor_spark import synth
@@ -199,6 +200,31 @@ class TestCurateJob:
                  for r in spark.read.parquet(f"{out}/metrics").collect()}
         assert mrows[0]["drop_seen"] == 0 and mrows[0]["kept"] == 2
         assert mrows[1]["drop_seen"] == 1 and mrows[1]["kept"] == 1
+
+    def test_corrupt_batch_ledger_raises_and_keeps_batches(
+        self, spark, tmp_path, corrupt_parquet
+    ):
+        """A corrupt batch ledger is not "no committed batches": the
+        stream start raises before the orphan sweep, so no committed
+        ingest_batch dir is deleted."""
+        from jobs.curate_job import resolve_config, run_curation_stream
+
+        in_dir = str(tmp_path / "in")
+        out = tmp_path / "out"
+        ck = str(tmp_path / "ck")
+        cfg = resolve_config(["--input", "-", "--output", "-"])
+        body = " ".join(f"wx{j}" for j in range(30))
+        spark.createDataFrame(
+            [(1, f"the and of to in {body}", "s0")],
+            "doc_id long, text string, source string",
+        ).write.parquet(in_dir)
+        run_curation_stream(spark, in_dir, cfg, str(out), ck)
+        batches = sorted(out.glob("*/ingest_batch=*"))
+        assert batches
+        corrupt_parquet(out / "batch_ledger")
+        with pytest.raises(Exception, match="batch_ledger"):
+            run_curation_stream(spark, in_dir, cfg, str(out), ck)
+        assert sorted(out.glob("*/ingest_batch=*")) == batches
 
     def test_env_first_config(self):
         from jobs.curate_job import resolve_config

@@ -45,28 +45,10 @@ class TestDedupFamilies:
         pairs = {(r["a"], r["b"]) for r in minhash_lsh_pairs(texts, num_perm=16).collect()}
         assert (1, 2) in pairs
 
-    def test_checkpoint_banded_value_identical(self, spark, texts):
-        """checkpoint_banded=True is a plan-only change: both pair
-        generators must return row-identical results with and without
-        the eager banded materialization (the gate queries opt in)."""
-        from content_extractor_spark.operators.dedup_families import (
-            simhash_hamming_pairs,
-        )
-
-        for fn, kw in (
-            (minhash_lsh_pairs, dict(num_perm=16)),
-            (simhash_hamming_pairs, dict(bits=16, bands=4, max_hamming=3)),
-        ):
-            plain = sorted(map(tuple, fn(texts, **kw).collect()))
-            ck = sorted(map(
-                tuple, fn(texts, checkpoint_banded=True, **kw).collect()
-            ))
-            assert plain == ck, fn.__name__
-
     def test_checkpoint_banded_stores_no_rank_column(self, spark, texts):
         """The bucket-cap rank is a filter helper: the materialized
         banded frame holds only (id, band_idx, band_hash)."""
-        pairs = minhash_lsh_pairs(texts, num_perm=16, checkpoint_banded=True)
+        pairs = minhash_lsh_pairs(texts, num_perm=16)
         plan = pairs._jdf.queryExecution().optimizedPlan().toString()
         stored = [ln for ln in plan.splitlines() if "LogicalRDD" in ln]
         assert stored, plan
@@ -1238,6 +1220,34 @@ class TestLinkGraph:
         # c.com is the only sink with two in-edges -> highest rank
         assert by_host["c.com"] == max(by_host.values())
 
+    def test_pagerank_leaves_session_aqe_on(self, spark):
+        """A small-graph pagerank changes no session-global conf: a
+        second thread that reads the AQE flag throughout the call always
+        sees it on."""
+        import threading
+
+        from content_extractor_spark.operators.linkgraph import pagerank_hosts
+
+        edges = self._edges(spark).cache()
+        edges.count()
+        reads, done = [], threading.Event()
+
+        def watch():
+            while not done.is_set():
+                reads.append(spark.conf.get("spark.sql.adaptive.enabled"))
+
+        t = threading.Thread(target=watch)
+        t.start()
+        try:
+            pagerank_hosts(edges, iterations=3, graph_partitions=2)
+        finally:
+            done.set()
+            t.join(timeout=30)
+            edges.unpersist()
+        assert not t.is_alive()
+        assert len(reads) > 10
+        assert set(reads) == {"true"}
+
 
 class TestKmeansAndNormalize:
     def test_kmeans_separates_two_blobs(self, spark):
@@ -1700,32 +1710,6 @@ class TestRobotsAndAnchors:
         kept = {r["url"] for r in robots_disallow_filter(urls, robots).collect()}
         assert kept == {"https://a.com/private/p10"}
 
-    def test_robots_directives_crawl_delay_and_sitemaps(self, spark):
-        from content_extractor_spark.operators.scans import robots_directives
-
-        robots = spark.createDataFrame(
-            [
-                # two star groups -> MAX delay wins; foo group ignored;
-                # sitemap lines are group-independent (even inside the
-                # foo group); malformed delay dropped
-                ("a.com",
-                 "User-agent: *\nCrawl-delay: 2\nDisallow: /x\n\n"
-                 "User-agent: foo\nCrawl-delay: 99\n"
-                 "Sitemap: https://a.com/sm1.xml\n\n"
-                 "user-agent: *\ncrawl-delay: 10.5\n"
-                 "sitemap: https://a.com/sm2.xml"),
-                ("b.com", "User-agent: *\nCrawl-delay: soon"),
-            ],
-            "host string, robots_txt string",
-        )
-        rows = {(r["host"], r["kind"], r["value"])
-                for r in robots_directives(robots).collect()}
-        assert rows == {
-            ("a.com", "crawl_delay", "10.5"),
-            ("a.com", "sitemap", "https://a.com/sm1.xml"),
-            ("a.com", "sitemap", "https://a.com/sm2.xml"),
-        }
-
     def test_anchor_texts(self, spark):
         from content_extractor_spark.operators.linkgraph import (
             extract_anchor_texts,
@@ -2048,23 +2032,6 @@ class TestDiscoveryAndBanding:
                  for r in perplexity_bands(df, bands=2).collect()}
         assert again == bands
 
-    def test_checkpoint_base_value_identical(self, spark):
-        """checkpoint_base=True is a plan-only change: both LM scorers
-        must return row-identical results with and without the eager
-        base materialization (the gate query opts in)."""
-        from content_extractor_spark.operators.textstats import (
-            bigram_logprob,
-            unigram_logprob,
-        )
-
-        rows = [(i, f"w{i % 3} w{i % 5} common tail{i} w{i % 3}")
-                for i in range(12)] + [(99, "")]
-        df = spark.createDataFrame(rows, "doc_id int, text string")
-        for fn in (unigram_logprob, bigram_logprob):
-            plain = sorted(map(tuple, fn(df).collect()))
-            ck = sorted(map(tuple, fn(df, checkpoint_base=True).collect()))
-            assert plain == ck, fn.__name__
-
     def test_line_features_gopher_signals(self, spark):
         from content_extractor_spark.operators.textstats import line_features
 
@@ -2160,38 +2127,6 @@ class TestImageHashing:
         to_map = lambda df: {r["media_ref"]: tuple(r) for r in df.collect()}
         assert to_map(fused) == to_map(ref)
 
-    def test_near_duplicates_banded(self, spark):
-        import random
-
-        from content_extractor_spark.operators.multimodal import (
-            image_near_duplicates,
-        )
-
-        w, h = 16, 12
-        rng = random.Random(5)
-
-        def grad(flip=False, noise=0):
-            pix = []
-            for _y in range(h):
-                for x in range(w):
-                    v = x * 255 // (w - 1)
-                    if flip:
-                        v = 255 - v
-                    v = max(0, min(255, v + rng.randint(-noise, noise)))
-                    pix += [v, v, v]
-            return self._p6(w, h, bytes(pix))
-
-        media = spark.createDataFrame(
-            [("g1", grad()), ("g1n", grad(noise=6)), ("g2", grad(flip=True))],
-            "media_ref string, payload binary",
-        )
-        pairs = {(r["a"], r["b"]): r["hamming"]
-                 for r in image_near_duplicates(media, max_hamming=6).collect()}
-        # the noisy variant pairs with its original; the flipped
-        # gradient (hamming 64) never becomes a candidate
-        assert ("g1", "g1n") in pairs and pairs[("g1", "g1n")] <= 6
-        assert not any("g2" in p for p in pairs)
-
     def test_repeated_window_spans(self, spark):
         """r6 substring-dedup family (Lee et al. 2022 shape): an exact
         window-length token span shared by two documents is flagged in
@@ -2225,35 +2160,7 @@ class TestImageHashing:
             for r in repeated_window_spans(df, window=4, stride=2).collect()
         )
         assert got2 == [(1, 1, 2), (4, 1, 2)]
-        # checkpoint_spans=True is a plan-only change (gate opt-in)
-        got_ck = sorted(
-            (r["doc_id"], r["start"], r["occurrences"])
-            for r in repeated_window_spans(
-                df, window=4, stride=1, checkpoint_spans=True
-            ).collect()
-        )
-        assert got_ck == got
 
-    def test_jpeg_pairs_with_png_twin(self, spark):
-        """A JPEG and the PNG of the same image land in the same
-        near-dup cluster — the wiring the web-crawl image dedup needs
-        (JPEG dominates real crawls)."""
-        from content_extractor_spark.kernel.jpeg import encode_jpeg_solid
-        from content_extractor_spark.operators.multimodal import (
-            image_near_duplicates,
-        )
-        from content_extractor_spark.synth import encode_png_solid
-
-        w, h = 16, 12
-        media = spark.createDataFrame(
-            [("jpg", encode_jpeg_solid(w, h, (40, 90, 170))),
-             ("png", encode_png_solid(w, h, (40, 90, 170))),
-             ("other", encode_png_solid(w, h, (255, 255, 255)))],
-            "media_ref string, payload binary",
-        )
-        pairs = {(r["a"], r["b"]): r["hamming"]
-                 for r in image_near_duplicates(media, max_hamming=6).collect()}
-        assert pairs[("jpg", "png")] == 0
         # solid-vs-solid: 'other' also dHash-0 — the point of THIS test
         # is only that the jpeg/png twin pair exists at hamming 0
 
@@ -2304,138 +2211,6 @@ class TestImageHashing:
         assert m[4] == [97.5, 97.5, 97.5]
 
 
-class TestThumbnailsAndVideo:
-    @staticmethod
-    def _mp4(timescale=1000, duration=12500, tracks=2, v1=False):
-        def box(btype, body):
-            return (8 + len(body)).to_bytes(4, "big") + btype + body
-
-        if v1:
-            mvhd = box(b"mvhd", bytes([1]) + bytes(3) + bytes(16)
-                       + timescale.to_bytes(4, "big")
-                       + duration.to_bytes(8, "big"))
-        else:
-            mvhd = box(b"mvhd", bytes(4) + bytes(8)
-                       + timescale.to_bytes(4, "big")
-                       + duration.to_bytes(4, "big"))
-        moov = box(b"moov", mvhd + b"".join(
-            box(b"trak", b"") for _ in range(tracks)))
-        return box(b"ftyp", b"isom" + bytes(8)) + moov
-
-    def test_video_features_and_frame_schedule(self, spark):
-        from content_extractor_spark.operators.multimodal import (
-            extract_video_features,
-        )
-
-        media = spark.createDataFrame(
-            [("v0", self._mp4()),                       # 12.5 s
-             ("v1", self._mp4(90000, 90000 * 80, 1, v1=True)),  # 80 s
-             ("junk", b"RIFF not a video")],
-            "media_ref string, payload binary",
-        )
-        rows = {r["media_ref"]: r
-                for r in extract_video_features(
-                    media, frame_every_ms=1000, max_frames=32).collect()}
-        v = rows["v0"]
-        assert (v["fmt"], v["brand"], v["duration_ms"],
-                v["n_tracks"]) == ("mp4", "isom", 12500, 2)
-        assert list(v["frame_times_ms"]) == list(range(0, 12500, 1000))
-        # long video: schedule thinned to max_frames, still covers tail
-        v1 = rows["v1"]
-        assert v1["duration_ms"] == 80000
-        times = list(v1["frame_times_ms"])
-        assert len(times) == 32
-        assert times[0] == 0 and times[-1] >= 70000
-        assert rows["junk"]["status"] == "unsupported"
-        # honest stub boundary: 'raise' mode surfaces rows, not failures
-        stub = {r["media_ref"]: r["status"]
-                for r in extract_video_features(
-                    media, decode_stub_mode="raise").collect()}
-        assert stub["v0"] == "unsupported"
-
-    # IPython's 2x2.jpg — verbatim bytes from an independent encoder
-    # (libjpeg): 2x2 grayscale, all pixels 128
-    EXT_JPG = bytes.fromhex(
-        "ffd8ffe000104a46494600010100000100010000ffdb0043000806060705"
-        "05080707070909080a0c140d0c0b0b0c1912130f141d1a1f1e1d1a1c1c"
-        "20242e2720222c231c1c2837292c30313434341f27393d38323c2e333432"
-        "ffc0000b080002000201011100ffc4001f00000105010101010101000000"
-        "00000000000102030405060708090a0bffc400b51000020103030204030505"
-        "04040000017d01020300041105122131410613516107227114328191a108"
-        "2342b1c11552d1f02433627282090a161718191a25262728292a34353637"
-        "38393a434445464748494a535455565758595a636465666768696a737475"
-        "767778797a838485868788898a92939495969798999aa2a3a4a5a6a7a8a9"
-        "aab2b3b4b5b6b7b8b9bac2c3c4c5c6c7c8c9cad2d3d4d5d6d7d8d9dae1e2"
-        "e3e4e5e6e7e8e9eaf1f2f3f4f5f6f7f8f9faffda0008010100003f002bff"
-        "d9"
-    )
-
-    def test_mjpeg_sampled_frames_real_decode(self, spark):
-        """r6: motion JPEG closes part of the video stub codec-free —
-        sampled frames of a concatenated-JPEG stream return REAL pixel
-        stats through the full huffman+IDCT raster path. Frame 0 is an
-        independently-encoded (libjpeg) fixture; later frames come
-        from our own encoder; non-MJPEG payloads stay honestly
-        unsupported."""
-        from content_extractor_spark.kernel.jpeg import (
-            decode_jpeg_gray,
-            encode_jpeg_solid,
-        )
-        from content_extractor_spark.operators.multimodal import (
-            extract_mjpeg_frames,
-        )
-
-        s1 = encode_jpeg_solid(8, 8, (200, 30, 90))
-        s2 = encode_jpeg_solid(8, 8, (10, 250, 40))
-        mjpeg = self.EXT_JPG + s1 + s2
-        media = spark.createDataFrame(
-            [("m0", mjpeg), ("v0", self._mp4()), ("junk", b"RIFF xx")],
-            "media_ref string, payload binary",
-        )
-        # fps=25 -> 40 ms/frame; sample every 40 ms -> all 3 frames
-        rows = [r for r in extract_mjpeg_frames(
-            media, frame_every_ms=40, max_frames=32, fps=25.0,
-        ).collect()]
-        byref = {}
-        for r in rows:
-            byref.setdefault(r["media_ref"], []).append(r)
-        m = sorted(byref["m0"], key=lambda r: r["frame_idx"])
-        assert [r["frame_idx"] for r in m] == [0, 1, 2]
-        assert [r["t_ms"] for r in m] == [0, 40, 80]
-        assert all(r["status"] == "ok" and r["n_frames"] == 3 for r in m)
-        # frame 0: the external libjpeg fixture — 2x2, all-128 gray
-        assert (m[0]["width"], m[0]["height"], m[0]["mean_luma"]) == (2, 2, 128.0)
-        # frames 1/2: differential vs the direct decoder on the same bytes
-        for r, payload in ((m[1], s1), (m[2], s2)):
-            _, w, h, gray = decode_jpeg_gray(payload)
-            assert (r["width"], r["height"]) == (w, h)
-            assert r["mean_luma"] == sum(gray) / len(gray)
-        assert m[1]["mean_luma"] != m[2]["mean_luma"]
-        # other containers: one unsupported row each, never a failure
-        assert byref["v0"][0]["status"] == "unsupported"
-        assert byref["junk"][0]["status"] == "unsupported"
-
-    def test_mjpeg_schedule_thins_long_streams(self, spark):
-        """A 100-frame stream sampled per-frame thins evenly to
-        max_frames and still covers the tail."""
-        from content_extractor_spark.kernel.jpeg import encode_jpeg_solid
-        from content_extractor_spark.operators.multimodal import (
-            extract_mjpeg_frames,
-        )
-
-        frame = encode_jpeg_solid(4, 4, (128, 128, 128))
-        media = spark.createDataFrame(
-            [("long", frame * 100)], "media_ref string, payload binary"
-        )
-        rows = extract_mjpeg_frames(
-            media, frame_every_ms=40, max_frames=8, fps=25.0
-        ).collect()
-        assert len(rows) == 8
-        idxs = sorted(r["frame_idx"] for r in rows)
-        assert idxs[0] == 0 and idxs[-1] >= 80  # tail covered
-        assert all(r["status"] == "ok" for r in rows)
-
-
 class TestSimhash64:
     def test_production_bits64_works_and_agrees(self, spark):
         """Regression: bits=64 (the documented corpus-scale setting)
@@ -2471,7 +2246,6 @@ class TestSimhash64:
         (2*63+1) * a 56-bit hash stays under 2^63; 65 must fail loudly
         instead of silently wrapping negative."""
         from content_extractor_spark.operators.dedup_families import (
-            minhash_signature,
             minhash_signatures_df,
         )
 
@@ -2484,8 +2258,6 @@ class TestSimhash64:
         import pytest as _pytest
         with _pytest.raises(ValueError, match="num_perm <= 64"):
             minhash_signatures_df(df, num_perm=65)
-        with _pytest.raises(ValueError, match="num_perm <= 64"):
-            minhash_signature(num_perm=65)
 
 
 class TestBpe:
@@ -2930,33 +2702,3 @@ class TestPqRecall:
             got_ids = {r["vec_id"] for r in top}
             exact = {i for i, _ in rows if i % 3 == qi}
             assert got_ids == exact, (qi, sorted(got_ids))
-
-
-class TestMjpegMarkerWalk:
-    def test_split_survives_exif_thumbnail_eoi(self):
-        """r7 (advice): FFD9 may legally appear inside an APP1 (EXIF)
-        segment payload — e.g. an embedded thumbnail, itself a JPEG
-        with its own EOI. The splitter must walk marker segments by
-        length and only treat entropy-data FFD9 as end-of-frame."""
-        from content_extractor_spark.kernel.jpeg import encode_jpeg_solid
-        from content_extractor_spark.operators.multimodal import (
-            split_mjpeg_frames,
-        )
-
-        plain = encode_jpeg_solid(2, 2, (128, 128, 128))
-        assert plain.startswith(b"\xff\xd8")
-        # inject an APP1 segment right after SOI whose payload embeds a
-        # complete nested JPEG (thumbnail) including FFD9
-        thumb = encode_jpeg_solid(1, 1, (10, 10, 10))
-        payload = b"Exif\x00\x00" + thumb
-        app1 = b"\xff\xe1" + (len(payload) + 2).to_bytes(2, "big") + payload
-        with_exif = plain[:2] + app1 + plain[2:]
-        stream = with_exif + plain
-        frames = split_mjpeg_frames(stream)
-        assert frames is not None and len(frames) == 2, (
-            frames and [len(f) for f in frames]
-        )
-        assert frames[0] == with_exif
-        assert frames[1] == plain
-        # plain two-frame stream still splits identically
-        assert split_mjpeg_frames(plain + plain) == [plain, plain]

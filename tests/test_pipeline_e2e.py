@@ -171,19 +171,53 @@ def test_crash_before_ledger_commit_counts_once(spark, corpus, profiles, tmp_pat
 
 
 @pytest.mark.parametrize("part", ["ledger", "spans_out"])
-def test_corrupt_prior_state_raises(spark, corpus, profiles, tmp_path, part):
+def test_corrupt_prior_state_raises(
+    spark, corpus, profiles, tmp_path, part, corrupt_parquet
+):
     """Only an absent or empty dir means "no prior state": corrupt files
     must fail the run, not turn into a full re-run or a skipped dedup."""
     out_dir = tmp_path / "corrupt"
     cfg = PipelineConfig(num_buckets=8, run_id="r1")
     run_extraction(spark, corpus, profiles, str(out_dir), cfg)
-    for f in (out_dir / part).rglob("*"):
-        if f.name.endswith(".crc"):
-            f.unlink()
-        elif f.name.startswith("part-"):
-            f.write_bytes(b"not a parquet file" * 8)
+    corrupt_parquet(out_dir / part)
     with pytest.raises(Exception, match=part):
         run_extraction(spark, corpus, profiles, str(out_dir), cfg)
+
+
+def test_read_prior_absent_path_skips_the_reader(spark, tmp_path, monkeypatch):
+    """An absent path is "no prior state" without the reader ever being
+    asked (which would log a FileNotFoundException trace); an empty dir
+    is "no prior state" too."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from content_extractor_spark.sources.io import read_prior
+
+    (tmp_path / "empty").mkdir()
+    assert read_prior(spark, str(tmp_path / "empty")) is None
+
+    def refuse(self, *paths, **kw):
+        raise AssertionError(f"parquet reader called for {paths}")
+
+    monkeypatch.setattr(DataFrameReader, "parquet", refuse)
+    assert read_prior(spark, str(tmp_path / "absent")) is None
+
+
+def test_corrupt_entries_raise_and_stay_untouched(spark, tmp_path, corrupt_parquet):
+    """A corrupt entries table is not "no entries": the upsert raises
+    before its overwrite, instead of replacing the whole table with only
+    this run's rows."""
+    from content_extractor_spark.sources.io import PLANNED_DDL, upsert_entries
+
+    entries = tmp_path / "entries"
+    spark.createDataFrame(
+        [("entry-1", "t")], "entry_id string, title string"
+    ).write.parquet(str(entries))
+    corrupt_parquet(entries)
+    before = {f.name: f.read_bytes() for f in entries.iterdir()}
+    planned = spark.createDataFrame([], PLANNED_DDL + ", entry_id string")
+    with pytest.raises(Exception, match="entries"):
+        upsert_entries(spark, str(entries), planned)
+    assert {f.name: f.read_bytes() for f in entries.iterdir()} == before
 
 
 def test_zero_row_input_summary(spark, corpus, profiles, tmp_path):

@@ -198,21 +198,51 @@ def test_bucketed_tables_join_without_shuffle(spark, tmp_path):
             spark.sql(f"DROP TABLE IF EXISTS {name}")
 
 
-def test_pagerank_iterative_plan_shape(spark):
-    """The PRE-checkpoint PageRank plan (materialize=False): iterative
-    joins, no cartesian product, zero Python stages. The default path
-    localCheckpoints the tiny result, which hides this plan from
-    tools/plan_audit.py — so it is pinned here instead."""
-    from content_extractor_spark.operators.linkgraph import pagerank_hosts
+def test_pagerank_iterative_plan_shape(spark, monkeypatch):
+    """The PRE-materialization PageRank plan: iterative joins, no
+    cartesian product, zero Python stages. pagerank_hosts materializes
+    the tiny result, which hides this plan from tools/plan_audit.py —
+    so it is pinned here, with materialize() swapped for the identity."""
+    from content_extractor_spark.operators import linkgraph
 
+    monkeypatch.setattr(linkgraph, "materialize", lambda df: df)
     edges = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("a", "c")], "src string, dst string"
     )
-    out = pagerank_hosts(edges, iterations=2, materialize=False)
+    out = linkgraph.pagerank_hosts(edges, iterations=2)
     rep = plan_report(out)
     assert "CartesianProduct" not in rep["text"]
     assert rep["python_stages"] == 0
     assert rep["exchanges"] >= 2  # genuinely iterative, not collapsed
+
+
+def test_materialize_uses_the_checkpoint_dir_when_set(spark, tmp_path):
+    """materialize() cuts lineage either way (the optimized plan is a
+    LogicalRDD scan); with a checkpoint dir set it writes reliable
+    checkpoint files there, without one it writes nothing."""
+    from content_extractor_spark.session import materialize
+
+    sc = spark.sparkContext
+    old = sc.getCheckpointDir()
+    df = spark.range(50, numPartitions=2).selectExpr("id", "id * 3 AS v")
+    ck = tmp_path / "ck"
+    ck.mkdir()
+
+    def cut_and_files():
+        out = materialize(df)
+        plan = out._jdf.queryExecution().optimizedPlan().toString()  # noqa: SLF001
+        assert plan.startswith("LogicalRDD"), plan
+        assert sorted(map(tuple, out.collect())) == [(i, 3 * i) for i in range(50)]
+        return [p for p in ck.rglob("part-*") if p.is_file()]
+
+    try:
+        sc._jsc.sc().setCheckpointDir(None)  # noqa: SLF001
+        assert cut_and_files() == []
+        sc.setCheckpointDir(str(ck))
+        assert cut_and_files()
+    finally:
+        sc._jsc.sc().setCheckpointDir(old)  # noqa: SLF001
+    assert sc.getCheckpointDir() == old
 
 
 def test_robots_blocked_side_not_force_broadcast(spark):

@@ -1,9 +1,9 @@
-"""Skew-handling operators: salted aggregation/join equal their naive
-counterparts while spreading hot keys."""
+"""Skew-handling operators: salted aggregation equals its naive
+counterpart while spreading hot keys."""
 
 from pyspark.sql import functions as F
 
-from content_extractor_spark.operators.skew import hot_keys, salted_agg, salted_join
+from content_extractor_spark.operators.skew import salted_agg
 
 
 def _skewed_df(spark, n=2000):
@@ -38,28 +38,6 @@ def test_salted_agg_equals_plain_groupby(spark):
         ).collect()
     }
     assert salted == plain
-
-
-def test_salted_join_equals_plain_join(spark):
-    big = _skewed_df(spark, 1000)
-    small = spark.createDataFrame(
-        [("hot", "H")] + [(f"k{i}", f"d{i}") for i in range(37)],
-        "key string, label string",
-    )
-    plain = sorted(
-        (r["id"], r["label"]) for r in big.join(small, "key").collect()
-    )
-    salted = sorted(
-        (r["id"], r["label"]) for r in salted_join(big, small, "key", salt=4).collect()
-    )
-    assert salted == plain
-
-
-def test_hot_keys_histogram(spark):
-    df = _skewed_df(spark, 4000)
-    top = hot_keys(df, "key", top_k=3, sample_fraction=1.0).collect()
-    assert top[0]["key"] == "hot"
-    assert top[0]["sampled_rows"] > top[1]["sampled_rows"]
 
 
 def test_connected_components(spark):

@@ -1,5 +1,11 @@
 """WARC source connector: kernel parsing + Spark reader + extraction."""
 
+import io
+import json
+import zlib
+
+import pytest
+
 from content_extractor_spark.kernel.warc import build_warc, iter_warc_records
 
 
@@ -10,6 +16,58 @@ def _pages(n, host="www.docs.example"):
           f"<p>body {i}</p></div></body></html>").encode())
         for i in range(n)
     ]
+
+
+def build_wat(
+    entries,
+    gzip_members: bool = True,
+    warc_date: str = "2021-07-01T00:00:00Z",
+) -> bytes:
+    """Synthesize a .warc.wat(.gz) of ``metadata`` records — the
+    Common Crawl WAT sidecar layout (per-page JSON envelope carrying
+    the parsed head title and outgoing links, so link-graph consumers
+    never re-parse HTML).
+
+    ``entries``: iterable of (record_id, page_url, title,
+    links=[(url, text), ...]).
+    """
+    out = io.BytesIO()
+    for entry in entries:
+        rid, url, title, links = entry
+        envelope = {
+            "Envelope": {
+                "WARC-Header-Metadata": {"WARC-Target-URI": url},
+                "Payload-Metadata": {
+                    "HTTP-Response-Metadata": {
+                        "HTML-Metadata": {
+                            "Head": {"Title": title},
+                            "Links": [
+                                {"path": "A@/href", "url": u, "text": t}
+                                for u, t in links
+                            ],
+                        }
+                    }
+                },
+            }
+        }
+        body = json.dumps(envelope, separators=(",", ":")).encode("utf-8")
+        headers = (
+            b"WARC/1.0\r\n"
+            b"WARC-Type: metadata\r\n"
+            + f"WARC-Record-ID: <urn:uuid:{rid}>\r\n".encode()
+            + f"WARC-Target-URI: {url}\r\n".encode()
+            + f"WARC-Date: {warc_date}\r\n".encode()
+            + b"Content-Type: application/json\r\n"
+            + f"Content-Length: {len(body)}\r\n".encode()
+            + b"\r\n"
+        )
+        record = headers + body + b"\r\n\r\n"
+        if gzip_members:
+            co = zlib.compressobj(9, zlib.DEFLATED, 16 + zlib.MAX_WBITS)
+            out.write(co.compress(record) + co.flush())
+        else:
+            out.write(record)
+    return out.getvalue()
 
 
 class TestWarcKernel:
@@ -139,7 +197,6 @@ class TestWatAndRequests:
         assert {r["warc_type"] for r in resp.collect()} == {"response"}
 
     def test_wat_roundtrip_links(self, spark, tmp_path):
-        from content_extractor_spark.kernel.warc import build_wat
         from content_extractor_spark.sources.warc import (
             read_warc,
             wat_links,
@@ -173,7 +230,6 @@ class TestWatAndRequests:
     def test_wat_malformed_json_yields_no_rows(self, spark, tmp_path):
         """A WAT record with garbage JSON must contribute zero link
         rows, never a task failure (from_json -> NULL envelope)."""
-        from content_extractor_spark.kernel.warc import build_wat
         from content_extractor_spark.sources.warc import (
             read_warc,
             wat_links,
@@ -277,11 +333,16 @@ class TestCharsetSniff:
 
 
 class TestIncrementalIngest:
-    def test_file_ledger_resume(self, spark, tmp_path):
-        from content_extractor_spark.sources.warc import (
-            incremental_warc_ingest,
-        )
+    """File-ledger resume and the orphan-batch contract of the
+    incremental archive job (jobs/warc_extract_job.py)."""
 
+    @staticmethod
+    def _run(spark, in_dir, out, **kw):
+        from jobs.warc_extract_job import run_warc_extract
+
+        return run_warc_extract(spark, str(in_dir), str(out), {}, **kw)
+
+    def test_file_ledger_resume(self, spark, tmp_path):
         in_dir = tmp_path / "in"
         out = tmp_path / "out"
         in_dir.mkdir()
@@ -289,113 +350,110 @@ class TestIncrementalIngest:
         (in_dir / "b.warc").write_bytes(
             build_warc(_pages(3), gzip_members=False)
         )
-        s1 = incremental_warc_ingest(spark, str(in_dir), str(out))
-        assert (s1["files_processed"], s1["records"]) == (2, 7)
+        s1 = self._run(spark, in_dir, out)
+        assert (s1["files_processed"], s1["docs"]) == (2, 7)
         # second run: nothing new -> no work, output unchanged
-        s2 = incremental_warc_ingest(spark, str(in_dir), str(out))
+        s2 = self._run(spark, in_dir, out)
         assert (s2["files_new"], s2["files_processed"]) == (0, 0)
-        assert spark.read.parquet(str(out / "records")).count() == 7
-        # a file arrives -> ONLY it is processed; records append
+        assert spark.read.parquet(str(out / "spans")).count() == 7
+        # a file arrives -> ONLY it is processed; documents append
         (in_dir / "c.warc.gz").write_bytes(build_warc(_pages(2)))
-        s3 = incremental_warc_ingest(spark, str(in_dir), str(out))
+        s3 = self._run(spark, in_dir, out)
         assert (s3["files_total"], s3["files_processed"]) == (3, 1)
-        assert s3["records"] == 2
-        assert spark.read.parquet(str(out / "records")).count() == 9
+        assert s3["docs"] == 2
+        assert spark.read.parquet(str(out / "spans")).count() == 9
 
     def test_crash_between_data_and_ledger_is_exactly_once(
         self, spark, tmp_path
     ):
-        """A run that died after the records write but before the
-        ledger commit leaves an orphan ingest_batch dir; the next run
-        must drop it and re-process, landing each record ONCE."""
-        from content_extractor_spark.sources.warc import (
-            batch_id,
-            incremental_warc_ingest,
-        )
+        """A run that died after the spans write but before the ledger
+        commit leaves an orphan ingest_batch dir; the next run must drop
+        it and re-process, landing each document ONCE."""
+        from content_extractor_spark.sources.warc import batch_id
 
         in_dir = tmp_path / "in"
         out = tmp_path / "out"
         in_dir.mkdir()
         (in_dir / "a.warc.gz").write_bytes(build_warc(_pages(4)))
-        # simulate the crashed half-run: records batch dir exists with
-        # the records parquet, but the ledger was never written
-        files = [str(in_dir / "a.warc.gz")]
-        from content_extractor_spark.sources.warc import read_warc
-
-        bid = batch_id([f"file:{f}" for f in files])
-        read_warc(spark, files).write.parquet(
-            str(out / "records" / f"ingest_batch={bid}")
+        # simulate the crashed half-run: the batch dir holds a first
+        # run's output, but the ledger was never written
+        self._run(spark, in_dir, tmp_path / "first")
+        bid = batch_id([f"file:{in_dir / 'a.warc.gz'}"])
+        spark.read.parquet(str(tmp_path / "first" / "spans")).write.parquet(
+            str(out / "spans" / f"ingest_batch={bid}")
         )
-        assert spark.read.parquet(str(out / "records")).count() == 4
-        s = incremental_warc_ingest(spark, str(in_dir), str(out))
-        assert s["files_processed"] == 1 and s["records"] == 4
+        assert spark.read.parquet(str(out / "spans")).count() == 4
+        s = self._run(spark, in_dir, out)
+        assert s["files_processed"] == 1 and s["docs"] == 4
         # no duplicate rows: orphan dropped, batch landed exactly once
-        recs = spark.read.parquet(str(out / "records"))
-        assert recs.count() == 4
-        assert recs.select("record_id").distinct().count() == 4
+        spans = spark.read.parquet(str(out / "spans"))
+        assert spans.count() == 4
+        assert spans.select("doc_id").distinct().count() == 4
 
     def test_legacy_flat_store_migrates_once(self, spark, tmp_path):
         """r6 (advice): a store written by the pre-batch-layout version
-        has flat parquet appends in records/ — one new-style run folds
+        has flat parquet appends in its base dir — the migration folds
         them into ingest_batch=legacy so the mixed layout never reaches
         spark.read, old rows survive, and the legacy batch is never
         orphan-dropped."""
         import os
 
         from content_extractor_spark.sources.warc import (
-            commit_file_ledger,
-            incremental_warc_ingest,
+            drop_orphan_batches,
+            migrate_flat_store,
             read_warc,
         )
 
         in_dir = tmp_path / "in"
-        out = tmp_path / "out"
+        store = tmp_path / "out" / "records"
         in_dir.mkdir()
         (in_dir / "a.warc.gz").write_bytes(build_warc(_pages(4)))
-        # simulate the OLD layout: flat append under records/ plus a
-        # pre-batch-column... ledger entry for the already-done file
-        old_file = str(in_dir / "a.warc.gz")
-        read_warc(spark, [old_file]).write.parquet(str(out / "records"))
-        commit_file_ledger(
-            spark, str(out / "warc_ledger"), [f"file:{old_file}"], ""
-        )
-        assert any(
-            f.startswith("part-") for f in os.listdir(out / "records")
-        )
-        # new file arrives; the new-style run must migrate THEN append
         (in_dir / "b.warc.gz").write_bytes(build_warc(_pages(2)))
-        s = incremental_warc_ingest(spark, str(in_dir), str(out))
-        assert s["files_processed"] == 1 and s["records"] == 2
-        children = sorted(
-            f for f in os.listdir(out / "records") if not f.startswith(".")
+        # simulate the OLD layout: a flat append under records/
+        read_warc(spark, [str(in_dir / "a.warc.gz")]).write.parquet(str(store))
+        assert any(f.startswith("part-") for f in os.listdir(store))
+
+        # a new-style start migrates, THEN the new batch appends
+        migrate_flat_store(spark, str(store))
+        drop_orphan_batches(spark, str(store), {"legacy"})
+        read_warc(spark, [str(in_dir / "b.warc.gz")]).write.parquet(
+            str(store / "ingest_batch=b1")
         )
+        children = sorted(f for f in os.listdir(store) if not f.startswith("."))
         assert "ingest_batch=legacy" in children
         assert not any(c.startswith("part-") for c in children)
-        recs = spark.read.parquet(str(out / "records"))
-        assert recs.count() == 6  # 4 legacy + 2 new, none lost
-        # a THIRD run leaves everything alone (legacy never orphaned)
-        s2 = incremental_warc_ingest(spark, str(in_dir), str(out))
-        assert s2["files_processed"] == 0
-        assert spark.read.parquet(str(out / "records")).count() == 6
+        assert spark.read.parquet(str(store)).count() == 6  # 4 legacy + 2 new
+        # a SECOND start leaves everything alone (legacy never orphaned)
+        assert migrate_flat_store(spark, str(store)) == 0
+        assert drop_orphan_batches(spark, str(store), {"legacy", "b1"}) == []
+        assert spark.read.parquet(str(store)).count() == 6
+
+    def test_corrupt_file_ledger_raises_and_keeps_batches(
+        self, spark, tmp_path, corrupt_parquet
+    ):
+        """A corrupt file ledger is not "nothing done": the run raises
+        before the orphan sweep instead of deleting every committed
+        batch and re-processing every archive."""
+        in_dir = tmp_path / "in"
+        out = tmp_path / "out"
+        in_dir.mkdir()
+        (in_dir / "a.warc.gz").write_bytes(build_warc(_pages(2)))
+        self._run(spark, in_dir, out)
+        batches = sorted((out / "spans").glob("ingest_batch=*"))
+        assert batches
+        corrupt_parquet(out / "warc_ledger")
+        with pytest.raises(Exception, match="warc_ledger"):
+            self._run(spark, in_dir, out)
+        assert sorted((out / "spans").glob("ingest_batch=*")) == batches
 
     def test_max_files_bounds_a_run(self, spark, tmp_path):
-        from content_extractor_spark.sources.warc import (
-            incremental_warc_ingest,
-        )
-
         in_dir = tmp_path / "in"
         out = tmp_path / "out"
         in_dir.mkdir()
         for i in range(3):
             (in_dir / f"f{i}.warc.gz").write_bytes(build_warc(_pages(1)))
-        s1 = incremental_warc_ingest(
-            spark, str(in_dir), str(out), max_files=2
-        )
-        assert s1["files_processed"] == 2
-        s2 = incremental_warc_ingest(
-            spark, str(in_dir), str(out), max_files=2
-        )
-        assert s2["files_processed"] == 1
+        assert self._run(spark, in_dir, out, max_files=2)["files_processed"] == 2
+        assert self._run(spark, in_dir, out, max_files=2)["files_processed"] == 1
 
     def test_bom_outranks_header_and_meta(self):
         from content_extractor_spark.kernel.warc import decode_html_bytes
