@@ -119,20 +119,14 @@ def q_extract_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship: full extraction over the interleaved corpus (non-SQL op)."""
     from content_extractor_spark.kernel.profiles import profile_from_dict
     from content_extractor_spark.operators.extract import extract_entries
+    from content_extractor_spark.operators.skew import spread
 
     corpus = _docs_as_span_corpus(spark, sf_dir)
     profiles = {"www.docs.example": profile_from_dict(_FLAGSHIP_PROFILE)}
-    # r7 (guide §2.5/§6): the sf documents table is ONE parquet file,
-    # so the scan is a single split and the map-only Python stage ran
-    # on one core with the other 31 idle (measured 12.2s -> 1.5s at
-    # sf1.0). Scale-adaptive round-robin: defaultParallelism tracks the
-    # session's cores on any cluster size; a well-partitioned input at
-    # 100 TB already exceeds it, where this repartition is the cheap
-    # no-op of an extra rebalance of compact rows, never the payload.
-    out = extract_entries(
-        corpus, profiles,
-        repartition=spark.sparkContext.defaultParallelism,
-    )
+    # spread: the sf documents table is ONE parquet file, so the scan
+    # is a single split and the map-only Python stage would run on one
+    # core (measured 12.2s -> 1.5s at sf1.0 on 32 cores)
+    out = extract_entries(spread(corpus), profiles)
     # every projected column is value-checked against the DuckDB oracle
     # (the corpus HTML is synthesized in SQL above, so title/summary/
     # content/date/tags/n_spans are all SQL-reconstructible);
@@ -154,12 +148,8 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# portable-hash helpers
+# portable hash, DuckDB side (the Spark side is dedup_families.portable_hash)
 # ---------------------------------------------------------------------------
-
-def _phash(col):
-    return F.conv(F.substring(F.md5(col), 1, 14), 16, 10).cast("bigint")
-
 
 _PH = "(('0x'||substr(md5({x}),1,14))::BIGINT)"
 
@@ -307,6 +297,8 @@ def q_create_update_skip(spark, sf_dir):
 
 def q_tag_dim_upsert(spark, sf_dir):
     # A7: explode -> ci-distinct -> left-anti vs dim -> deterministic ids
+    from content_extractor_spark.operators.dedup_families import portable_hash
+
     docs = _t(spark, sf_dir, "documents")
     nat = _t(spark, sf_dir, "nation")
     scraped = (
@@ -320,7 +312,7 @@ def q_tag_dim_upsert(spark, sf_dir):
         scraped.join(dim, "tag_key", "left_anti")
         .select(
             "tag_key", "name",
-            F.concat(F.lit("tag-"), _phash(F.col("tag_key"))).alias("tag_id"),
+            F.concat(F.lit("tag-"), portable_hash(F.col("tag_key"))).alias("tag_id"),
         )
     )
 
@@ -981,6 +973,7 @@ def q_text_features(spark, sf_dir):
     doc_fingerprint queries costs nothing at 100 TB because every
     column is independent map-side arithmetic).
     """
+    from content_extractor_spark.operators.dedup_families import portable_hash
     from content_extractor_spark.operators.textstats import (
         line_features,
         quality_features,
@@ -992,7 +985,7 @@ def q_text_features(spark, sf_dir):
         "doc_id", "text"
     )
     norm = F.lower(F.regexp_replace(F.col("text"), r"\s+", " "))
-    fp = _phash(
+    fp = portable_hash(
         F.concat(
             F.substring(norm, 1, 64),
             F.lit("|"),
@@ -1932,13 +1925,6 @@ def _stop_hits_sum_sql() -> str:
         for w in words
     ]
     return "(" + "\n                      + ".join(terms) + ")"
-
-
-# RE2 equivalents of textstats.KANA_RE / HANGUL_RE / HAN_RE
-_CJK_CASE_SQL = r"""
-                WHEN regexp_matches(text, '[\x{3040}-\x{30FF}]') THEN 'ja'
-                WHEN regexp_matches(text, '[\x{AC00}-\x{D7A3}]') THEN 'ko'
-                WHEN regexp_matches(text, '[\x{4E00}-\x{9FFF}]') THEN 'zh'"""
 
 
 def _luhn_filter_sql(list_expr: str) -> str:

@@ -1,6 +1,6 @@
 """Baseline JPEG codec — pure Python + numpy, no image library.
 
-``decode_jpeg_pixels`` implements baseline sequential JPEG (SOF0):
+``decode_jpeg`` implements baseline sequential JPEG (SOF0):
 marker walk, DQT/DHT/SOF0/SOS/DRI, huffman entropy decode with 0xFF00
 unstuffing and restart markers, dequantization, de-zigzag, float64
 IDCT (exact DCT-III basis, not libjpeg's fixed-point approximation),
@@ -139,30 +139,18 @@ def _extend(v: int, t: int) -> int:
     return v if v >= (1 << (t - 1)) else v - (1 << t) + 1
 
 
-def decode_jpeg_pixels(data: bytes):
-    """(fmt, width, height, channels, per-color-channel means) for a
-    baseline JPEG, or None if not baseline/structurally unsupported."""
+def decode_jpeg(data: bytes):
+    """(fmt, width, height, channels, samples) for a baseline JPEG, or
+    None if not baseline/structurally unsupported. ``samples`` is the
+    row-major interleaved 8-bit raster (gray, or RGB) with every IDCT /
+    color-converted value rounded floor(x+0.5) and clipped to 0..255."""
     try:
         return _decode(data)
     except Exception:
         return None
 
 
-def decode_jpeg_gray(data: bytes):
-    """(fmt, width, height, row-major luma raster 0..255) for a
-    baseline JPEG, or None — the perceptual-hash feed. Color pixels
-    round to integer RGB exactly as the means path does
-    (floor(x+0.5), clip), then reduce by the SAME integer BT.601 luma
-    the PNG/BMP raster paths use ((299r+587g+114b)//1000), so a JPEG
-    and a lossless twin of the same image land on the same aHash/dHash
-    blocks."""
-    try:
-        return _decode(data, raster=True)
-    except Exception:
-        return None
-
-
-def _decode(data: bytes, raster: bool = False):
+def _decode(data: bytes):
     if len(data) < 4 or data[:2] != b"\xff\xd8":
         return None
     qt = {}
@@ -243,15 +231,16 @@ def _decode(data: bytes, raster: bool = False):
                 scan.append((comp, td_ta >> 4, td_ta & 0x0F))
             return _decode_scan(
                 data, i + 2 + seg_len, frame, scan, qt, huff_dc, huff_ac,
-                restart_interval, raster,
+                restart_interval,
             )
         i += 2 + seg_len
     return None
 
 
-def _decode_scan(data, pos, frame, scan, qt, huff_dc, huff_ac, dri,
-                 raster=False):
+def _decode_scan(data, pos, frame, scan, qt, huff_dc, huff_ac, dri):
     w, h = frame["w"], frame["h"]
+    if not w or not h:
+        return None  # zero-area frame (e.g. height left to a DNL marker)
     hmax = max(c["h"] for c, _, _ in scan)
     vmax = max(c["v"] for c, _, _ in scan)
     if hmax > 2 or vmax > 2 or hmax < 1 or vmax < 1:
@@ -311,28 +300,16 @@ def _decode_scan(data, pos, frame, scan, qt, huff_dc, huff_ac, dri,
             plane = np.repeat(np.repeat(plane, ry, axis=0), rx, axis=1)
         full.append(plane[:h, :w])
     if len(full) == 1:
-        gray = np.clip(np.floor(full[0] + 0.5), 0, 255)
-        if raster:
-            return ("jpeg", w, h,
-                    gray.astype(np.int64).reshape(-1).tolist())
-        return ("jpeg", w, h, 1, [float(gray.mean())])
-    y, cb, cr = full
-    r = y + 1.402 * (cr - 128.0)
-    g = y - 0.344136 * (cb - 128.0) - 0.714136 * (cr - 128.0)
-    b = y + 1.772 * (cb - 128.0)
-    if raster:
-        ri, gi, bi = (
-            np.clip(np.floor(ch + 0.5), 0, 255).astype(np.int64)
-            for ch in (r, g, b)
-        )
-        # integer BT.601 luma — the same formula as multimodal._luma so
-        # cross-format hash comparisons are exact
-        luma = (299 * ri + 587 * gi + 114 * bi) // 1000
-        return ("jpeg", w, h, luma.reshape(-1).tolist())
-    means = [
-        float(np.clip(np.floor(ch + 0.5), 0, 255).mean()) for ch in (r, g, b)
-    ]
-    return ("jpeg", w, h, 3, means)
+        chans = full
+    else:
+        y, cb, cr = full
+        chans = [
+            y + 1.402 * (cr - 128.0),
+            y - 0.344136 * (cb - 128.0) - 0.714136 * (cr - 128.0),
+            y + 1.772 * (cb - 128.0),
+        ]
+    px = np.clip(np.floor(np.stack(chans, axis=-1) + 0.5), 0, 255)
+    return ("jpeg", w, h, len(chans), px.astype(np.uint8).tobytes())
 
 
 # --------------------------------------------------------------------------

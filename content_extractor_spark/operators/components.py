@@ -11,7 +11,9 @@ Scale notes:
     shuffle keys are node ids (uniform);
   * iteration count is bounded by the graph diameter of the largest
     component; near-dup graphs are shallow (clusters are cliques-ish),
-    so 3-5 iterations typically converge;
+    so 3-5 iterations typically converge, and a graph still changing
+    labels after ``MAX_ITER`` rounds raises instead of returning
+    unconverged labels;
   * `session.materialize` truncates the lineage each round so plans
     don't grow exponentially (mandatory for iterative DataFrame
     algorithms).
@@ -24,17 +26,19 @@ from pyspark.sql import functions as F
 
 from ..session import materialize
 
+MAX_ITER = 25
+
 
 def connected_components(
     edges: DataFrame,
     a_col: str = "a",
     b_col: str = "b",
-    max_iter: int = 25,
 ) -> DataFrame:
     """(node, comp): comp = min node id reachable from node.
 
     Nodes are the union of both edge endpoints; isolated nodes (absent
-    from `edges`) are absent from the result by construction.
+    from `edges`) are absent from the result by construction. Raises
+    RuntimeError when the labels still change in round ``MAX_ITER``.
     """
     # both edge directions from ONE pass over `edges`: the former
     # unionByName of two selects restated the whole upstream pair
@@ -69,7 +73,7 @@ def connected_components(
 
     from pyspark.sql import Observation
 
-    for _ in range(max_iter):
+    for _ in range(MAX_ITER):
         neigh = (
             adj.join(labels, adj["dst"] == labels["node"])
             .groupBy("src")
@@ -101,8 +105,11 @@ def connected_components(
         labels = new_labels.drop("_changed")
         # sum over an empty frame surfaces as None — converged either way
         if not obs.get["n"]:
-            break
-    return labels
+            return labels
+    raise RuntimeError(
+        f"connected_components did not converge in {MAX_ITER} rounds: "
+        "labels still changed in the last one"
+    )
 
 
 def dedup_groups(

@@ -53,9 +53,9 @@ def repeated_window_spans(
     Lee et al. default stride 1 costs ~n_tokens rows per doc — at
     10^12 tokens set stride ~ window/2 for the standard 2x-overlap
     approximation), the span digest is computed per exploded row
-    (map-side), and ONE count window keyed on the digest does the
-    corpus-wide matching. No suffix array, no sort of the whole
-    corpus — the digest shuffle is the only wide stage.
+    (map-side), and a ``groupBy(digest).count()`` joined back onto
+    the spans does the corpus-wide matching. No suffix array, no sort
+    of the whole corpus — the digest shuffle is the only wide stage.
     """
     toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
     base = df.select(F.col(id_col), toks.alias("_toks"))

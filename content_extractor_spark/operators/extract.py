@@ -14,7 +14,7 @@ content hash and the matched page type.
 
 from __future__ import annotations
 
-from typing import Dict, Iterator, Optional
+from typing import Dict, Iterator
 
 import pyarrow as pa
 
@@ -303,7 +303,6 @@ _INPUT_COLS = ("doc_id", "spans", "host", "url", "url_id", "etag")
 def extract_entries(
     docs: DataFrame,
     profiles: Dict[str, ProfileConfig],
-    repartition: Optional[int] = None,
     density_fallback: bool = False,
     target_pattern: str = "yyyy-MM-dd'T'HH:mm:ssXXX",
     target_zone: str = "UTC",
@@ -317,19 +316,12 @@ def extract_entries(
     our purposes, and profile dicts are small dims by design —
     ExtractionSupervisor.scala:356,447-461).
 
-    `repartition` forces a round-robin shuffle before the UDF when the
-    input file layout is skewed; with well-sized scan splits
-    (spark.sql.files.maxPartitionBytes) leave it None — extraction is
-    embarrassingly parallel and needs no shuffle at all.
-
     ``density_fallback`` is OPT-IN (the reference errors profile-miss
     rows — ExtractionSupervisor.scala:399-404 — so the default stays
     faithful): such rows get profile-free DOM-density extraction
     ('ok_density') instead.
     """
     norm_profiles = {normalize_host(k): v for k, v in profiles.items()}
-    if repartition:
-        docs = docs.repartition(repartition)
     # project to the columns the kernel reads: an opaque mapInArrow
     # otherwise ships (and reads from storage) every input column
     pruned = [c for c in _INPUT_COLS if c in docs.columns]

@@ -1,22 +1,22 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata.
 
-Image/audio/video assets travel as opaque `binary` columns (or
-`media_ref` pointers) with typed metadata structs. Decode /
-feature-extract / frame-sample run as Arrow-batched UDFs over
-``mapInPandas`` — the Spark-side plumbing (schema, batch shape,
-partitioning) is real and tested.
+Image/audio assets travel as opaque `binary` columns (or `media_ref`
+pointers) with typed metadata structs. Decode / feature extraction run
+as Arrow-batched UDFs over ``mapInPandas`` — the Spark-side plumbing
+(schema, batch shape, partitioning) is real and tested.
 
 Container/header decode is REAL and dependency-free:
 ``decode_image_header`` struct-parses PNG / JPEG / GIF / BMP headers
 (format, width, height) from the payload bytes. PIXEL decode is REAL
-for binary Netpbm (P5/P6), 8-bit PNG (``decode_png_pixels``: chunk
-walk, stdlib-zlib inflate, all five scanline filters), GIF
-(``decode_gif_pixels``: variable-width LZW, palette resolution),
-uncompressed 24/32-bit BMP (``decode_bmp_pixels``), and
-baseline JPEG (``kernel.jpeg.decode_jpeg_pixels``: huffman entropy
-decode, dequant, exact float IDCT, chroma upsampling, BT.601 —
-progressive/arithmetic return unsupported). Only LEARNED feature
-extraction remains stubbed (it genuinely needs a model):
+too, through ONE ladder, ``decode_pixels``: binary Netpbm (P5/P6),
+8-bit PNG (chunk walk, stdlib-zlib inflate, all five scanline filters),
+GIF (variable-width LZW, palette resolution, deinterlacing),
+uncompressed 24/32-bit BMP, and baseline JPEG (``kernel.jpeg``: huffman
+entropy decode, dequant, exact float IDCT, chroma upsampling, BT.601 —
+progressive/arithmetic return unsupported) all decode to one raster
+form, which ``channel_means`` and ``luma`` (the perceptual-hash feed)
+reduce. Only LEARNED feature extraction remains stubbed (it genuinely
+needs a model):
 
   * ``decode_stub_mode="fake"`` produces deterministic fake features
     (seeded by the payload digest) so pipelines are testable
@@ -226,30 +226,68 @@ def media_manifest(
     )
 
 
-def _decode_jpeg(data: bytes):
-    from ..kernel.jpeg import decode_jpeg_pixels
-
-    return decode_jpeg_pixels(data)
+# -- pixel decode: one raster per container ---------------------------------------
 
 
-PIXEL_STATS_DDL = (
-    "media_ref string, fmt string, width int, height int, channels int, "
-    "mean_r double, mean_g double, mean_b double, status string, "
-    "error string"
-)
+def decode_pixels(data: bytes):
+    """REAL pixel decode of every supported container into ONE raster
+    form: (fmt, width, height, channels, samples) or None.
 
-
-def decode_netpbm(data: bytes):
-    """REAL pixel decode for binary Netpbm (P5 gray / P6 RGB).
-
-    Pure Python: header tokens (width, height, maxval; '#' comments
-    allowed), then raw samples. Returns (fmt, width, height, channels,
-    per-channel means) or None. See :func:`decode_png_pixels` for the
-    PNG path; only JPEG pixel decode still needs a real codec library
-    and stays stubbed.
+    ``samples`` holds row-major, top-down, interleaved 8-bit samples
+    (len == width * height * channels). Supported: binary Netpbm
+    (P5 gray / P6 RGB, 8-bit), PNG (8-bit gray/RGB/+alpha,
+    non-interlaced), GIF (first frame, palette-resolved to RGB and
+    deinterlaced), uncompressed 24/32-bit BMP (turned into RGB, the
+    unused fourth byte dropped), and baseline JPEG
+    (``kernel.jpeg.decode_jpeg``: IDCT output rounded and clipped).
+    Anything else, including structural corruption, returns None:
+    callers surface status='unsupported', never a task failure.
+    Channel statistics (:func:`channel_means`) and perceptual hashes
+    (:func:`luma`) both reduce this one raster.
     """
-    if data[:2] not in (b"P5", b"P6"):
-        return None
+    if data[:2] in (b"P5", b"P6"):
+        return _netpbm_raster(data)
+    if data[:8] == b"\x89PNG\r\n\x1a\n":
+        return _png_raster(data)
+    if data[:6] in (b"GIF87a", b"GIF89a"):
+        return _gif_raster(data)
+    if data[:2] == b"BM":
+        return _bmp_raster(data)
+    if data[:2] == b"\xff\xd8":
+        from ..kernel.jpeg import decode_jpeg
+
+        return decode_jpeg(data)
+    return None
+
+
+def channel_means(w: int, h: int, channels: int, samples) -> list:
+    """Per-COLOR-channel means of a :func:`decode_pixels` raster: one
+    for gray (+alpha), three for RGB (+alpha); alpha never contributes.
+    Exact integer sums divided by w*h, so the result does not depend on
+    pixel order or summation order."""
+    n = w * h
+    return [sum(samples[c::channels]) / n
+            for c in range(3 if channels >= 3 else 1)]
+
+
+def luma(channels: int, samples):
+    """Row-major gray raster of a :func:`decode_pixels` raster: the gray
+    channel as is, or integer BT.601 luma (299r+587g+114b)//1000 of the
+    RGB channels — deterministic across platforms, and one formula for
+    every container, so one image stored twice hashes alike."""
+    if channels < 3:
+        return samples[0::channels]
+    return [
+        (299 * r + 587 * g + 114 * b) // 1000
+        for r, g, b in zip(samples[0::channels], samples[1::channels],
+                           samples[2::channels])
+    ]
+
+
+def _netpbm_raster(data: bytes):
+    """Binary Netpbm: header tokens (width, height, maxval; '#'
+    comments allowed), one whitespace byte, then raw samples. 16-bit
+    samples (maxval > 255) are out of scope."""
     channels = 3 if data[:2] == b"P6" else 1
     i = 2
     fields = []
@@ -275,31 +313,20 @@ def decode_netpbm(data: bytes):
     i += 1  # single whitespace after maxval
     w, h, maxval = fields
     if maxval > 255 or w <= 0 or h <= 0:
-        return None  # 16-bit samples out of scope
+        return None
     need = w * h * channels
     pixels = data[i : i + need]
     if len(pixels) < need:
         return None
-    sums = [0] * channels
-    for c in range(channels):
-        sums[c] = sum(pixels[c::channels])
-    cnt = w * h
-    means = [s / cnt for s in sums]
-    return ("ppm" if channels == 3 else "pgm", w, h, channels, means)
+    return ("ppm" if channels == 3 else "pgm", w, h, channels, pixels)
 
 
-def decode_png_pixels(data: bytes):
-    """REAL PNG pixel decode — pure Python, stdlib ``zlib`` only.
-
-    Supports the common web subset: 8-bit depth, color types 0 (gray),
+def _png_raster(data: bytes):
+    """PNG, stdlib ``zlib`` only: 8-bit depth, color types 0 (gray),
     2 (RGB), 4 (gray+alpha), 6 (RGBA), non-interlaced. Walks the chunk
-    stream, inflates the concatenated IDAT payload, reverses the five
-    scanline filters (None/Sub/Up/Average/Paeth, RFC 2083 §6), and
-    returns (fmt, width, height, channels, per-color-channel means) —
-    alpha is excluded from the means. Palette (3), 16-bit, and
-    interlaced images return None (unsupported), as does any structural
-    corruption: callers surface status='unsupported', never a task
-    failure.
+    stream, inflates the concatenated IDAT payload and reverses the
+    five scanline filters (None/Sub/Up/Average/Paeth, RFC 2083 §6).
+    Palette (3), 16-bit and interlaced images return None.
 
     At corpus scale the per-byte filter loops are the slow path — swap
     in a numpy scanline unfilter (Up/Average vectorize; Sub/Paeth are
@@ -308,8 +335,6 @@ def decode_png_pixels(data: bytes):
     """
     import zlib
 
-    if len(data) < 8 or data[:8] != b"\x89PNG\r\n\x1a\n":
-        return None
     i, n = 8, len(data)
     w = h = bit_depth = color_type = interlace = None
     idat = bytearray()
@@ -343,7 +368,7 @@ def decode_png_pixels(data: bytes):
     stride = w * channels
     if len(raw) != h * (stride + 1):
         return None
-    sums = [0] * channels
+    out = bytearray()
     prev = bytearray(stride)
     pos = 0
     for _y in range(h):
@@ -372,13 +397,184 @@ def decode_png_pixels(data: bytes):
                 line[x] = (line[x] + pr) & 0xFF
         elif f != 0:
             return None
-        for c in range(channels):
-            sums[c] += sum(line[c::channels])
+        out += line
         prev = line
-    color_ch = 3 if color_type in (2, 6) else 1
-    cnt = w * h
-    means = [sums[c] / cnt for c in range(color_ch)]
-    return ("png", w, h, channels, means)
+    return ("png", w, h, channels, bytes(out))
+
+
+def _gif_lzw(data: bytes, min_code: int, max_pixels: int):
+    """GIF variable-width LZW decode (LSB-first bit packing) -> color
+    indices, or None on corruption. Bounded by max_pixels."""
+    clear = 1 << min_code
+    eoi = clear + 1
+    out = bytearray()
+    acc = nbits = pos = 0
+    n = len(data)
+    table = None
+    code_size = 0
+    prev = None
+
+    def reset():
+        nonlocal table, code_size, prev
+        table = [bytes([i]) for i in range(clear)] + [b"", b""]
+        code_size = min_code + 1
+        prev = None
+
+    reset()
+    while True:
+        while nbits < code_size and pos < n:
+            acc |= data[pos] << nbits
+            nbits += 8
+            pos += 1
+        if nbits < code_size:
+            break
+        code = acc & ((1 << code_size) - 1)
+        acc >>= code_size
+        nbits -= code_size
+        if code == clear:
+            reset()
+            continue
+        if code == eoi:
+            break
+        if prev is None:
+            if code >= clear:
+                return None
+            entry = table[code]
+        elif code < len(table):
+            entry = table[code]
+            table.append(prev + entry[:1])
+        elif code == len(table):
+            entry = prev + prev[:1]
+            table.append(entry)
+        else:
+            return None
+        out += entry
+        if len(out) > max_pixels:
+            return None
+        if len(table) == (1 << code_size) and code_size < 12:
+            code_size += 1
+        prev = entry
+    return out
+
+
+# GIF interlace passes: (first row, row step) per the GIF89a spec
+_GIF_INTERLACE_PASSES = ((0, 8), (4, 8), (2, 4), (1, 2))
+
+
+def _gif_raster(data: bytes):
+    """GIF first image frame (variable-width LZW per the GIF89a spec),
+    palette-resolved to RGB and deinterlaced. Local color tables
+    override the global one; transparency is ignored (the transparent
+    index still contributes its palette color — deterministic)."""
+    if len(data) < 13:
+        return None
+    packed = data[10]
+    i = 13
+    gct = None
+    if packed & 0x80:
+        gct_len = 3 * (2 << (packed & 0x07))
+        gct = data[i : i + gct_len]
+        if len(gct) < gct_len:
+            return None
+        i += gct_len
+    n = len(data)
+    while i < n:
+        b = data[i]
+        if b == 0x3B:  # trailer
+            return None
+        if b == 0x21:  # extension: label + sub-blocks
+            i += 2
+            while i < n and data[i] != 0:
+                i += 1 + data[i]
+            i += 1
+            continue
+        if b != 0x2C:  # not an image descriptor
+            return None
+        if i + 10 > n:
+            return None
+        w = int.from_bytes(data[i + 5 : i + 7], "little")
+        h = int.from_bytes(data[i + 7 : i + 9], "little")
+        ipacked = data[i + 9]
+        i += 10
+        pal = gct
+        if ipacked & 0x80:
+            lct_len = 3 * (2 << (ipacked & 0x07))
+            pal = data[i : i + lct_len]
+            if len(pal) < lct_len:
+                return None
+            i += lct_len
+        if pal is None or w <= 0 or h <= 0 or i >= n:
+            return None
+        min_code = data[i]
+        i += 1
+        if not 2 <= min_code <= 11:
+            return None
+        lzw = bytearray()
+        while i < n and data[i] != 0:
+            blen = data[i]
+            lzw += data[i + 1 : i + 1 + blen]
+            i += 1 + blen
+        idx = _gif_lzw(bytes(lzw), min_code, w * h)
+        if idx is None or len(idx) < w * h:
+            return None
+        idx = bytes(idx[: w * h])
+        npal = len(pal) // 3
+        if max(idx) >= npal:
+            return None
+        if ipacked & 0x40:  # interlaced: storage rows -> logical rows
+            rows = [y for first, step in _GIF_INTERLACE_PASSES
+                    for y in range(first, h, step)]
+            out = bytearray(w * h)
+            for k, y in enumerate(rows):
+                out[y * w : (y + 1) * w] = idx[k * w : (k + 1) * w]
+            idx = bytes(out)
+        rgb = bytearray(w * h * 3)
+        for c in range(3):
+            rgb[c::3] = idx.translate(pal[c::3].ljust(256, b"\0"))
+        return ("gif", w, h, 3, bytes(rgb))
+    return None
+
+
+def _bmp_raster(data: bytes):
+    """Uncompressed 24/32-bit BMP with a BITMAPINFOHEADER (or larger).
+    Rows are 4-byte aligned (24-bit) and stored bottom-up (negative
+    height = top-down); samples come back top-down in RGB order.
+    Palette/RLE/16-bit and the 12-byte OS/2 core header return None."""
+    if len(data) < 54:
+        return None
+    pix_off = int.from_bytes(data[10:14], "little")
+    dib = int.from_bytes(data[14:18], "little")
+    if dib < 40:
+        return None
+    w = int.from_bytes(data[18:22], "little", signed=True)
+    h = int.from_bytes(data[22:26], "little", signed=True)
+    bpp = int.from_bytes(data[28:30], "little")
+    comp = int.from_bytes(data[30:34], "little")
+    if w <= 0 or h == 0 or comp != 0 or bpp not in (24, 32):
+        return None
+    nrows = abs(h)
+    nbytes = bpp // 8
+    stride = (w * nbytes + 3) & ~3 if bpp == 24 else w * 4
+    if len(data) < pix_off + stride * nrows:
+        return None
+    rows = []
+    for row in range(nrows):
+        base = pix_off + row * stride
+        line = data[base : base + w * nbytes]
+        rgb = bytearray(w * 3)
+        for c in range(3):  # stored B, G, R(, unused)
+            rgb[c::3] = line[2 - c :: nbytes]
+        rows.append(rgb)
+    if h > 0:  # bottom-up storage -> top-down
+        rows.reverse()
+    return ("bmp", w, nrows, 3, b"".join(rows))
+
+
+PIXEL_STATS_DDL = (
+    "media_ref string, fmt string, width int, height int, channels int, "
+    "mean_r double, mean_g double, mean_b double, status string, "
+    "error string"
+)
 
 
 def extract_pixel_stats(
@@ -386,12 +582,11 @@ def extract_pixel_stats(
     payload_col: str = "payload",
     ref_col: str = "media_ref",
 ) -> DataFrame:
-    """binary image payloads -> real per-channel statistics.
-
-    REAL decode paths: binary Netpbm (P5/P6) and PNG (8-bit gray/RGB/
-    +alpha, all five scanline filters, stdlib zlib). Unsupported
-    containers get status='unsupported' rows; the Arrow plumbing is
-    shared with the other media operators.
+    """binary image payloads -> real per-channel statistics: one
+    :func:`decode_pixels` raster per payload, reduced by
+    :func:`channel_means`. Unsupported containers get
+    status='unsupported' rows; the Arrow plumbing is shared with the
+    other media operators.
     """
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -409,12 +604,11 @@ def extract_pixel_stats(
                 out["width"].append(w)
                 out["height"].append(h)
                 out["channels"].append(ch)
-                # means carries only COLOR channels (1 for gray, 3 for
-                # RGB/RGBA — alpha never contributes a mean)
-                m = (means or []) + [None] * 3
+                # one mean for gray, three for RGB: gray leaves g/b null
+                m = (means or []) + [None, None, None]
                 out["mean_r"].append(m[0])
-                out["mean_g"].append(m[1] if means and len(means) >= 3 else None)
-                out["mean_b"].append(m[2] if means and len(means) >= 3 else None)
+                out["mean_g"].append(m[1])
+                out["mean_b"].append(m[2])
                 out["status"].append(status)
                 out["error"].append(error)
 
@@ -422,21 +616,14 @@ def extract_pixel_stats(
                 if payload is None:
                     row(ref, status="error", error="null payload")
                     continue
-                data = bytes(payload)
-                dec = (
-                    decode_netpbm(data)
-                    or decode_png_pixels(data)
-                    or decode_gif_pixels(data)
-                    or decode_bmp_pixels(data)
-                    or _decode_jpeg(data)
-                )
+                dec = decode_pixels(bytes(payload))
                 if dec is None:
                     row(ref, status="unsupported",
                         error="not binary netpbm (P5/P6), 8-bit PNG, GIF, "
                               "24/32-bit BMP, or baseline JPEG")
                 else:
-                    fmt, w, h, ch, means = dec
-                    row(ref, fmt, w, h, ch, means)
+                    fmt, w, h, ch, samples = dec
+                    row(ref, fmt, w, h, ch, channel_means(w, h, ch, samples))
             yield pd.DataFrame(out)
 
     return df.mapInPandas(run, schema=PIXEL_STATS_DDL)
@@ -510,379 +697,7 @@ def extract_image_features(
     return df.mapInPandas(run, schema=IMAGE_FEATURES_DDL)
 
 
-def _gif_lzw(data: bytes, min_code: int, max_pixels: int):
-    """GIF variable-width LZW decode (LSB-first bit packing) -> color
-    indices, or None on corruption. Bounded by max_pixels."""
-    clear = 1 << min_code
-    eoi = clear + 1
-    out = bytearray()
-    acc = nbits = pos = 0
-    n = len(data)
-    table = None
-    code_size = 0
-    prev = None
-
-    def reset():
-        nonlocal table, code_size, prev
-        table = [bytes([i]) for i in range(clear)] + [b"", b""]
-        code_size = min_code + 1
-        prev = None
-
-    reset()
-    while True:
-        while nbits < code_size and pos < n:
-            acc |= data[pos] << nbits
-            nbits += 8
-            pos += 1
-        if nbits < code_size:
-            break
-        code = acc & ((1 << code_size) - 1)
-        acc >>= code_size
-        nbits -= code_size
-        if code == clear:
-            reset()
-            continue
-        if code == eoi:
-            break
-        if prev is None:
-            if code >= clear:
-                return None
-            entry = table[code]
-        elif code < len(table):
-            entry = table[code]
-            table.append(prev + entry[:1])
-        elif code == len(table):
-            entry = prev + prev[:1]
-            table.append(entry)
-        else:
-            return None
-        out += entry
-        if len(out) > max_pixels:
-            return None
-        if len(table) == (1 << code_size) and code_size < 12:
-            code_size += 1
-        prev = entry
-    return out
-
-
-def _gif_first_frame(data: bytes):
-    """First image frame of a GIF: (width, height, palette indices,
-    palette bytes, interlaced) or None. Local color tables override
-    the global one; indices are in STORAGE order (deinterlacing is the
-    caller's concern — channel means don't need it, rasters do)."""
-    if len(data) < 13 or data[:6] not in (b"GIF87a", b"GIF89a"):
-        return None
-    packed = data[10]
-    i = 13
-    gct = None
-    if packed & 0x80:
-        gct_len = 3 * (2 << (packed & 0x07))
-        gct = data[i : i + gct_len]
-        if len(gct) < gct_len:
-            return None
-        i += gct_len
-    n = len(data)
-    while i < n:
-        b = data[i]
-        if b == 0x3B:  # trailer
-            return None
-        if b == 0x21:  # extension: label + sub-blocks
-            i += 2
-            while i < n and data[i] != 0:
-                i += 1 + data[i]
-            i += 1
-            continue
-        if b != 0x2C:  # not an image descriptor
-            return None
-        if i + 10 > n:
-            return None
-        w = int.from_bytes(data[i + 5 : i + 7], "little")
-        h = int.from_bytes(data[i + 7 : i + 9], "little")
-        ipacked = data[i + 9]
-        i += 10
-        pal = gct
-        if ipacked & 0x80:
-            lct_len = 3 * (2 << (ipacked & 0x07))
-            pal = data[i : i + lct_len]
-            if len(pal) < lct_len:
-                return None
-            i += lct_len
-        if pal is None or w <= 0 or h <= 0 or i >= n:
-            return None
-        min_code = data[i]
-        i += 1
-        if not 2 <= min_code <= 11:
-            return None
-        lzw = bytearray()
-        while i < n and data[i] != 0:
-            blen = data[i]
-            lzw += data[i + 1 : i + 1 + blen]
-            i += 1 + blen
-        idx = _gif_lzw(bytes(lzw), min_code, w * h)
-        if idx is None or len(idx) < w * h:
-            return None
-        npal = len(pal) // 3
-        if any(px >= npal for px in idx[: w * h]):
-            return None
-        return (w, h, idx[: w * h], pal, bool(ipacked & 0x40))
-    return None
-
-
-def decode_gif_pixels(data: bytes):
-    """REAL GIF pixel decode — pure Python (variable-width LZW per the
-    GIF89a spec), first image frame only.
-
-    Returns (fmt, width, height, channels=3, [mean_r, mean_g, mean_b])
-    over the frame's palette-resolved RGB values, or None. Channel
-    means are pixel-ORDER independent, so interlaced frames need no
-    deinterlacing; transparency is ignored (the transparent index still
-    contributes its palette color — documented, deterministic). Local
-    color tables override the global one for the frame.
-    """
-    frame = _gif_first_frame(data)
-    if frame is None:
-        return None
-    w, h, idx, pal, _interlaced = frame
-    sums = [0, 0, 0]
-    for px in idx:
-        p = px * 3
-        sums[0] += pal[p]
-        sums[1] += pal[p + 1]
-        sums[2] += pal[p + 2]
-    cnt = w * h
-    return ("gif", w, h, 3, [s / cnt for s in sums])
-
-
-# GIF interlace passes: (first row, row step) per the GIF89a spec
-_GIF_INTERLACE_PASSES = ((0, 8), (4, 8), (2, 4), (1, 2))
-
-
-def decode_gif_gray(data: bytes):
-    """(fmt, width, height, row-major luma raster) for a GIF first
-    frame — the perceptual-hash feed. Interlaced frames ARE
-    deinterlaced here (a raster, unlike channel means, is
-    order-sensitive); palette RGB reduces by the shared integer BT.601
-    :func:`_luma`."""
-    frame = _gif_first_frame(data)
-    if frame is None:
-        return None
-    w, h, idx, pal, interlaced = frame
-    lum_pal = [
-        _luma(pal[p * 3], pal[p * 3 + 1], pal[p * 3 + 2])
-        for p in range(len(pal) // 3)
-    ]
-    if not interlaced:
-        return ("gif", w, h, [lum_pal[px] for px in idx])
-    gray = [0] * (w * h)
-    src_row = 0
-    for first, step in _GIF_INTERLACE_PASSES:
-        for y in range(first, h, step):
-            base_s, base_t = src_row * w, y * w
-            for x in range(w):
-                gray[base_t + x] = lum_pal[idx[base_s + x]]
-            src_row += 1
-    return ("gif", w, h, gray)
-
-
-def decode_bmp_pixels(data: bytes):
-    """REAL BMP pixel decode — uncompressed 24/32-bit BITMAPINFOHEADER.
-
-    Rows are 4-byte aligned (24-bit) and stored bottom-up (negative
-    height = top-down); channel means are row-order independent so both
-    orientations share one path. Palette/RLE/16-bit return None.
-    """
-    if len(data) < 54 or data[:2] != b"BM":
-        return None
-    pix_off = int.from_bytes(data[10:14], "little")
-    dib = int.from_bytes(data[14:18], "little")
-    if dib < 40:
-        return None
-    w = int.from_bytes(data[18:22], "little", signed=True)
-    h = int.from_bytes(data[22:26], "little", signed=True)
-    bpp = int.from_bytes(data[28:30], "little")
-    comp = int.from_bytes(data[30:34], "little")
-    if w <= 0 or h == 0 or comp != 0 or bpp not in (24, 32):
-        return None
-    nrows = abs(h)
-    nbytes = bpp // 8
-    stride = (w * nbytes + 3) & ~3 if bpp == 24 else w * 4
-    need = pix_off + stride * nrows
-    if len(data) < need:
-        return None
-    sums = [0, 0, 0]
-    for row in range(nrows):
-        base = pix_off + row * stride
-        line = data[base : base + w * nbytes]
-        # BGR(A) order
-        sums[2] += sum(line[0::nbytes])
-        sums[1] += sum(line[1::nbytes])
-        sums[0] += sum(line[2::nbytes])
-    cnt = w * nrows
-    return ("bmp", w, nrows, 3, [s / cnt for s in sums])
-
-
 # -- perceptual image hashing (aHash / dHash) -------------------------------------
-
-
-def _luma(r: int, g: int, b: int) -> int:
-    # integer BT.601 luma, deterministic across platforms
-    return (299 * r + 587 * g + 114 * b) // 1000
-
-
-def decode_gray_raster(data: bytes):
-    """(fmt, width, height, gray row-major list 0..255) for every
-    container with a real pixel decoder: binary Netpbm (P5/P6), 8-bit
-    non-interlaced PNG, uncompressed 24/32-bit BMP, GIF first frame
-    (:func:`decode_gif_gray`, deinterlaced), and baseline JPEG
-    (``kernel.jpeg.decode_jpeg_gray``). All color paths reduce through
-    the SAME integer BT.601 :func:`_luma`, so one image stored in two
-    containers lands on identical rasters (lossless formats) or
-    IDCT-tolerance-close ones (JPEG) — the property the perceptual
-    hashes bank on.
-    """
-    # Netpbm
-    if data[:2] in (b"P5", b"P6"):
-        dec = decode_netpbm(data)
-        if dec is None:
-            return None
-        fmt, w, h, ch, _ = dec
-        # re-walk the (validated) header to find the sample offset
-        i, fields, n = 2, [], len(data)
-        while len(fields) < 3 and i < n:
-            c = data[i : i + 1]
-            if c.isspace():
-                i += 1
-            elif c == b"#":
-                j = data.find(b"\n", i)
-                i = n if j < 0 else j + 1
-            else:
-                j = i
-                while j < n and not data[j : j + 1].isspace():
-                    j += 1
-                fields.append(int(data[i:j]))
-                i = j
-        i += 1
-        px = data[i : i + w * h * ch]
-        if ch == 1:
-            gray = list(px)
-        else:
-            gray = [
-                _luma(px[p], px[p + 1], px[p + 2])
-                for p in range(0, w * h * 3, 3)
-            ]
-        return (fmt, w, h, gray)
-    # BMP (24/32-bit uncompressed; bottom-up or top-down)
-    if data[:2] == b"BM" and len(data) >= 54:
-        pix_off = int.from_bytes(data[10:14], "little")
-        w = int.from_bytes(data[18:22], "little", signed=True)
-        h = int.from_bytes(data[22:26], "little", signed=True)
-        bpp = int.from_bytes(data[28:30], "little")
-        comp = int.from_bytes(data[30:34], "little")
-        if w <= 0 or h == 0 or comp != 0 or bpp not in (24, 32):
-            return None
-        nrows = abs(h)
-        nbytes = bpp // 8
-        stride = (w * nbytes + 3) & ~3 if bpp == 24 else w * 4
-        if len(data) < pix_off + stride * nrows:
-            return None
-        rows = []
-        for row in range(nrows):
-            base = pix_off + row * stride
-            line = data[base : base + w * nbytes]
-            rows.append([
-                _luma(line[p + 2], line[p + 1], line[p])  # BGR(A)
-                for p in range(0, w * nbytes, nbytes)
-            ])
-        if h > 0:  # bottom-up storage -> flip to row-major top-down
-            rows.reverse()
-        return ("bmp", w, nrows, [g for r in rows for g in r])
-    # PNG: same validated unfilter walk as decode_png_pixels, but
-    # materializing luma per pixel instead of channel sums
-    if data[:8] == b"\x89PNG\r\n\x1a\n":
-        import zlib
-
-        i, n = 8, len(data)
-        w = h = bit_depth = color_type = interlace = None
-        idat = bytearray()
-        while i + 8 <= n:
-            ln = int.from_bytes(data[i : i + 4], "big")
-            ctype = data[i + 4 : i + 8]
-            if i + 8 + ln > n:
-                return None
-            chunk = data[i + 8 : i + 8 + ln]
-            if ctype == b"IHDR":
-                if ln < 13:
-                    return None
-                w = int.from_bytes(chunk[0:4], "big")
-                h = int.from_bytes(chunk[4:8], "big")
-                bit_depth, color_type = chunk[8], chunk[9]
-                interlace = chunk[12]
-            elif ctype == b"IDAT":
-                idat += chunk
-            elif ctype == b"IEND":
-                break
-            i += 12 + ln
-        if not w or not h or bit_depth != 8 or interlace != 0:
-            return None
-        channels = {0: 1, 2: 3, 4: 2, 6: 4}.get(color_type)
-        if channels is None or not idat:
-            return None
-        try:
-            raw = zlib.decompress(bytes(idat))
-        except zlib.error:
-            return None
-        stride = w * channels
-        if len(raw) != h * (stride + 1):
-            return None
-        gray = []
-        prev = bytearray(stride)
-        pos = 0
-        for _y in range(h):
-            f = raw[pos]
-            pos += 1
-            line = bytearray(raw[pos : pos + stride])
-            pos += stride
-            if f == 1:
-                for x in range(channels, stride):
-                    line[x] = (line[x] + line[x - channels]) & 0xFF
-            elif f == 2:
-                for x in range(stride):
-                    line[x] = (line[x] + prev[x]) & 0xFF
-            elif f == 3:
-                for x in range(stride):
-                    a = line[x - channels] if x >= channels else 0
-                    line[x] = (line[x] + ((a + prev[x]) >> 1)) & 0xFF
-            elif f == 4:
-                for x in range(stride):
-                    a = line[x - channels] if x >= channels else 0
-                    b = prev[x]
-                    c = prev[x - channels] if x >= channels else 0
-                    p = a + b - c
-                    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                    pr = a if (pa <= pb and pa <= pc) else (
-                        b if pb <= pc else c
-                    )
-                    line[x] = (line[x] + pr) & 0xFF
-            elif f != 0:
-                return None
-            if color_type in (2, 6):
-                gray.extend(
-                    _luma(line[p], line[p + 1], line[p + 2])
-                    for p in range(0, stride, channels)
-                )
-            else:  # gray / gray+alpha
-                gray.extend(line[0::channels])
-            prev = line
-        return ("png", w, h, gray)
-    # baseline JPEG: full IDCT raster -> integer luma
-    if data[:2] == b"\xff\xd8":
-        from ..kernel.jpeg import decode_jpeg_gray
-
-        return decode_jpeg_gray(data)
-    # GIF first frame (deinterlaced palette raster -> luma)
-    if data[:6] in (b"GIF87a", b"GIF89a"):
-        return decode_gif_gray(data)
-    return None
 
 
 def _block_grid(w: int, h: int, gray, gw: int, gh: int):
@@ -950,10 +765,10 @@ def image_hashes(
 ) -> DataFrame:
     """Perceptual 64-bit image hashes (aHash + dHash) per media row —
     the multimodal arm of the dedup families. One mapInPandas batch
-    stage over the binary payloads (real decode for
-    Netpbm/PNG/BMP/GIF/baseline-JPEG — the formats that dominate a web
-    crawl; anything else surfaces status='unsupported', never task
-    failures).
+    stage over the binary payloads: one :func:`decode_pixels` raster
+    per payload, reduced by :func:`luma` (Netpbm/PNG/BMP/GIF/
+    baseline-JPEG — the formats that dominate a web crawl; anything
+    else surfaces status='unsupported', never task failures).
     """
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -971,7 +786,7 @@ def image_hashes(
                     out["status"].append("error")
                     out["error"].append("null payload")
                     continue
-                dec = decode_gray_raster(bytes(payload))
+                dec = decode_pixels(bytes(payload))
                 if dec is None:
                     out["fmt"].append(None)
                     out["width"].append(None)
@@ -984,7 +799,8 @@ def image_hashes(
                         "(transcode to P6 first)"
                     )
                     continue
-                fmt, w, h, gray = dec
+                fmt, w, h, ch, samples = dec
+                gray = luma(ch, samples)
                 out["fmt"].append(fmt)
                 out["width"].append(w)
                 out["height"].append(h)
@@ -1015,10 +831,11 @@ def pixel_stats_with_hashes(
     ``image_hashes(df)`` on the (unique) ref column, but the payloads
     cross the Arrow boundary once and there is no join: at corpus scale
     the two-branch form ships every binary payload through two separate
-    Python stages and shuffles the results back together. Stats columns
-    follow exactly the `extract_pixel_stats` decode ladder; ahash/dhash
-    follow exactly the `image_hashes` gray-raster path (null when the
-    gray decode is unsupported — callers coalesce as before).
+    Python stages and shuffles the results back together. Each payload
+    is decoded ONCE by :func:`decode_pixels`; the stats columns reduce
+    the raster by :func:`channel_means`, ahash/dhash by :func:`luma`
+    (both null when the payload is unsupported — callers coalesce as
+    before).
     """
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1037,44 +854,27 @@ def pixel_stats_with_hashes(
                         out[k].append(None)
                     out["status"].append("error")
                     continue
-                data = bytes(payload)
-                dec = (
-                    decode_netpbm(data)
-                    or decode_png_pixels(data)
-                    or decode_gif_pixels(data)
-                    or decode_bmp_pixels(data)
-                    or _decode_jpeg(data)
-                )
+                dec = decode_pixels(bytes(payload))
                 if dec is None:
                     for k in ("fmt", "width", "height", "channels",
-                              "mean_r", "mean_g", "mean_b"):
+                              "mean_r", "mean_g", "mean_b",
+                              "ahash", "dhash"):
                         out[k].append(None)
                     out["status"].append("unsupported")
-                else:
-                    fmt, w, h, ch, means = dec
-                    out["fmt"].append(fmt)
-                    out["width"].append(w)
-                    out["height"].append(h)
-                    out["channels"].append(ch)
-                    m = list(means or [])
-                    out["mean_r"].append(m[0] if m else None)
-                    out["mean_g"].append(m[1] if len(m) >= 3 else None)
-                    out["mean_b"].append(m[2] if len(m) >= 3 else None)
-                    out["status"].append("ok")
-                gray = decode_gray_raster(data)
-                if gray is None:
-                    out["ahash"].append(None)
-                    out["dhash"].append(None)
-                else:
-                    _, gw, gh, graster = gray
-                    out["ahash"].append(ahash64(gw, gh, graster))
-                    out["dhash"].append(dhash64(gw, gh, graster))
+                    continue
+                fmt, w, h, ch, samples = dec
+                m = channel_means(w, h, ch, samples) + [None, None]
+                gray = luma(ch, samples)
+                out["fmt"].append(fmt)
+                out["width"].append(w)
+                out["height"].append(h)
+                out["channels"].append(ch)
+                out["mean_r"].append(m[0])
+                out["mean_g"].append(m[1])
+                out["mean_b"].append(m[2])
+                out["status"].append("ok")
+                out["ahash"].append(ahash64(w, h, gray))
+                out["dhash"].append(dhash64(w, h, gray))
             yield pd.DataFrame(out)
 
     return df.mapInPandas(run, schema=PIXEL_STATS_HASHES_DDL)
-
-
-# -- video containers (ISO BMFF / MP4) --------------------------------------------
-
-
-# -- MJPEG: the codec-free real-decode lane ---------------------------------

@@ -48,6 +48,9 @@ def get_spark(
         # heap; 8g GC-thrashes at local[32] with multi-KB string columns
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "20g"))
         .config("spark.ui.enabled", "false")
+        # reliable checkpoints (materialize with a checkpoint dir) are
+        # deleted once their frame is unreferenced, not kept forever
+        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -235,50 +235,6 @@ def batch_id(files) -> str:
     return hashlib.md5("\n".join(sorted(files)).encode()).hexdigest()[:16]
 
 
-def migrate_flat_store(spark, data_path: str) -> int:
-    """One-time migration of a pre-batch-layout store: any child of
-    ``data_path`` that is not an ``ingest_batch=*`` directory (flat
-    ``part-*.parquet`` appends, ``_SUCCESS`` markers, or ``split=*``
-    partition dirs from the old curation layout) moves into
-    ``ingest_batch=legacy/``. Without this, one new-style run on an
-    old store leaves a mixed flat+partitioned layout that
-    ``spark.read.parquet`` rejects with conflicting-directory-structure
-    errors. Driver-side renames on the same filesystem — O(children),
-    never a data copy. Returns the number of entries moved."""
-    jvm = spark._jvm  # noqa: SLF001
-    conf = spark._jsc.hadoopConfiguration()  # noqa: SLF001
-    path = jvm.org.apache.hadoop.fs.Path(data_path)
-    fs = path.getFileSystem(conf)
-    if not fs.exists(path):
-        return 0
-    stray = [
-        s.getPath()
-        for s in fs.listStatus(path)
-        if not s.getPath().getName().startswith("ingest_batch=")
-    ]
-    if not stray:
-        return 0
-    legacy = jvm.org.apache.hadoop.fs.Path(data_path, "ingest_batch=legacy")
-    fs.mkdirs(legacy)
-    moved = 0
-    for p in stray:
-        dest = jvm.org.apache.hadoop.fs.Path(legacy, p.getName())
-        # Hadoop rename returns False (no exception) when the target
-        # already exists — e.g. a retried migration or two flat
-        # generations. Retry under a unique suffix so the mixed layout
-        # this function exists to fix is never silently left behind.
-        if not fs.rename(p, dest):
-            alt = jvm.org.apache.hadoop.fs.Path(
-                legacy, f"{p.getName()}.migrated-{moved}"
-            )
-            if not fs.rename(p, alt):
-                raise IOError(
-                    f"migrate_flat_store: could not move {p} into {legacy}"
-                )
-        moved += 1
-    return moved
-
-
 def drop_orphan_batches(spark, data_path: str, committed) -> list:
     """Delete ``ingest_batch=*`` subdirectories whose batch id is not
     in the ledger — leftovers of a run that crashed between the data

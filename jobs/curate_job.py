@@ -276,13 +276,9 @@ def flag_documents(docs, cfg, benchmark=None):
     return df, cached
 
 
-def run_curation(spark, docs, cfg, benchmark=None, out_root=None,
-                 write_mode="overwrite", curated_path=None):
+def run_curation(spark, docs, cfg, benchmark=None, out_root=None):
     """Flag -> filter -> normalize -> scrub -> split -> write, with the
-    funnel counted as observation metrics on the single write action.
-    ``curated_path`` overrides the output directory (the streaming
-    micro-batch form writes each batch to its own
-    ``ingest_batch=<id>`` subdirectory)."""
+    funnel counted as observation metrics on the single write action."""
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
@@ -306,12 +302,11 @@ def run_curation(spark, docs, cfg, benchmark=None, out_root=None,
     out_cols = [
         c for c in docs.columns if c not in ("text",)
     ] + ["lang_detected", "q_score", "text_norm", "scrubbed", "split"]
-    out_path = curated_path or f"{out_root}/curated"
     (
         curated.select(*out_cols)
-        .write.mode(write_mode)
+        .write.mode("overwrite")
         .partitionBy("split")
-        .parquet(out_path)
+        .parquet(f"{out_root}/curated")
     )
     # sums over zero rows surface as NULL — normalize so the metrics
     # JSON carries clean zeros (empty input is a no-crash no-op)
@@ -321,97 +316,6 @@ def run_curation(spark, docs, cfg, benchmark=None, out_root=None,
     )
     cached.unpersist()
     return metrics
-
-
-def run_curation_stream(
-    spark, input_dir, cfg, out_root, checkpoint, benchmark=None
-):
-    """Continuous curation: documents stream in (file source) and each
-    micro-batch runs the SAME batch funnel, with exact dedup extended
-    ACROSS batches via a persistent digest ledger — a document whose
-    md5(text) was processed in ANY earlier batch is dropped before the
-    funnel (first writer wins, the streaming analog of the batch
-    first-surviving-row rule).
-
-    Exactly-once via the orphan-batch pattern (same contract as
-    ``jobs/warc_extract_job.py``): every per-batch artifact — curated
-    rows, metrics row, seen digests — lands in its own
-    ``ingest_batch=<id>`` subdirectory, and the batch id registers in
-    ``{out_root}/batch_ledger`` LAST. A crash before the ledger append
-    leaves orphan directories that the next start deletes before the
-    checkpoint replays the batch; a replay after the ledger append is
-    skipped by the ledger check. foreachBatch executes serially within
-    a run, so the ledger read-then-append is race-free. A store
-    written by the pre-batch-layout version is folded into
-    ``ingest_batch=legacy`` once at startup.
-    """
-    from pyspark.sql import functions as F
-
-    from content_extractor_spark.session import materialize
-    from content_extractor_spark.sources.io import read_prior
-    from content_extractor_spark.sources.warc import (
-        drop_orphan_batches,
-        migrate_flat_store,
-    )
-
-    curated_path = f"{out_root}/curated"
-    seen_path = f"{out_root}/seen_digests"
-    metrics_path = f"{out_root}/metrics"
-    ledger_path = f"{out_root}/batch_ledger"
-    schema = spark.read.parquet(input_dir).schema
-
-    def committed_batches(s):
-        ledger = read_prior(s, ledger_path)  # None on the first run
-        return set() if ledger is None else {r["batch"] for r in ledger.collect()}
-
-    done = committed_batches(spark)
-    for p in (curated_path, seen_path, metrics_path):
-        migrate_flat_store(spark, p)
-        drop_orphan_batches(spark, p, done | {"legacy"})
-
-    def sink(batch_df, batch_id):
-        s = batch_df.sparkSession
-        bid = str(batch_id)
-        if bid in committed_batches(s):
-            return  # checkpoint replay of a fully committed batch
-        total_in = batch_df.count()
-        if total_in == 0:
-            return
-        keyed = batch_df.withColumn("_digest", F.md5(F.col("text")))
-        seen = read_prior(s, seen_path)  # None on the first batch
-        if seen is not None:
-            keyed = keyed.join(seen.select("_digest"), "_digest", "left_anti")
-        fresh = materialize(keyed)  # pin the anti-join result
-        m = run_curation(
-            s, fresh.drop("_digest"), cfg, benchmark=benchmark,
-            out_root=out_root, write_mode="overwrite",
-            curated_path=f"{curated_path}/ingest_batch={bid}",
-        )
-        m["drop_seen"] = total_in - m["total"]
-        m["batch_id"] = batch_id
-        s.createDataFrame([tuple(m[k] for k in sorted(m))],
-                          ", ".join(f"{k} long" for k in sorted(m))
-                          ).write.mode("overwrite").parquet(
-            f"{metrics_path}/ingest_batch={bid}"
-        )
-        fresh.select("_digest").distinct().write.mode("overwrite").parquet(
-            f"{seen_path}/ingest_batch={bid}"
-        )
-        # register the batch LAST — until this lands, everything above
-        # is an orphan directory the next start deletes and regenerates
-        s.createDataFrame(
-            [(bid, "done")], "batch string, status string"
-        ).write.mode("append").parquet(ledger_path)
-
-    q = (
-        spark.readStream.schema(schema).format("parquet").load(input_dir)
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .outputMode("append")
-        .start()
-    )
-    q.awaitTermination()
 
 
 def main(argv=None):

@@ -164,68 +164,6 @@ class TestJobCli:
 
 
 class TestCurateJob:
-    def test_streaming_curation_cross_batch_dedup(self, spark, tmp_path):
-        """Two micro-batches through run_curation_stream: a batch-2
-        document whose text was curated in batch 1 is dropped via the
-        persistent digest ledger (drop_seen), genuinely new documents
-        flow through the full funnel, and curated output accumulates
-        by append."""
-        from jobs.curate_job import resolve_config, run_curation_stream
-
-        in_dir = str(tmp_path / "in")
-        out = str(tmp_path / "out")
-        ck = str(tmp_path / "ck")
-        cfg = resolve_config(["--input", "-", "--output", "-"])
-
-        def doc(i, salt):
-            body = " ".join(f"w{salt}x{j}" for j in range(30))
-            return (i, f"the and of to in {body}", "s0")
-
-        spark.createDataFrame(
-            [doc(1, "a"), doc(2, "b")],
-            "doc_id long, text string, source string",
-        ).write.parquet(in_dir)
-        run_curation_stream(spark, in_dir, cfg, out, ck)
-        assert spark.read.parquet(f"{out}/curated").count() == 2
-
-        # batch 2: doc 3 repeats doc 1's text; doc 4 is new
-        spark.createDataFrame(
-            [(3,) + doc(1, "a")[1:], doc(4, "c")],
-            "doc_id long, text string, source string",
-        ).write.mode("append").parquet(in_dir)
-        run_curation_stream(spark, in_dir, cfg, out, ck)
-        curated = spark.read.parquet(f"{out}/curated")
-        assert sorted(r["doc_id"] for r in curated.collect()) == [1, 2, 4]
-        mrows = {r["batch_id"]: r
-                 for r in spark.read.parquet(f"{out}/metrics").collect()}
-        assert mrows[0]["drop_seen"] == 0 and mrows[0]["kept"] == 2
-        assert mrows[1]["drop_seen"] == 1 and mrows[1]["kept"] == 1
-
-    def test_corrupt_batch_ledger_raises_and_keeps_batches(
-        self, spark, tmp_path, corrupt_parquet
-    ):
-        """A corrupt batch ledger is not "no committed batches": the
-        stream start raises before the orphan sweep, so no committed
-        ingest_batch dir is deleted."""
-        from jobs.curate_job import resolve_config, run_curation_stream
-
-        in_dir = str(tmp_path / "in")
-        out = tmp_path / "out"
-        ck = str(tmp_path / "ck")
-        cfg = resolve_config(["--input", "-", "--output", "-"])
-        body = " ".join(f"wx{j}" for j in range(30))
-        spark.createDataFrame(
-            [(1, f"the and of to in {body}", "s0")],
-            "doc_id long, text string, source string",
-        ).write.parquet(in_dir)
-        run_curation_stream(spark, in_dir, cfg, str(out), ck)
-        batches = sorted(out.glob("*/ingest_batch=*"))
-        assert batches
-        corrupt_parquet(out / "batch_ledger")
-        with pytest.raises(Exception, match="batch_ledger"):
-            run_curation_stream(spark, in_dir, cfg, str(out), ck)
-        assert sorted(out.glob("*/ingest_batch=*")) == batches
-
     def test_env_first_config(self):
         from jobs.curate_job import resolve_config
 

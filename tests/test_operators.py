@@ -11,7 +11,12 @@ from content_extractor_spark.operators.dedup_families import (
     ngram_jaccard_pairs,
     simhash,
 )
-from content_extractor_spark.operators.multimodal import extract_image_features
+from content_extractor_spark.operators.multimodal import (
+    channel_means,
+    decode_pixels,
+    extract_image_features,
+    luma,
+)
 from content_extractor_spark.operators.similarity import cosine_topk, lsh_topk
 from content_extractor_spark.operators.tags import (
     connect_entries_to_tags,
@@ -37,6 +42,13 @@ def texts(spark):
         (5, "le chat noir et la maison des amis les plus proches du quartier"),
     ]
     return spark.createDataFrame(rows, "doc_id int, text string")
+
+
+def _pixel_stats(data):
+    """(fmt, width, height, channels, channel means) of one payload
+    through the single pixel decoder, or None when unsupported."""
+    dec = decode_pixels(data)
+    return dec and (*dec[:4], channel_means(*dec[1:]))
 
 
 class TestDedupFamilies:
@@ -813,21 +825,19 @@ class TestMultimodal:
         assert rep["exchanges"] == 0 and rep["python_stages"] == 0
 
     def test_netpbm_pixel_decode(self):
-        from content_extractor_spark.operators.multimodal import decode_netpbm
-
         # 2x1 RGB: (10,20,30) and (30,40,50) -> means (20,30,40)
         p6 = b"P6\n2 1\n255\n" + bytes([10, 20, 30, 30, 40, 50])
-        assert decode_netpbm(p6) == ("ppm", 2, 1, 3, [20.0, 30.0, 40.0])
+        assert _pixel_stats(p6) == ("ppm", 2, 1, 3, [20.0, 30.0, 40.0])
         # comments in the header (spec-legal)
         p6c = b"P6\n# a comment\n2 1\n# another\n255\n" + bytes([0, 0, 0, 2, 4, 6])
-        assert decode_netpbm(p6c) == ("ppm", 2, 1, 3, [1.0, 2.0, 3.0])
+        assert _pixel_stats(p6c) == ("ppm", 2, 1, 3, [1.0, 2.0, 3.0])
         # grayscale P5
         p5 = b"P5\n4 1\n255\n" + bytes([0, 100, 100, 200])
-        assert decode_netpbm(p5) == ("pgm", 4, 1, 1, [100.0])
+        assert _pixel_stats(p5) == ("pgm", 4, 1, 1, [100.0])
         # truncated payload / ascii variant / garbage -> None
-        assert decode_netpbm(b"P6\n4 4\n255\n\x00\x00") is None
-        assert decode_netpbm(b"P3\n1 1\n255\n0 0 0") is None
-        assert decode_netpbm(b"\x89PNG\r\n\x1a\n") is None
+        assert _pixel_stats(b"P6\n4 4\n255\n\x00\x00") is None
+        assert _pixel_stats(b"P3\n1 1\n255\n0 0 0") is None
+        assert _pixel_stats(b"\x89PNG\r\n\x1a\n") is None
 
     def test_pixel_stats_in_spark(self, spark):
         from content_extractor_spark.operators.multimodal import extract_pixel_stats
@@ -1066,16 +1076,13 @@ class TestPngPixelDecode:
     """Real dependency-free PNG pixel decode (stdlib zlib)."""
 
     def test_roundtrip_all_filters(self):
-        from content_extractor_spark.operators.multimodal import (
-            decode_png_pixels,
-        )
         from content_extractor_spark.synth import encode_png_solid
 
         # h >= 5 guarantees every filter type 0..4 appears
         for w, h, rgb in [(1, 5, (0, 0, 0)), (7, 9, (37, 74, 111)),
                           (16, 12, (255, 1, 128))]:
             png = encode_png_solid(w, h, rgb)
-            fmt, dw, dh, ch, means = decode_png_pixels(png)
+            fmt, dw, dh, ch, means = _pixel_stats(png)
             assert (fmt, dw, dh, ch) == ("png", w, h, 3)
             assert means == [float(c) for c in rgb]
 
@@ -1084,9 +1091,6 @@ class TestPngPixelDecode:
         test image; raw content hand-verified: Sub then Up filter, all
         four pixels 0x80) — guards against a self-cancelling filter
         mistake shared by our encoder+decoder."""
-        from content_extractor_spark.operators.multimodal import (
-            decode_png_pixels,
-        )
 
         png = (
             b"\x89PNG\r\n\x1a\n"
@@ -1099,15 +1103,11 @@ class TestPngPixelDecode:
             + bytes.fromhex("0000000e49444154789c636c6060626000000292008400000000")
             + bytes.fromhex("0000000049454e44ae426082")
         )
-        assert decode_png_pixels(png) == ("png", 2, 2, 1, [128.0])
+        assert _pixel_stats(png) == ("png", 2, 2, 1, [128.0])
 
     def test_alpha_excluded_from_means(self):
         import struct
         import zlib
-
-        from content_extractor_spark.operators.multimodal import (
-            decode_png_pixels,
-        )
 
         # hand-built 2x1 RGBA, filter 0: pixels (10,20,30,a=0) and
         # (30, 40, 50, a=255) -> means ignore alpha entirely
@@ -1119,17 +1119,13 @@ class TestPngPixelDecode:
         raw = bytes([0, 10, 20, 30, 0, 30, 40, 50, 255])
         png = (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
                + chunk(b"IDAT", zlib.compress(raw, 0)) + chunk(b"IEND", b""))
-        fmt, w, h, ch, means = decode_png_pixels(png)
+        fmt, w, h, ch, means = _pixel_stats(png)
         assert (fmt, w, h, ch) == ("png", 2, 1, 4)
         assert means == [20.0, 30.0, 40.0]
 
     def test_unsupported_variants_return_none(self):
         import struct
         import zlib
-
-        from content_extractor_spark.operators.multimodal import (
-            decode_png_pixels,
-        )
 
         def png_with(bit_depth, color_type, interlace=0):
             def chunk(ctype, payload):
@@ -1143,11 +1139,11 @@ class TestPngPixelDecode:
                     + chunk(b"IDAT", zlib.compress(raw, 0))
                     + chunk(b"IEND", b""))
 
-        assert decode_png_pixels(png_with(16, 0)) is None     # 16-bit
-        assert decode_png_pixels(png_with(8, 3)) is None      # palette
-        assert decode_png_pixels(png_with(8, 0, 1)) is None   # interlaced
-        assert decode_png_pixels(b"\x89PNG\r\n\x1a\njunk") is None
-        assert decode_png_pixels(b"") is None
+        assert _pixel_stats(png_with(16, 0)) is None     # 16-bit
+        assert _pixel_stats(png_with(8, 3)) is None      # palette
+        assert _pixel_stats(png_with(8, 0, 1)) is None   # interlaced
+        assert _pixel_stats(b"\x89PNG\r\n\x1a\njunk") is None
+        assert _pixel_stats(b"") is None
 
 
 class TestCorpusStats:
@@ -1411,13 +1407,10 @@ class TestKmeansAndNormalize:
 
 class TestGifPixelDecode:
     def test_roundtrip_solid(self):
-        from content_extractor_spark.operators.multimodal import (
-            decode_gif_pixels,
-        )
         from content_extractor_spark.synth import encode_gif_solid
 
         for w, h, rgb in [(1, 1, (9, 8, 7)), (12, 9, (200, 100, 50))]:
-            r = decode_gif_pixels(encode_gif_solid(w, h, rgb))
+            r = _pixel_stats(encode_gif_solid(w, h, rgb))
             assert r == ("gif", w, h, 3, [float(c) for c in rgb])
 
     def test_real_lzw_growth_path(self):
@@ -1425,10 +1418,6 @@ class TestGifPixelDecode:
         the code==len(table) (KwKwK) case: min code 2, codes
         CLEAR,0,1,6(=prev+prev[0]),EOI over a 2x3 two-color image."""
         import struct
-
-        from content_extractor_spark.operators.multimodal import (
-            decode_gif_pixels,
-        )
 
         hdr = b"GIF89a" + struct.pack("<HHBBB", 2, 3, 0x80 | 0x01, 0, 0)
         pal = bytes([10, 20, 30, 250, 240, 230]) + bytes(6)
@@ -1450,7 +1439,7 @@ class TestGifPixelDecode:
         gif = hdr + pal + desc + stream + b"\x3b"
         # decoded indices: [0], [1], [1,0,... wait: KwKwK of prev=[1] ->
         # [1,1]; pixels = 0,1,1,1 -> only 4 of 6 -> decoder rejects
-        r = decode_gif_pixels(gif)
+        r = _pixel_stats(gif)
         # 4 decoded pixels < w*h=6 -> structural reject, never garbage
         assert r is None
 
@@ -1458,10 +1447,6 @@ class TestGifPixelDecode:
         """Structural self-check on our own two-color growth stream
         sized to exactly w*h (6 pixels: codes for 0,1,[1,1],[1,1])."""
         import struct
-
-        from content_extractor_spark.operators.multimodal import (
-            decode_gif_pixels,
-        )
 
         hdr = b"GIF89a" + struct.pack("<HHBBB", 2, 3, 0x80 | 0x01, 0, 0)
         pal = bytes([0, 0, 0, 255, 255, 255]) + bytes(6)
@@ -1490,7 +1475,7 @@ class TestGifPixelDecode:
             payload.append(acc & 0xFF)
         stream = bytes([2, len(payload)]) + bytes(payload) + b"\x00"
         gif = hdr + pal + desc + stream + b"\x3b"
-        r = decode_gif_pixels(gif)
+        r = _pixel_stats(gif)
         assert r is not None
         fmt, w, h, ch, means = r
         # pixels: three 0s (black) and three 1s (white) -> mean 127.5
@@ -1502,14 +1487,13 @@ class TestJpegPixelDecode:
         import math
 
         from content_extractor_spark.kernel.jpeg import (
-            decode_jpeg_pixels,
             encode_jpeg_solid,
             rgb_to_ycbcr,
         )
 
         for w, h, rgb in [(8, 8, (0, 0, 0)), (7, 5, (37, 74, 111)),
                           (20, 13, (200, 10, 99)), (1, 1, (128, 128, 128))]:
-            fmt, dw, dh, ch, means = decode_jpeg_pixels(
+            fmt, dw, dh, ch, means = _pixel_stats(
                 encode_jpeg_solid(w, h, rgb)
             )
             assert (fmt, dw, dh, ch) == ("jpeg", w, h, 3)
@@ -1528,8 +1512,6 @@ class TestJpegPixelDecode:
         (libjpeg): 2x2 grayscale, all pixels 128 — the same image whose
         PNG twin decodes to mean 128.0, so the two independent decode
         paths corroborate each other."""
-        from content_extractor_spark.kernel.jpeg import decode_jpeg_pixels
-
         jpg = bytes.fromhex(
             "ffd8ffe000104a46494600010100000100010000ffdb0043000806060705"
             "0508070707090908 0a0c140d0c0b0b0c1912130f141d1a1f1e1d1a1c1c"
@@ -1544,17 +1526,20 @@ class TestJpegPixelDecode:
             "e3e4e5e6e7e8e9eaf1f2f3f4f5f6f7f8f9faffda0008010100003f002bff"
             "d9".replace(" ", "")
         )
-        assert decode_jpeg_pixels(jpg) == ("jpeg", 2, 2, 1, [128.0])
+        assert _pixel_stats(jpg) == ("jpeg", 2, 2, 1, [128.0])
 
     def test_unsupported_returns_none(self):
-        from content_extractor_spark.kernel.jpeg import decode_jpeg_pixels
+        from content_extractor_spark.kernel.jpeg import encode_jpeg_solid
 
-        assert decode_jpeg_pixels(b"\xff\xd8\xff\xd9") is None
-        assert decode_jpeg_pixels(b"not a jpeg") is None
+        assert _pixel_stats(b"\xff\xd8\xff\xd9") is None
+        assert _pixel_stats(b"not a jpeg") is None
         # progressive (SOF2) refused, not garbled
         prog = (b"\xff\xd8\xff\xc2\x00\x0b\x08\x00\x02\x00\x02\x01\x01"
                 b"\x11\x00\xff\xd9")
-        assert decode_jpeg_pixels(prog) is None
+        assert _pixel_stats(prog) is None
+        # a zero-area frame (height deferred to a DNL marker) is refused,
+        # never reported as status ok with NaN means
+        assert _pixel_stats(encode_jpeg_solid(5, 0, (10, 20, 30))) is None
 
 
 class TestRobotsAndAnchors:
@@ -1727,20 +1712,17 @@ class TestRobotsAndAnchors:
         assert got == [("s.com", "d.com", "Click me")]
 
     def test_bmp_decode_variants(self):
-        from content_extractor_spark.operators.multimodal import (
-            decode_bmp_pixels,
-        )
         from content_extractor_spark.synth import encode_bmp_solid
 
-        r = decode_bmp_pixels(encode_bmp_solid(13, 9, (200, 100, 50)))
+        r = _pixel_stats(encode_bmp_solid(13, 9, (200, 100, 50)))
         assert r == ("bmp", 13, 9, 3, [200.0, 100.0, 50.0])
         # top-down (negative height) decodes identically for means
         import struct
 
         b = bytearray(encode_bmp_solid(4, 2, (1, 2, 3)))
         b[22:26] = struct.pack("<i", -2)
-        assert decode_bmp_pixels(bytes(b)) == ("bmp", 4, 2, 3, [1.0, 2.0, 3.0])
-        assert decode_bmp_pixels(b"BM" + b"\x00" * 60) is None
+        assert _pixel_stats(bytes(b)) == ("bmp", 4, 2, 3, [1.0, 2.0, 3.0])
+        assert _pixel_stats(b"BM" + b"\x00" * 60) is None
 
 
 class TestSnapshotAndCompression:
@@ -1794,10 +1776,7 @@ class TestReviewRegressions:
         refused (multi-scan baseline), never decoded as grayscale."""
         import struct
 
-        from content_extractor_spark.kernel.jpeg import (
-            decode_jpeg_pixels,
-            encode_jpeg_solid,
-        )
+        from content_extractor_spark.kernel.jpeg import encode_jpeg_solid
 
         data = bytearray(encode_jpeg_solid(8, 8, (10, 20, 30)))
         i = data.find(b"\xff\xda")
@@ -1807,7 +1786,7 @@ class TestReviewRegressions:
             [1, 1, 0x00, 0, 63, 0]
         )
         data[i : i + 2 + ln] = new_sos
-        assert decode_jpeg_pixels(bytes(data)) is None
+        assert _pixel_stats(bytes(data)) is None
 
     def test_hocon_diamond_include_and_nested_fail(self, tmp_path):
         import pytest
@@ -1904,13 +1883,10 @@ class TestChunking:
     def test_jpeg_restart_markers(self):
         """DRI/RSTn path: restart markers resync the bit reader and
         reset DC predictors — decode must match the marker-free stream."""
-        from content_extractor_spark.kernel.jpeg import (
-            decode_jpeg_pixels,
-            encode_jpeg_solid,
-        )
+        from content_extractor_spark.kernel.jpeg import encode_jpeg_solid
 
-        plain = decode_jpeg_pixels(encode_jpeg_solid(40, 24, (37, 74, 111)))
-        rst = decode_jpeg_pixels(
+        plain = _pixel_stats(encode_jpeg_solid(40, 24, (37, 74, 111)))
+        rst = _pixel_stats(
             encode_jpeg_solid(40, 24, (37, 74, 111), restart_every=4)
         )
         assert plain is not None and plain == rst
@@ -2127,6 +2103,25 @@ class TestImageHashing:
         to_map = lambda df: {r["media_ref"]: tuple(r) for r in df.collect()}
         assert to_map(fused) == to_map(ref)
 
+    def test_bmp_core_header_unsupported_on_both_legs(self, spark):
+        """A 12-byte (OS/2 core) DIB header is refused even when the
+        bytes where a BITMAPINFOHEADER would sit read like a valid
+        24-bit one: stats and hashes reduce the same decoded raster,
+        so neither leg reports a value for it."""
+        from content_extractor_spark.operators.multimodal import (
+            pixel_stats_with_hashes,
+        )
+        from content_extractor_spark.synth import encode_bmp_solid
+
+        bmp = bytearray(encode_bmp_solid(9, 7, (250, 0, 125)))
+        bmp[14:18] = (12).to_bytes(4, "little")  # DIB header size
+        media = spark.createDataFrame(
+            [("core", bytes(bmp))], "media_ref string, payload binary"
+        )
+        row = pixel_stats_with_hashes(media).collect()[0]
+        assert row["status"] == "unsupported"
+        assert row["ahash"] is None and row["dhash"] is None
+
     def test_repeated_window_spans(self, spark):
         """r6 substring-dedup family (Lee et al. 2022 shape): an exact
         window-length token span shared by two documents is flagged in
@@ -2167,14 +2162,9 @@ class TestImageHashing:
     def test_gif_interlaced_deinterlaces(self):
         """Hand-built interlaced GIF (h=4, one palette index per
         logical row, storage order 0,2,1,3 per the 4-pass spec) —
-        decode_gif_gray restores LOGICAL row order; the channel-means
-        path stays order-blind."""
+        the decoded raster comes back in LOGICAL row order; the channel
+        means stay order-blind."""
         import struct
-
-        from content_extractor_spark.operators.multimodal import (
-            decode_gif_gray,
-            decode_gif_pixels,
-        )
 
         w, h = 2, 4
         hdr = b"GIF89a" + struct.pack("<HHBBB", w, h, 0x80 | 0x01, 0, 0)
@@ -2200,14 +2190,15 @@ class TestImageHashing:
             payload.append(acc & 0xFF)
         stream = bytes([2, len(payload)]) + bytes(payload) + b"\x00"
         gif = hdr + pal + desc + stream + b"\x3b"
-        got = decode_gif_gray(gif)
+        got = decode_pixels(gif)
         assert got is not None
-        fmt, gw, gh, gray = got
+        fmt, gw, gh, ch, samples = got
+        gray = list(luma(ch, samples))
         assert (fmt, gw, gh) == ("gif", w, h)
         # logical rows come back in order: 10,10 / 60,60 / 110,110 / 210,210
         assert gray == [10, 10, 60, 60, 110, 110, 210, 210]
         # means path unchanged (order-blind)
-        m = decode_gif_pixels(gif)
+        m = _pixel_stats(gif)
         assert m[4] == [97.5, 97.5, 97.5]
 
 

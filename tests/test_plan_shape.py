@@ -245,6 +245,37 @@ def test_materialize_uses_the_checkpoint_dir_when_set(spark, tmp_path):
     assert sc.getCheckpointDir() == old
 
 
+def test_reliable_checkpoint_files_go_once_unreferenced(spark, tmp_path):
+    """A reliable checkpoint's rdd-* dir is deleted once nothing
+    references the materialized frame (get_spark turns on Spark's
+    checkpoint cleaning); otherwise every materialize() call, one per
+    round in the iterative operators, would leave its files behind."""
+    import gc
+    import time
+
+    from content_extractor_spark.session import materialize
+
+    sc = spark.sparkContext
+    old = sc.getCheckpointDir()
+    ck = tmp_path / "ck"
+    ck.mkdir()
+    try:
+        sc.setCheckpointDir(str(ck))
+        out = materialize(spark.range(50, numPartitions=2))
+        assert out.count() == 50
+        assert list(ck.rglob("rdd-*"))
+        del out
+        gc.collect()
+        deadline = time.monotonic() + 10
+        while list(ck.rglob("rdd-*")) and time.monotonic() < deadline:
+            sc._jvm.System.gc()  # noqa: SLF001
+            time.sleep(0.2)
+        assert not list(ck.rglob("rdd-*"))
+    finally:
+        sc._jsc.sc().setCheckpointDir(old)  # noqa: SLF001
+    assert sc.getCheckpointDir() == old
+
+
 def test_robots_blocked_side_not_force_broadcast(spark):
     """ZERO forced-broadcast hints in the robots filter plan: the
     rules set scales with the HOST population and the blocked-path set

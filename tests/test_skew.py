@@ -1,6 +1,7 @@
 """Skew-handling operators: salted aggregation equals its naive
 counterpart while spreading hot keys."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from content_extractor_spark.operators.skew import salted_agg
@@ -66,6 +67,20 @@ def test_connected_components_deep_chain(spark):
     comps = {r["node"]: r["comp"] for r in connected_components(edges).collect()}
     assert set(comps.values()) == {0}
     assert len(comps) == 13
+
+
+def test_connected_components_raises_when_not_converged(spark, monkeypatch):
+    """Labels still changing in the last allowed round are an error,
+    not a result: a 6-node path needs five rounds to settle, so two
+    rounds must raise instead of returning unconverged labels."""
+    from content_extractor_spark.operators import components
+
+    monkeypatch.setattr(components, "MAX_ITER", 2)
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(5)], "a long, b long"
+    )
+    with pytest.raises(RuntimeError, match="did not converge"):
+        components.connected_components(edges)
 
 
 def test_connected_components_empty_edges(spark):

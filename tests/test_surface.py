@@ -1,11 +1,11 @@
 """Surface guards over the package source. No Spark: they parse files only.
 
-Every top-level def of the package has a caller outside tests. A
-function, class or constant that only tests reach is library surface the
-system does not use; this scan fails when one appears, so dead surface
-cannot grow back unnoticed.
+Every top-level def of the package, the jobs and ``__spark_entry__.py``
+has a caller outside tests. A function, class or constant that only
+tests reach is surface the system does not use; this scan fails when one
+appears, so dead surface cannot grow back unnoticed.
 
-The defs come from the package's ASTs. A use is an identifier in the
+The defs come from those files' ASTs. A use is an identifier in the
 AST of non-test code: a name, an attribute, an imported name, or a
 string constant equal to the def's name (the driver's query registry
 and ``getattr`` lookups name code by string). Docstrings, comments and
@@ -107,20 +107,28 @@ def _identifiers(tree):
             yield node.value, node.lineno
 
 
+def _guarded_files():
+    """(file, key prefix): package modules keyed by their path in the
+    package, the jobs and the entry module by their path in the repo."""
+    for p in sorted(PACKAGE.rglob("*.py")):
+        if p.name != "__init__.py":
+            yield p, p.relative_to(PACKAGE).as_posix()
+    for p in [*sorted((ROOT / "jobs").glob("*.py")), ROOT / "__spark_entry__.py"]:
+        yield p, p.relative_to(ROOT).as_posix()
+
+
 def _unused_defs():
-    """(keys of package defs without a non-test use, keys of all defs)."""
+    """(keys of guarded defs without a non-test use, keys of all defs)."""
     trees = {
         p: ast.parse(p.read_text(encoding="utf-8")) for p in _non_test_sources()
     }
     defs = []  # (key, name, file, first line, last line)
-    for p in sorted(PACKAGE.rglob("*.py")):
-        if p.name == "__init__.py":
-            continue
+    for p, prefix in _guarded_files():
         for name, node in _top_level_defs(trees[p]):
             if name.startswith("__") and name.endswith("__"):
                 continue
             first = min([node.lineno] + [d.lineno for d in getattr(node, "decorator_list", [])])
-            key = f"{p.relative_to(PACKAGE).as_posix()}:{name}"
+            key = f"{prefix}:{name}"
             defs.append((key, name, p, first, node.end_lineno))
     own = {}  # name -> [(file, first, last)]: lines that are not uses
     for _, name, p, first, last in defs:
@@ -139,7 +147,7 @@ def test_every_package_def_has_a_non_test_caller():
     unused, _ = _unused_defs()
     unexplained = sorted(unused - set(ALLOWED))
     assert not unexplained, (
-        "package defs that only tests reach (delete them, wire them into a "
+        "defs that only tests reach (delete them, wire them into a "
         f"job, or add them to ALLOWED with a reason): {unexplained}"
     )
 

@@ -390,44 +390,6 @@ class TestIncrementalIngest:
         assert spans.count() == 4
         assert spans.select("doc_id").distinct().count() == 4
 
-    def test_legacy_flat_store_migrates_once(self, spark, tmp_path):
-        """r6 (advice): a store written by the pre-batch-layout version
-        has flat parquet appends in its base dir — the migration folds
-        them into ingest_batch=legacy so the mixed layout never reaches
-        spark.read, old rows survive, and the legacy batch is never
-        orphan-dropped."""
-        import os
-
-        from content_extractor_spark.sources.warc import (
-            drop_orphan_batches,
-            migrate_flat_store,
-            read_warc,
-        )
-
-        in_dir = tmp_path / "in"
-        store = tmp_path / "out" / "records"
-        in_dir.mkdir()
-        (in_dir / "a.warc.gz").write_bytes(build_warc(_pages(4)))
-        (in_dir / "b.warc.gz").write_bytes(build_warc(_pages(2)))
-        # simulate the OLD layout: a flat append under records/
-        read_warc(spark, [str(in_dir / "a.warc.gz")]).write.parquet(str(store))
-        assert any(f.startswith("part-") for f in os.listdir(store))
-
-        # a new-style start migrates, THEN the new batch appends
-        migrate_flat_store(spark, str(store))
-        drop_orphan_batches(spark, str(store), {"legacy"})
-        read_warc(spark, [str(in_dir / "b.warc.gz")]).write.parquet(
-            str(store / "ingest_batch=b1")
-        )
-        children = sorted(f for f in os.listdir(store) if not f.startswith("."))
-        assert "ingest_batch=legacy" in children
-        assert not any(c.startswith("part-") for c in children)
-        assert spark.read.parquet(str(store)).count() == 6  # 4 legacy + 2 new
-        # a SECOND start leaves everything alone (legacy never orphaned)
-        assert migrate_flat_store(spark, str(store)) == 0
-        assert drop_orphan_batches(spark, str(store), {"legacy", "b1"}) == []
-        assert spark.read.parquet(str(store)).count() == 6
-
     def test_corrupt_file_ledger_raises_and_keeps_batches(
         self, spark, tmp_path, corrupt_parquet
     ):
