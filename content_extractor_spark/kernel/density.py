@@ -43,6 +43,8 @@ CONTAINER_PRIORS = {
     "body": 0.7,  # catch-all fallback, discouraged vs tighter containers
 }
 
+MIN_CHARS = 80  # shortest container, and shortest pruned content, kept
+
 _ID_CLASS_BOOST = ("content", "article", "main", "body", "text", "story", "post")
 _ID_CLASS_PENALTY = (
     "nav", "footer", "sidebar", "comment", "ad-", "ads", "banner", "share",
@@ -87,7 +89,7 @@ def _name_signal(el: Element) -> float:
     return boost
 
 
-def score_candidates(root: Element, min_chars: int = 80):
+def score_candidates(root: Element):
     """Yield (score, element) for plausible content containers."""
     depth_of = {id(root): 0}
     stack = [root]
@@ -104,7 +106,7 @@ def score_candidates(root: Element, min_chars: int = 80):
         if prior is None:
             continue
         total, linked = _subtree_stats(el)
-        if total < min_chars:
+        if total < MIN_CHARS:
             continue
         link_density = linked / total if total else 1.0
         depth_discount = 1.0 + 0.02 * min(d, 10)
@@ -113,10 +115,10 @@ def score_candidates(root: Element, min_chars: int = 80):
         yield score, el
 
 
-def find_main_content(root: Element, min_chars: int = 80) -> Optional[Element]:
+def find_main_content(root: Element) -> Optional[Element]:
     best: Optional[Element] = None
     best_score = 0.0
-    for score, el in score_candidates(root, min_chars):
+    for score, el in score_candidates(root):
         if score > best_score:
             best, best_score = el, score
     return best
@@ -142,15 +144,15 @@ def _prune_noise(el: Element) -> None:
         _prune_noise(child)
 
 
-def extract_main_content(html: str, min_chars: int = 80) -> Optional[dict]:
+def extract_main_content(html: str) -> Optional[dict]:
     """Profile-free extraction: {'title': str|None, 'content': str} or None."""
     doc = parse(html)
-    main = find_main_content(doc, min_chars)
+    main = find_main_content(doc)
     if main is None:
         return None
     _prune_noise(main)
     content = main.text()
-    if len(content) < min_chars:
+    if len(content) < MIN_CHARS:
         return None
     title = None
     from .css import select_first

@@ -45,7 +45,11 @@ for _k in range(8):
 
 
 class _BitReader:
-    """MSB-first entropy-coded segment reader with byte unstuffing."""
+    """MSB-first entropy-coded segment reader with byte unstuffing.
+
+    A scan that needs a bit past the end of the data, or past a marker
+    it has not been told to skip, is truncated or corrupt: ``bit``
+    raises instead of inventing zero bits."""
 
     __slots__ = ("data", "pos", "acc", "nbits", "marker")
 
@@ -60,9 +64,7 @@ class _BitReader:
         d = self.data
         while self.nbits <= 24 and self.marker is None:
             if self.pos >= len(d):
-                self.acc = (self.acc << 8) & 0xFFFFFFFF
-                self.nbits += 8  # pad with zeros at EOF (spec behavior)
-                continue
+                return
             b = d[self.pos]
             if b == 0xFF:
                 nxt = d[self.pos + 1] if self.pos + 1 < len(d) else 0xD9
@@ -83,7 +85,7 @@ class _BitReader:
         if self.nbits == 0:
             self._fill()
             if self.nbits == 0:
-                return 0
+                raise ValueError("entropy data ended before the last MCU")
         self.nbits -= 1
         return (self.acc >> self.nbits) & 1
 
@@ -247,6 +249,12 @@ def _decode_scan(data, pos, frame, scan, qt, huff_dc, huff_ac, dri):
         return None
     mcux = (w + 8 * hmax - 1) // (8 * hmax)
     mcuy = (h + 8 * vmax - 1) // (8 * vmax)
+    # every block costs at least 2 bits (a 1-bit DC code and a 1-bit
+    # EOB): refuse a declared area the remaining bytes cannot cover
+    # before allocating planes for it
+    blocks = mcux * mcuy * sum(c["h"] * c["v"] for c, _, _ in scan)
+    if (len(data) - pos) * 8 < 2 * blocks:
+        return None
     planes = []
     for comp, _, _ in scan:
         pw, ph = mcux * 8 * comp["h"], mcuy * 8 * comp["v"]

@@ -421,7 +421,7 @@ def _brace_depth_at(text: str, pos: int) -> int:
     return depth
 
 
-def _hocon_file_to_dict(path: str, seen=None) -> dict:
+def _hocon_file_to_dict(path: str, seen: set) -> dict:
     """One HOCON file -> dict: strip `include` lines (top-level subset),
     recursively load and merge them (file body wins), mark + later
     resolve substitutions.
@@ -429,7 +429,6 @@ def _hocon_file_to_dict(path: str, seen=None) -> dict:
     `seen` tracks the CURRENT include path only (removed on return), so
     diamond includes — two siblings including the same file — are legal
     while true cycles still fail loud."""
-    seen = set() if seen is None else seen
     rp = str(Path(path).resolve())
     if rp in seen:
         raise UnsupportedHoconError(f"{path}: include cycle")
@@ -474,7 +473,7 @@ def load_profile_hocon(path: str) -> ProfileConfig:
     ${path} / ${?path} substitutions resolved against the merged
     object. Anything beyond (value concatenation, env fallbacks,
     self-referential `+=`) fails loudly with UnsupportedHoconError."""
-    data = _hocon_file_to_dict(path)
+    data = _hocon_file_to_dict(path, set())
     data = _resolve_substitutions(data, data, path)
     return profile_from_dict(data)
 

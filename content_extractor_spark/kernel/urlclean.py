@@ -118,7 +118,7 @@ def _remove_dot_segments(path: str) -> str:
     return norm or "/"
 
 
-def canonicalize_url(url, drop_tracking_params: bool = True):
+def canonicalize_url(url):
     """Full RFC 3986 syntax-based normalization for crawl-frontier url
     identity (§6.2.2): lowercase scheme+host, strip default ports and
     fragments, resolve dot-segments, percent-decode unreserved chars /
@@ -163,10 +163,7 @@ def canonicalize_url(url, drop_tracking_params: bool = True):
     if query:
         kept = [
             kv for kv in query.split("&")
-            if not (
-                drop_tracking_params
-                and kv.split("=", 1)[0].lower() in _TRACKING_PARAMS
-            )
+            if kv.split("=", 1)[0].lower() not in _TRACKING_PARAMS
         ]
         query = "&".join(_norm_pct(kv) for kv in kept)
     return urlunsplit((scheme, netloc, path, query, ""))

@@ -202,7 +202,6 @@ def iter_warc_records(data: bytes) -> Iterator[WarcRecord]:
 def build_warc(
     pages: List[Tuple[str, str, bytes]],
     gzip_members: bool = True,
-    warc_date: str = "2021-07-01T00:00:00Z",
     with_requests: bool = False,
 ) -> bytes:
     """Synthesize a .warc(.gz) from (record_id, url, html_bytes)
@@ -213,6 +212,7 @@ def build_warc(
     response (msgtype=request HTTP message), matching the full Common
     Crawl archive layout so request-record handling is testable."""
     out = io.BytesIO()
+    warc_date = "2021-07-01T00:00:00Z"
 
     def _emit(record: bytes) -> None:
         if gzip_members:

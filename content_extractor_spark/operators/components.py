@@ -29,12 +29,9 @@ from ..session import materialize
 MAX_ITER = 25
 
 
-def connected_components(
-    edges: DataFrame,
-    a_col: str = "a",
-    b_col: str = "b",
-) -> DataFrame:
-    """(node, comp): comp = min node id reachable from node.
+def connected_components(edges: DataFrame) -> DataFrame:
+    """(node, comp) over the (a, b) pairs of `edges`: comp = min node id
+    reachable from node.
 
     Nodes are the union of both edge endpoints; isolated nodes (absent
     from `edges`) are absent from the result by construction. Raises
@@ -49,12 +46,8 @@ def connected_components(
         edges.select(
             F.explode(
                 F.array(
-                    F.struct(
-                        F.col(a_col).alias("src"), F.col(b_col).alias("dst")
-                    ),
-                    F.struct(
-                        F.col(b_col).alias("src"), F.col(a_col).alias("dst")
-                    ),
+                    F.struct(F.col("a").alias("src"), F.col("b").alias("dst")),
+                    F.struct(F.col("b").alias("src"), F.col("a").alias("dst")),
                 )
             ).alias("e")
         )
@@ -112,11 +105,9 @@ def connected_components(
     )
 
 
-def dedup_groups(
-    edges: DataFrame, a_col: str = "a", b_col: str = "b"
-) -> DataFrame:
+def dedup_groups(edges: DataFrame) -> DataFrame:
     """Cluster candidate pairs: (comp, members, keep) — keep = min id."""
-    comps = connected_components(edges, a_col, b_col)
+    comps = connected_components(edges)
     return (
         comps.groupBy("comp")
         .agg(

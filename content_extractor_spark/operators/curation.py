@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .dedup_families import portable_hash
+
 # dialect-portable patterns (same semantics in Java regex and RE2)
 EMAIL_RE = r"[A-Za-z0-9.+_-]+@[A-Za-z0-9-]+\.[A-Za-z0-9.-]+"
 PHONE_RE = r"\+?[0-9][0-9 ()/-]{6,}[0-9]"
@@ -103,11 +105,9 @@ def _luhn_valid(cand: Column) -> Column:
     return let_bound(F.reverse(F.regexp_replace(cand, r"[^0-9]", "")), fold)
 
 
-def pii_scrub(
-    df: DataFrame, text_col: str = "text", out_col: str = "scrubbed"
-) -> DataFrame:
+def pii_scrub(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Redact emails, mod-97-valid IBANs, IPv4 addresses, Luhn-valid
-    payment-card numbers and phone-ish digit runs.
+    payment-card numbers and phone-ish digit runs into ``scrubbed``.
 
     Order matters: emails first (else the phone pattern eats digit
     runs inside addresses); IBANs and cards BEFORE phones, validated
@@ -169,68 +169,58 @@ def pii_scrub(
         n_ips.cast("int").alias("n_ips"),
         n_cards.cast("int").alias("n_cards"),
         n_phones.cast("int").alias("n_phones"),
-        step4.alias(out_col),
+        step4.alias("scrubbed"),
     )
 
 
-def _shingle_col(text: Column, n: int) -> Column:
-    """Word n-grams for shingle joins — deliberately NOT array_distinct:
-    per-doc duplicate shingles cannot change decontaminate's output (the
-    benchmark side is .distinct()ed after explode; doc-side hits are
-    .distinct()ed on the id), and array_distinct on a string array is
-    the measured hot spot (sf1.0 bench side: 3.5s with it, 0.6s
-    without — it is O(n²) with per-element UTF8String comparisons)."""
-    from .textstats import _word_ngrams
-
-    return _word_ngrams(text, n)
-
-
 def decontaminate(
-    docs: DataFrame,
-    benchmark: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 8,
+    docs: DataFrame, benchmark: DataFrame, n: int = 8
 ) -> DataFrame:
-    """Flag documents sharing any word n-gram with a benchmark set.
+    """Flag documents (doc_id, text) sharing any word n-gram with a
+    benchmark set's text.
 
     The standard eval-decontamination pass (n=8..13 in practice): a doc
     that contains any benchmark n-gram verbatim is `contaminated` and
     must be dropped before training. Benchmark shingles are distinct
     and small → broadcast semi join; doc shingles explode map-side.
+
+    The n-grams are deliberately NOT array_distinct: per-doc duplicate
+    shingles cannot change the output (the benchmark side is distinct
+    after the explode, doc-side hits are distinct on the id), and
+    array_distinct on a string array is the measured hot spot (sf1.0
+    bench side: 3.5s with it, 0.6s without — it is O(n²) with
+    per-element UTF8String comparisons).
     """
+    from .textstats import _word_ngrams
+
     doc_sh = docs.select(
-        F.col(id_col), F.explode(_shingle_col(F.col(text_col), n)).alias("_sh")
+        "doc_id", F.explode(_word_ngrams(F.col("text"), n)).alias("_sh")
     )
     bench_sh = benchmark.select(
-        F.explode(_shingle_col(F.col(text_col), n)).alias("_sh")
+        F.explode(_word_ngrams(F.col("text"), n)).alias("_sh")
     ).distinct()
     hits = (
         doc_sh.join(F.broadcast(bench_sh), "_sh", "left_semi")
-        .select(id_col)
+        .select("doc_id")
         .distinct()
         .withColumn("contaminated", F.lit(True))
     )
     return (
-        docs.select(id_col)
-        .join(hits, id_col, "left")
+        docs.select("doc_id")
+        .join(hits, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce(F.col("contaminated"), F.lit(False)).alias("contaminated"),
         )
     )
 
 
 def pack_sequences(
-    df: DataFrame,
-    seq_len: int,
-    shard_col: str = "source",
-    id_col: str = "doc_id",
-    text_col: str = "text",
+    df: DataFrame, seq_len: int, shard_col: str = "source"
 ) -> DataFrame:
-    """Contiguous sequence packing within each shard.
+    """Contiguous sequence packing of (doc_id, text) within each shard.
 
-    Documents are laid end-to-end in (shard, id) order; a document
+    Documents are laid end-to-end in (shard, doc_id) order; a document
     belongs to the pack in which it STARTS (floor(preceding_tokens /
     seq_len)). Returns one row per (shard, pack_id) with doc/token
     counts — the unit a trainer would materialize as one example.
@@ -243,15 +233,15 @@ def pack_sequences(
     """
     # null-safe: size(split(NULL)) would yield -1 and corrupt every
     # cumulative sum after the null row
-    t = F.coalesce(F.trim(F.col(text_col)), F.lit(""))
+    t = F.coalesce(F.trim(F.col("text")), F.lit(""))
     toks = F.when(t == "", F.lit(0)).otherwise(F.size(F.split(t, r"\s+")))
     w = (
         Window.partitionBy(shard_col)
-        .orderBy(F.col(id_col).asc())
+        .orderBy(F.col("doc_id").asc())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     with_pack = df.select(
-        F.col(shard_col), F.col(id_col), toks.alias("_tok")
+        F.col(shard_col), F.col("doc_id"), toks.alias("_tok")
     ).withColumn(
         "pack_id",
         F.floor((F.sum("_tok").over(w) - F.col("_tok")) / seq_len).cast("int"),
@@ -259,21 +249,16 @@ def pack_sequences(
     return with_pack.groupBy(shard_col, "pack_id").agg(
         F.count("*").alias("n_docs"),
         F.sum("_tok").cast("bigint").alias("n_tokens"),
-        F.min(id_col).alias("first_doc"),
-        F.max(id_col).alias("last_doc"),
+        F.min("doc_id").alias("first_doc"),
+        F.max("doc_id").alias("last_doc"),
     )
 
 
-def train_val_split(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    val_pct: int = 5,
-) -> DataFrame:
-    """Deterministic, engine-portable split by md5(id) — stable across
-    reruns, engines and cluster sizes (never rand(), never a sample)."""
-    h = F.conv(
-        F.substring(F.md5(F.col(id_col).cast("string")), 1, 14), 16, 10
-    ).cast("bigint")
+def train_val_split(df: DataFrame, val_pct: int = 5) -> DataFrame:
+    """Deterministic, engine-portable split by md5(doc_id) — stable
+    across reruns, engines and cluster sizes (never rand(), never a
+    sample)."""
+    h = portable_hash(F.col("doc_id").cast("string"))
     return df.withColumn(
         "split",
         F.when(h % 100 < 100 - val_pct, F.lit("train")).otherwise(F.lit("val")),
@@ -283,25 +268,22 @@ def train_val_split(
 def stratified_sample(
     df: DataFrame,
     group_col: str = "lang",
-    id_col: str = "doc_id",
     permille: int = 100,
     per_group_cap: int | None = None,
 ) -> DataFrame:
     """Deterministic stratified sampling: keep ~permille/1000 of each
-    group, selected by an md5 hash of the id (never rand() — re-runs
+    group, selected by an md5 hash of doc_id (never rand() — re-runs
     and engines agree row-for-row).
 
     Map-only (the hash predicate fuses into the scan) unless
     `per_group_cap` is set, which adds one window over the group to
     hard-cap each stratum (hash-ordered, so still deterministic).
     """
-    h = F.conv(
-        F.substring(F.md5(F.col(id_col).cast("string")), 1, 14), 16, 10
-    ).cast("bigint")
+    h = portable_hash(F.col("doc_id").cast("string"))
     out = df.where(h % 1000 < permille)
     if per_group_cap is not None:
         w = Window.partitionBy(F.col(group_col)).orderBy(
-            (h % 1000).asc(), F.col(id_col).asc()
+            (h % 1000).asc(), F.col("doc_id").asc()
         )
         out = (
             out.withColumn("_rn", F.row_number().over(w))
@@ -320,40 +302,29 @@ _NBSP = "\u00a0"
 _CONTROLS = "[\\x00-\\x08\\x0b\\x0c\\x0e-\\x1f]"
 
 
-def normalize_text(
-    df: DataFrame,
-    text_col: str = "text",
-    out_col: str = "text_norm",
-    lowercase: bool = False,
-) -> DataFrame:
-    """Canonical text cleanup for training corpora: curly quotes ->
-    ASCII, en/em-dash -> hyphen, NBSP -> space, control chars stripped,
-    whitespace collapsed, trimmed. Optionally lowercased.
+def normalize_text(df: DataFrame) -> DataFrame:
+    """Canonical cleanup of ``text`` into ``text_norm`` for training
+    corpora: curly quotes -> ASCII, en/em-dash -> hyphen, NBSP -> space,
+    control chars stripped, whitespace collapsed, trimmed.
 
     Map-only regexp_replace chain — fuses into the scan's whole-stage
     codegen, zero shuffle; every pattern is dialect-portable so the
     DuckDB oracle reproduces the output byte-for-byte.
     """
-    c = F.col(text_col)
+    c = F.col("text")
     c = F.regexp_replace(c, _CURLY_SINGLE, "\'")
     c = F.regexp_replace(c, _CURLY_DOUBLE, '"')
     c = F.regexp_replace(c, _DASHES, "-")
     c = F.regexp_replace(c, _NBSP, " ")
     c = F.regexp_replace(c, _CONTROLS, "")
     c = F.trim(F.regexp_replace(c, r"\s+", " "))
-    if lowercase:
-        c = F.lower(c)
-    return df.withColumn(out_col, c)
+    return df.withColumn("text_norm", c)
 
 
-def snapshot_diff(
-    old: DataFrame,
-    new: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """CDC between two corpus snapshots: (id, change) where change in
-    {added, removed, changed, unchanged} by content digest.
+def snapshot_diff(old: DataFrame, new: DataFrame) -> DataFrame:
+    """CDC between two (doc_id, text) corpus snapshots: (doc_id, change)
+    where change in {added, removed, changed, unchanged} by content
+    digest.
 
     One full outer join on the id — the incremental-crawl primitive
     that decides which documents re-enter the pipeline (the reference's
@@ -365,14 +336,14 @@ def snapshot_diff(
     snapshot, and md5(NULL) = NULL must not masquerade as absence.
     """
     o = old.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         F.lit(True).alias("_in_old"),
-        F.md5(F.col(text_col)).alias("_od"),
+        F.md5(F.col("text")).alias("_od"),
     )
     n = new.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         F.lit(True).alias("_in_new"),
-        F.md5(F.col(text_col)).alias("_nd"),
+        F.md5(F.col("text")).alias("_nd"),
     )
     joined = o.join(n, "id", "full_outer")
     change = (
@@ -381,19 +352,14 @@ def snapshot_diff(
         .when(F.col("_od").eqNullSafe(F.col("_nd")), F.lit("unchanged"))
         .otherwise(F.lit("changed"))
     )
-    return joined.select(F.col("id").alias(id_col), change.alias("change"))
+    return joined.select(F.col("id").alias("doc_id"), change.alias("change"))
 
 
-def chunk_documents(
-    df: DataFrame,
-    target_tokens: int = 32,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def chunk_documents(df: DataFrame, target_tokens: int = 32) -> DataFrame:
     """Fixed-window token chunking (training/RAG segment prep): each
-    document becomes consecutive `target_tokens`-token chunks, the last
-    chunk keeping the tail. Deterministic: chunk k = tokens
-    [k*target, (k+1)*target).
+    (doc_id, text) document becomes consecutive `target_tokens`-token
+    chunks, the last chunk keeping the tail. Deterministic: chunk k =
+    tokens [k*target, (k+1)*target).
 
     Pure array expressions (split/sequence/slice/array_join) + one
     explode — MAP-ONLY, zero shuffle, so it runs at scan speed on
@@ -406,7 +372,7 @@ def chunk_documents(
     from .textstats import let_bound
 
     toks = F.filter(
-        F.split(F.coalesce(F.col(text_col), F.lit("")), r"\s+"),
+        F.split(F.coalesce(F.col("text"), F.lit("")), r"\s+"),
         lambda x: x != "",
     )
 
@@ -433,20 +399,14 @@ def chunk_documents(
         ))
 
     chunks = let_bound(toks, gen)
-    return df.select(F.col(id_col), F.explode(chunks).alias("c")).select(
-        id_col, "c.chunk_idx", "c.chunk_text", "c.n_tokens"
+    return df.select("doc_id", F.explode(chunks).alias("c")).select(
+        "doc_id", "c.chunk_idx", "c.chunk_text", "c.n_tokens"
     )
 
 
-def weighted_source_sample(
-    df: DataFrame,
-    weights: DataFrame,
-    source_col: str = "source",
-    id_col: str = "doc_id",
-    weight_col: str = "permille",
-) -> DataFrame:
-    """Training-mix sampling: keep ~weights[source]/1000 of each
-    source's documents, deterministically (md5 of the id — never
+def weighted_source_sample(df: DataFrame, weights: DataFrame) -> DataFrame:
+    """Training-mix sampling: keep ~weights[source].permille/1000 of
+    each source's documents, deterministically (md5 of doc_id — never
     rand()). Sources missing from the weights table are dropped (weight
     0), the usual semantics of an explicit mixing recipe.
 
@@ -454,15 +414,13 @@ def weighted_source_sample(
     predicate evaluates map-side, so the whole operator is one
     broadcast join with no shuffle of the corpus.
     """
-    h = F.conv(
-        F.substring(F.md5(F.col(id_col).cast("string")), 1, 14), 16, 10
-    ).cast("bigint")
+    h = portable_hash(F.col("doc_id").cast("string"))
     w = weights.select(
-        F.col(source_col).alias("_w_src"),
-        F.col(weight_col).alias("_w_permille"),
+        F.col("source").alias("_w_src"),
+        F.col("permille").alias("_w_permille"),
     )
     return (
-        df.join(F.broadcast(w), F.col(source_col) == F.col("_w_src"), "inner")
+        df.join(F.broadcast(w), F.col("source") == F.col("_w_src"), "inner")
         .where(h % 1000 < F.col("_w_permille"))
         .drop("_w_src", "_w_permille")
     )

@@ -20,8 +20,6 @@ Scale notes:
 
 from __future__ import annotations
 
-from typing import Optional
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -37,14 +35,11 @@ def repeated_window_spans(
     df: DataFrame,
     window: int = 50,
     stride: int = 1,
-    min_count: int = 2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Exact SUBSTRING-dedup candidates, the Spark shape of the
     suffix-array approach in Lee et al. 2022 ("Deduplicating Training
     Data Makes Language Models Better"): flag every ``window``-token
-    span whose exact content occurs at least ``min_count`` times
+    span whose exact content occurs at least twice
     anywhere in the corpus (cross-document or repeated within one).
     Returns ``(doc_id, start, digest, occurrences)`` — start is the
     1-based token position; callers mask or cut the flagged spans.
@@ -57,10 +52,10 @@ def repeated_window_spans(
     the spans does the corpus-wide matching. No suffix array, no sort
     of the whole corpus — the digest shuffle is the only wide stage.
     """
-    toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-    base = df.select(F.col(id_col), toks.alias("_toks"))
+    toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
+    base = df.select("doc_id", toks.alias("_toks"))
     spans = base.select(
-        id_col,
+        "doc_id",
         F.explode(
             F.when(
                 F.size(F.col("_toks")) >= window,
@@ -73,7 +68,7 @@ def repeated_window_spans(
         ).alias("start"),
         F.col("_toks"),
     ).select(
-        id_col,
+        "doc_id",
         "start",
         F.md5(
             F.concat_ws(" ", F.slice(F.col("_toks"), F.col("start"), window))
@@ -93,38 +88,21 @@ def repeated_window_spans(
     counts = (
         spans.groupBy("digest")
         .agg(F.count("*").alias("occurrences"))
-        .where(F.col("occurrences") >= min_count)
+        .where(F.col("occurrences") >= 2)
     )
     return spans.join(counts, "digest").select(
-        id_col, "start", "digest", "occurrences"
+        "doc_id", "start", "digest", "occurrences"
     )
 
 
 # -- shingling -------------------------------------------------------------------
 
 
-def word_shingles(text_col: str = "text", k: int = 3) -> Column:
+def word_shingles(k: int) -> Column:
     """Distinct k-word shingles of lower(text), array<string>."""
-    from .textstats import let_bound
+    from .textstats import _word_ngrams
 
-    toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-
-    def gen(t):
-        n = F.size(t)
-        shingles = F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), n - (k - 1)),
-                lambda i: F.concat_ws(" ", F.slice(t, i, k)),
-            )
-        )
-        # guard: sequence(1, x<1) would generate a DESCENDING range
-        return F.when(n >= k, shingles).otherwise(
-            F.array().cast("array<string>")
-        )
-
-    # let_bound: tokenize once per row — a free-variable `toks` inside
-    # the transform lambda would re-split the text per position
-    return let_bound(toks, gen)
+    return F.array_distinct(_word_ngrams(F.col("text"), k))
 
 
 # -- MinHash + LSH ---------------------------------------------------------------
@@ -143,39 +121,28 @@ def minhash_bands(sig_col: Column, num_bands: int = 4,
     """Band hashes: array of (hash of the band's minhash slice)."""
     return F.transform(
         F.sequence(F.lit(0), F.lit(num_bands - 1)),
-        lambda b: F.conv(
-            F.substring(
-                F.md5(
-                    F.concat_ws(
-                        ",",
-                        F.transform(
-                            F.slice(sig_col, b * rows_per_band + 1, rows_per_band),
-                            lambda x: x.cast("string"),
-                        ),
-                    )
+        lambda b: portable_hash(
+            F.concat_ws(
+                ",",
+                F.transform(
+                    F.slice(sig_col, b * rows_per_band + 1, rows_per_band),
+                    lambda x: x.cast("string"),
                 ),
-                1, 14,
-            ),
-            16, 10,
-        ).cast("bigint"),
+            )
+        ),
     )
 
 
-def minhash_signatures_df(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_perm: int = 16,
-    k: int = 3,
-) -> DataFrame:
-    """(id, sig array<bigint>) via explode + partial-aggregate min.
+def minhash_signatures_df(df: DataFrame, num_perm: int = 16) -> DataFrame:
+    """(id, sig array<bigint>) over 3-word shingles of (doc_id, text),
+    via explode + partial-aggregate min.
 
     Linear permutations of one base hash per shingle: one shingle-hash
     per exploded row, `num_perm` MIN aggregates with map-side combine —
     no higher-order-function re-evaluation (Catalyst would inline array
     lambdas into each of the permutation expressions, recomputing the
     shingle hashing per permutation) and no giant arrays.
-    Rows with fewer than k tokens produce no shingles and are dropped.
+    Rows with fewer than 3 tokens produce no shingles and are dropped.
     num_perm <= 64: the largest multiplier (2*63+1)=127 times the
     56-bit base hash stays below 2^63; 65 permutations would silently
     wrap negative in BOTH engines (exact bound, not a guess).
@@ -185,8 +152,7 @@ def minhash_signatures_df(
             "num_perm <= 64: (2j+1)*hash must stay within int64"
         )
     ex = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(word_shingles(text_col, k)).alias("s"),
+        F.col("doc_id").alias("id"), F.explode(word_shingles(3)).alias("s")
     )
     h = portable_hash(F.col("s"))
     aggs = [
@@ -203,8 +169,6 @@ def minhash_signatures_df(
 
 def minhash_lsh_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     num_perm: int = 16,
     num_bands: int = 4,
     max_bucket: int = 64,
@@ -221,7 +185,7 @@ def minhash_lsh_pairs(
     band columns), so the materialization is slim even at corpus scale.
     """
     rows = num_perm // num_bands
-    sigs = minhash_signatures_df(df, text_col, id_col, num_perm)
+    sigs = minhash_signatures_df(df, num_perm)
     banded = sigs.select(
         F.col("id"),
         F.posexplode(
@@ -303,13 +267,9 @@ def simhash(text_col: str = "text", bits: int = 16) -> Column:
     ).cast("bigint")
 
 
-def simhash_signatures_df(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bits: int = 16,
-) -> DataFrame:
-    """(id, sig) with values IDENTICAL to :func:`simhash` — the
+def simhash_signatures_df(df: DataFrame, bits: int = 16) -> DataFrame:
+    """(id, sig) of (doc_id, text) with values IDENTICAL to
+    :func:`simhash` — the
     scalable shape for corpus runs (bits <= 64; bit 63 lands in the
     int64 sign position, two's complement).
 
@@ -325,11 +285,11 @@ def simhash_signatures_df(
     disagreed on NULL-text corpora); empty text tokenizes to [""] in
     both and agrees.
     """
-    toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-    nonnull = df.where(F.col(text_col).isNotNull())
+    toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
+    nonnull = df.where(F.col("text").isNotNull())
     if bits > 64:
         raise ValueError("simhash signatures are int64: bits <= 64")
-    ex = nonnull.select(F.col(id_col).alias("id"), F.explode(toks).alias("t"))
+    ex = nonnull.select(F.col("doc_id").alias("id"), F.explode(toks).alias("t"))
     h = portable_hash(F.col("t"))
     aggs = [
         F.sum(
@@ -344,8 +304,8 @@ def simhash_signatures_df(
         bit_val = -(2 ** 63) if b == 63 else 2 ** b
         bit = F.when(F.col(f"v{b}") > 0, F.lit(bit_val)).otherwise(F.lit(0))
         sig = bit if sig is None else sig + bit
-    null_rows = df.where(F.col(text_col).isNull()).select(
-        F.col(id_col).alias("id"), F.lit(None).cast("bigint").alias("sig")
+    null_rows = df.where(F.col("text").isNull()).select(
+        F.col("doc_id").alias("id"), F.lit(None).cast("bigint").alias("sig")
     )
     return votes.select("id", sig.cast("bigint").alias("sig")).unionByName(
         null_rows
@@ -354,8 +314,6 @@ def simhash_signatures_df(
 
 def simhash_hamming_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     bits: int = 16,
     bands: int = 4,
     max_hamming: int = 2,
@@ -377,7 +335,7 @@ def simhash_hamming_pairs(
     # scalable signature path (one exploded pass, not `bits` lambda
     # passes per row); NULL-sig rows (NULL text) drop out of banding
     # via the IS NOT NULL filter — they cannot near-dup anything
-    sigs = simhash_signatures_df(df, text_col, id_col, bits).where(
+    sigs = simhash_signatures_df(df, bits).where(
         F.col("sig").isNotNull()
     )
     return signature_hamming_pairs(sigs, bits, bands, max_hamming)
@@ -388,8 +346,6 @@ def signature_hamming_pairs(
     bits: int,
     bands: int,
     max_hamming: int,
-    id_col: str = "id",
-    sig_col: str = "sig",
 ) -> DataFrame:
     """(a, b, hamming) pairs within Hamming <= max_hamming over ANY
     (id, sig) bit-signature frame — the banding engine shared by text
@@ -406,12 +362,12 @@ def signature_hamming_pairs(
     band_bits = bits // bands
     mask = (1 << band_bits) - 1
     banded = sigs.select(
-        F.col(id_col).alias("id"), F.col(sig_col).alias("sig"),
+        "id", "sig",
         F.explode(
             F.array(*[
                 F.struct(
                     F.lit(j).alias("band_idx"),
-                    F.shiftright(F.col(sig_col), j * band_bits)
+                    F.shiftright(F.col("sig"), j * band_bits)
                     .bitwiseAND(F.lit(mask)).alias("band_val"),
                 )
                 for j in range(bands)
@@ -443,64 +399,26 @@ def signature_hamming_pairs(
 
 def ngram_jaccard_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     k: int = 3,
     threshold: float = 0.8,
-    block_col: Optional[str] = None,
-    max_df: Optional[int] = None,
-    max_posting: Optional[int] = None,
 ) -> DataFrame:
-    """Exact pairwise Jaccard over k-word shingle sets, via a shingle
-    inverted-index join (no cross join): pairs with jaccard >= threshold.
+    """Exact pairwise Jaccard over the k-word shingle sets of (doc_id,
+    text), via a shingle inverted-index join (no cross join): pairs with
+    jaccard >= threshold.
 
-    `block_col` optionally restricts comparisons within blocks (a
-    blocking key such as language or a fingerprint bucket) — at corpus
-    scale you never run this unblocked.
-
-    Scale guards (one boilerplate shingle shared by 10^6 docs would
-    otherwise emit ~10^12 intermediate pairs):
-
-    * ``max_df`` — drop shingles whose document frequency (within the
-      block) exceeds it, BEFORE sizes are computed: a stop-shingle
-      carries no Jaccard signal and all the blow-up. Jaccard stays
-      EXACT over the retained shingle space (both the intersection and
-      the set sizes see the same filtered universe).
-    * ``max_posting`` — hard cap per posting list (window top-N by id,
-      the same pattern as :func:`minhash_lsh_pairs`'s ``max_bucket``).
-      This truncation can only UNDERCOUNT intersections, so it loses
-      recall but never admits a false pair above the threshold.
-
-    Both default to None (exact, uncapped) for oracle parity at test
-    scale; at corpus scale always set ``max_df`` (e.g. 10_000) and keep
-    ``max_posting`` as the backstop.
+    Exact and uncapped: one boilerplate shingle shared by n docs emits
+    n² intermediate pairs, so at corpus scale block the input first
+    (e.g. by language or a fingerprint bucket) and drop stop-shingles.
     """
     sh = df.select(
-        F.col(id_col).alias("id"),
-        *( [F.col(block_col).alias("blk")] if block_col else [] ),
-        F.explode(word_shingles(text_col, k)).alias("shingle"),
+        F.col("doc_id").alias("id"),
+        F.explode(word_shingles(k)).alias("shingle"),
     ).distinct()
-    join_keys = ["shingle"] + (["blk"] if block_col else [])
-    if max_df is not None:
-        dfreq = F.count("*").over(
-            Window.partitionBy(*[F.col(c) for c in join_keys])
-        )
-        sh = sh.withColumn("_df", dfreq).where(
-            F.col("_df") <= max_df
-        ).drop("_df")
     sizes = sh.groupBy("id").agg(F.count("*").alias("sz"))
-    posting = sh
-    if max_posting is not None:
-        w = Window.partitionBy(*[F.col(c) for c in join_keys]).orderBy("id")
-        posting = (
-            posting.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") <= max_posting)
-            .drop("_rn")
-        )
-    a = posting.select(*(F.col(c) for c in join_keys), F.col("id").alias("a"))
-    b = posting.select(*(F.col(c) for c in join_keys), F.col("id").alias("b"))
+    a = sh.select("shingle", F.col("id").alias("a"))
+    b = sh.select("shingle", F.col("id").alias("b"))
     inter = (
-        a.join(b, join_keys)
+        a.join(b, "shingle")
         .where(F.col("a") < F.col("b"))
         .groupBy("a", "b")
         .agg(F.count("*").alias("inter"))

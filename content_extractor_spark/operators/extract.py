@@ -19,6 +19,7 @@ from typing import Dict, Iterator
 import pyarrow as pa
 
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
     IntegerType,
@@ -68,30 +69,13 @@ _SPAN_ARRAY_DDL = (
     "array<struct<kind:string,text:string,media_ref:string,offset:int>>"
 )
 
-_ARROW_SCHEMA = pa.schema(
-    [
-        pa.field("doc_id", pa.string()),
-        pa.field("url", pa.string()),
-        pa.field("url_id", pa.string()),
-        pa.field("host", pa.string()),
-        pa.field("etag", pa.string()),
-        pa.field("status", pa.string()),
-        pa.field("profile_name", pa.string()),
-        pa.field("title", pa.string()),
-        pa.field("summary", pa.string()),
-        pa.field("content", pa.string()),
-        pa.field("date", pa.string()),
-        pa.field("tags", pa.list_(pa.string())),
-        pa.field("image_url", pa.string()),
-        pa.field("content_hash", pa.int64()),
-        # NOTE: no `spans` here — the output span sequence is DERIVED
-        # JVM-side from the scalar entry fields (see derive_spans_col),
-        # so the Arrow channel never carries the content twice
-        pa.field("n_input_spans", pa.int32()),
-        pa.field("n_media_spans", pa.int32()),
-        pa.field("error", pa.string()),
-    ]
+# the Python stage's output: no `spans` — the output span sequence is
+# DERIVED JVM-side from the scalar entry fields (see derive_spans_col),
+# so the Arrow channel never carries the content twice
+_NARROW_SCHEMA = StructType(
+    [f for f in EXTRACT_SCHEMA.fields if f.name != "spans"]
 )
+_ARROW_SCHEMA = to_arrow_schema(_NARROW_SCHEMA)
 
 
 def _density_fallback(html: str) -> "AnalysisResult":
@@ -336,10 +320,7 @@ def extract_entries(
                 target_pattern, target_zone,
             )
 
-    narrow = StructType(
-        [f for f in EXTRACT_SCHEMA.fields if f.name != "spans"]
-    )
-    out = docs.mapInArrow(run, schema=narrow)
+    out = docs.mapInArrow(run, schema=_NARROW_SCHEMA)
     if not derive_spans:
         # caller defers span assembly until after its own exchanges so
         # the shuffles never carry the assembled duplicate of

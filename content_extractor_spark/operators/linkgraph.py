@@ -32,22 +32,18 @@ HREF_RE = r'href="([^"]*)"'
 HOST_RE = r"^https?://([^/]+)"
 
 
-def extract_host_links(
-    docs: DataFrame,
-    html_col: str = "html",
-    src_host_col: str = "host",
-) -> DataFrame:
+def extract_host_links(docs: DataFrame) -> DataFrame:
     """Distinct (src, dst) host edges from anchor hrefs in the HTML.
 
     Only absolute http(s) hrefs contribute (relative links stay within
     src and carry no cross-host signal); self-loops are dropped.
     """
     hrefs = F.explode(
-        F.regexp_extract_all(F.col(html_col), F.lit(HREF_RE), F.lit(1))
+        F.regexp_extract_all(F.col("html"), F.lit(HREF_RE), F.lit(1))
     ).alias("href")
     dst = F.regexp_extract(F.col("href"), HOST_RE, 1)
     return (
-        docs.select(F.col(src_host_col).alias("src"), hrefs)
+        docs.select(F.col("host").alias("src"), hrefs)
         .withColumn("dst", dst)
         .where((F.col("dst") != "") & (F.col("dst") != F.col("src")))
         .select("src", "dst")
@@ -143,11 +139,7 @@ def pagerank_hosts(
 ANCHOR_RE = r'<a href="[^"]*"[^>]*>[^<]*</a>'
 
 
-def extract_anchor_texts(
-    docs: DataFrame,
-    html_col: str = "html",
-    src_host_col: str = "host",
-) -> DataFrame:
+def extract_anchor_texts(docs: DataFrame) -> DataFrame:
     """(src, dst, anchor_text) triples from absolute-href anchors —
     the raw material for anchor-text/caption training pairs and
     link-context quality signals. Pure Catalyst: regexp_extract_all of
@@ -155,13 +147,13 @@ def extract_anchor_texts(
     caller aggregates.
     """
     anchors = F.explode(
-        F.regexp_extract_all(F.col(html_col), F.lit(ANCHOR_RE), F.lit(0))
+        F.regexp_extract_all(F.col("html"), F.lit(ANCHOR_RE), F.lit(0))
     ).alias("a")
     href = F.regexp_extract(F.col("a"), r'href="([^"]*)"', 1)
     text = F.trim(F.regexp_extract(F.col("a"), r">([^<]*)<", 1))
     dst = F.regexp_extract(href, HOST_RE, 1)
     return (
-        docs.select(F.col(src_host_col).alias("src"), anchors)
+        docs.select(F.col("host").alias("src"), anchors)
         .select("src", dst.alias("dst"), text.alias("anchor_text"))
         .where((F.col("dst") != "") & (F.col("anchor_text") != ""))
     )

@@ -16,13 +16,9 @@ entropy decode, dequant, exact float IDCT, chroma upsampling, BT.601 —
 progressive/arithmetic return unsupported) all decode to one raster
 form, which ``channel_means`` and ``luma`` (the perceptual-hash feed)
 reduce. Only LEARNED feature extraction remains stubbed (it genuinely
-needs a model):
-
-  * ``decode_stub_mode="fake"`` produces deterministic fake features
-    (seeded by the payload digest) so pipelines are testable
-    end-to-end;
-  * ``decode_stub_mode="raise"`` raises NotImplementedError where a
-    real decoder (PIL/ffmpeg/torchaudio) would plug in.
+needs a model): ``extract_image_features`` produces deterministic fake
+features (seeded by the payload digest) so pipelines are testable
+end-to-end.
 
 At scale: media rows are orders of magnitude larger than text rows —
 keep them in their own table partitioned by (modality, bucket), size
@@ -132,11 +128,7 @@ def decode_audio_header(data: bytes):
     return ("wav", channels, sample_rate, data_size * 1000 // byte_rate)
 
 
-def extract_audio_features(
-    df: DataFrame,
-    payload_col: str = "payload",
-    ref_col: str = "media_ref",
-) -> DataFrame:
+def extract_audio_features(df: DataFrame) -> DataFrame:
     """binary audio payloads -> container metadata via mapInPandas.
 
     Real WAV/RIFF header decode (no audio library needed); non-RIFF
@@ -150,7 +142,7 @@ def extract_audio_features(
                 "channels": [], "sample_rate": [], "duration_ms": [],
                 "status": [], "error": [],
             }
-            for ref, payload in zip(pdf[ref_col], pdf[payload_col]):
+            for ref, payload in zip(pdf["media_ref"], pdf["payload"]):
                 out["media_ref"].append(ref)
                 if payload is None:
                     out["n_bytes"].append(0)
@@ -185,11 +177,7 @@ def extract_audio_features(
     return df.mapInPandas(run, schema=AUDIO_FEATURES_DDL)
 
 
-def media_manifest(
-    docs: "DataFrame",
-    id_col: str = "doc_id",
-    spans_col: str = "spans",
-) -> "DataFrame":
+def media_manifest(docs: "DataFrame") -> "DataFrame":
     """Manifest of media spans in an interleaved document: one row per
     media span with its offset, ref, and how many text spans precede it
     (the anchor a caption/alt-text joiner or a media fetcher needs).
@@ -199,7 +187,7 @@ def media_manifest(
     """
     from pyspark.sql import functions as F
 
-    spans = F.col(spans_col)
+    spans = F.col("spans")
     media = F.filter(spans, lambda x: x["kind"] == F.lit("media"))
     entries = F.transform(
         media,
@@ -216,9 +204,9 @@ def media_manifest(
         ),
     )
     return (
-        docs.select(F.col(id_col), F.explode(entries).alias("m"))
+        docs.select(F.col("doc_id"), F.explode(entries).alias("m"))
         .select(
-            id_col,
+            "doc_id",
             F.col("m.offset").alias("offset"),
             F.col("m.media_ref").alias("media_ref"),
             F.col("m.texts_before").alias("texts_before"),
@@ -639,12 +627,7 @@ def _fake_decode(payload: bytes):
     return [b / 255.0 for b in digest[:_FEAT_DIM]]
 
 
-def extract_image_features(
-    df: DataFrame,
-    payload_col: str = "payload",
-    ref_col: str = "media_ref",
-    decode_stub_mode: str = "fake",
-) -> DataFrame:
+def extract_image_features(df: DataFrame) -> DataFrame:
     """binary payloads -> fixed-dim feature vectors via mapInPandas.
 
     Real decoders replace `_fake_decode`; everything else (Arrow
@@ -658,7 +641,7 @@ def extract_image_features(
                 "fmt": [], "width": [], "height": [],
                 "feat": [], "status": [], "error": [],
             }
-            for ref, payload in zip(pdf[ref_col], pdf[payload_col]):
+            for ref, payload in zip(pdf["media_ref"], pdf["payload"]):
                 out["media_ref"].append(ref)
                 if payload is None:
                     out["n_bytes"].append(0)
@@ -677,21 +660,9 @@ def extract_image_features(
                 out["fmt"].append(hdr[0] if hdr else None)
                 out["width"].append(hdr[1] if hdr else None)
                 out["height"].append(hdr[2] if hdr else None)
-                try:
-                    if decode_stub_mode == "raise":
-                        raise NotImplementedError(
-                            "learned image-feature extraction needs an "
-                            "embedding model — not in this container "
-                            "(pixel decode itself is real: see "
-                            "extract_pixel_stats)"
-                        )
-                    out["feat"].append(_fake_decode(data))
-                    out["status"].append("ok")
-                    out["error"].append(None)
-                except NotImplementedError as exc:
-                    out["feat"].append(None)
-                    out["status"].append("unsupported")
-                    out["error"].append(str(exc))
+                out["feat"].append(_fake_decode(data))
+                out["status"].append("ok")
+                out["error"].append(None)
             yield pd.DataFrame(out)
 
     return df.mapInPandas(run, schema=IMAGE_FEATURES_DDL)
@@ -820,11 +791,7 @@ PIXEL_STATS_HASHES_DDL = (
 )
 
 
-def pixel_stats_with_hashes(
-    df: DataFrame,
-    payload_col: str = "payload",
-    ref_col: str = "media_ref",
-) -> DataFrame:
+def pixel_stats_with_hashes(df: DataFrame) -> DataFrame:
     """Per-channel statistics AND perceptual hashes in ONE decode stage.
 
     Value-identical to ``extract_pixel_stats(df)`` inner-joined with
@@ -845,7 +812,7 @@ def pixel_stats_with_hashes(
                 "channels": [], "mean_r": [], "mean_g": [], "mean_b": [],
                 "status": [], "ahash": [], "dhash": [],
             }
-            for ref, payload in zip(pdf[ref_col], pdf[payload_col]):
+            for ref, payload in zip(pdf["media_ref"], pdf["payload"]):
                 out["media_ref"].append(ref)
                 if payload is None:
                     for k in ("fmt", "width", "height", "channels",

@@ -28,34 +28,33 @@ EPOCH_SENTINEL = "1970-01-01T00:00:00Z"
 EPOCH_SENTINEL_MILLIS = "1970-01-01T00:00:00.000Z"
 
 
-def file_ending_exclusion(url_col: str = "url") -> Column:
+def file_ending_exclusion() -> Column:
     """P1: none of the 29 common file endings appear in the URL (ci)."""
-    lowered = F.lower(F.col(url_col))
+    lowered = F.lower(F.col("url"))
     any_ending = reduce(
         or_, [lowered.contains(e) for e in COMMON_FILE_ENDINGS]
     )
     return ~F.coalesce(any_ending, F.lit(False))
 
 
-def url_is_valid(url_col: str = "url") -> Column:
+def url_is_valid() -> Column:
     """P5: skip rows without a URL (UrlHandlingSupport.scala:534-552)."""
-    return F.col(url_col).isNotNull() & (F.col(url_col) != "")
+    return F.col("url").isNotNull() & (F.col("url") != "")
 
 
-def is_new(last_crawl_col: str = "last_crawl") -> Column:
+def is_new() -> Column:
     """S2: never crawled (lastCrawl == EPOCH sentinel or NULL)."""
-    c = F.col(last_crawl_col)
+    c = F.col("last_crawl")
     return c.isNull() | c.isin(EPOCH_SENTINEL, EPOCH_SENTINEL_MILLIS)
 
 
-def needs_reanalysis(now_iso: str, reanalysis_interval_hours: int = 48,
-                     last_crawl_col: str = "last_crawl") -> Column:
+def needs_reanalysis(now_iso: str, reanalysis_interval_hours: int = 48) -> Column:
     """S3: EPOCH < lastCrawl <= now - interval (GraphQLHelper.scala:592-600).
 
     `now_iso` is an explicit parameter — the pipeline never reads the
     wall clock (determinism; SURVEY §7 hard part 7).
     """
-    c = F.to_timestamp(F.col(last_crawl_col))
+    c = F.to_timestamp(F.col("last_crawl"))
     cutoff = F.to_timestamp(F.lit(now_iso)) - F.expr(
         f"INTERVAL {int(reanalysis_interval_hours)} HOURS"
     )
@@ -93,19 +92,17 @@ def etag_unchanged_skip(docs: DataFrame, entries: DataFrame) -> DataFrame:
     )
 
 
-def _robots_grouped_lines(
-    robots: DataFrame, host_col: str, txt_col: str
-) -> DataFrame:
-    """(host, pos, line, _ua, grp) — comment-stripped non-empty robots
-    lines with their rule-group id (running count of group-STARTING
+def _robots_grouped_lines(robots: DataFrame) -> DataFrame:
+    """(host, pos, line, _ua, grp) — comment-stripped non-empty
+    ``robots_txt`` lines with their rule-group id (running count of group-STARTING
     User-agent lines). Shared by the rules and directives parsers."""
     from pyspark.sql import Window
 
-    h = F.col(host_col)
     lines = (
         robots.select(
-            h.alias("host"),
-            F.posexplode(F.split(F.col(txt_col), "\n")).alias("pos", "line"),
+            "host",
+            F.posexplode(F.split(F.col("robots_txt"), "\n"))
+            .alias("pos", "line"),
         )
         .withColumn(
             # RFC 9309: '#' starts a comment anywhere on the line
@@ -145,11 +142,7 @@ def _robots_star_groups(lines: DataFrame) -> DataFrame:
     )
 
 
-def robots_rules(
-    robots: DataFrame,
-    host_col: str = "host",
-    txt_col: str = "robots_txt",
-) -> DataFrame:
+def robots_rules(robots: DataFrame) -> DataFrame:
     """(host, kind, prefix) Allow/Disallow rules that apply to
     User-agent: * — GROUP-AWARE robots.txt parsing in pure Catalyst.
 
@@ -161,7 +154,7 @@ def robots_rules(
     group-STARTING user-agent lines) and one group-level aggregate —
     no Python.
     """
-    lines = _robots_grouped_lines(robots, host_col, txt_col)
+    lines = _robots_grouped_lines(robots)
     star_groups = _robots_star_groups(lines)
     rules = (
         lines.where(F.col("line").rlike(r"(?i)^(dis)?allow\s*:"))
@@ -185,14 +178,7 @@ def robots_rules(
     )
 
 
-def robots_disallow_filter(
-    urls: DataFrame,
-    robots: DataFrame,
-    url_col: str = "url",
-    host_col: str = "host",
-    robots_host_col: str = "host",
-    txt_col: str = "robots_txt",
-) -> DataFrame:
+def robots_disallow_filter(urls: DataFrame, robots: DataFrame) -> DataFrame:
     """Drop urls blocked by their host's User-agent:* rules, with
     RFC 9309 precedence: among all matching Allow/Disallow rules the
     LONGEST rule path wins (octets of the rule, wildcards counted as
@@ -214,7 +200,7 @@ def robots_disallow_filter(
     """
     from pyspark.sql import Window
 
-    rules = robots_rules(robots, robots_host_col, txt_col)
+    rules = robots_rules(robots)
     # translate a rule path to an anchored Java regex: escape regex
     # metachars (except '*'), honor a trailing '$' as an end anchor,
     # turn '*' into '.*'
@@ -239,10 +225,10 @@ def robots_disallow_filter(
         has_wild.alias("_r_wild"),
         regex.alias("_r_regex"),
     )
-    path = F.regexp_replace(F.col(url_col), r"^https?://[^/]+", "")
+    path = F.regexp_replace(F.col("url"), r"^https?://[^/]+", "")
     flagged = urls.withColumn("_path", path)
     paths = flagged.select(
-        F.col(host_col).alias("_p_host"), F.col("_path").alias("_p_path")
+        F.col("host").alias("_p_host"), F.col("_path").alias("_p_path")
     ).distinct()
     cond = (F.col("_p_host") == F.col("_r_host")) & (
         # SQL RLIKE accepts a column-valued pattern (the python
@@ -264,17 +250,13 @@ def robots_disallow_filter(
         .where((F.col("_rn") == 1) & (F.col("_r_kind") == "disallow"))
         .select("_p_host", "_p_path")
     )
-    keep_cond = (F.col(host_col) == F.col("_p_host")) & (
+    keep_cond = (F.col("host") == F.col("_p_host")) & (
         F.col("_path") == F.col("_p_path")
     )
     return flagged.join(blocked, keep_cond, "left_anti").drop("_path")
 
 
-def sitemap_urls(
-    sitemaps: DataFrame,
-    xml_col: str = "xml",
-    host_col: str = "host",
-) -> DataFrame:
+def sitemap_urls(sitemaps: DataFrame) -> DataFrame:
     """(host, kind, loc, lastmod) from sitemap XML.
 
     Handles both document shapes of the sitemaps.org protocol:
@@ -285,7 +267,7 @@ def sitemap_urls(
     misalignment impossible), the five XML entities unescaped in locs.
     Map-only + one explode — no shuffle at any corpus size.
     """
-    x = F.col(xml_col)
+    x = F.col("xml")
     is_index = x.rlike(r"(?is)<\s*sitemapindex")
     blocks = F.when(
         is_index,
@@ -298,7 +280,7 @@ def sitemap_urls(
         )
     )
     exploded = sitemaps.select(
-        F.col(host_col).alias("host"),
+        "host",
         F.when(is_index, F.lit("sitemap")).otherwise(F.lit("url")).alias("kind"),
         F.explode(blocks).alias("_block"),
     )
@@ -319,11 +301,7 @@ def sitemap_urls(
     )
 
 
-def feed_urls(
-    feeds: DataFrame,
-    xml_col: str = "xml",
-    host_col: str = "host",
-) -> DataFrame:
+def feed_urls(feeds: DataFrame) -> DataFrame:
     """(host, kind, loc, published, title) from RSS 2.0 / Atom feed
     XML — the third discovery channel next to sitemaps and robots
     Sitemap lines (news sites, the reference's domain, publish feeds
@@ -337,7 +315,7 @@ def feed_urls(
     regexp_extract_all per block), map-only + one explode — no shuffle
     at any corpus size.
     """
-    x = F.col(xml_col)
+    x = F.col("xml")
     is_atom = x.rlike(r"(?is)<\s*feed[\s>]")
     blocks = F.when(
         is_atom,
@@ -350,7 +328,7 @@ def feed_urls(
         )
     )
     exploded = feeds.select(
-        F.col(host_col).alias("host"),
+        "host",
         F.when(is_atom, F.lit("atom")).otherwise(F.lit("rss")).alias("kind"),
         F.explode(blocks).alias("_block"),
     )
@@ -397,13 +375,7 @@ def feed_urls(
     )
 
 
-def domain_blocklist_filter(
-    urls: DataFrame,
-    blocked: DataFrame,
-    host_col: str = "host",
-    url_col: str = "url",
-    domain_col: str = "domain",
-) -> DataFrame:
+def domain_blocklist_filter(urls: DataFrame, blocked: DataFrame) -> DataFrame:
     """Drop urls whose host IS a blocked domain or is a SUBDOMAIN of
     one — the UT1-blocklist / RefinedWeb-style URL filtering step of a
     pretraining pipeline. Suffix semantics, not substring:
@@ -421,7 +393,7 @@ def domain_blocklist_filter(
     """
     from .textstats import let_bound
 
-    parts = F.split(F.col(host_col), r"\.")
+    parts = F.split(F.col("host"), r"\.")
     # let_bound: free-variable parts in the lambda would re-split the
     # host once per suffix
     sufs = let_bound(
@@ -434,16 +406,16 @@ def domain_blocklist_filter(
                     F.slice(p, i + F.lit(1), F.size(p) - i), "."
                 ),
             ),
-        ).otherwise(F.array(F.col(host_col))),
+        ).otherwise(F.array(F.col("host"))),
     )
     hits = (
-        urls.select(F.col(url_col), F.explode(sufs).alias("_suf"))
+        urls.select(F.col("url"), F.explode(sufs).alias("_suf"))
         .join(
-            blocked.select(F.col(domain_col).alias("_suf")),
+            blocked.select(F.col("domain").alias("_suf")),
             "_suf",
             "left_semi",
         )
-        .select(url_col)
+        .select("url")
         .distinct()
     )
-    return urls.join(hits, url_col, "left_anti")
+    return urls.join(hits, "url", "left_anti")

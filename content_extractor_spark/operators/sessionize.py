@@ -22,27 +22,22 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def sessionize(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    order_tiebreak: str = "event_id",
-    gap_minutes: int = 30,
-) -> DataFrame:
-    """Append a per-user `session_idx` (1-based) to every event.
+def sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
+    """Append a per-user `session_idx` (1-based) to every
+    (user_id, ts, event_id) event.
 
     A new session starts at the first event and whenever the gap to the
     previous event exceeds `gap_minutes`. Deterministic ordering via
-    (ts, order_tiebreak).
+    (ts, event_id).
     """
-    w = Window.partitionBy(user_col).orderBy(
-        F.col(ts_col).asc(), F.col(order_tiebreak).asc()
+    w = Window.partitionBy("user_id").orderBy(
+        F.col("ts").asc(), F.col("event_id").asc()
     )
-    prev_ts = F.lag(F.col(ts_col)).over(w)
+    prev_ts = F.lag(F.col("ts")).over(w)
     # NTZ timestamps can't cast straight to long; go via timestamp —
     # any session-zone shift cancels in the difference
     as_sec = lambda c: c.cast("timestamp").cast("long")  # noqa: E731
-    gap_sec = as_sec(F.col(ts_col)) - as_sec(prev_ts)
+    gap_sec = as_sec(F.col("ts")) - as_sec(prev_ts)
     # two window steps (Spark forbids nesting lag inside the running
     # sum); both share the same partitioning, so Catalyst plans ONE
     # exchange + one sort for the pair
@@ -56,17 +51,11 @@ def sessionize(
     ).drop("_is_start")
 
 
-def session_stats(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    order_tiebreak: str = "event_id",
-    gap_minutes: int = 30,
-) -> DataFrame:
-    """One row per (user, session): event count + start/end timestamps."""
-    s = sessionize(events, user_col, ts_col, order_tiebreak, gap_minutes)
-    return s.groupBy(user_col, "session_idx").agg(
+def session_stats(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
+    """One row per (user_id, session): event count + start/end ts."""
+    s = sessionize(events, gap_minutes)
+    return s.groupBy("user_id", "session_idx").agg(
         F.count("*").alias("n_events"),
-        F.min(ts_col).alias("session_start"),
-        F.max(ts_col).alias("session_end"),
+        F.min("ts").alias("session_start"),
+        F.max("ts").alias("session_end"),
     )

@@ -40,65 +40,61 @@ def norm(a: Column) -> Column:
     )
 
 
+MAX_CORPUS_ROWS = 1_000_000  # cosine_topk's cross-join bound
+
+
 def cosine_topk(
     queries: DataFrame,
     corpus: DataFrame,
     k: int = 5,
-    query_id: str = "query_id",
-    corpus_id: str = "vec_id",
-    query_vec: str = "q_embedding",
-    corpus_vec: str = "embedding",
     round_to: int = 4,
-    max_corpus_rows: int = 1_000_000,
-    allow_full_scan: bool = False,
     corpus_rows: Optional[int] = None,
 ) -> DataFrame:
-    """Exact top-k by cosine for each query (brute force baseline).
+    """Exact top-k by cosine for each (query_id, q_embedding) query over
+    the (vec_id, embedding) corpus (brute force baseline).
 
-    Deterministic tie-break: (cos desc, corpus_id asc). Cosine is
+    Deterministic tie-break: (cos desc, vec_id asc). Cosine is
     rounded to `round_to` decimals BEFORE ranking so results are
     reproducible across engines/float orders.
 
     This is a CROSS JOIN — O(Q × N). To stop it being pointed at a
-    full 10^12-row corpus by accident, the corpus size is checked
-    against `max_corpus_rows` unless `allow_full_scan=True`; use
-    `lsh_topk` (bucketed, multi-probe) as the scale path. Callers that
-    already know the corpus size pass `corpus_rows` to skip the
-    guard's extra `limit().count()` job (it still enforces the bound).
+    full 10^12-row corpus by accident, it raises when the corpus has
+    more than ``MAX_CORPUS_ROWS`` rows; use `lsh_topk` (bucketed,
+    multi-probe) as the scale path. Callers that already know the
+    corpus size pass `corpus_rows` to skip the guard's extra
+    `limit().count()` job (it still enforces the bound).
     """
-    if not allow_full_scan:
-        if corpus_rows is not None:
-            n = corpus_rows
-        else:
-            # bounded probe: scans at most max_corpus_rows+1 rows
-            n = corpus.limit(max_corpus_rows + 1).count()
-        if n > max_corpus_rows:
-            raise ValueError(
-                f"cosine_topk corpus exceeds {max_corpus_rows} rows; this "
-                "is a cross join — use lsh_topk, pre-filter a candidate "
-                "set, or pass allow_full_scan=True deliberately"
-            )
+    if corpus_rows is not None:
+        n = corpus_rows
+    else:
+        # bounded probe: scans at most MAX_CORPUS_ROWS+1 rows
+        n = corpus.limit(MAX_CORPUS_ROWS + 1).count()
+    if n > MAX_CORPUS_ROWS:
+        raise ValueError(
+            f"cosine_topk corpus exceeds {MAX_CORPUS_ROWS} rows; this "
+            "is a cross join — use lsh_topk or pre-filter a candidate set"
+        )
     # r7: hoist the cast and the norm to per-SIDE projections — inline
     # they were recomputed per PAIR (Q x N times instead of Q + N).
     # Bit-identical: the same aggregate runs on the same values, only
     # earlier; the division still happens per pair.
-    q2 = queries.withColumn("_qv", F.col(query_vec).cast("array<double>"))
+    q2 = queries.withColumn("_qv", F.col("q_embedding").cast("array<double>"))
     q2 = q2.withColumn("_qn", norm(F.col("_qv")))
-    c2 = corpus.withColumn("_cv", F.col(corpus_vec).cast("array<double>"))
+    c2 = corpus.withColumn("_cv", F.col("embedding").cast("array<double>"))
     c2 = c2.withColumn("_cn", norm(F.col("_cv")))
     joined = q2.crossJoin(c2)
     cos = F.round(
         dot(F.col("_qv"), F.col("_cv")) / (F.col("_qn") * F.col("_cn")),
         round_to,
     )
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("cos").desc(), F.col(corpus_id).asc()
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cos").desc(), F.col("vec_id").asc()
     )
     return (
         joined.withColumn("cos", cos)
         .withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
-        .select(query_id, corpus_id, "cos", "rank")
+        .select("query_id", "vec_id", "cos", "rank")
     )
 
 
@@ -208,10 +204,6 @@ def lsh_topk_probe_levels(
     dim: int,
     k: int = 5,
     nbits: int = 4,
-    query_id: str = "query_id",
-    corpus_id: str = "vec_id",
-    query_vec: str = "q_embedding",
-    corpus_vec: str = "embedding",
     round_to: int = 4,
     probes: int = 4,
 ) -> DataFrame:
@@ -231,7 +223,7 @@ def lsh_topk_probe_levels(
     pairs), and restricting a total order to a subset preserves relative
     order, so the running self-count equals row_number over the subset.
     """
-    qb = queries.withColumn("_self_bucket", lsh_bucket(query_vec, nbits, dim))
+    qb = queries.withColumn("_self_bucket", lsh_bucket("q_embedding", nbits, dim))
     probe_arr = F.array(
         F.col("_self_bucket"),
         *[
@@ -240,18 +232,18 @@ def lsh_topk_probe_levels(
         ],
     )
     qb = qb.withColumn("bucket", F.explode(probe_arr))
-    qb = qb.withColumn("_qv", F.col(query_vec).cast("array<double>"))
+    qb = qb.withColumn("_qv", F.col("q_embedding").cast("array<double>"))
     qb = qb.withColumn("_qn", norm(F.col("_qv")))
-    cb = corpus.withColumn("bucket", lsh_bucket(corpus_vec, nbits, dim))
-    cb = cb.withColumn("_cv", F.col(corpus_vec).cast("array<double>"))
+    cb = corpus.withColumn("bucket", lsh_bucket("embedding", nbits, dim))
+    cb = cb.withColumn("_cv", F.col("embedding").cast("array<double>"))
     cb = cb.withColumn("_cn", norm(F.col("_cv")))
     joined = qb.join(cb, "bucket")
     cos = F.round(
         dot(F.col("_qv"), F.col("_cv")) / (F.col("_qn") * F.col("_cn")),
         round_to,
     )
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("cos").desc(), F.col(corpus_id).asc()
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cos").desc(), F.col("vec_id").asc()
     )
     running = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     ranked = (
@@ -285,8 +277,8 @@ def lsh_topk_probe_levels(
     return (
         ranked.select(
             F.explode(F.filter(levels, lambda x: x.isNotNull())).alias("_pr"),
-            query_id,
-            corpus_id,
+            "query_id",
+            "vec_id",
             "cos",
         ).select(
             # coalesce against non-null literals: field access through
@@ -295,8 +287,8 @@ def lsh_topk_probe_levels(
             # not — keep the schema bit-identical (no null can occur:
             # the filter already dropped non-qualifying entries)
             F.coalesce(F.col("_pr.probes"), F.lit(0)).alias("probes"),
-            query_id,
-            corpus_id,
+            "query_id",
+            "vec_id",
             "cos",
             F.coalesce(F.col("_pr.rank"), F.lit(0)).alias("rank"),
         )
@@ -308,8 +300,6 @@ def embedding_near_duplicates(
     dim: int,
     threshold: float = 0.99,
     nbits: int = 6,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     round_to: int = 4,
     max_bucket: Optional[int] = None,
 ) -> DataFrame:
@@ -322,9 +312,9 @@ def embedding_near_duplicates(
     exact blocked semantics for oracle parity at test scale; at corpus
     scale always set it (e.g. 10_000).
     """
-    b = df.withColumn("bucket", lsh_bucket(vec_col, nbits, dim))
+    b = df.withColumn("bucket", lsh_bucket("embedding", nbits, dim))
     if max_bucket is not None:
-        wcap = Window.partitionBy("bucket").orderBy(F.col(id_col))
+        wcap = Window.partitionBy("bucket").orderBy(F.col("vec_id"))
         b = (
             b.withColumn("_rn", F.row_number().over(wcap))
             .where(F.col("_rn") <= max_bucket)
@@ -332,14 +322,14 @@ def embedding_near_duplicates(
         )
     # r7: cast + norm once per ROW before the self-join (were
     # recomputed per candidate pair); bit-identical, see cosine_topk
-    b = b.withColumn("_v", F.col(vec_col).cast("array<double>"))
+    b = b.withColumn("_v", F.col("embedding").cast("array<double>"))
     b = b.withColumn("_n", norm(F.col("_v")))
     a = b.select(
-        F.col("bucket"), F.col(id_col).alias("a"),
+        F.col("bucket"), F.col("vec_id").alias("a"),
         F.col("_v").alias("va"), F.col("_n").alias("na"),
     )
     c = b.select(
-        F.col("bucket"), F.col(id_col).alias("b"),
+        F.col("bucket"), F.col("vec_id").alias("b"),
         F.col("_v").alias("vb"), F.col("_n").alias("nb"),
     )
     cos = F.round(
@@ -399,23 +389,14 @@ def _dists_over(vec: Column, cents2d: Column, round_to: int) -> Column:
 
 
 def _kmeans_centroids(base: DataFrame, dim: int, k: int,
-                      iterations: int, round_to: int,
-                      init_vectors=None):
+                      iterations: int, round_to: int):
     """Deterministic Lloyd centroid training over base(id, v):
     init = vectors of the k smallest ids; per iteration one
     groupBy(cluster) AVG pass + a k-row driver collect; empty clusters
     keep their previous centroid. Shared by kmeans_assign (IVF coarse
-    quantizer) and the per-subspace PQ codebook trainer.
-
-    ``init_vectors`` (r7): the k-smallest-id vectors, when the caller
-    already collected them — skips this trainer's own init job (a
-    query training several quantizers over one input otherwise pays
-    the identical k-row collect per trainer)."""
-    if init_vectors is not None:
-        cents = [[float(x) for x in v] for v in init_vectors[:k]]
-    else:
-        init = base.orderBy("id").limit(k).collect()
-        cents = [list(r["v"]) for r in init]
+    quantizer) and the per-subspace PQ codebook trainer."""
+    init = base.orderBy("id").limit(k).collect()
+    cents = [list(r["v"]) for r in init]
     for _ in range(iterations):
         assigned = _kmeans_assign_stage(base, cents, round_to)
         rows = (
@@ -451,15 +432,11 @@ def kmeans_assign(
     df: DataFrame,
     dim: int,
     k: int = 4,
-    iterations: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     round_to: int = 6,
-    init_vectors=None,
     centroids=None,
 ) -> DataFrame:
-    """Deterministic fixed-iteration Lloyd k-means over an embedding
-    column — the coarse quantizer an IVF index is built from.
+    """Deterministic one-iteration Lloyd k-means over (vec_id,
+    embedding) — the coarse quantizer an IVF index is built from.
 
     ``centroids`` (r7): already-trained centroids (e.g. from
     ``train_ivf_pq``) — skips training entirely; the call becomes the
@@ -476,21 +453,20 @@ def kmeans_assign(
     Scale shape: assignment is MAP-ONLY (centroids are array literals —
     k is small by definition); each iteration adds one groupBy(cluster)
     with per-dimension AVG partial aggregation, and one k-row collect to
-    the driver. Total: `iterations` passes + the final assign pass.
+    the driver. Total: one training pass + the final assign pass.
     """
     base = df.select(
-        F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
+        F.col("vec_id").alias("id"),
+        F.col("embedding").cast("array<double>").alias("v"),
     )
     if centroids is not None:
         return _kmeans_assign_stage(base, centroids, round_to).select(
-            F.col("id").alias(id_col), "cluster", "dist"
+            F.col("id").alias("vec_id"), "cluster", "dist"
         )
     base = base.cache()
-    cents = _kmeans_centroids(
-        base, dim, k, iterations, round_to, init_vectors=init_vectors
-    )
+    cents = _kmeans_centroids(base, dim, k, 1, round_to)
     out = _kmeans_assign_stage(base, cents, round_to).select(
-        F.col("id").alias(id_col), "cluster", "dist"
+        F.col("id").alias("vec_id"), "cluster", "dist"
     )
     # release the iteration cache (the returned map-only assignment
     # recomputes from source once on the caller's action — cheaper than
@@ -607,8 +583,6 @@ def train_ivf_pq(
     m: int = 4,
     k: int = 4,
     iterations: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     round_to: int = 6,
     init_vectors=None,
 ):
@@ -637,8 +611,8 @@ def train_ivf_pq(
         raise ValueError(f"dim {dim} not divisible by m {m}")
     sub = dim // m
     base = df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).cast("array<double>").alias("full"),
+        F.col("vec_id").alias("id"),
+        F.col("embedding").cast("array<double>").alias("full"),
     ).cache()
     if init_vectors is not None:
         full_init = [[float(x) for x in v] for v in init_vectors[:k]]
@@ -704,13 +678,7 @@ def train_ivf_pq(
     return cents, books
 
 
-def pq_encode(
-    df: DataFrame,
-    codebooks,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_to: int = 6,
-) -> DataFrame:
+def pq_encode(df: DataFrame, codebooks, round_to: int = 6) -> DataFrame:
     """(id, codes array<int>): per subspace, the index of the nearest
     codebook centroid (rounded squared distance, ties to the lowest
     index — the kmeans_assign determinism contract). MAP-ONLY: the
@@ -719,7 +687,7 @@ def pq_encode(
     vector instead of dim floats — the entire point of PQ.
     """
     sub = len(codebooks[0][0])
-    vec = F.col(vec_col).cast("array<double>")
+    vec = F.col("embedding").cast("array<double>")
     codes = []
     for s, book in enumerate(codebooks):
         sv = F.slice(vec, s * sub + 1, sub)
@@ -728,7 +696,7 @@ def pq_encode(
             (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
         )
     return df.select(
-        F.col(id_col), F.array(*codes).alias("codes")
+        F.col("vec_id"), F.array(*codes).alias("codes")
     )
 
 
@@ -736,7 +704,6 @@ def pq_adc_distances(
     codes_df: DataFrame,
     codebooks,
     query,
-    id_col: str = "vec_id",
     round_to: int = 6,
     keep: tuple = (),
 ) -> DataFrame:
@@ -769,7 +736,7 @@ def pq_adc_distances(
         term = F.element_at(t, F.col("codes")[s] + 1)
         dist = term if dist is None else dist + term
     return codes_df.select(
-        F.col(id_col), *[F.col(c) for c in keep],
+        F.col("vec_id"), *[F.col(c) for c in keep],
         F.round(dist, round_to).alias("adc_dist"),
     )
 

@@ -348,9 +348,7 @@ def detect_language(text_col: str = "text") -> Column:
     ).otherwise(marker_lang)
 
 
-def with_detected_language(
-    df: DataFrame, text_col: str = "text", out_col: str = "lang_detected"
-) -> DataFrame:
+def with_detected_language(df: DataFrame) -> DataFrame:
     """``detect_language`` as a stacked-projection transform — same
     values, ~10x cheaper per row.
 
@@ -366,7 +364,7 @@ def with_detected_language(
     stays inside one WholeStageCodegen span (guide §4.1 — built-ins
     only; §1.2 — fix per-row work after plan shape).
     """
-    text = F.col(text_col)
+    text = F.col("text")
     tmp = [f"_li_{c}" for c in ("nscript", "toks", "win", "best")]
     df1 = df.withColumns(
         {
@@ -384,7 +382,7 @@ def with_detected_language(
             _trigram_lang_expr(F.col(tmp[2]))
         )
     )
-    return df2.withColumn(out_col, lang).drop(*tmp)
+    return df2.withColumn("lang_detected", lang).drop(*tmp)
 
 
 def token_count_ws(text_col: str = "text") -> Column:
@@ -398,16 +396,16 @@ def token_count_bpe(text_col: str = "text") -> Column:
     return F.size(F.regexp_extract_all(F.col(text_col), F.lit(BPE_TOKEN_RE), F.lit(0)))
 
 
-def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
+def quality_features(df: DataFrame) -> DataFrame:
     """Length / punctuation / stopword-ratio quality features + score.
 
     The score mirrors common pretraining-corpus filters (C4/Gopher
     style): favor mid-length documents with sane punctuation density
     and a healthy stopword ratio.
     """
-    t = F.col(text_col)
+    t = F.col("text")
     n_chars = F.length(t)
-    n_tokens = token_count_ws(text_col)
+    n_tokens = token_count_ws("text")
     n_punct = n_chars - F.length(F.regexp_replace(t, r"[.,;:!?]", ""))
     # tokenize ONCE (CSE shares the split across languages), then one
     # array_intersect per language — same presence-count values as the
@@ -444,8 +442,6 @@ def linear_quality_score(
     df: DataFrame,
     weights,
     bias: float = 0.0,
-    text_col: str = "text",
-    out_col: str = "ml_q_score",
 ) -> DataFrame:
     """Trained-filter plumbing exemplar: a deterministic linear scorer
     over HASHED bag-of-words features — the standard shape for
@@ -472,7 +468,7 @@ def linear_quality_score(
     d = len(weights)
     if d == 0:
         raise ValueError("weights must be non-empty")
-    toks = F.split(F.lower(F.col(text_col)), TOKEN_SPLIT_RE)
+    toks = F.split(F.lower(F.col("text")), TOKEN_SPLIT_RE)
     warr = F.array(*[F.lit(float(x)) for x in weights])
     z = F.aggregate(
         toks,
@@ -483,7 +479,7 @@ def linear_quality_score(
         ),
     )
     score = F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
-    return df.withColumn(out_col, score)
+    return df.withColumn("ml_q_score", score)
 
 
 def _word_ngrams(text: Column, n: int) -> Column:
@@ -503,12 +499,7 @@ def _word_ngrams(text: Column, n: int) -> Column:
     return let_bound(toks, gen)
 
 
-def repetition_features(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-) -> DataFrame:
+def repetition_features(df: DataFrame, n: int = 3) -> DataFrame:
     """Gopher-style within-document repetition signals.
 
     Per document, over its word `n`-grams:
@@ -523,11 +514,13 @@ def repetition_features(
     both shuffle on the document id (uniform), with map-side partial
     aggregation; no Python. Documents shorter than n words get zeros.
     """
-    ident = F.col(id_col)
-    ng = df.select(ident, F.explode(_word_ngrams(F.col(text_col), n)).alias("_ng"))
-    counts = ng.groupBy(id_col, "_ng").agg(F.count("*").alias("_c"))
+    ident = F.col("doc_id")
+    ng = df.select(
+        ident, F.explode(_word_ngrams(F.col("text"), n)).alias("_ng")
+    )
+    counts = ng.groupBy("doc_id", "_ng").agg(F.count("*").alias("_c"))
     mass = F.col("_c") * F.length(F.col("_ng"))
-    per_doc = counts.groupBy(id_col).agg(
+    per_doc = counts.groupBy("doc_id").agg(
         F.sum("_c").cast("int").alias("n_ngrams"),
         F.round(
             F.sum(F.when(F.col("_c") > 1, mass).otherwise(F.lit(0))).cast("double")
@@ -540,9 +533,9 @@ def repetition_features(
     )
     return (
         df.select(ident)
-        .join(per_doc, id_col, "left")
+        .join(per_doc, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce(F.col("n_ngrams"), F.lit(0)).alias("n_ngrams"),
             F.coalesce(F.col("dup_ngram_char_frac"), F.lit(0.0)).alias(
                 "dup_ngram_char_frac"
@@ -554,12 +547,7 @@ def repetition_features(
     )
 
 
-def top_terms(
-    df: DataFrame,
-    group_col: str = "lang",
-    text_col: str = "text",
-    k: int = 5,
-) -> DataFrame:
+def top_terms(df: DataFrame, group_col: str = "lang", k: int = 5) -> DataFrame:
     """Corpus-level heavy hitters: top-k tokens per group by frequency.
 
     Two-phase: explode → count on (group, token) — Catalyst emits a
@@ -571,7 +559,7 @@ def top_terms(
     from pyspark.sql import Window
 
     toks = F.explode(
-        F.split(F.lower(F.trim(F.col(text_col))), TOKEN_SPLIT_RE)
+        F.split(F.lower(F.trim(F.col("text"))), TOKEN_SPLIT_RE)
     ).alias("token")
     counts = (
         df.select(F.col(group_col), toks)
@@ -589,15 +577,9 @@ def top_terms(
     )
 
 
-def length_band_filter(
-    df: DataFrame,
-    group_col: str = "lang",
-    value_col: str = "n_chars",
-    id_col: str = "doc_id",
-    lower: float = 0.05,
-    upper: float = 0.95,
-) -> DataFrame:
-    """Keep rows inside the (lower, upper] per-group rank-fraction band.
+def length_band_filter(df: DataFrame, group_col: str = "lang") -> DataFrame:
+    """Keep rows inside the (0.05, 0.95] per-group rank-fraction band of
+    (n_chars, doc_id).
 
     The standard outlier cut for corpus curation ("drop the shortest 5%
     and longest 5% per language"), expressed as exact rank fractions —
@@ -609,29 +591,30 @@ def length_band_filter(
     from pyspark.sql import Window
 
     w = Window.partitionBy(group_col).orderBy(
-        F.col(value_col).asc(), F.col(id_col).asc()
+        F.col("n_chars").asc(), F.col("doc_id").asc()
     )
     frac = F.row_number().over(w) / F.count("*").over(
         Window.partitionBy(group_col)
     )
     return (
         df.withColumn("_frac", frac)
-        .where((F.col("_frac") > lower) & (F.col("_frac") <= upper))
+        .where((F.col("_frac") > 0.05) & (F.col("_frac") <= 0.95))
         .drop("_frac")
     )
 
 
-def fingerprint(text_col: str = "text", window: int = 64) -> Column:
+def fingerprint() -> Column:
     """Rolling-hash style document fingerprint.
 
-    xxhash64 over normalized text prefix windows, combined — cheap,
+    xxhash64 over the normalized text's 64-char prefix and suffix
+    windows and its length, combined — cheap,
     JVM-side, stable. Use for cheap near-identity bucketing before
     heavier near-dup passes.
     """
-    norm = F.lower(F.regexp_replace(F.col(text_col), r"\s+", " "))
+    norm = F.lower(F.regexp_replace(F.col("text"), r"\s+", " "))
     return F.xxhash64(
-        F.substring(norm, 1, window),
-        F.substring(norm, -window, window),
+        F.substring(norm, 1, 64),
+        F.substring(norm, -64, 64),
         F.length(norm),
     )
 
@@ -639,8 +622,6 @@ def fingerprint(text_col: str = "text", window: int = 64) -> Column:
 def tfidf_top_terms(
     df: DataFrame,
     group_col: str = "lang",
-    text_col: str = "text",
-    id_col: str = "doc_id",
     k: int = 5,
     round_to: int = 6,
 ) -> DataFrame:
@@ -661,10 +642,12 @@ def tfidf_top_terms(
     from pyspark.sql import Window
 
     toks = F.explode(
-        F.split(F.lower(F.trim(F.col(text_col))), TOKEN_SPLIT_RE)
+        F.split(F.lower(F.trim(F.col("text"))), TOKEN_SPLIT_RE)
     ).alias("term")
     base = (
-        df.select(F.col(id_col).alias("id"), F.col(group_col).alias("grp"), toks)
+        df.select(
+            F.col("doc_id").alias("id"), F.col(group_col).alias("grp"), toks
+        )
         .where(F.col("term") != "")
         .groupBy("id", "grp", "term")
         .agg(F.count("*").alias("tc"))
@@ -672,7 +655,7 @@ def tfidf_top_terms(
     doc_len = base.groupBy("id").agg(F.sum("tc").alias("len"))
     dfreq = base.groupBy("term").agg(F.countDistinct("id").alias("df"))
     n_docs = df.select(
-        F.countDistinct(F.col(id_col)).alias("n_docs")
+        F.countDistinct(F.col("doc_id")).alias("n_docs")
     )
     scored = (
         base.join(doc_len, "id")
@@ -696,12 +679,7 @@ def tfidf_top_terms(
     )
 
 
-def unigram_logprob(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    round_to: int = 6,
-) -> DataFrame:
+def unigram_logprob(df: DataFrame, round_to: int = 6) -> DataFrame:
     """Per-document mean unigram log-probability under the corpus's own
     unigram LM — the classic cheap perplexity proxy for quality
     filtering (low = rare-token gibberish, high = stopword soup).
@@ -719,10 +697,10 @@ def unigram_logprob(
     exchange across the differently-projected branches).
     """
     toks = F.explode(
-        F.split(F.lower(F.trim(F.col(text_col))), TOKEN_SPLIT_RE)
+        F.split(F.lower(F.trim(F.col("text"))), TOKEN_SPLIT_RE)
     ).alias("term")
     base = (
-        df.select(F.col(id_col).alias("id"), toks)
+        df.select(F.col("doc_id").alias("id"), toks)
         .where(F.col("term") != "")
         .groupBy("id", "term")
         .agg(F.count("*").alias("tc"))
@@ -742,24 +720,18 @@ def unigram_logprob(
             ).alias("mean_logprob"),
             F.sum("tc").alias("n_tokens"),
         )
-        .select(F.col("id").alias(id_col), "mean_logprob", "n_tokens")
+        .select(F.col("id").alias("doc_id"), "mean_logprob", "n_tokens")
     )
 
 
-def bigram_logprob(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    alpha: float = 1.0,
-    round_to: int = 6,
-) -> DataFrame:
+def bigram_logprob(df: DataFrame, round_to: int = 6) -> DataFrame:
     """Per-document mean bigram log-probability under the corpus's own
     Laplace-smoothed bigram LM — one step closer to the published
     CCNet recipe than the unigram proxy: it sees local word ORDER, so
     shuffled-word gibberish that fools the unigram score does not fool
     this one.
 
-    p(v|u) = (C(u,v) + alpha) / (C(u,*) + alpha*V), where C(u,*) is
+    p(v|u) = (C(u,v) + 1) / (C(u,*) + V) (add-one), where C(u,*) is
     the history count (sum of C(u,v) over v — occurrences of u except
     document-final) and V the successor vocabulary size (distinct v
     over corpus bigrams). score(doc) = sum over the doc's bigram
@@ -775,7 +747,7 @@ def bigram_logprob(
     The aggregate is materialized once for its four consumers (corpus,
     history, vocabulary, per-doc combine), as in :func:`unigram_logprob`.
     """
-    toks = F.split(F.lower(F.trim(F.col(text_col))), TOKEN_SPLIT_RE)
+    toks = F.split(F.lower(F.trim(F.col("text"))), TOKEN_SPLIT_RE)
     bigrams = let_bound(
         toks,
         lambda t: F.when(
@@ -787,7 +759,7 @@ def bigram_logprob(
         ).otherwise(F.array().cast("array<string>")),
     )
     base = (
-        df.select(F.col(id_col).alias("id"), F.explode(bigrams).alias("bg"))
+        df.select(F.col("doc_id").alias("id"), F.explode(bigrams).alias("bg"))
         .groupBy("id", "bg")
         .agg(F.count("*").alias("tc"))
     )
@@ -811,8 +783,8 @@ def bigram_logprob(
                 F.sum(
                     F.col("tc")
                     * F.log(
-                        (F.col("cc") + F.lit(alpha))
-                        / (F.col("hc") + F.lit(alpha) * F.col("vsz"))
+                        (F.col("cc") + F.lit(1.0))
+                        / (F.col("hc") + F.col("vsz"))
                     )
                 )
                 / F.sum("tc"),
@@ -822,10 +794,10 @@ def bigram_logprob(
         )
     )
     return (
-        df.select(F.col(id_col).alias("id"))
+        df.select(F.col("doc_id").alias("id"))
         .join(scored, "id", "left")
         .select(
-            F.col("id").alias(id_col),
+            F.col("id").alias("doc_id"),
             F.coalesce(F.col("mean_logprob"), F.lit(0.0)).alias(
                 "mean_logprob"
             ),
@@ -838,20 +810,17 @@ def bigram_logprob(
 
 def perplexity_bands(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    group_col: str = "lang",
     bands: int = 3,
     round_to: int = 6,
     scores: DataFrame | None = None,
 ) -> DataFrame:
-    """CCNet-style perplexity banding: per group (language), split
+    """CCNet-style perplexity banding: per language (``lang``), split
     documents into `bands` equal-count bands by their mean unigram
     log-probability — band 1 ('head') = most-probable/cleanest text,
     band `bands` ('tail') = most-perplexing. CCNet keeps head+middle
     and drops (or down-weights) tail for pretraining mixes.
 
-    (id, group, mean_logprob, <count>, band, band_name). Deterministic:
+    (doc_id, lang, mean_logprob, <count>, band, band_name). Deterministic:
     ntile over (score DESC, id ASC) — ties break on id, never on
     partition order. One window per group on the per-doc score rows
     (corpus-sized but narrow); the heavy lifting is the scorer's
@@ -865,15 +834,15 @@ def perplexity_bands(
     from pyspark.sql import Window
 
     if scores is None:
-        scores = unigram_logprob(df, text_col, id_col, round_to=round_to)
+        scores = unigram_logprob(df, round_to=round_to)
     count_col = [
-        c for c in scores.columns if c not in (id_col, "mean_logprob")
+        c for c in scores.columns if c not in ("doc_id", "mean_logprob")
     ][0]
     grouped = scores.join(
-        df.select(F.col(id_col), F.col(group_col).alias("grp")), id_col
+        df.select(F.col("doc_id"), F.col("lang").alias("grp")), "doc_id"
     )
     w = Window.partitionBy("grp").orderBy(
-        F.col("mean_logprob").desc(), F.col(id_col).asc()
+        F.col("mean_logprob").desc(), F.col("doc_id").asc()
     )
     band = F.ntile(bands).over(w)
     name = (
@@ -882,12 +851,12 @@ def perplexity_bands(
         .otherwise(F.lit("middle"))
     )
     return grouped.select(
-        F.col(id_col), F.col("grp").alias(group_col), "mean_logprob",
+        F.col("doc_id"), F.col("grp").alias("lang"), "mean_logprob",
         count_col, band.alias("band"), name.alias("band_name"),
     )
 
 
-def line_features(df: DataFrame, text_col: str = "text") -> DataFrame:
+def line_features(df: DataFrame) -> DataFrame:
     """Gopher-style line-level repetition/format signals, appended as
     columns: over the NON-EMPTY lines of a document,
 
@@ -905,7 +874,7 @@ def line_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     """
     lines = F.filter(
         F.transform(
-            F.split(F.coalesce(F.col(text_col), F.lit("")), "\n"),
+            F.split(F.coalesce(F.col("text"), F.lit("")), "\n"),
             lambda x: F.trim(x),
         ),
         lambda x: x != "",

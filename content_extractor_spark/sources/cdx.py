@@ -29,13 +29,13 @@ CDX_JSON_DDL = (
 )
 
 
-def parse_cdx_lines(lines: DataFrame, col: str = "value") -> DataFrame:
-    """Parse CDXJ lines (``<urlkey> <ts> <json>``) from a string
-    column into typed capture rows: (urlkey, ts, url, mime, status,
+def parse_cdx_lines(lines: DataFrame) -> DataFrame:
+    """Parse CDXJ lines (``<urlkey> <ts> <json>``) from the ``value``
+    string column into typed capture rows: (urlkey, ts, url, mime, status,
     digest, length, offset, filename, languages, error). Malformed
     lines become ``error`` rows, never task failures (the same
     status-column policy as the WARC parser). Pure Catalyst."""
-    parts = F.split(F.col(col), " ", 3)
+    parts = F.split(F.col("value"), " ", 3)
     # F.get tolerates short splits (a malformed line must become an
     # error ROW, not an ArrayIndexOutOfBounds task failure)
     env = F.from_json(F.get(parts, 2), CDX_JSON_DDL)
@@ -57,42 +57,31 @@ def parse_cdx_lines(lines: DataFrame, col: str = "value") -> DataFrame:
     )
 
 
-def cdx_select(
-    captures: DataFrame,
-    statuses=(200,),
-    mime_prefixes=("text/html",),
-    dedup_digest: bool = True,
-) -> DataFrame:
-    """The standard capture selection: keep the wanted status codes
-    and mime types, and (by default) ONE capture per content digest —
-    the earliest timestamp, ties to urlkey — so identical content
+def cdx_select(captures: DataFrame) -> DataFrame:
+    """The standard capture selection: keep status-200 captures whose
+    mime is text/html (or unknown), and ONE capture per content digest
+    — the earliest timestamp, ties to urlkey — so identical content
     crawled from many urls is fetched once. One uniform shuffle on the
     digest; the filters push into the index scan."""
-    mime_ok = None
-    for p in mime_prefixes:
-        c = F.col("mime").startswith(p)
-        mime_ok = c if mime_ok is None else (mime_ok | c)
     out = captures.where(
         F.col("error").isNull()
-        & F.col("status").isin(list(statuses))
-        & F.coalesce(mime_ok, F.lit(True))
+        & (F.col("status") == 200)
+        & F.coalesce(F.col("mime").startswith("text/html"), F.lit(True))
     )
-    if dedup_digest:
-        # r7 de-skew (guide §2.5): was a row_number window over digest
-        # — every capture of a hot digest (a boilerplate page crawled
-        # from millions of urls) landed on one task with no map-side
-        # reduction. min_by partial-aggregates: each map partition
-        # forwards ONE earliest-(ts, urlkey) candidate per digest, so
-        # the shuffle carries at most #map_tasks rows per digest. Same
-        # earliest-capture-wins result.
-        cols = out.columns
-        out = (
-            out.groupBy("digest")
-            .agg(
-                F.min_by(
-                    F.struct(*cols), F.struct(F.col("ts"), F.col("urlkey"))
-                ).alias("_row")
-            )
-            .select("_row.*")
+    # r7 de-skew (guide §2.5): was a row_number window over digest —
+    # every capture of a hot digest (a boilerplate page crawled from
+    # millions of urls) landed on one task with no map-side reduction.
+    # min_by partial-aggregates: each map partition forwards ONE
+    # earliest-(ts, urlkey) candidate per digest, so the shuffle
+    # carries at most #map_tasks rows per digest. Same
+    # earliest-capture-wins result.
+    return (
+        out.groupBy("digest")
+        .agg(
+            F.min_by(
+                F.struct(*out.columns),
+                F.struct(F.col("ts"), F.col("urlkey")),
+            ).alias("_row")
         )
-    return out
+        .select("_row.*")
+    )

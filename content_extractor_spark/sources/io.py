@@ -85,15 +85,6 @@ def read_prior(spark: SparkSession, ref: str) -> Optional[DataFrame]:
         raise
 
 
-def write_table(df: DataFrame, ref: str, mode: str = "append") -> None:
-    if "/" in ref:
-        df.write.mode(mode).parquet(ref)
-    elif mode == "append":
-        df.writeTo(ref).append()
-    else:
-        df.writeTo(ref).createOrReplace()
-
-
 _ENTRY_FIELDS = (
     "title", "summary", "content", "date", "tags", "etag", "image_url",
     "content_hash",

@@ -77,19 +77,16 @@ def read_warc(
     return files.mapInPandas(run, schema=WARC_RECORDS_DDL)
 
 
-def warc_documents(
-    records: DataFrame, sniff_charset: bool = True
-) -> DataFrame:
+def warc_documents(records: DataFrame) -> DataFrame:
     """OK html response records -> the pipeline's interleaved documents
     shape (single text span holding the page text; media spans come
     later from extraction); host from the url, WARC ids/dates carried
     through.
 
-    With ``sniff_charset`` (default) the page bytes decode per-row via
-    the HTTP charset param / WHATWG meta prescan / windows-1252
-    aliasing (real crawls are far from all-UTF-8) — an Arrow-batched
-    pandas UDF that fuses into this select, no extra stage boundary.
-    ``sniff_charset=False`` keeps the zero-Python utf-8 decode.
+    The page bytes decode per-row via the HTTP charset param / WHATWG
+    meta prescan / windows-1252 aliasing (real crawls are far from
+    all-UTF-8) — an Arrow-batched pandas UDF that fuses into this
+    select, no extra stage boundary.
     """
     ok = records.where(
         F.col("error").isNull()
@@ -97,25 +94,22 @@ def warc_documents(
         & (F.col("http_status") == 200)
         & F.col("content_type").startswith("text/html")
     )
-    if sniff_charset:
-        from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
-        @pandas_udf("string")
-        def _decode(payload, ctype):
-            import pandas as pd
+    @pandas_udf("string")
+    def _decode(payload, ctype):
+        import pandas as pd
 
-            from ..kernel.warc import decode_html_bytes
+        from ..kernel.warc import decode_html_bytes
 
-            return pd.Series(
-                [
-                    None if p is None else decode_html_bytes(bytes(p), c)
-                    for p, c in zip(payload, ctype)
-                ]
-            )
+        return pd.Series(
+            [
+                None if p is None else decode_html_bytes(bytes(p), c)
+                for p, c in zip(payload, ctype)
+            ]
+        )
 
-        html = _decode(F.col("payload"), F.col("content_type"))
-    else:
-        html = F.decode(F.col("payload"), "utf-8")
+    html = _decode(F.col("payload"), F.col("content_type"))
     span = F.array(
         F.struct(
             F.lit("text").alias("kind"),

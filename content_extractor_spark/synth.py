@@ -206,14 +206,12 @@ def gen_rows(
     count: int,
     n_hosts: int = 20,
     seed: int = 42,
-    pct_no_title: float = 0.02,
-    pct_profile_miss: float = 0.02,
-    pct_bad_ending: float = 0.03,
     pct_reanalysis: float = 0.2,
     para_range: Tuple[int, int] = (2, 6),
     words_range: Tuple[int, int] = (12, 40),
 ) -> Iterator[dict]:
-    """Deterministic row generator for doc ids [start, start+count)."""
+    """Deterministic row generator for doc ids [start, start+count):
+    2% untitled pages, 2% unknown hosts, 3% excluded file endings."""
     zipf_weights = [1.0 / (r + 1) for r in range(n_hosts)]
     total_w = sum(zipf_weights)
     cum = []
@@ -231,12 +229,12 @@ def gen_rows(
         kind_roll = rng.random()
         etag = None
         last_crawl = EPOCH
-        if kind_roll < pct_no_title:
+        if kind_roll < 0.02:
             html = html.replace("<h1 class='title'>", "<h1 class='untitled'>", 1)
-        elif kind_roll < pct_no_title + pct_profile_miss:
+        elif kind_roll < 0.04:
             host = f"www.unknown{host_idx}.example"
             url = f"https://{host}/articles/{i}"
-        elif kind_roll < pct_no_title + pct_profile_miss + pct_bad_ending:
+        elif kind_roll < 0.07:
             ending = rng.choice([".pdf", ".jpg", ".mp4", ".zip", ".png"])
             url = f"https://{host}/files/doc{i}{ending}"
         if rng.random() < pct_reanalysis:
@@ -277,9 +275,7 @@ DOCUMENTS_DDL = (
 
 
 def documents_df(spark, n_docs: int, n_hosts: int = 20, seed: int = 42,
-                 partitions: Optional[int] = None,
-                 para_range: Tuple[int, int] = (2, 6),
-                 words_range: Tuple[int, int] = (12, 40)):
+                 partitions: Optional[int] = None):
     """Distributed deterministic corpus as a DataFrame (no collect)."""
     import pandas as pd
 
@@ -289,8 +285,7 @@ def documents_df(spark, n_docs: int, n_hosts: int = 20, seed: int = 42,
         for pdf in batches:
             for _, row in pdf.iterrows():
                 lo, hi = int(row["lo"]), int(row["hi"])
-                rows = list(gen_rows(lo, hi - lo, n_hosts=n_hosts, seed=seed,
-                                     para_range=para_range, words_range=words_range))
+                rows = list(gen_rows(lo, hi - lo, n_hosts=n_hosts, seed=seed))
                 if rows:
                     yield pd.DataFrame(rows)
 
@@ -305,12 +300,10 @@ def documents_df(spark, n_docs: int, n_hosts: int = 20, seed: int = 42,
 
 
 def write_documents(spark, path: str, n_docs: int, n_hosts: int = 20,
-                    seed: int = 42, partitions: Optional[int] = None,
-                    para_range: Tuple[int, int] = (2, 6),
-                    words_range: Tuple[int, int] = (12, 40)) -> None:
-    documents_df(
-        spark, n_docs, n_hosts, seed, partitions, para_range, words_range
-    ).write.mode("overwrite").parquet(path)
+                    seed: int = 42, partitions: Optional[int] = None) -> None:
+    documents_df(spark, n_docs, n_hosts, seed, partitions).write.mode(
+        "overwrite"
+    ).parquet(path)
 
 
 def encode_png_solid(w: int, h: int, rgb: Tuple[int, int, int]) -> bytes:

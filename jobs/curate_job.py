@@ -55,79 +55,59 @@ sys.path.insert(
 )
 
 
-def _env(name: str, cast=str):
-    raw = os.environ.get(name)
-    if raw is None or raw == "":
-        return None
-    return cast(raw)
+# {args attribute: (environment variable, cast)}
+ENV_VARS = {
+    "input": ("CURATE_INPUT", str),
+    "output": ("CURATE_OUTPUT", str),
+    "benchmark": ("CURATE_BENCHMARK", str),
+    "langs": ("CURATE_LANGS", str),
+    "min_quality": ("CURATE_MIN_QUALITY", float),
+    "ml_quality_weights": ("CURATE_ML_QUALITY_WEIGHTS", str),
+    "ml_min_score": ("CURATE_ML_MIN_SCORE", float),
+    "max_dup_frac": ("CURATE_MAX_DUP_FRAC", float),
+    "max_bullet_frac": ("CURATE_MAX_BULLET_FRAC", float),
+    "max_ellipsis_frac": ("CURATE_MAX_ELLIPSIS_FRAC", float),
+    "minhash_perms": ("CURATE_MINHASH_PERMS", int),
+    "minhash_bands": ("CURATE_MINHASH_BANDS", int),
+    "max_bucket": ("CURATE_MAX_BUCKET", int),
+    "decontam_ngram": ("CURATE_DECONTAM_NGRAM", int),
+    "val_pct": ("CURATE_VAL_PCT", int),
+}
 
 
-def resolve_config(argv=None, env=None):
+def resolve_config(argv):
     """Env-first, CLI-fallback parameter resolution (same contract as
     jobs/extract_job.py)."""
-    if env is not None:  # test hook
-        real, os.environ = os.environ, env  # type: ignore[assignment]
-    try:
-        p = argparse.ArgumentParser(description=__doc__)
-        p.add_argument("--input", default=None)
-        p.add_argument("--output", default=None)
-        p.add_argument("--benchmark", default=None,
-                       help="eval-set path for decontamination (optional)")
-        p.add_argument("--langs", default=None,
-                       help="comma-separated allow-list; empty = keep all")
-        p.add_argument("--min-quality", type=float, default=0.5)
-        p.add_argument("--ml-quality-weights", default=None,
-                       help="JSON file {weights: [...], bias: x} enabling "
-                            "the trained (hashed bag-of-words linear) "
-                            "quality filter stage")
-        p.add_argument("--ml-min-score", type=float, default=0.5)
-        p.add_argument("--max-dup-frac", type=float, default=0.3,
-                       help="max duplicated-3-gram character fraction")
-        p.add_argument("--max-bullet-frac", type=float, default=0.9,
-                       help="Gopher cap: max fraction of bulleted lines")
-        p.add_argument("--max-ellipsis-frac", type=float, default=0.3,
-                       help="Gopher cap: max fraction of ellipsis lines")
-        p.add_argument("--minhash-perms", type=int, default=64)
-        p.add_argument("--minhash-bands", type=int, default=16)
-        p.add_argument("--max-bucket", type=int, default=256,
-                       help="LSH bucket cap (hot-bucket truncation)")
-        p.add_argument("--decontam-ngram", type=int, default=8)
-        p.add_argument("--val-pct", type=int, default=5)
-        args = p.parse_args(argv)
+    from content_extractor_spark.jobconf import require, resolve_env_first
 
-        def take(attr: str, var: str, cast=str) -> None:
-            try:
-                v = _env(var, cast)
-            except ValueError:
-                p.error(f"env {var} is not a valid {cast.__name__}")
-            if v is not None:
-                setattr(args, attr, v)
-
-        take("input", "CURATE_INPUT")
-        take("output", "CURATE_OUTPUT")
-        take("benchmark", "CURATE_BENCHMARK")
-        take("langs", "CURATE_LANGS")
-        take("min_quality", "CURATE_MIN_QUALITY", float)
-        take("ml_quality_weights", "CURATE_ML_QUALITY_WEIGHTS")
-        take("ml_min_score", "CURATE_ML_MIN_SCORE", float)
-        take("max_dup_frac", "CURATE_MAX_DUP_FRAC", float)
-        take("max_bullet_frac", "CURATE_MAX_BULLET_FRAC", float)
-        take("max_ellipsis_frac", "CURATE_MAX_ELLIPSIS_FRAC", float)
-        take("minhash_perms", "CURATE_MINHASH_PERMS", int)
-        take("minhash_bands", "CURATE_MINHASH_BANDS", int)
-        take("max_bucket", "CURATE_MAX_BUCKET", int)
-        take("decontam_ngram", "CURATE_DECONTAM_NGRAM", int)
-        take("val_pct", "CURATE_VAL_PCT", int)
-        missing = [k for k in ("input", "output") if not getattr(args, k)]
-        if missing:
-            p.error(
-                "missing required parameters (flag or env): "
-                + ", ".join(f"--{m}" for m in missing)
-            )
-        return args
-    finally:
-        if env is not None:
-            os.environ = real  # type: ignore[assignment]
+    p = argparse.ArgumentParser(description=__doc__)
+    p.add_argument("--input", default=None)
+    p.add_argument("--output", default=None)
+    p.add_argument("--benchmark", default=None,
+                   help="eval-set path for decontamination (optional)")
+    p.add_argument("--langs", default=None,
+                   help="comma-separated allow-list; empty = keep all")
+    p.add_argument("--min-quality", type=float, default=0.5)
+    p.add_argument("--ml-quality-weights", default=None,
+                   help="JSON file {weights: [...], bias: x} enabling "
+                        "the trained (hashed bag-of-words linear) "
+                        "quality filter stage")
+    p.add_argument("--ml-min-score", type=float, default=0.5)
+    p.add_argument("--max-dup-frac", type=float, default=0.3,
+                   help="max duplicated-3-gram character fraction")
+    p.add_argument("--max-bullet-frac", type=float, default=0.9,
+                   help="Gopher cap: max fraction of bulleted lines")
+    p.add_argument("--max-ellipsis-frac", type=float, default=0.3,
+                   help="Gopher cap: max fraction of ellipsis lines")
+    p.add_argument("--minhash-perms", type=int, default=64)
+    p.add_argument("--minhash-bands", type=int, default=16)
+    p.add_argument("--max-bucket", type=int, default=256,
+                   help="LSH bucket cap (hot-bucket truncation)")
+    p.add_argument("--decontam-ngram", type=int, default=8)
+    p.add_argument("--val-pct", type=int, default=5)
+    args = resolve_env_first(p, ENV_VARS, argv)
+    require(p, args, ("input", "output"))
+    return args
 
 
 DROP_REASONS = (

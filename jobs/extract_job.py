@@ -43,85 +43,61 @@ from __future__ import annotations
 
 import argparse
 import json
-import os
 import sys
 
 
-def _env(name: str, cast=str):
-    raw = os.environ.get(name)
-    if raw is None or raw == "":
-        return None
-    return cast(raw)
+# {args attribute: (environment variable, cast)}
+ENV_VARS = {
+    "input": ("INPUT_TABLE", str),
+    "output": ("OUTPUT_PATH", str),
+    "profiles": ("PAGE_PROFILE_DIRECTORY_PATH", str),
+    "mode": ("EXTRACT_MODE", str),
+    "now": ("EXTRACT_NOW", str),
+    "reanalysis_hours": ("RE_ANALYSIS_INTERVAL", int),
+    "buckets": ("EXTRACT_BUCKETS", int),
+    "run_id": ("EXTRACT_RUN_ID", str),
+    "entries": ("ENTRIES_TABLE", str),
+    "target_pattern": ("TARGET_DATE_TIME_PATTERN", str),
+    "target_zone": ("TARGET_TIME_ZONE", str),
+}
 
 
-def resolve_config(argv=None, env=None):
+def resolve_config(argv):
     """Env-first, CLI-fallback parameter resolution (Config.fromEnv
     order, Config.scala:186-242: env wins when set, CLI and defaults
     fill the rest)."""
-    if env is not None:  # test hook
-        real, os.environ = os.environ, env  # type: ignore[assignment]
-    try:
-        p = argparse.ArgumentParser(description=__doc__)
-        p.add_argument("--input", default=None)
-        p.add_argument("--output", default=None)
-        p.add_argument("--profiles", default=None,
-                       help="profile dir (*.json/*.conf)")
-        p.add_argument("--mode", default="all",
-                       choices=["all", "new", "existing"])
-        p.add_argument("--now", default="2021-07-01T00:00:00Z",
-                       help="clock parameter (never wall-clock: determinism)")
-        p.add_argument("--reanalysis-hours", type=int, default=48)
-        p.add_argument("--buckets", type=int, default=256)
-        p.add_argument("--run-id", default="run-0")
-        p.add_argument("--entries", default=None,
-                       help="existing entries table/path for dup-disable + ETag skip")
-        p.add_argument("--target-pattern", default="yyyy-MM-dd'T'HH:mm:ssXXX")
-        p.add_argument("--target-zone", default="UTC")
-        p.add_argument("--print-merge-sql", action="store_true",
-                       help="dry run: print the exact entries MERGE the "
-                            "catalog path would execute, then exit "
-                            "(requires --entries; no data is read or "
-                            "written)")
-        args = p.parse_args(argv)
+    from content_extractor_spark.jobconf import require, resolve_env_first
 
-        def take(attr: str, var: str, cast=str) -> None:
-            # explicit None check: a SET env var always wins, including
-            # falsy-but-valid values like RE_ANALYSIS_INTERVAL=0
-            try:
-                v = _env(var, cast)
-            except ValueError:
-                p.error(f"env {var} is not a valid {cast.__name__}")
-            if v is not None:
-                setattr(args, attr, v)
-
-        take("input", "INPUT_TABLE")
-        take("output", "OUTPUT_PATH")
-        take("profiles", "PAGE_PROFILE_DIRECTORY_PATH")
-        take("mode", "EXTRACT_MODE")
-        take("now", "EXTRACT_NOW")
-        take("reanalysis_hours", "RE_ANALYSIS_INTERVAL", int)
-        take("buckets", "EXTRACT_BUCKETS", int)
-        take("run_id", "EXTRACT_RUN_ID")
-        take("entries", "ENTRIES_TABLE")
-        take("target_pattern", "TARGET_DATE_TIME_PATTERN")
-        take("target_zone", "TARGET_TIME_ZONE")
-        if args.mode not in ("all", "new", "existing"):
-            p.error(f"invalid mode '{args.mode}' (all|new|existing)")
-        if args.print_merge_sql:
-            if not args.entries:
-                p.error("--print-merge-sql requires --entries")
-            return args  # dry run needs no input/output/profiles
-        missing = [k for k in ("input", "output", "profiles")
-                   if not getattr(args, k)]
-        if missing:
-            p.error(
-                "missing required parameters (flag or env): "
-                + ", ".join(f"--{m}" for m in missing)
-            )
-        return args
-    finally:
-        if env is not None:
-            os.environ = real  # type: ignore[assignment]
+    p = argparse.ArgumentParser(description=__doc__)
+    p.add_argument("--input", default=None)
+    p.add_argument("--output", default=None)
+    p.add_argument("--profiles", default=None,
+                   help="profile dir (*.json/*.conf)")
+    p.add_argument("--mode", default="all",
+                   choices=["all", "new", "existing"])
+    p.add_argument("--now", default="2021-07-01T00:00:00Z",
+                   help="clock parameter (never wall-clock: determinism)")
+    p.add_argument("--reanalysis-hours", type=int, default=48)
+    p.add_argument("--buckets", type=int, default=256)
+    p.add_argument("--run-id", default="run-0")
+    p.add_argument("--entries", default=None,
+                   help="existing entries table/path for dup-disable + ETag skip")
+    p.add_argument("--target-pattern", default="yyyy-MM-dd'T'HH:mm:ssXXX")
+    p.add_argument("--target-zone", default="UTC")
+    p.add_argument("--print-merge-sql", action="store_true",
+                   help="dry run: print the exact entries MERGE the "
+                        "catalog path would execute, then exit "
+                        "(requires --entries; no data is read or "
+                        "written)")
+    args = resolve_env_first(p, ENV_VARS, argv)
+    if args.mode not in ("all", "new", "existing"):
+        p.error(f"invalid mode '{args.mode}' (all|new|existing)")
+    if args.print_merge_sql:
+        if not args.entries:
+            p.error("--print-merge-sql requires --entries")
+        return args  # dry run needs no input/output/profiles
+    require(p, args, ("input", "output", "profiles"))
+    return args
 
 
 def main(argv=None):

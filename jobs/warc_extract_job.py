@@ -37,45 +37,26 @@ sys.path.insert(
 )
 
 
-def _env(name: str, cast=str):
-    raw = os.environ.get(name)
-    if raw is None or raw == "":
-        return None
-    return cast(raw)
+# {args attribute: (environment variable, cast)}
+ENV_VARS = {
+    "input": ("WARC_INPUT", str),
+    "output": ("WARC_OUTPUT", str),
+    "profiles": ("PAGE_PROFILE_DIRECTORY_PATH", str),
+    "max_files": ("WARC_MAX_FILES", int),
+}
 
 
-def resolve_config(argv=None, env=None):
-    if env is not None:  # test hook
-        real, os.environ = os.environ, env  # type: ignore[assignment]
-    try:
-        p = argparse.ArgumentParser(description=__doc__)
-        p.add_argument("--input", default=None)
-        p.add_argument("--output", default=None)
-        p.add_argument("--profiles", default=None)
-        p.add_argument("--max-files", type=int, default=None)
-        args = p.parse_args(argv)
+def resolve_config(argv):
+    from content_extractor_spark.jobconf import require, resolve_env_first
 
-        def take(attr, var, cast=str):
-            try:
-                v = _env(var, cast)
-            except ValueError:
-                p.error(f"env {var} is not a valid {cast.__name__}")
-            if v is not None:
-                setattr(args, attr, v)
-
-        take("input", "WARC_INPUT")
-        take("output", "WARC_OUTPUT")
-        take("profiles", "PAGE_PROFILE_DIRECTORY_PATH")
-        take("max_files", "WARC_MAX_FILES", int)
-        missing = [k for k in ("input", "output", "profiles")
-                   if not getattr(args, k)]
-        if missing:
-            p.error("missing required parameters (flag or env): "
-                    + ", ".join(f"--{m}" for m in missing))
-        return args
-    finally:
-        if env is not None:
-            os.environ = real  # type: ignore[assignment]
+    p = argparse.ArgumentParser(description=__doc__)
+    p.add_argument("--input", default=None)
+    p.add_argument("--output", default=None)
+    p.add_argument("--profiles", default=None)
+    p.add_argument("--max-files", type=int, default=None)
+    args = resolve_env_first(p, ENV_VARS, argv)
+    require(p, args, ("input", "output", "profiles"))
+    return args
 
 
 def run_warc_extract(spark, in_dir, out_root, profiles, max_files=None):

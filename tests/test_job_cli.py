@@ -9,6 +9,14 @@ from content_extractor_spark import synth
 from content_extractor_spark.operators.scans import etag_unchanged_skip
 
 
+def _set_env(monkeypatch, env_vars, values):
+    """The job's environment holds exactly `values` of its variables."""
+    for var, _ in env_vars.values():
+        monkeypatch.delenv(var, raising=False)
+    for var, value in values.items():
+        monkeypatch.setenv(var, value)
+
+
 class TestEtagSkip:
     def test_unchanged_rows_skipped(self, spark):
         docs = spark.createDataFrame(
@@ -29,20 +37,20 @@ class TestEtagSkip:
 
 
 class TestJobConfigResolution:
-    def test_env_wins_over_cli(self):
-        from jobs.extract_job import resolve_config
+    def test_env_wins_over_cli(self, monkeypatch):
+        from jobs.extract_job import ENV_VARS, resolve_config
 
+        _set_env(monkeypatch, ENV_VARS, {
+            "INPUT_TABLE": "env_in",
+            "PAGE_PROFILE_DIRECTORY_PATH": "env_p",
+            "RE_ANALYSIS_INTERVAL": "12",
+            "TARGET_DATE_TIME_PATTERN": "dd.MM.yyyy",
+            "TARGET_TIME_ZONE": "Europe/Berlin",
+            "EXTRACT_BUCKETS": "32",
+        })
         args = resolve_config(
             ["--input", "cli_in", "--output", "cli_out", "--profiles", "cli_p",
              "--buckets", "8"],
-            env={
-                "INPUT_TABLE": "env_in",
-                "PAGE_PROFILE_DIRECTORY_PATH": "env_p",
-                "RE_ANALYSIS_INTERVAL": "12",
-                "TARGET_DATE_TIME_PATTERN": "dd.MM.yyyy",
-                "TARGET_TIME_ZONE": "Europe/Berlin",
-                "EXTRACT_BUCKETS": "32",
-            },
         )
         assert args.input == "env_in"          # env beats CLI
         assert args.output == "cli_out"        # CLI fills the rest
@@ -52,46 +60,47 @@ class TestJobConfigResolution:
         assert args.target_pattern == "dd.MM.yyyy"
         assert args.target_zone == "Europe/Berlin"
 
-    def test_env_alone_suffices(self):
-        from jobs.extract_job import resolve_config
+    def test_env_alone_suffices(self, monkeypatch):
+        from jobs.extract_job import ENV_VARS, resolve_config
 
-        args = resolve_config(
-            [],
-            env={
-                "INPUT_TABLE": "t", "OUTPUT_PATH": "o",
-                "PAGE_PROFILE_DIRECTORY_PATH": "p",
-            },
-        )
+        _set_env(monkeypatch, ENV_VARS, {
+            "INPUT_TABLE": "t", "OUTPUT_PATH": "o",
+            "PAGE_PROFILE_DIRECTORY_PATH": "p",
+        })
+        args = resolve_config([])
         assert (args.input, args.output, args.profiles) == ("t", "o", "p")
         assert args.reanalysis_hours == 48  # defaults still apply
 
-    def test_falsy_env_value_still_wins(self):
-        from jobs.extract_job import resolve_config
+    def test_falsy_env_value_still_wins(self, monkeypatch):
+        from jobs.extract_job import ENV_VARS, resolve_config
 
+        _set_env(monkeypatch, ENV_VARS, {"RE_ANALYSIS_INTERVAL": "0"})
         args = resolve_config(
-            ["--input", "i", "--output", "o", "--profiles", "p"],
-            env={"RE_ANALYSIS_INTERVAL": "0"},
+            ["--input", "i", "--output", "o", "--profiles", "p"]
         )
         assert args.reanalysis_hours == 0  # 0 is valid: re-analyze always
 
-    def test_env_values_are_validated(self):
+    def test_env_values_are_validated(self, monkeypatch):
         import pytest
 
-        from jobs.extract_job import resolve_config
+        from jobs.extract_job import ENV_VARS, resolve_config
 
         base = ["--input", "i", "--output", "o", "--profiles", "p"]
+        _set_env(monkeypatch, ENV_VARS, {"EXTRACT_MODE": "bogus"})
         with pytest.raises(SystemExit):
-            resolve_config(base, env={"EXTRACT_MODE": "bogus"})
+            resolve_config(base)
+        _set_env(monkeypatch, ENV_VARS, {"RE_ANALYSIS_INTERVAL": "abc"})
         with pytest.raises(SystemExit):
-            resolve_config(base, env={"RE_ANALYSIS_INTERVAL": "abc"})
+            resolve_config(base)
 
-    def test_missing_required_errors(self):
+    def test_missing_required_errors(self, monkeypatch):
         import pytest
 
-        from jobs.extract_job import resolve_config
+        from jobs.extract_job import ENV_VARS, resolve_config
 
+        _set_env(monkeypatch, ENV_VARS, {})
         with pytest.raises(SystemExit):
-            resolve_config(["--input", "only_in"], env={})
+            resolve_config(["--input", "only_in"])
 
 
 class TestTargetPatternPlumbing:
@@ -164,13 +173,14 @@ class TestJobCli:
 
 
 class TestCurateJob:
-    def test_env_first_config(self):
-        from jobs.curate_job import resolve_config
+    def test_env_first_config(self, monkeypatch):
+        from jobs.curate_job import ENV_VARS, resolve_config
 
+        _set_env(monkeypatch, ENV_VARS,
+                 {"CURATE_INPUT": "env_in", "CURATE_MIN_QUALITY": "0.25"})
         cfg = resolve_config(
             ["--input", "cli_in", "--output", "cli_out",
-             "--min-quality", "0.9"],
-            env={"CURATE_INPUT": "env_in", "CURATE_MIN_QUALITY": "0.25"},
+             "--min-quality", "0.9"]
         )
         assert cfg.input == "env_in"          # env wins
         assert cfg.output == "cli_out"        # cli fills the rest
@@ -266,12 +276,13 @@ class TestWarcExtractJob:
         assert spans.count() == 10
         assert spans.where("status = 'ok'").count() == 10
 
-    def test_env_first_config(self):
-        from jobs.warc_extract_job import resolve_config
+    def test_env_first_config(self, monkeypatch):
+        from jobs.warc_extract_job import ENV_VARS, resolve_config
 
+        _set_env(monkeypatch, ENV_VARS,
+                 {"WARC_INPUT": "env_in", "WARC_MAX_FILES": "7"})
         cfg = resolve_config(
-            ["--input", "cli_in", "--output", "o", "--profiles", "p"],
-            env={"WARC_INPUT": "env_in", "WARC_MAX_FILES": "7"},
+            ["--input", "cli_in", "--output", "o", "--profiles", "p"]
         )
         assert cfg.input == "env_in" and cfg.max_files == 7
 

@@ -158,18 +158,6 @@ def test_tfidf_no_cartesian_and_broadcast_scalar(spark):
     assert rep["python_stages"] == 0
 
 
-def test_ngram_caps_stay_catalyst(spark):
-    """max_df/max_posting add windows, never Python or a cartesian."""
-    from content_extractor_spark.operators.dedup_families import (
-        ngram_jaccard_pairs,
-    )
-
-    df = spark.createDataFrame([(1, "a b c d")], "doc_id int, text string")
-    rep = plan_report(ngram_jaccard_pairs(df, max_df=10, max_posting=5))
-    assert rep["python_stages"] == 0
-    assert "CartesianProduct" not in rep["text"]
-
-
 def test_bucketed_tables_join_without_shuffle(spark, tmp_path):
     """Bucketing = the co-located-join strategy for repeated big joins
     (SURVEY §2.6): two tables bucketed+sorted on the join key must join

@@ -6,16 +6,33 @@ tests reach is surface the system does not use; this scan fails when one
 appears, so dead surface cannot grow back unnoticed.
 
 The defs come from those files' ASTs. A use is an identifier in the
-AST of non-test code: a name, an attribute, an imported name, or a
-string constant equal to the def's name (the driver's query registry
-and ``getattr`` lookups name code by string). Docstrings, comments and
-other prose are not uses. Non-test code is the package itself, the
+AST of non-test code: a name, an imported name, an attribute read
+through a package receiver, or a string constant equal to the def's
+name (the driver's query registry and ``getattr`` lookups name code by
+string). A package receiver is a name bound by an import of
+``content_extractor_spark``, ``jobs`` or ``__spark_entry__`` (or a
+relative import inside the package), or an attribute chain rooted in
+one: ``synth.gen_rows`` uses ``gen_rows``, while ``pq.write_table`` on
+a pyarrow module does not. Docstrings, comments and other prose are
+not uses. Non-test code is the package itself, the
 jobs, ``__spark_entry__.py``, the tools and the benchmark harnesses
 (not their ``test_*.py`` files). A re-export in a package
 ``__init__.py`` is not a use, and neither is the def's own body.
 
 ``ALLOWED`` names the few defs kept without such a caller; each entry says
 why. An entry that is no longer needed fails too, so the list stays short.
+
+Every defaulted parameter of those top-level functions has a non-test
+call that sets it: the same files, the same non-test callers. Calls
+resolve by name (``from ... import f as g`` aliases included); a call
+sets a parameter when it passes it by position or by keyword, and a
+call with ``*args``/``**kwargs`` sets all of them. An argument that
+only forwards the enclosing def's own defaulted parameter sets nothing
+unless that parameter is set in turn, so a pass-through chain of
+unset knobs fails as a whole; the scan runs to a fixpoint. The
+parameters of ``ALLOWED`` defs count as set. ``ALLOWED_PARAMS`` names
+the few parameters kept without a setting caller, each with the test
+that needs it, and a stale entry fails as ``ALLOWED``'s do.
 
 Every lineage cut goes through ``session.materialize``: a second guard
 fails on any ``checkpoint(`` or ``localCheckpoint(`` call in the package,
@@ -59,6 +76,30 @@ ALLOWED = {
     ),
 }
 
+ALLOWED_PARAMS = {
+    "kernel/dom.py:parse(engine)": (
+        "html.parser reference engine for test_fastscan_differential.py"
+    ),
+    "kernel/warc.py:build_warc(gzip_members)": (
+        "plain-record archives for test_roundtrip_gzip_members_and_plain"
+    ),
+    "kernel/warc.py:build_warc(with_requests)": (
+        "request records for test_request_records_roundtrip"
+    ),
+    "kernel/pdftext.py:build_simple_pdf(compress)": (
+        "uncompressed streams for test_roundtrip_uncompressed"
+    ),
+    "kernel/jpeg.py:encode_jpeg_solid(restart_every)": (
+        "DRI/RST markers for test_jpeg_restart_markers"
+    ),
+    "sources/warc.py:read_warc(warc_types)": (
+        "metadata records for test_wat_roundtrip_links"
+    ),
+    "jobs/extract_job.py:main(argv)": "None means sys.argv (spark-submit)",
+    "jobs/curate_job.py:main(argv)": "None means sys.argv (spark-submit)",
+    "jobs/warc_extract_job.py:main(argv)": "None means sys.argv (spark-submit)",
+}
+
 
 def _top_level_defs(tree):
     for node in tree.body:
@@ -91,14 +132,41 @@ def _docstrings(tree):
                 yield id(body[0].value)
 
 
+_PACKAGES = ("content_extractor_spark", "jobs", "__spark_entry__")
+
+
+def _package_receivers(tree):
+    """Names an import of one of _PACKAGES binds in the tree (relative
+    imports are inside the package)."""
+    names = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            for a in node.names:
+                if a.name.split(".")[0] in _PACKAGES:
+                    names.add(a.asname or a.name.split(".")[0])
+        elif isinstance(node, ast.ImportFrom) and (
+            node.level or (node.module or "").split(".")[0] in _PACKAGES
+        ):
+            names.update(a.asname or a.name for a in node.names)
+    return names
+
+
+def _rooted_in(node, names):
+    while isinstance(node, ast.Attribute):
+        node = node.value
+    return isinstance(node, ast.Name) and node.id in names
+
+
 def _identifiers(tree):
     """(identifier, line) for every name-level reference in the tree."""
     prose = set(_docstrings(tree))
+    receivers = _package_receivers(tree)
     for node in ast.walk(tree):
         if isinstance(node, ast.Name):
             yield node.id, node.lineno
         elif isinstance(node, ast.Attribute):
-            yield node.attr, node.lineno
+            if _rooted_in(node.value, receivers):
+                yield node.attr, node.lineno
         elif isinstance(node, ast.alias):
             for part in node.name.split("."):
                 yield part, node.lineno
@@ -157,6 +225,111 @@ def test_allowlist_has_no_stale_entries():
     stale = sorted(k for k in ALLOWED if k not in all_defs or k not in unused)
     assert not stale, f"ALLOWED entries that are gone or now used: {stale}"
     assert all(reason.strip() for reason in ALLOWED.values())
+
+
+def _defaulted_params(fn):
+    a = fn.args
+    pos = [x.arg for x in a.posonlyargs + a.args]
+    dflt = pos[len(pos) - len(a.defaults):] if a.defaults else []
+    dflt += [k.arg for k, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+    return pos, dflt
+
+
+def _calls(tree):
+    """(callee name, call, enclosing defs) for every named call; import
+    aliases resolve to the imported name."""
+    aliases = {
+        a.asname: a.name
+        for node in ast.walk(tree) if isinstance(node, ast.ImportFrom)
+        for a in node.names if a.asname
+    }
+
+    def walk(node, chain):
+        for child in ast.iter_child_nodes(node):
+            inner = chain
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef,
+                                  ast.Lambda)):
+                inner = chain + [child]
+            elif isinstance(child, ast.Call):
+                f = child.func
+                name = (f.id if isinstance(f, ast.Name)
+                        else f.attr if isinstance(f, ast.Attribute) else None)
+                if name is not None:
+                    yield aliases.get(name, name), child, chain
+            yield from walk(child, inner)
+
+    yield from walk(tree, [])
+
+
+def _unset_params():
+    """(keys 'file:def(param)' of defaulted parameters no non-test call
+    sets, keys of all defaulted parameters)."""
+    trees = {
+        p: ast.parse(p.read_text(encoding="utf-8")) for p in _non_test_sources()
+    }
+    defs = {}  # key -> (positional names, defaulted names)
+    by_name = {}
+    owner = {}  # id(def node) -> key
+    for p, prefix in _guarded_files():
+        for node in trees[p].body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                key = f"{prefix}:{node.name}"
+                defs[key] = _defaulted_params(node)
+                by_name.setdefault(node.name, []).append(key)
+                owner[id(node)] = key
+    calls = [c for tree in trees.values() for c in _calls(tree)]
+    is_set = {(k, q) for k in ALLOWED if k in defs for q in defs[k][1]}
+
+    def forwards_unset(arg, chain):
+        """arg only passes on an enclosing def's unset defaulted param."""
+        if not isinstance(arg, ast.Name):
+            return False
+        for fn in reversed(chain):
+            a = fn.args
+            if arg.id in {x.arg for x in a.posonlyargs + a.args + a.kwonlyargs}:
+                key = owner.get(id(fn))
+                return (key is not None and arg.id in defs[key][1]
+                        and (key, arg.id) not in is_set)
+        return False
+
+    changed = True
+    while changed:
+        changed = False
+        for name, call, chain in calls:
+            star = (any(isinstance(a, ast.Starred) for a in call.args)
+                    or any(k.arg is None for k in call.keywords))
+            passed = {k.arg: k.value for k in call.keywords if k.arg}
+            for key in by_name.get(name, ()):
+                pos, dflt = defs[key]
+                given = dict(passed)
+                given.update(zip(pos, call.args))
+                for q in dflt:
+                    if (key, q) in is_set:
+                        continue
+                    if star or (q in given
+                                and not forwards_unset(given[q], chain)):
+                        is_set.add((key, q))
+                        changed = True
+    every = {(k, q) for k, (_, dflt) in defs.items() for q in dflt}
+    keys = lambda pairs: {f"{k}({q})" for k, q in pairs}  # noqa: E731
+    return keys(every - is_set), keys(every)
+
+
+def test_every_defaulted_parameter_has_a_caller():
+    unset, _ = _unset_params()
+    unexplained = sorted(unset - set(ALLOWED_PARAMS))
+    assert not unexplained, (
+        "defaulted parameters no non-test call sets (delete them and "
+        "inline the default, or add them to ALLOWED_PARAMS with the test "
+        f"that needs them): {unexplained}"
+    )
+
+
+def test_param_allowlist_has_no_stale_entries():
+    unset, every = _unset_params()
+    stale = sorted(k for k in ALLOWED_PARAMS if k not in every or k not in unset)
+    assert not stale, f"ALLOWED_PARAMS entries that are gone or now set: {stale}"
+    assert all(reason.strip() for reason in ALLOWED_PARAMS.values())
 
 
 def _checkpoint_calls():

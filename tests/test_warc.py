@@ -496,20 +496,6 @@ class TestCdxIndex:
         assert keys == ["org,example)/a", "org,example)/b",
                         "org,example)/c"]
 
-    def test_select_without_digest_dedup_keeps_all(self, spark, tmp_path):
-        from content_extractor_spark.sources.cdx import (
-            cdx_select,
-            parse_cdx_lines,
-        )
-
-        p = tmp_path / "idx2"
-        p.mkdir()
-        (p / "x.cdx").write_text("\n".join(self._lines()) + "\n")
-        sel = cdx_select(
-            parse_cdx_lines(spark.read.text(str(p))), dedup_digest=False
-        )
-        assert sel.count() == 4  # both AAA captures survive
-
 
 class TestBlocklistDifferential:
     def test_blocklist_vs_python_mirror_fuzz(self, spark):
