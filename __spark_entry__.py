@@ -1537,9 +1537,7 @@ def q_kmeans_assign(spark, sf_dir):
         emb, dim=_PQ_DIM, m=_PQ_M, k=_PQ_K, iterations=1, round_to=6,
         init_vectors=init,
     )
-    km = kmeans_assign(
-        emb, dim=64, k=4, round_to=6, centroids=cents
-    ).select(
+    km = kmeans_assign(emb, cents).select(
         F.lit("kmeans").alias("kind"), "vec_id",
         "cluster", "dist",
     )

@@ -393,8 +393,8 @@ def _kmeans_centroids(base: DataFrame, dim: int, k: int,
     """Deterministic Lloyd centroid training over base(id, v):
     init = vectors of the k smallest ids; per iteration one
     groupBy(cluster) AVG pass + a k-row driver collect; empty clusters
-    keep their previous centroid. Shared by kmeans_assign (IVF coarse
-    quantizer) and the per-subspace PQ codebook trainer."""
+    keep their previous centroid. The reference the fused trainer
+    ``train_ivf_pq`` is tested against."""
     init = base.orderBy("id").limit(k).collect()
     cents = [list(r["v"]) for r in init]
     for _ in range(iterations):
@@ -428,51 +428,25 @@ def _kmeans_assign_stage(base: DataFrame, cents, round_to: int) -> DataFrame:
     )
 
 
-def kmeans_assign(
-    df: DataFrame,
-    dim: int,
-    k: int = 4,
-    round_to: int = 6,
-    centroids=None,
-) -> DataFrame:
-    """Deterministic one-iteration Lloyd k-means over (vec_id,
-    embedding) — the coarse quantizer an IVF index is built from.
-
-    ``centroids`` (r7): already-trained centroids (e.g. from
-    ``train_ivf_pq``) — skips training entirely; the call becomes the
-    MAP-ONLY assignment pass with no cache and no driver job.
+def kmeans_assign(df: DataFrame, centroids) -> DataFrame:
+    """Assign each (vec_id, embedding) to its nearest centroid — the IVF
+    coarse quantizer's assignment pass, over centroids trained by
+    ``train_ivf_pq``. MAP-ONLY: the centroids are array literals (k is
+    small by definition), so there is no cache and no driver job.
 
     Determinism contract (engine-portable, no rand()):
-      * init centroids = the vectors of the k smallest ids,
-      * centroids and distances are rounded to `round_to` after every
-        update, so cross-engine float-summation-order noise (~1e-15)
-        never flips an assignment,
-      * argmin ties break to the lowest cluster index,
-      * a cluster that goes empty keeps its previous centroid.
-
-    Scale shape: assignment is MAP-ONLY (centroids are array literals —
-    k is small by definition); each iteration adds one groupBy(cluster)
-    with per-dimension AVG partial aggregation, and one k-row collect to
-    the driver. Total: one training pass + the final assign pass.
+      * distances are rounded to 6 decimals, the trainer's rounding, so
+        cross-engine float-summation-order noise (~1e-15) never flips
+        an assignment,
+      * argmin ties break to the lowest cluster index.
     """
     base = df.select(
         F.col("vec_id").alias("id"),
         F.col("embedding").cast("array<double>").alias("v"),
     )
-    if centroids is not None:
-        return _kmeans_assign_stage(base, centroids, round_to).select(
-            F.col("id").alias("vec_id"), "cluster", "dist"
-        )
-    base = base.cache()
-    cents = _kmeans_centroids(base, dim, k, 1, round_to)
-    out = _kmeans_assign_stage(base, cents, round_to).select(
+    return _kmeans_assign_stage(base, centroids, 6).select(
         F.col("id").alias("vec_id"), "cluster", "dist"
     )
-    # release the iteration cache (the returned map-only assignment
-    # recomputes from source once on the caller's action — cheaper than
-    # pinning the full vector projection for the rest of the session)
-    base.unpersist(blocking=False)
-    return out
 
 
 # ---------------------------------------------------------------------------

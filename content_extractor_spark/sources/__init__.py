@@ -1,4 +1,4 @@
-"""Source/sink adapters (Iceberg when a catalog is configured, parquet
-fallback otherwise)."""
+"""Source/sink adapters: table reads, the entries write, the WARC and
+CDX connectors."""
 
 from .io import apply_entry_actions, read_table  # noqa: F401

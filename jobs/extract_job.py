@@ -84,18 +84,9 @@ def resolve_config(argv):
                    help="existing entries table/path for dup-disable + ETag skip")
     p.add_argument("--target-pattern", default="yyyy-MM-dd'T'HH:mm:ssXXX")
     p.add_argument("--target-zone", default="UTC")
-    p.add_argument("--print-merge-sql", action="store_true",
-                   help="dry run: print the exact entries MERGE the "
-                        "catalog path would execute, then exit "
-                        "(requires --entries; no data is read or "
-                        "written)")
     args = resolve_env_first(p, ENV_VARS, argv)
     if args.mode not in ("all", "new", "existing"):
         p.error(f"invalid mode '{args.mode}' (all|new|existing)")
-    if args.print_merge_sql:
-        if not args.entries:
-            p.error("--print-merge-sql requires --entries")
-        return args  # dry run needs no input/output/profiles
     require(p, args, ("input", "output", "profiles"))
     return args
 
@@ -109,40 +100,15 @@ def main(argv=None):
     from content_extractor_spark.operators.scans import etag_unchanged_skip
     from content_extractor_spark.pipeline import PipelineConfig, run_extraction
     from content_extractor_spark.session import get_spark
+    from content_extractor_spark.sources.io import read_table
 
     preexisting = SparkSession.getActiveSession() is not None
     spark = get_spark(app_name=f"content-extract-{args.run_id}")
-    if args.print_merge_sql:
-        # dry run: exercise the live MERGE path (view registration +
-        # source-expression analysis against the canonical planned
-        # schema) and print the exact SQL; nothing is read or written
-        from content_extractor_spark.sources.io import (
-            PLANNED_DDL,
-            entry_merge_dry_run,
-        )
-
-        planned = spark.createDataFrame([], PLANNED_DDL)
-        print(entry_merge_dry_run(
-            spark, args.entries, planned,
-            clock=args.now,
-            reanalysis_interval_hours=args.reanalysis_hours,
-        ))
-        if not preexisting:
-            spark.stop()
-        return 0
-    docs = (
-        spark.read.table(args.input)
-        if "/" not in args.input
-        else spark.read.parquet(args.input)
-    )
+    docs = read_table(spark, args.input)
     profiles = load_profiles(args.profiles)
     existing = None
     if args.entries:
-        existing = (
-            spark.read.table(args.entries)
-            if "/" not in args.entries
-            else spark.read.parquet(args.entries)
-        )
+        existing = read_table(spark, args.entries)
         docs = etag_unchanged_skip(docs, existing)
 
     summary = run_extraction(

@@ -171,6 +171,41 @@ class TestJobCli:
         ledger = spark.read.parquet(f"{out_dir}/ledger")
         assert ledger.where("status = 'done'").count() == 4
 
+    def test_corrupt_entries_raise_before_any_write(
+        self, spark, tmp_path, corrupt_parquet
+    ):
+        """A corrupt --entries table is not "no entries": the job raises
+        before it writes spans or a next entries state, and the table
+        stays as it was."""
+        in_dir = str(tmp_path / "docs")
+        out_dir = tmp_path / "out"
+        entries = tmp_path / "entries"
+        prof_dir = tmp_path / "profiles"
+        prof_dir.mkdir()
+        synth.write_documents(spark, in_dir, 20, n_hosts=2, seed=5, partitions=1)
+        for i in range(2):
+            (prof_dir / f"host{i}.json").write_text(
+                json.dumps(synth.make_host_profile(i)), encoding="utf-8"
+            )
+        spark.createDataFrame(
+            [("entry-1", "u1", 'W/"a"')],
+            "entry_id string, url_id string, etag string",
+        ).write.parquet(str(entries))
+        corrupt_parquet(entries)
+        before = {f.name: f.read_bytes() for f in entries.iterdir()}
+
+        from jobs.extract_job import main
+
+        with pytest.raises(Exception, match="entries"):
+            main([
+                "--input", in_dir, "--output", str(out_dir),
+                "--profiles", str(prof_dir), "--entries", str(entries),
+                "--buckets", "4",
+            ])
+        assert not (out_dir / "spans_out").exists()
+        assert not (out_dir / "entries_next").exists()
+        assert {f.name: f.read_bytes() for f in entries.iterdir()} == before
+
 
 class TestCurateJob:
     def test_env_first_config(self, monkeypatch):

@@ -1203,25 +1203,35 @@ class TestLinkGraph:
 
 class TestKmeansAndNormalize:
     def test_kmeans_separates_two_blobs(self, spark):
-        from content_extractor_spark.operators.similarity import kmeans_assign
+        from content_extractor_spark.operators.similarity import (
+            kmeans_assign,
+            train_ivf_pq,
+        )
 
         rows = [(i, [0.0 + i * 0.01, 0.0]) for i in range(5)]
         rows += [(100 + i, [10.0 + i * 0.01, 0.0]) for i in range(5)]
         df = spark.createDataFrame(rows, "vec_id int, embedding array<float>")
-        out = kmeans_assign(df, dim=2, k=2).collect()
+        cents, _ = train_ivf_pq(df, dim=2, m=1, k=2)
+        out = kmeans_assign(df, cents).collect()
         by_id = {r["vec_id"]: r["cluster"] for r in out}
         left = {by_id[i] for i in range(5)}
         right = {by_id[100 + i] for i in range(5)}
         assert len(left) == 1 and len(right) == 1 and left != right
 
     def test_kmeans_deterministic(self, spark):
-        from content_extractor_spark.operators.similarity import kmeans_assign
+        from content_extractor_spark.operators.similarity import (
+            kmeans_assign,
+            train_ivf_pq,
+        )
 
         rows = [(i, [float(i % 7), float(i % 3)]) for i in range(60)]
         df = spark.createDataFrame(rows, "vec_id int, embedding array<float>")
-        a = sorted(map(tuple, kmeans_assign(df, dim=2, k=3).collect()))
-        b = sorted(map(tuple, kmeans_assign(df, dim=2, k=3).collect()))
-        assert a == b
+
+        def run():
+            cents, _ = train_ivf_pq(df, dim=2, m=1, k=3)
+            return sorted(map(tuple, kmeans_assign(df, cents).collect()))
+
+        assert run() == run()
 
     def test_dists_to_all_bit_equals_per_centroid_form(self, spark):
         """r7: the fused transform-over-2D-literal distance array must be
@@ -1291,28 +1301,6 @@ class TestKmeansAndNormalize:
             )
             assert cents == want_cents
             assert books == want_books
-
-    def test_kmeans_assign_with_given_centroids_matches_trained(self, spark):
-        """kmeans_assign(centroids=...) must equal the self-training
-        call when handed the centroids that call would train."""
-        from pyspark.sql import functions as F
-
-        from content_extractor_spark.operators.similarity import (
-            _kmeans_centroids,
-            kmeans_assign,
-        )
-
-        rows = [(i, [float(i % 7), float(i % 3)]) for i in range(60)]
-        df = spark.createDataFrame(rows, "vec_id int, embedding array<float>")
-        base = df.select(
-            F.col("vec_id").alias("id"),
-            F.col("embedding").cast("array<double>").alias("v"),
-        )
-        cents = _kmeans_centroids(base, dim=2, k=3, iterations=1, round_to=6)
-        a = sorted(map(tuple, kmeans_assign(df, dim=2, k=3).collect()))
-        b = sorted(map(tuple, kmeans_assign(
-            df, dim=2, k=3, centroids=cents).collect()))
-        assert a == b
 
     def test_pq_codebooks_and_codes_unchanged_by_fused_distances(self, spark):
         """Books and codes from the 3-D-literal trainer path must match a

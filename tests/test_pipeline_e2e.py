@@ -202,24 +202,6 @@ def test_read_prior_absent_path_skips_the_reader(spark, tmp_path, monkeypatch):
     assert read_prior(spark, str(tmp_path / "absent")) is None
 
 
-def test_corrupt_entries_raise_and_stay_untouched(spark, tmp_path, corrupt_parquet):
-    """A corrupt entries table is not "no entries": the upsert raises
-    before its overwrite, instead of replacing the whole table with only
-    this run's rows."""
-    from content_extractor_spark.sources.io import PLANNED_DDL, upsert_entries
-
-    entries = tmp_path / "entries"
-    spark.createDataFrame(
-        [("entry-1", "t")], "entry_id string, title string"
-    ).write.parquet(str(entries))
-    corrupt_parquet(entries)
-    before = {f.name: f.read_bytes() for f in entries.iterdir()}
-    planned = spark.createDataFrame([], PLANNED_DDL + ", entry_id string")
-    with pytest.raises(Exception, match="entries"):
-        upsert_entries(spark, str(entries), planned)
-    assert {f.name: f.read_bytes() for f in entries.iterdir()} == before
-
-
 def test_zero_row_input_summary(spark, corpus, profiles, tmp_path):
     out_dir = tmp_path / "empty"
     s = run_extraction(

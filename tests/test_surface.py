@@ -21,6 +21,10 @@ jobs, ``__spark_entry__.py``, the tools and the benchmark harnesses
 
 ``ALLOWED`` names the few defs kept without such a caller; each entry says
 why. An entry that is no longer needed fails too, so the list stays short.
+A reason that says "paper operator" cites the operator's ID from
+COVERAGE.md (``A7/S9``, ``S10``, ``A1``), and the row of every cited ID
+in COVERAGE §2.1–§2.7 names the def's module, so a def cannot ride on
+an operator that another module implements.
 
 Every defaulted parameter of those top-level functions has a non-test
 call that sets it: the same files, the same non-test callers. Calls
@@ -40,6 +44,7 @@ the jobs or ``__spark_entry__.py`` outside that one function.
 """
 
 import ast
+import re
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
@@ -49,12 +54,12 @@ ALLOWED = {
     "operators/tags.py:upsert_tag_dim": "A7/S9 tag consolidation (paper operator)",
     "operators/tags.py:connect_entries_to_tags": "A7/S9 tag consolidation (paper operator)",
     "sources/io.py:disable_entries": "S10 entry disabling (paper operator)",
-    "streaming/incremental.py:streaming_extract": "S7 streaming extraction (paper operator)",
-    "streaming/incremental.py:run_available_now": "S7 streaming extraction (paper operator)",
-    "streaming/incremental.py:run_upsert_stream": "S7 streaming MERGE upsert (paper operator)",
     "functions/udfs.py:register_all": "A1 contentHash as a SQL UDF (paper operator)",
     "operators/similarity.py:_sq_dist_to": (
         "reference for test_dists_to_all_bit_equals_per_centroid_form"
+    ),
+    "operators/similarity.py:_kmeans_centroids": (
+        "reference for test_train_ivf_pq_matches_separate_trainers"
     ),
     "operators/similarity.py:pq_train_codebooks": (
         "reference for test_train_ivf_pq_matches_separate_trainers"
@@ -225,6 +230,35 @@ def test_allowlist_has_no_stale_entries():
     stale = sorted(k for k in ALLOWED if k not in all_defs or k not in unused)
     assert not stale, f"ALLOWED entries that are gone or now used: {stale}"
     assert all(reason.strip() for reason in ALLOWED.values())
+
+
+def _coverage_rows():
+    """{operator ID: row text} of the tables in COVERAGE §2.1–§2.7; a
+    row with the IDs ``A3/A4/A5`` is listed under each of them."""
+    rows, in_inventory = {}, False
+    for line in (ROOT / "COVERAGE.md").read_text(encoding="utf-8").splitlines():
+        if line.startswith("## "):
+            in_inventory = bool(re.match(r"## §2\.[1-7] ", line))
+        elif in_inventory and line.startswith("|"):
+            for op_id in line.split("|")[1].strip().split("/"):
+                rows[op_id] = line
+    return rows
+
+
+def test_paper_operator_reasons_cite_their_coverage_row():
+    rows = _coverage_rows()
+    wrong = []
+    for key, reason in ALLOWED.items():
+        if "paper operator" not in reason:
+            continue
+        module = key.split(":")[0]
+        cited = re.findall(r"\b[A-Z]\d+\b", reason)
+        if not cited or any(module not in rows.get(c, "") for c in cited):
+            wrong.append(f"{key} ({reason})")
+    assert not wrong, (
+        "ALLOWED paper operators whose cited COVERAGE §2.1–§2.7 row "
+        f"does not name their module: {wrong}"
+    )
 
 
 def _defaulted_params(fn):
