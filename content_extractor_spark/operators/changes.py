@@ -29,6 +29,28 @@ from pyspark.sql import functions as F
 
 _FIELDS = ("title", "summary", "content", "date")
 
+# A3-A5 as one SQL expression over the extracted row and the joined
+# entry's `_e_` columns: building it is one Py4J round trip.
+#   A3 content changed: field-wise null-safe inequality.
+#   A4 tags changed, LITERAL (see module docstring): with no existing
+#   tags, changed <=> scraped tags non-empty; else `sameAmount`
+#   (misnamed) = sizes differ, with null scraped tags counting as 0
+#   (spelled out: size(NULL) is -1 under the legacy conf and NULL under
+#   ANSI), and `nothingChanged` (misnamed) = some scraped tag is not in
+#   existing (scraped None -> existing non-empty); changed = both.
+_ACTION_SQL = """
+CASE WHEN status != 'ok' THEN 'error'
+     WHEN _e_url_id IS NULL THEN 'create'
+     WHEN (NOT (title <=> _e_title AND summary <=> _e_summary
+                AND content <=> _e_content AND date <=> _e_date))
+       OR (CASE WHEN _e_tags IS NULL THEN tags IS NOT NULL AND size(tags) > 0
+                ELSE size(_e_tags) != (CASE WHEN tags IS NULL THEN 0 ELSE size(tags) END)
+                     AND (CASE WHEN tags IS NULL THEN size(_e_tags) > 0
+                               ELSE size(array_except(tags, _e_tags)) > 0 END)
+           END)
+     THEN 'update'
+     ELSE 'skip' END"""
+
 
 def plan_actions(
     extracted: DataFrame,
@@ -39,44 +61,11 @@ def plan_actions(
     create | update | skip (unchanged) | error (extraction failed).
     Returns the extracted columns + action + entry_id (null for create).
     """
-    ex = existing_entries.select(
-        F.col("entry_id").alias("_e_id"),
-        F.col("url_id").alias("_e_url_id"),
-        *[F.col(f).alias(f"_e_{f}") for f in _FIELDS],
-        F.col("tags").alias("_e_tags"),
+    ex = existing_entries.selectExpr(
+        "entry_id AS _e_id", "url_id AS _e_url_id",
+        *(f"{f} AS _e_{f}" for f in _FIELDS), "tags AS _e_tags",
     )
-    joined = extracted.join(ex, extracted["url_id"] == ex["_e_url_id"], "left")
-
-    content_changed = ~(
-        F.col("title").eqNullSafe(F.col("_e_title"))
-        & F.col("summary").eqNullSafe(F.col("_e_summary"))
-        & F.col("content").eqNullSafe(F.col("_e_content"))
-        & F.col("date").eqNullSafe(F.col("_e_date"))
-    )
-    s, e = F.col("tags"), F.col("_e_tags")
-    # A4 literal (UrlHandler.scala:375-397): see module docstring.
-    # `sameAmount` (misnamed) = sizes differ; `nothingChanged`
-    # (misnamed) = exists a scraped tag not in existing (scraped
-    # None -> existing non-empty). Changed = both.
-    # explicit null handling: size(NULL) is -1 under legacy conf
-    # (and NULL under ANSI), so spell out "null counts as 0" rather
-    # than relying on spark.sql.legacy.sizeOfNull
-    sizes_differ = F.size(e) != F.when(s.isNull(), F.lit(0)).otherwise(F.size(s))
-    some_missing = F.when(s.isNull(), F.size(e) > 0).otherwise(
-        F.size(F.array_except(s, e)) > 0
-    )
-    tags_changed = F.when(
-        e.isNull(), s.isNotNull() & (F.size(s) > 0)
-    ).otherwise(sizes_differ & some_missing)
-
-    action = (
-        F.when(F.col("status") != "ok", F.lit("error"))
-        .when(F.col("_e_url_id").isNull(), F.lit("create"))
-        .when(content_changed | tags_changed, F.lit("update"))
-        .otherwise(F.lit("skip"))
-    )
-    return (
-        joined.withColumn("action", action)
-        .withColumn("entry_id", F.col("_e_id"))
-        .drop("_e_id", "_e_url_id", "_e_tags", *[f"_e_{f}" for f in _FIELDS])
+    keep = [f"`{c}`" for c in extracted.columns if c not in ("action", "entry_id")]
+    return extracted.join(ex, F.expr("url_id = _e_url_id"), "left").selectExpr(
+        *keep, f"{_ACTION_SQL} AS action", "_e_id AS entry_id"
     )

@@ -16,7 +16,7 @@ from __future__ import annotations
 
 from typing import Optional
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -27,22 +27,19 @@ def mark_duplicates(
     """Add `disabled` (bool): true for all but the first row per hash,
     and for any row whose hash already exists enabled in `existing_entries`.
     Rows without a hash (failed extraction) are never marked."""
-    w = Window.partitionBy("content_hash").orderBy(F.col("doc_id"))
-    out = extracted.withColumn(
-        "_rn", F.when(F.col("content_hash").isNotNull(), F.row_number().over(w))
-    )
-    disabled = F.col("_rn") > F.lit(1)
+    out = extracted.withColumn("_rn", F.expr(
+        "CASE WHEN content_hash IS NOT NULL THEN"
+        " row_number() OVER (PARTITION BY content_hash ORDER BY doc_id) END"
+    ))
+    disabled = "_rn > 1"
     if existing_entries is not None:
         existing = (
-            existing_entries.where(~F.coalesce(F.col("disabled"), F.lit(False)))
-            .select(F.col("content_hash").alias("_ex_hash"))
+            existing_entries.where("NOT coalesce(disabled, false)")
+            .selectExpr("content_hash AS _ex_hash")
             .dropDuplicates(["_ex_hash"])
         )
-        out = out.join(
-            existing, out["content_hash"] == existing["_ex_hash"], "left"
-        )
-        disabled = disabled | F.col("_ex_hash").isNotNull()
-    return out.withColumn(
-        "disabled",
-        F.when(F.col("content_hash").isNotNull(), F.coalesce(disabled, F.lit(False))),
-    ).drop("_ex_hash", "_rn")
+        out = out.join(existing, F.expr("content_hash = _ex_hash"), "left")
+        disabled = "_rn > 1 OR _ex_hash IS NOT NULL"
+    return out.withColumn("disabled", F.expr(
+        f"CASE WHEN content_hash IS NOT NULL THEN coalesce({disabled}, false) END"
+    )).drop("_ex_hash", "_rn")

@@ -226,6 +226,34 @@ def _analyze_batch(
     return pa.RecordBatch.from_arrays(arrays, schema=_ARROW_SCHEMA)
 
 
+def _span_sql(kind: str, text: str, media: str) -> str:
+    return f"named_struct('kind', '{kind}', 'text', {text}, 'media_ref', {media})"
+
+
+_SNULL = "CAST(NULL AS STRING)"
+# One SQL expression, so building it is one Py4J round trip (a Column
+# tree of the same shape costs a few hundred). Only code constants are
+# interpolated.
+_SPANS_SQL = f"""
+CASE WHEN title IS NOT NULL THEN transform(
+  filter(
+    concat(
+      array(
+        CASE WHEN title IS NOT NULL THEN {_span_sql('title', 'title', _SNULL)} END,
+        CASE WHEN summary IS NOT NULL THEN {_span_sql('summary', 'summary', _SNULL)} END,
+        CASE WHEN content IS NOT NULL THEN {_span_sql('content', 'content', _SNULL)} END,
+        CASE WHEN date IS NOT NULL THEN {_span_sql('date', 'date', _SNULL)} END),
+      transform(coalesce(tags, CAST(array() AS array<string>)),
+                t -> {_span_sql('tag', 't', _SNULL)}),
+      array(CASE WHEN image_url IS NOT NULL
+            THEN {_span_sql('image', _SNULL, 'image_url')} END)),
+    x -> x IS NOT NULL),
+  (x, i) -> named_struct('kind', x.kind, 'text', x.text,
+                         'media_ref', x.media_ref, 'offset', CAST(i AS INT)))
+ELSE CAST(NULL AS {_SPAN_ARRAY_DDL}) END
+"""
+
+
 def derive_spans_col():
     """The ordered output span sequence as a pure Catalyst expression.
 
@@ -237,45 +265,7 @@ def derive_spans_col():
     """
     from pyspark.sql import functions as F
 
-    def s(kind, text, media):
-        return F.struct(
-            F.lit(kind).alias("kind"),
-            text.alias("text"),
-            media.alias("media_ref"),
-        )
-
-    snull = F.lit(None).cast("string")
-    head = F.array(
-        F.when(F.col("title").isNotNull(), s("title", F.col("title"), snull)),
-        F.when(F.col("summary").isNotNull(), s("summary", F.col("summary"), snull)),
-        F.when(F.col("content").isNotNull(), s("content", F.col("content"), snull)),
-        F.when(F.col("date").isNotNull(), s("date", F.col("date"), snull)),
-    )
-    tag_spans = F.transform(
-        F.coalesce(F.col("tags"), F.array().cast("array<string>")),
-        lambda t: s("tag", t, snull),
-    )
-    img = F.array(
-        F.when(
-            F.col("image_url").isNotNull(),
-            s("image", snull, F.col("image_url")),
-        )
-    )
-    present = F.filter(
-        F.concat(head, tag_spans, img), lambda x: x.isNotNull()
-    )
-    numbered = F.transform(
-        present,
-        lambda x, i: F.struct(
-            x["kind"].alias("kind"),
-            x["text"].alias("text"),
-            x["media_ref"].alias("media_ref"),
-            i.cast("int").alias("offset"),
-        ),
-    )
-    return F.when(F.col("title").isNotNull(), numbered).otherwise(
-        F.lit(None).cast(_SPAN_ARRAY_DDL)
-    )
+    return F.expr(_SPANS_SQL)
 
 
 #: input columns the Arrow stage actually reads — everything else is

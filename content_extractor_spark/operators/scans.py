@@ -8,9 +8,6 @@ GraphQLHelper.scala:66-210, 528-600).
 
 from __future__ import annotations
 
-from functools import reduce
-from operator import or_
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -28,18 +25,19 @@ EPOCH_SENTINEL = "1970-01-01T00:00:00Z"
 EPOCH_SENTINEL_MILLIS = "1970-01-01T00:00:00.000Z"
 
 
+# P1 and P5 as SQL text: each filter is one Py4J round trip to build,
+# where the Column API's 29-way OR costs hundreds. The text holds only
+# the code constants above.
+_FILE_ENDING_EXCLUSION = "NOT coalesce({}, false)".format(
+    " OR ".join(f"contains(lower(url), '{e}')" for e in COMMON_FILE_ENDINGS)
+)
+# UrlHandlingSupport.scala:534-552: skip rows without a URL
+_URL_IS_VALID = "url IS NOT NULL AND url != ''"
+
+
 def file_ending_exclusion() -> Column:
     """P1: none of the 29 common file endings appear in the URL (ci)."""
-    lowered = F.lower(F.col("url"))
-    any_ending = reduce(
-        or_, [lowered.contains(e) for e in COMMON_FILE_ENDINGS]
-    )
-    return ~F.coalesce(any_ending, F.lit(False))
-
-
-def url_is_valid() -> Column:
-    """P5: skip rows without a URL (UrlHandlingSupport.scala:534-552)."""
-    return F.col("url").isNotNull() & (F.col("url") != "")
+    return F.expr(_FILE_ENDING_EXCLUSION)
 
 
 def is_new() -> Column:
@@ -66,7 +64,7 @@ def scannable_documents(df: DataFrame, mode: str = "all",
                         now_iso: str = "2021-07-01T00:00:00Z",
                         reanalysis_interval_hours: int = 48) -> DataFrame:
     """Apply P5 + P1 and the phase predicate (O6 as filters, not phases)."""
-    out = df.filter(url_is_valid()).filter(file_ending_exclusion())
+    out = df.filter(_URL_IS_VALID).filter(file_ending_exclusion())
     if mode == "new":
         out = out.filter(is_new())
     elif mode == "existing":

@@ -18,15 +18,20 @@ Scale notes (north rule):
     which doubles as explicit skew neutralization: hot hosts spread
     evenly over buckets regardless of the Zipfian host distribution;
   * resume: work is partitioned into `num_buckets` deterministic
-    buckets; each bucket commits its output and a ledger row
-    atomically-enough (parquet dir per bucket; Iceberg snapshot per
-    bucket when available). A re-run skips the ledgered buckets and
-    only processes missing ones — lineage preserved, no dup/loss.
+    buckets; each bucket commits its output (one parquet dir per
+    bucket), then a ledger row. A re-run skips the ledgered buckets and
+    only processes missing ones — lineage preserved, no dup/loss. The
+    ledger and spans_out are read back by their declared schemas, so no
+    job runs to infer a schema from parquet footers.
   * run totals: docs parsed, spans emitted, status counts and
     duplicates (mirrors the reference's timing/err logging,
     Analyzer.scala:228-253, ExtractionSupervisor.scala:399-404) ride
     the spans_out write as an `Observation` — no second pass over the
     output. Every job is labelled with its stage (job description).
+  * driver cost: the hot expressions (scan filters, bucket, span
+    assembly, totals, change detection) are built as SQL text, one
+    Py4J round trip each, with only code constants and ints
+    interpolated; caller values stay literals.
 """
 
 from __future__ import annotations
@@ -39,6 +44,7 @@ from typing import Dict, List, Optional
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import BooleanType, IntegerType, StructField, StructType
 
 from .kernel.profiles import ProfileConfig
 from .operators.changes import plan_actions
@@ -61,19 +67,33 @@ class PipelineConfig:
     target_zone: str = "UTC"
 
 
+# the pipeline's own outputs, read back by these declared schemas
+SPANS_OUT_SCHEMA = StructType(EXTRACT_SCHEMA.fields + [
+    StructField("bucket", IntegerType()),
+    StructField("disabled", BooleanType()),
+    StructField("n_spans", IntegerType()),
+])
+LEDGER_DDL = "bucket int, status string, run_id string"
+
+
 def with_bucket(df: DataFrame, num_buckets: int) -> DataFrame:
     """Deterministic work bucket; also the resume + skew-spread unit."""
     return df.withColumn(
-        "bucket", F.pmod(F.xxhash64(F.col("doc_id")), F.lit(num_buckets)).cast("int")
+        "bucket", F.expr(f"CAST(pmod(xxhash64(doc_id), {int(num_buckets)}) AS INT)")
     )
+
+
+def _in_buckets(buckets: List[int]) -> str:
+    """SQL predicate: `bucket` is one of the given ints."""
+    return f"bucket IN ({', '.join(str(int(b)) for b in buckets)})"
 
 
 def completed_buckets(spark: SparkSession, ledger_path: str) -> List[int]:
     """Buckets committed in the ledger ([] when there is no ledger)."""
-    ledger = read_prior(spark, ledger_path)
+    ledger = read_prior(spark, ledger_path, LEDGER_DDL)
     if ledger is None:
         return []
-    done = ledger.where(F.col("status") == "done").select("bucket").distinct()
+    done = ledger.where("status = 'done'").select("bucket").distinct()
     return sorted(r["bucket"] for r in done.collect())
 
 
@@ -90,21 +110,24 @@ def _stage(spark: SparkSession, name: str):
         sc.setLocalProperty("spark.job.description", prev)
 
 
+def _sum0(cond: str) -> str:
+    """SQL count of rows where `cond` holds; 0 (not NULL) over no rows."""
+    return f"coalesce(sum(CAST({cond} AS BIGINT)), 0)"
+
+
+_TOTALS_SQL = [
+    "count(1) AS docs_parsed",
+    f"{_sum0('n_spans')} AS spans_emitted",
+    *(f"{_sum0(f'status = {s!r}')} AS {k}" for k, s in (
+        ("ok", "ok"), ("profile_miss", "profile_miss"),
+        ("no_title", "no_title"), ("errors", "error"))),
+    f"{_sum0('disabled')} AS disabled_dups",
+]
+
+
 def _totals() -> list:
     """Run totals over spans_out rows, as aggregates for observe/agg."""
-    def n(c):  # a sum over zero rows is NULL: report 0
-        return F.coalesce(F.sum(c.cast("long")), F.lit(0))
-
-    status = F.col("status")
-    return [
-        F.count(F.lit(1)).alias("docs_parsed"),
-        n(F.col("n_spans")).alias("spans_emitted"),
-        n(status == "ok").alias("ok"),
-        n(status == "profile_miss").alias("profile_miss"),
-        n(status == "no_title").alias("no_title"),
-        n(status == "error").alias("errors"),
-        n(F.col("disabled")).alias("disabled_dups"),
-    ]
+    return [F.expr(e) for e in _TOTALS_SQL]
 
 
 def run_extraction(
@@ -136,13 +159,13 @@ def run_extraction(
     spans_path = os.path.join(output_path, "spans_out")
     with _stage(spark, "resume state"):
         done = completed_buckets(spark, ledger_path)
-        prior = read_prior(spark, spans_path) if done else None
+        prior = read_prior(spark, spans_path, SPANS_OUT_SCHEMA) if done else None
     dedup_baseline, prior_totals = existing_entries, {}
     if done:
-        docs = docs.where(~F.col("bucket").isin(done))
+        docs = docs.where(f"NOT {_in_buckets(done)}")
     if prior is not None:
         # only ledgered buckets count: an unledgered one is re-done now
-        prior = prior.where(F.col("bucket").isin(done))
+        prior = prior.where(_in_buckets(done))
         with _stage(spark, "resume totals"):
             prior_totals = prior.agg(*_totals()).first().asDict()
         # dedup also against rows committed by PRIOR runs of this
@@ -177,12 +200,10 @@ def run_extraction(
     out = (
         deduped.repartition(cfg.num_buckets, "bucket")
         .withColumn("spans", derive_spans_col())
-        .withColumn(
-            "n_spans", F.size(F.coalesce(F.col("spans"), F.array())).cast("int")
-        )
+        .withColumn("n_spans", F.expr("CAST(size(coalesce(spans, array())) AS INT)"))
         # written column order identical to the pre-r7 layout
-        .select(*[f.name for f in EXTRACT_SCHEMA.fields], "bucket", "disabled", "n_spans")
-        .observe(totals, *_totals(), F.collect_set("bucket").alias("buckets"))
+        .selectExpr(*SPANS_OUT_SCHEMA.fieldNames())
+        .observe(totals, *_totals(), F.expr("collect_set(bucket) AS buckets"))
     )
     with _stage(spark, "extract, dedup and write spans_out"):
         (
@@ -201,33 +222,29 @@ def run_extraction(
         with _stage(spark, "ledger commit"):
             (
                 spark.range(cfg.num_buckets, numPartitions=1)
-                .where(F.col("id").isin(buckets))
-                .select(F.col("id").cast("int").alias("bucket"),
-                        F.lit("done").alias("status"), F.lit(cfg.run_id).alias("run_id"))
+                .selectExpr("CAST(id AS INT) AS bucket", "'done' AS status")
+                .where(_in_buckets(buckets))
+                .withColumn("run_id", F.lit(cfg.run_id))
                 .write.mode("append").parquet(ledger_path)
             )
 
     # change detection + entries upsert (A3-A6 + S7): when an existing
     # entries table is supplied, plan create/update/skip per url and
-    # write the next entries-table state (set-based MERGE); the action
-    # counts ride that write
+    # write the next entries-table state; the action counts ride that
+    # write. The write has just made spans_out, so it is read without
+    # an existence check (zero rows read as an empty frame).
     if existing_entries is not None:
         with _stage(spark, "entries_next"):
-            spans = read_prior(spark, spans_path)
-            if spans is not None:
-                actions = Observation("entry_actions")
-                planned = plan_actions(
-                    spans.where(F.col("status") == "ok"), existing_entries
-                ).observe(
-                    actions,
-                    *[F.sum((F.col("action") == a).cast("long")).alias(a)
-                      for a in ("create", "update", "skip", "error")],
-                )
-                apply_entry_actions(
-                    existing_entries, planned, clock=cfg.now_iso,
-                    reanalysis_interval_hours=cfg.reanalysis_interval_hours,
-                ).write.mode("overwrite").parquet(os.path.join(output_path, "entries_next"))
-                summary["actions"] = {a: n for a, n in actions.get.items() if n}
+            spans = spark.read.schema(SPANS_OUT_SCHEMA).parquet(spans_path)
+            actions = Observation("entry_actions")
+            apply_entry_actions(
+                existing_entries,
+                plan_actions(spans.where("status = 'ok'"), existing_entries),
+                clock=cfg.now_iso,
+                reanalysis_interval_hours=cfg.reanalysis_interval_hours,
+                actions=actions,
+            ).write.mode("overwrite").parquet(os.path.join(output_path, "entries_next"))
+            summary["actions"] = {a: n for a, n in actions.get.items() if n}
 
     summary["wall_sec"] = time.monotonic() - t0
     summary["resumed_buckets"] = len(done)

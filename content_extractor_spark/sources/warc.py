@@ -200,25 +200,24 @@ def _list_warc_files(spark: SparkSession, in_dir: str) -> list:
     return sorted(out)
 
 
+FILE_LEDGER_DDL = "file string, status string, batch string"
+
+
 def read_file_ledger(spark: SparkSession, ledger_path: str):
     """(done_files, committed_batches) from a file ledger, tolerating
-    pre-batch-column ledgers and a not-yet-existing path."""
-    ledger = read_prior(spark, ledger_path)
+    pre-batch-column ledgers (their batch reads as null) and a
+    not-yet-existing path."""
+    ledger = read_prior(spark, ledger_path, FILE_LEDGER_DDL)
     if ledger is None:
         return set(), set()
     rows = ledger.collect()
-    done = {r["file"] for r in rows}
-    batches = {
-        b for b in (r.asDict().get("batch") for r in rows) if b
-    }
-    return done, batches
+    return {r["file"] for r in rows}, {r["batch"] for r in rows if r["batch"]}
 
 
 def commit_file_ledger(spark, ledger_path: str, files, batch: str) -> None:
     """Append (file, done, batch) rows — the atomicity point of a run."""
     spark.createDataFrame(
-        [(f, "done", batch) for f in files],
-        "file string, status string, batch string",
+        [(f, "done", batch) for f in files], FILE_LEDGER_DDL,
     ).write.mode("append").parquet(ledger_path)
 
 

@@ -1,4 +1,5 @@
 import os
+from contextlib import contextmanager
 from pathlib import Path
 
 import pytest
@@ -35,3 +36,29 @@ def corrupt_parquet():
                 f.write_bytes(b"not a parquet file" * 8)
 
     return corrupt
+
+
+@pytest.fixture
+def py4j_round_trips(monkeypatch):
+    """A context manager that counts the driver's Py4J round trips (each
+    command sent to the JVM) made inside it. Like a job count, the count
+    does not move with host load."""
+    from py4j.clientserver import ClientServerConnection
+
+    send = ClientServerConnection.send_command
+
+    @contextmanager
+    def counting():
+        seen = {"n": 0}
+
+        def send_counted(self, command):
+            seen["n"] += 1
+            return send(self, command)
+
+        monkeypatch.setattr(ClientServerConnection, "send_command", send_counted)
+        try:
+            yield seen
+        finally:
+            monkeypatch.setattr(ClientServerConnection, "send_command", send)
+
+    return counting

@@ -207,6 +207,27 @@ class TestJobCli:
         assert {f.name: f.read_bytes() for f in entries.iterdir()} == before
 
 
+    def test_relative_table_reference_is_a_path(self, spark, tmp_path, monkeypatch):
+        """`--input docs` reads the dir `docs` in the working dir, as
+        `./docs` does; a name with no such path is a catalog table."""
+        from content_extractor_spark.sources.io import read_table
+
+        spark.range(3).write.parquet(str(tmp_path / "docs"))
+        spark.range(2).createOrReplaceTempView("docs_view")
+        # a tmp working dir, for Python and for the JVM's local filesystem
+        # (whose relative paths resolve against its own working dir)
+        monkeypatch.chdir(tmp_path)
+        jvm = spark._jvm
+        fs = jvm.org.apache.hadoop.fs.FileSystem.getLocal(spark._jsc.hadoopConfiguration())
+        cwd = fs.getWorkingDirectory()
+        fs.setWorkingDirectory(jvm.org.apache.hadoop.fs.Path(str(tmp_path)))
+        try:
+            assert read_table(spark, "docs").count() == 3
+            assert read_table(spark, "docs_view").count() == 2
+        finally:
+            fs.setWorkingDirectory(cwd)
+            spark.catalog.dropTempView("docs_view")
+
 class TestCurateJob:
     def test_env_first_config(self, monkeypatch):
         from jobs.curate_job import ENV_VARS, resolve_config

@@ -17,6 +17,11 @@ from content_extractor_spark.pipeline import PipelineConfig, run_extraction
 
 N_DOCS = 240
 N_HOSTS = 8
+#: Py4J round trips per run_extraction call, with headroom: measured at
+#: 310 on a fresh output and 490-560 with existing entries (the
+#: Column-API builders made 3,364 and 5,021)
+FRESH_TRIPS = 450
+RECRAWL_TRIPS = 800
 
 
 @pytest.fixture(scope="module")
@@ -187,19 +192,44 @@ def test_corrupt_prior_state_raises(
 def test_read_prior_absent_path_skips_the_reader(spark, tmp_path, monkeypatch):
     """An absent path is "no prior state" without the reader ever being
     asked (which would log a FileNotFoundException trace); an empty dir
-    is "no prior state" too."""
+    reads by its declared schema as an empty frame."""
     from pyspark.sql.readwriter import DataFrameReader
 
     from content_extractor_spark.sources.io import read_prior
 
     (tmp_path / "empty").mkdir()
-    assert read_prior(spark, str(tmp_path / "empty")) is None
+    empty = read_prior(spark, str(tmp_path / "empty"), "bucket int, status string")
+    assert empty.columns == ["bucket", "status"]
+    assert empty.collect() == []
 
     def refuse(self, *paths, **kw):
         raise AssertionError(f"parquet reader called for {paths}")
 
     monkeypatch.setattr(DataFrameReader, "parquet", refuse)
-    assert read_prior(spark, str(tmp_path / "absent")) is None
+    assert read_prior(spark, str(tmp_path / "absent"), "bucket int") is None
+
+
+ENTRIES_DDL = (
+    "entry_id string, url_id string, title string, summary string, "
+    "content string, date string, tags array<string>, etag string, "
+    "image_url string, content_hash long, disabled boolean"
+)
+
+
+@pytest.fixture(scope="module")
+def entries(spark, corpus, tmp_path_factory):
+    """An entries table on disk: stale copies of a third of the corpus's
+    urls (so a run plans creates, updates and skips) plus one url the
+    corpus does not have."""
+    path = str(tmp_path_factory.mktemp("entries") / "entries")
+    rows = [
+        (f"entry-{r['url_id']}", r["url_id"], "stale title", None, None, None,
+         None, None, None, i, False)
+        for i, r in enumerate(corpus.select("url_id").orderBy("url_id").collect()[::3])
+    ]
+    rows.append(("entry-gone", "gone", "t", None, None, None, ["a"], None, None, -1, False))
+    spark.createDataFrame(rows, ENTRIES_DDL).write.parquet(path)
+    return spark.read.parquet(path)
 
 
 def test_zero_row_input_summary(spark, corpus, profiles, tmp_path):
@@ -215,25 +245,93 @@ def test_zero_row_input_summary(spark, corpus, profiles, tmp_path):
     assert not (out_dir / "ledger").exists()
 
 
-def test_fresh_run_jobs_are_few_and_labelled(spark, corpus, profiles, tmp_path):
-    """The run totals ride the spans_out write: a fresh output costs the
-    write's jobs plus the ledger commit. Every job names its stage, and
-    the caller's job description is restored afterwards."""
+def test_zero_row_input_with_entries_writes_them_unchanged(
+    spark, corpus, profiles, entries, tmp_path
+):
+    """Zero input rows with existing entries: the empty spans_out reads,
+    by its declared schema, as an empty frame, so entries_next is still
+    written, as the entries unchanged (the write-only columns added as
+    nulls), and no action is counted."""
+    out_dir = tmp_path / "empty-entries"
+    s = run_extraction(
+        spark, corpus.where(F.lit(False)), profiles, str(out_dir),
+        PipelineConfig(num_buckets=8, run_id="e"), existing_entries=entries,
+    )
+    assert s["actions"] == {}
+    assert not (out_dir / "ledger").exists()
+    nxt = spark.read.parquet(str(out_dir / "entries_next"))
+    write_only = ["next_crawl", "updated_at", "has_been_tagged"]
+    assert nxt.columns == entries.columns + write_only
+    assert sorted(nxt.drop(*write_only).collect()) == sorted(entries.collect())
+    assert nxt.where(" OR ".join(f"{c} IS NOT NULL" for c in write_only)).count() == 0
+
+
+def _jobs_of(spark, group, call):
+    """Run `call` under a job group. Returns the descriptions of its jobs
+    and the ids of those run outside any SQL execution, as the jobs that
+    infer a schema from parquet footers are."""
     sc = spark.sparkContext
     jsc = sc._jsc.sc()
-    group = "fresh-run-job-count"
     sc.setJobGroup(group, "caller description")
     try:
-        run_extraction(
-            spark, corpus, profiles, str(tmp_path / "jobs"),
-            PipelineConfig(num_buckets=8, run_id="jobs"),
-        )
+        call()
         assert sc.getLocalProperty("spark.job.description") == "caller description"
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     jsc.listenerBus().waitUntilEmpty(30000)
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert 0 < len(jobs) <= 6, len(jobs)
+    jobs = list(sc.statusTracker().getJobIdsForGroup(group))
     labels = [str(jsc.statusStore().job(j).description().get()) for j in jobs]
+    conv = spark._jvm.scala.jdk.javaapi.CollectionConverters
+    sql = spark._jsparkSession.sharedState().statusStore()
+    in_sql = {int(j) for e in conv.asJava(sql.executionsList())
+              for j in conv.asJava(e.jobs()).keySet()}
+    return labels, [j for j in jobs if j not in in_sql]
+
+
+def test_fresh_run_jobs_are_few_and_labelled(spark, corpus, profiles, tmp_path):
+    """The run totals ride the spans_out write: a fresh output costs the
+    write's jobs plus the ledger commit. Every job names its stage, and
+    the caller's job description is restored afterwards."""
+    labels, _ = _jobs_of(spark, "fresh-run-job-count", lambda: run_extraction(
+        spark, corpus, profiles, str(tmp_path / "jobs"),
+        PipelineConfig(num_buckets=8, run_id="jobs"),
+    ))
+    assert 0 < len(labels) <= 6, len(labels)
     assert all(d.startswith("run_extraction: ") for d in labels), labels
+
+
+def test_with_entries_jobs_are_labelled_and_infer_no_schema(
+    spark, corpus, profiles, entries, tmp_path
+):
+    """With existing entries, on a fresh output and on its resume: every
+    job names its stage, and no job infers a schema. The pipeline reads
+    its own outputs (the ledger, and spans_out for the resume totals and
+    for entries_next) by their declared schemas. The entries_next leg
+    reads the planned actions once."""
+    out = str(tmp_path / "jobs-entries")
+    for group, most in (("entries-fresh", 10), ("entries-resume", 12)):
+        labels, footer_jobs = _jobs_of(spark, group, lambda: run_extraction(
+            spark, corpus, profiles, out,
+            PipelineConfig(num_buckets=8, run_id="jobs"), existing_entries=entries,
+        ))
+        assert footer_jobs == [], (group, labels)
+        assert 0 < len(labels) <= most, (group, labels)
+        assert all(d.startswith("run_extraction: ") for d in labels), labels
+
+
+def test_py4j_round_trips_per_call(
+    spark, corpus, profiles, entries, tmp_path, py4j_round_trips
+):
+    """The hot expressions are built as SQL text, one Py4J round trip
+    each, and the planned actions are built once: a fresh call and a
+    call with existing entries stay within FRESH_TRIPS and RECRAWL_TRIPS."""
+    cfg = PipelineConfig(num_buckets=8, run_id="trips")
+    run_extraction(spark, corpus, profiles, str(tmp_path / "warm"), cfg)
+    with py4j_round_trips() as fresh:
+        run_extraction(spark, corpus, profiles, str(tmp_path / "fresh"), cfg)
+    with py4j_round_trips() as recrawl:
+        run_extraction(spark, corpus, profiles, str(tmp_path / "recrawl"), cfg,
+                       existing_entries=entries)
+    assert fresh["n"] <= FRESH_TRIPS, fresh
+    assert recrawl["n"] <= RECRAWL_TRIPS, recrawl

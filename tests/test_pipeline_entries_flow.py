@@ -98,8 +98,8 @@ def test_cross_run_dedup_on_resume(spark, tmp_path):
 
 
 def test_observed_actions_match_planned_counts(spark, tmp_path):
-    """The action counts are observed on `planned`, which the entries
-    write reads in three branches; they must equal a plain group-by."""
+    """The action counts are observed on the one join of the entries
+    write that reads `planned`; they must equal a plain group-by."""
     from content_extractor_spark.operators.changes import plan_actions
 
     docs = synth.documents_df(spark, 120, n_hosts=4, seed=21, partitions=2).cache()
